@@ -122,24 +122,26 @@ def run_extract_checkpointed(
         # whose docs all gate out produces zero spans but must still commit,
         # or every future resume re-processes it forever
         wave_df = spark.createDataFrame([(b,) for b in wave], "bucket int")
+        # doc_count counts the wave's INPUT docs: a doc with null or empty
+        # spans writes no span row, so counting doc ids over the written
+        # spans would drop it from the lineage
+        doc_stats = part.groupBy("bucket").agg(F.count("*").alias("doc_count"))
+        wave_df = wave_df.join(doc_stats, "bucket", "left")
         if cat.exists(SPANS_TABLE):
             span_stats = (
                 cat.read(spark, SPANS_TABLE)
                 .filter(F.col("bucket").isin(wave))
                 .groupBy("bucket")
                 .agg(
-                    F.countDistinct("doc_id").alias("doc_count"),
                     F.count("*").alias("span_count"),
                     F.sum(F.length("text")).alias("text_bytes"),
                 )
             )
             wave_df = wave_df.join(span_stats, "bucket", "left")
         else:  # an all-empty first wave never created the table
-            wave_df = (
-                wave_df.withColumn("doc_count", F.lit(None).cast("long"))
-                .withColumn("span_count", F.lit(None).cast("long"))
-                .withColumn("text_bytes", F.lit(None).cast("long"))
-            )
+            wave_df = wave_df.withColumn(
+                "span_count", F.lit(None).cast("long")
+            ).withColumn("text_bytes", F.lit(None).cast("long"))
         metrics = (
             wave_df.fillna(0, ["doc_count", "span_count", "text_bytes"])
             .withColumn("run_id", F.lit(run_id))

@@ -648,6 +648,9 @@ def extract_spans_native(
     # Exposing the branches (with their byte weights) lets write_store
     # rebalance each branch separately: the kernel's exchange then has no
     # shuffle dependency and runs concurrently with the mega chain.
+    # Any intermediate transform drops the annotation (safe: the plain
+    # write path runs); setting it on a DataFrame that is not this union
+    # would change which rows get written.
     small_bytes = sum(os.path.getsize(p) for p, _, _ in splits)
     out._qs_store_branches = [
         (small_out, max(small_bytes, 1)),

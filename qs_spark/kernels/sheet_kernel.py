@@ -33,43 +33,30 @@ sheet, kind 'sheet_rows' / 'csv_rows'); parsing uses pandas.read_csv exactly
 like the reference CSV loader, and the excel path shares it (the reference's
 read_excel lands in the same DataFrame shape).  Byte-equality of to_string
 output holds because oracle and pipeline run the same in-process pandas.
+Only the reference's text rendering exists: the consumer pins the loaders'
+text result type, so their to_markdown branch is never reached.
 
-Chunking strategy (fastest applicable path per frame; all byte-equal to the
-reference, property-tested against chunk_frame_reference):
+Each sheet takes exactly one of two paths, both byte-equal to the reference
+(property-tested against chunk_frame_reference):
 
-  0. PURE: sheets whose data region provably parses to an all-object frame
-     of plain strings (every cell [A-Za-z_][A-Za-z0-9_ ]*, no coercible
-     bool/NA/inf token) skip pandas ENTIRELY — str.split tokenization, the
-     same closed-form width model, direct render.  pandas' per-call parser
+  PURE: sheets whose data region provably parses to an all-object frame of
+     plain strings (every cell [A-Za-z_][A-Za-z0-9_ ]*, no coercible
+     bool/NA/inf token) skip pandas ENTIRELY — str.split tokenization, a
+     closed-form width model, direct render.  pandas' per-call parser
      construction (~1.3 ms/sheet regardless of size) was 55% of the whole
-     extraction kernel's CPU; this path is ~15x cheaper per small sheet.
-     Anything outside the grammar falls through to 1-3 (see
-     _pure_sheet_chunks for the full gate list); _pure_model_ok validates
-     against read_csv + chunk_frame_reference once per process.
-  1. FAST: frames whose every cell formats slice-stably and per-cell
-     (str / None / NaN / int / bool — object, integer or bool dtypes).
-     Cell strings are produced by our own model of pandas' object formatter
-     (pprint_thing with \\t\\r\\n escapes, 'None'/'NaN' sentinels), lengths
-     are closed-form, and chunks are rendered directly — ZERO pandas
-     formatting calls per frame.  The model is validated byte-for-byte once
-     per process against a pathological canary frame (_fast_model_ok);
-     if pandas drifts, the whole path disables itself.
-  2. FLOAT-HINT: frames that additionally carry float64 columns (pandas
-     formats those per printed sub-frame — '1.5' vs '1.50' — so no frozen
-     projection can be slice-stable).  A closed-form model of the
-     fixed->trim-trailing-zeros float formatter PREDICTS each boundary; two
-     real to_string length probes CONFIRM it (fits(pred) and not
-     fits(pred+1)) and the emit is a real to_string — correctness never
-     depends on the prediction, a wrong hint just degrades to galloping.
-  3. PROBE: anything else (datetime, categorical, nullable, exotic objects):
-     galloping + binary search over real to_string lengths, O(log rows)
-     probes per chunk (len(to_string) is monotone in the row count).
+     extraction kernel's CPU; this path is ~15x cheaper per small sheet and
+     carries the generated corpus's sheets.  _pure_model_ok validates it
+     against read_csv + chunk_frame_reference once per process (see
+     _pure_sheet_chunks for the full gate list).
+  PANDAS: everything else — plain read_csv (with the retry loop), then
+     chunk_frame: galloping + binary search over real to_string lengths,
+     O(log rows) probes per chunk (len(to_string) is monotone in the row
+     count).  Correctness rides on pandas' own formatter, never on a model.
 """
 
 from __future__ import annotations
 
 import io
-import re
 
 import numpy as np
 import pandas as pd
@@ -77,116 +64,18 @@ import pandas as pd
 CHUNK_SIZE = 102400  # ref: simple_reader_extractor.py:18 (excel/csv/txt)
 
 
-_FAST_READ_OK: bool | None = None
-
-
-def _fast_read_frame(text: str, skiprows: int | None = None) -> pd.DataFrame:
-    """pd.read_csv minus the expensive generic DataFrame(dict) construction.
-
-    The C parser's output (columns already mangled/deduped, one fresh numpy
-    array per column) goes straight through DataFrame._from_arrays(...,
-    verify_integrity=False) — the construction path pandas itself uses
-    internally — skipping per-column sanitize/homogenize/copy that dominated
-    the sheet kernel's profile (measured 0.79 -> 0.37 ms per small sheet,
-    ~2x).  Values, dtypes, column labels and to_string output are identical;
-    EmptyDataError propagates exactly as from read_csv (it is part of the
-    reference contract).  Validated per process by _fast_read_ok on a
-    hostile battery; any mismatch or unexpected error falls back to the real
-    read_csv — and the kernel-independent x33 golden (serial_reference uses
-    plain read_csv) would catch a silent divergence at the driver level."""
-    kw: dict = {"iterator": True}
-    if skiprows is not None:
-        kw["skiprows"] = skiprows
-    tfr = pd.read_csv(io.StringIO(text), **kw)
-    try:
-        index, columns, col_dict = tfr._engine.read(None)
-    finally:
-        tfr.close()
-    n = len(next(iter(col_dict.values()))) if col_dict else 0
-    idx = pd.RangeIndex(0, n) if index is None else index
-    arrays = [col_dict[c] for c in columns]
-    df = pd.DataFrame._from_arrays(arrays, columns, idx, verify_integrity=False)
-    # per-frame invariant on the private-API construction (r04 ADVICE): the
-    # frame must mirror the engine output exactly — shape, labels, and
-    # per-column dtype (metadata-only, no data pass).  A violation raises,
-    # which _read_csv turns into a fallback to the public loader; the
-    # per-process battery alone could miss a non-raising construction drift
-    # on an input class outside it.
-    if df.shape != (n, len(columns)) or list(df.columns) != list(columns):
-        raise RuntimeError("fast-frame construction mismatch (shape/columns)")
-    for got_dt, arr in zip(df.dtypes, arrays):
-        if got_dt != getattr(arr, "dtype", got_dt):
-            raise RuntimeError("fast-frame construction mismatch (dtype)")
-    return df
-
-
-def _fast_read_ok() -> bool:
-    """Once per process: byte-validate the fast loader against real read_csv
-    on a battery of hostile CSVs (dup headers, quotes, bools, NaN columns,
-    leading zeros, int64/uint64 edges, mixed dtypes)."""
-    global _FAST_READ_OK
-    if _FAST_READ_OK is not None:
-        return _FAST_READ_OK
-    battery = [
-        "a,b,c\n1,2.5,x\n3,NaN,y\n-4,1e5,\n",
-        "a,a,b\n1,2,3\n",
-        "x\n\n1\n2\n",
-        'q,w\n"a,b",2\n"c""d",3\n',
-        "h1,h2\nTrue,false\nFalse,true\n",
-        "a,b\n,\n,\n",
-        "a,b\n007,08\n",
-        "mixed\n1\nx\n2.5\n",
-        "i\n9223372036854775807\n",
-        "u\n18446744073709551615\n",
-    ]
-    ok = True
-    try:
-        for text in battery:
-            for sk in (None, 1):
-                a = pd.read_csv(io.StringIO(text), skiprows=sk)
-                b = _fast_read_frame(text, skiprows=sk)
-                if (
-                    list(a.columns) != list(b.columns)
-                    or list(map(str, a.dtypes)) != list(map(str, b.dtypes))
-                    or not a.equals(b)
-                    or a.to_string(index=False) != b.to_string(index=False)
-                ):
-                    ok = False
-                    break
-            if not ok:
-                break
-    except Exception:
-        ok = False
-    _FAST_READ_OK = ok
-    return ok
-
-
-def _read_csv(text: str, skiprows: int | None = None) -> pd.DataFrame:
-    """Loader dispatch: validated fast path, else the real read_csv.
-    EmptyDataError always propagates (reference contract)."""
-    if _fast_read_ok():
-        try:
-            return _fast_read_frame(text, skiprows)
-        except pd.errors.EmptyDataError:
-            raise
-        except Exception:
-            pass  # unexpected shape -> the generic loader decides
-    if skiprows is None:
-        return pd.read_csv(io.StringIO(text))
-    return pd.read_csv(io.StringIO(text), skiprows=skiprows)
-
-
 def _read_with_unnamed_retry(sheet_csv: str, excel_mode: bool) -> pd.DataFrame | None:
-    """Parse + reproduce the all-Unnamed skiprows retry loop."""
+    """Parse + reproduce the all-Unnamed skiprows retry loop.
+    EmptyDataError propagates where the reference lets it (csv mode)."""
     try:
-        df = _read_csv(sheet_csv)
+        df = pd.read_csv(io.StringIO(sheet_csv))
     except pd.errors.EmptyDataError:
         return None
     count = 0
     while True:
         if all(str(col).startswith("Unnamed") for col in df.columns):
             try:
-                df = _read_csv(sheet_csv, skiprows=count + 1)
+                df = pd.read_csv(io.StringIO(sheet_csv), skiprows=count + 1)
             except pd.errors.EmptyDataError:
                 if excel_mode:
                     return None  # ref excel: `if df.empty: break` -> skip sheet
@@ -226,44 +115,89 @@ def chunk_frame_reference(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> lis
     return chunks
 
 
+def chunk_frame(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> list[str]:
+    """Semantics-identical pandas-path chunker (byte-equal to chunk_frame_reference,
+    asserted in tests and by the independently-generated x33 golden).
+
+    len(df.iloc[a:i+1].to_string(index=False)) is monotone nondecreasing in i
+    (more lines, column widths only grow), so the reference inner loop's
+    "largest i with len < chunk_size" is located by galloping + binary search
+    over real to_string lengths instead of formatting every prefix.
+
+    The reference quirk where the FIRST probe already overflowing leaves
+    _p_row_num at 0 (and the loop would regress) is reproduced/guarded
+    identically.
+    """
+    num_rows = df.shape[0]
+    _row = 0
+    chunks: list[str] = []
+
+    def fits(i: int) -> bool:  # len(to_string(rows _row..i)) < chunk_size
+        return len(df.iloc[_row : i + 1].to_string(index=False)) < chunk_size
+
+    while _row < num_rows:
+        if fits(num_rows - 1):
+            # common case: the whole remainder fits -> one probe total
+            _p_row_num = num_rows - 1
+        elif not fits(_row):
+            _p_row_num = 0  # reference: inner loop breaks on first probe
+        else:
+            lo = _row  # known fitting
+            step = 1
+            hi = None
+            while hi is None:
+                probe = lo + step
+                if probe >= num_rows:
+                    hi = num_rows - 1  # not fits (checked above)
+                elif fits(probe):
+                    lo = probe
+                    step *= 2
+                else:
+                    hi = probe
+            while hi - lo > 1:  # invariant: fits(lo), not fits(hi)
+                mid = (lo + hi) // 2
+                if fits(mid):
+                    lo = mid
+                else:
+                    hi = mid
+            _p_row_num = lo
+        if _p_row_num + 1 <= _row and _row > 0:
+            raise ValueError(
+                f"row {_row} alone exceeds chunk_size={chunk_size}; "
+                "reference semantics would loop forever"
+            )
+        chunks.append(df.iloc[_row:_p_row_num].to_string(index=False))
+        _row = _p_row_num + 1
+    return chunks
+
+
 # ---------------------------------------------------------------------------
-# FAST path: direct model of pandas' per-cell object formatting
+# PURE path: pandas-free parse + chunk for the restricted sheet grammar
 # ---------------------------------------------------------------------------
+#
+# pandas' per-call parser construction (TextFileReader -> engine -> C wrapper)
+# costs ~1.3 ms per sheet regardless of size and dominated the kernel profile
+# (xlsx+csv = 81% of extraction CPU, >half of it in read machinery).  For
+# sheets whose DATA region provably parses to an all-object frame of plain
+# strings — every cell matches [A-Za-z_][A-Za-z0-9_ ]* and is not a token
+# pandas would coerce (bool/NA/inf spellings; the leading-letter rule already
+# excludes every numeric form) — read_csv is observationally equivalent to
+# str.split, and to_string to a closed-form width model
+# (_closed_form_boundary + _render_rows below).  Anything outside the
+# grammar (quotes, CR, blank lines, empty/numeric/coercible cells, ragged
+# rows, duplicate or all-"Unnamed" labels that would exhaust the retry
+# loop) returns None and falls back to the pandas path, so error messages
+# and exotic inference stay byte-exact.
+# Validated once per process by _pure_model_ok against read_csv +
+# chunk_frame_reference on an adversarial battery; any mismatch disables the
+# path for the process (correctness then rides the pandas path, as before).
+
 
 def _escape(s: str) -> str:
     """pprint_thing's escape_chars=('\\t','\\r','\\n') applied to a cell."""
     if "\t" in s or "\r" in s or "\n" in s:
         return s.replace("\t", "\\t").replace("\r", "\\r").replace("\n", "\\n")
     return s
-
-
-def _trim_single_float(fixed: str) -> str:
-    """pandas _trim_zeros_single_float: strip trailing zeros, keep >=1."""
-    fixed = fixed.rstrip("0")
-    if fixed.endswith("."):
-        fixed += "0"
-    return fixed
-
-
-def _fmt_obj_cell(v) -> str | None:
-    """Exactly what to_string prints for one OBJECT-dtype cell, or None when
-    the value type is outside the validated model (-> slower path).
-    Mirrors pandas GenericArrayFormatter._format_strings with
-    leading_space=False (to_string's index=False): None -> 'None', nan ->
-    na_rep 'NaN', str via pprint_thing escapes, and non-na floats via the
-    PER-CELL formatter _trim_zeros_single_float(f'{v: .6f}') — per-cell, so
-    slice-stable, unlike float64 columns which trim uniformly per slice."""
-    if isinstance(v, str):
-        return _escape(v)
-    if v is None:
-        return "None"
-    if isinstance(v, (bool, np.bool_)):
-        return "True" if v else "False"
-    if isinstance(v, (int, np.integer)):
-        return str(v)
-    if isinstance(v, float):  # covers np.float64 (a float subclass)
-        return "NaN" if v != v else _trim_single_float(f"{v: .6f}")
-    return None
 
 
 def _fmt_labels(cols) -> list[str]:
@@ -281,111 +215,11 @@ def _fmt_labels(cols) -> list[str]:
     return out
 
 
-def _hdr_strings(df: pd.DataFrame, dts: list | None = None) -> list[str]:
-    """Column labels as to_string prints them: the _fmt_labels render
-    (escape + leading-space + trim_front), then prefixed with a single
-    space for numeric-dtype columns (pandas _get_formatted_column_labels'
-    need_leadsp — int/float/bool headers get ' name' so a sign column never
-    touches the label; applied AFTER the trim, as in pandas).
-
-    dts: precomputed list(df.dtypes) — the .dtypes property builds a fresh
-    Series per access and dominated this function's profile when taken per
-    column."""
-    if dts is None:
-        dts = list(df.dtypes)
-    out = _fmt_labels(df.columns)
-    for i, dt in enumerate(dts):
-        if isinstance(dt, np.dtype) and dt.kind in "iufb":
-            out[i] = " " + out[i]
-    return out
-
-
-def _fast_cells(df: pd.DataFrame, dts: list | None = None) -> list[list[str]] | None:
-    """Formatted cell strings per column for slice-stable frames, else None."""
-    if dts is None:
-        dts = list(df.dtypes)
-    for dt in dts:
-        if not isinstance(dt, np.dtype) or (dt.kind not in "iub" and dt != object):
-            return None  # float64 -> float-hint path; extension/exotic -> probe
-    # one object-matrix extraction instead of a Series per column: numpy
-    # scalars box as np.int64/np.bool_/np.float64, which _fmt_obj_cell and
-    # str() format identically to their python counterparts
-    mat = df.to_numpy(dtype=object)
-    cols: list[list[str]] = []
-    for i, dt in enumerate(dts):
-        vals = mat[:, i].tolist()
-        if dt == object:
-            col = []
-            ap = col.append
-            for v in vals:
-                if type(v) is str:  # the hot case: plain cells, no escapes
-                    ap(
-                        v.replace("\t", "\\t").replace("\r", "\\r").replace("\n", "\\n")
-                        if ("\t" in v or "\r" in v or "\n" in v)
-                        else v
-                    )
-                else:
-                    f = _fmt_obj_cell(v)
-                    if f is None:
-                        return None
-                    ap(f)
-        elif dt.kind in "iu":  # numpy ints only
-            col = [str(x) for x in vals]
-        else:  # dt.kind == "b" (everything else rejected above)
-            col = ["True" if x else "False" for x in vals]
-        cols.append(col)
-    return cols
-
-
-_CANARY_OK: dict[tuple, bool] = {}
-
-
-def _fast_model_ok() -> bool:
-    """Validate the fast formatter against real to_string ONCE per process
-    (keyed by the display options that could change formatting), on a canary
-    frame packed with the hostile cases: escapes, empties, unicode, None/NaN,
-    mixed object cells, wide headers, negative ints.  Any byte mismatch
-    disables the fast path for the whole process — correctness then rides on
-    the probe path, never on the model."""
-    key = (pd.get_option("display.unicode.east_asian_width"),)
-    ok = _CANARY_OK.get(key)
-    if ok is not None:
-        return ok
-    canary = pd.DataFrame(
-        {
-            "a\tb": pd.Series(["x\ty", "p\nq\r", "", "日本", "much-longer-cell"], dtype=object),
-            "n": np.array([1, -22, 333, 0, 7], dtype="int64"),
-            "flag": np.array([True, False, True, False, True]),
-            "obj": pd.Series([None, float("nan"), 3, True, "s"], dtype=object),
-            "of": pd.Series([1.5, 1e-07, -2.25, 1e9, 0.0], dtype=object),
-            "wide_integer_header": np.array([5, 6, 7, 8, 9], dtype="int64"),
-        }
-    )
-    try:
-        cells = _fast_cells(canary)
-        hdr = _hdr_strings(canary)
-        ok = cells is not None
-        if ok:
-            rows = list(zip(*cells))
-            lens = np.array([[len(v) for v in c] for c in cells], dtype="int64").T
-            hl = np.array([len(h) for h in hdr], dtype="int64")
-            for a, b in ((0, 5), (1, 4), (2, 3)):  # full + sub-slices
-                w = np.maximum(hl, lens[a:b].max(axis=0))
-                got = _render_rows(rows, hdr, [int(x) for x in w], a, b)
-                if got != canary.iloc[a:b].to_string(index=False):
-                    ok = False
-                    break
-    except Exception:
-        ok = False
-    _CANARY_OK[key] = ok
-    return ok
-
-
 def _render_rows(
     rows: list[tuple], hdr: list[str], widths: list[int], a: int, b: int
 ) -> str:
     """Byte-equal stand-in for df.iloc[a:b].to_string(index=False) on a
-    non-empty slice of a fast-path frame: every cell (and header) right-
+    non-empty slice of a pure-path sheet: every cell (and header) right-
     justified to the column's max width within THE SLICE, single-space
     column join, newline row join.
 
@@ -400,67 +234,7 @@ def _render_rows(
     return "\n".join(lines)
 
 
-# ---------------------------------------------------------------------------
-# FLOAT-HINT path: closed-form model of FloatArrayFormatter for boundary
-# prediction (confirmed by real probes before use)
-# ---------------------------------------------------------------------------
-
-def _float_hint_matrices(df: pd.DataFrame):
-    """(lens_base, dec, hdr_len) for a frame with float64 columns, or None.
-
-    pandas formats a float64 column as f'{v:.6f}' then trims trailing zeros
-    UNIFORMLY across the printed slice (>=1 decimal kept), so within a slice
-      cell_len = int_part_len + 1 + max(dec_needed over slice rows)
-    lens_base carries int_part_len+1 for float cols (cell length for other
-    cols), dec carries the per-row needed decimals (0 elsewhere); a slice's
-    column width = max(hdr, runmax(lens_base) + runmax(dec)).
-
-    Columns that could trip pandas' scientific-notation fallback in ANY
-    slice (any nonzero |v| < 1e-6; or any |v| > 1e6 while some fixed
-    rendering exceeds digits+6 = 12 chars; nan/inf) reject the hint — the
-    caller then gallops with real probes.
-    """
-    n = df.shape[0]
-    lens_base = np.zeros((n, df.shape[1]), dtype="int64")
-    dec = np.zeros((n, df.shape[1]), dtype="int64")
-    for i in range(df.shape[1]):
-        s = df.iloc[:, i]
-        dt = s.dtype
-        if isinstance(dt, np.dtype) and dt.kind == "f":
-            vals = s.to_numpy()
-            av = np.abs(vals)
-            if not np.isfinite(vals).all() or ((av < 1e-6) & (vals != 0)).any():
-                return None
-            fixeds = [f"{v:.6f}" for v in vals]
-            if (av > 1e6).any() and max(map(len, fixeds)) > 12:
-                return None  # too_long + has_large_values -> scientific
-            for r, fixed in enumerate(fixeds):
-                frac = fixed[-6:]
-                d = 6 - (len(frac) - len(frac.rstrip("0")))
-                dec[r, i] = max(d, 1)
-                lens_base[r, i] = len(fixed) - 6  # int part + '.'
-        else:
-            col = None
-            if dt == object:
-                col = []
-                for v in s.tolist():
-                    f = _fmt_obj_cell(v)
-                    if f is None:
-                        return None
-                    col.append(f)
-            elif isinstance(dt, np.dtype) and dt.kind in "iu":
-                col = [str(x) for x in s.tolist()]
-            elif isinstance(dt, np.dtype) and dt.kind == "b":
-                col = ["True" if x else "False" for x in s.tolist()]
-            else:
-                return None
-            for r, v in enumerate(col):
-                lens_base[r, i] = len(v)
-    hdr_len = np.array([len(h) for h in _hdr_strings(df)], dtype="int64")
-    return lens_base, dec, hdr_len
-
-
-def _closed_form_boundary(lens_base, dec, hdr_len, a: int, n: int, chunk_size: int) -> int:
+def _closed_form_boundary(lens, hdr_len, a: int, n: int, chunk_size: int) -> int:
     """largest i in [a, n) with modeled len(to_string(rows a..i)) < chunk_size,
     else -1.  len = n_lines*(sum(col_widths)+ncols-1)+n_lines-1.
 
@@ -469,14 +243,12 @@ def _closed_form_boundary(lens_base, dec, hdr_len, a: int, n: int, chunk_size: i
     rows beyond chunk_size // that-per-line-floor can never be in this chunk.
     The cap turns the per-chunk running-max over the whole remaining tail
     (quadratic across a many-chunk sheet) into a bounded window."""
-    per_line_floor = int(hdr_len.sum()) + lens_base.shape[1]
+    per_line_floor = int(hdr_len.sum()) + lens.shape[1]
     cap = min(n - a, chunk_size // max(per_line_floor, 1) + 1)
-    w = np.maximum.accumulate(lens_base[a : a + cap], axis=0) + np.maximum.accumulate(
-        dec[a : a + cap], axis=0
-    )
+    w = np.maximum.accumulate(lens[a : a + cap], axis=0)
     sw = np.maximum(w, hdr_len).sum(axis=1)
     ll = np.arange(2, cap + 2, dtype="int64")  # lines incl header
-    total = ll * (sw + lens_base.shape[1] - 1) + ll - 1
+    total = ll * (sw + lens.shape[1] - 1) + ll - 1
     idx = int(np.searchsorted(total, chunk_size))  # first >= chunk_size
     return a + idx - 1 if idx > 0 else -1
 
@@ -486,25 +258,22 @@ def _chunk_from_cells(
     hdr: list[str],
     hdr_len: np.ndarray,
     lens: np.ndarray,
-    empty_repr_fn,
+    empty_repr: str,
     chunk_size: int,
 ) -> list[str]:
     """The reference's greedy chunk loop over pre-formatted slice-stable
     cells: closed-form boundary location + direct render, zero pandas calls.
-    Shared by the frame fast path (chunk_frame) and the pandas-free pure
-    sheet path (_pure_sheet_chunks); byte-equality with
-    chunk_frame_reference is pinned by both their validation batteries.
+    Byte-equality with chunk_frame_reference is pinned by _pure_model_ok's
+    battery and the property tests.
 
     rows: row-major formatted cell strings; lens: (n_rows, n_cols) int64
-    matrix of their lengths; empty_repr_fn: lazily produces pandas'
-    empty-selection repr for the 1-row-sheet quirk."""
+    matrix of their lengths; empty_repr: pandas' empty-selection repr, the
+    chunk a window emits when only its first row fits (1-row-sheet quirk)."""
     num_rows = len(rows)
-    zeros = np.zeros_like(lens)
     chunks: list[str] = []
-    empty_repr: str | None = None
     _row = 0
     while _row < num_rows:
-        b = _closed_form_boundary(lens, zeros, hdr_len, _row, num_rows, chunk_size)
+        b = _closed_form_boundary(lens, hdr_len, _row, num_rows, chunk_size)
         _p_row_num = b if b >= 0 else 0
         if _p_row_num + 1 <= _row and _row > 0:
             raise ValueError(
@@ -515,181 +284,10 @@ def _chunk_from_cells(
             w = np.maximum(hdr_len, lens[_row:_p_row_num].max(axis=0))
             chunks.append(_render_rows(rows, hdr, [int(x) for x in w], _row, _p_row_num))
         else:
-            if empty_repr is None:  # pandas' empty-selection repr, once
-                empty_repr = empty_repr_fn()
             chunks.append(empty_repr)
         _row = _p_row_num + 1
     return chunks
 
-
-def chunk_frame(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> list[str]:
-    """Semantics-identical fast chunker (byte-equal to chunk_frame_reference,
-    asserted in tests and by the independently-generated x33 golden).
-
-    len(df.iloc[a:i+1].to_string(index=False)) is monotone nondecreasing in i
-    (more lines, column widths only grow), so the reference inner loop's
-    "largest i with len < chunk_size" can be located without formatting every
-    prefix.  Path selection per frame is documented in the module docstring.
-
-    The reference quirk where the FIRST probe already overflowing leaves
-    _p_row_num at 0 (and the loop would regress) is reproduced/guarded
-    identically on every path.
-    """
-    num_rows = df.shape[0]
-    _row = 0
-    chunks: list[str] = []
-    if num_rows == 0:
-        return chunks
-
-    dts = list(df.dtypes)
-    cells = _fast_cells(df, dts) if _fast_model_ok() else None
-    if cells is not None:
-        # FAST: closed-form boundaries + direct render, no pandas calls
-        hdr = _hdr_strings(df, dts)
-        hdr_len = np.array([len(h) for h in hdr], dtype="int64")
-        lens = np.array([[len(v) for v in c] for c in cells], dtype="int64").T
-        return _chunk_from_cells(
-            list(zip(*cells)),
-            hdr,
-            hdr_len,
-            lens,
-            lambda: df.iloc[0:0].to_string(index=False),
-            chunk_size,
-        )
-
-    def fits(i: int) -> bool:  # len(to_string(rows _row..i)) < chunk_size
-        return len(df.iloc[_row : i + 1].to_string(index=False)) < chunk_size
-
-    hint = _float_hint_matrices(df) if _fast_model_ok() else None
-
-    while _row < num_rows:
-        if fits(num_rows - 1):
-            # common case: the whole remainder fits -> one probe total
-            _p_row_num = num_rows - 1
-        elif not fits(_row):
-            _p_row_num = 0  # reference: inner loop breaks on first probe
-        else:
-            _p_row_num = -1
-            if hint is not None:
-                # FLOAT-HINT: predict, then CONFIRM with two real probes —
-                # a wrong prediction costs nothing but the fallback below
-                pred = _closed_form_boundary(*hint, _row, num_rows, chunk_size)
-                if pred >= _row and fits(pred) and (
-                    pred + 1 >= num_rows or not fits(pred + 1)
-                ):
-                    _p_row_num = pred
-            if _p_row_num < 0:
-                lo = _row  # known fitting
-                step = 1
-                hi = None
-                while hi is None:
-                    probe = lo + step
-                    if probe >= num_rows:
-                        hi = num_rows - 1  # not fits (checked above)
-                    elif fits(probe):
-                        lo = probe
-                        step *= 2
-                    else:
-                        hi = probe
-                while hi - lo > 1:  # invariant: fits(lo), not fits(hi)
-                    mid = (lo + hi) // 2
-                    if fits(mid):
-                        lo = mid
-                    else:
-                        hi = mid
-                _p_row_num = lo
-        if _p_row_num + 1 <= _row and _row > 0:
-            raise ValueError(
-                f"row {_row} alone exceeds chunk_size={chunk_size}; "
-                "reference semantics would loop forever"
-            )
-        chunks.append(df.iloc[_row:_p_row_num].to_string(index=False))
-        _row = _p_row_num + 1
-    return chunks
-
-
-def chunk_frame_markdown(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> list[str]:
-    """The reference's `result_type == "markdown"` chunker branch
-    (ameya_parser_excel whl!.../excel/extractors/simple_reader_extractor.py:53,65
-    and the csv twin): the SAME greedy loop, with chunk text rendered by
-    chunk.to_markdown(index=False) instead of to_string.
-
-    Reference-dead code: the consumer pins {"result_type": "text"}
-    (quanta-search-consumer/utils/util.py:307), so no production file ever
-    takes this branch.  pandas.to_markdown delegates to `tabulate`, which
-    this container does not ship — when tabulate is importable the branch
-    runs the real renderer (galloping + binary-search probes; len of a
-    pipe-table is monotone in the row count for the same width-only-grows
-    reason to_string's is), otherwise it raises NotImplementedError, the
-    same honest-gap policy as the codec-bound multimodal decoders."""
-    try:
-        import tabulate  # noqa: F401 — pandas' to_markdown backend
-    except ImportError as e:
-        raise NotImplementedError(
-            "result_type='markdown' needs the `tabulate` package "
-            "(pandas.to_markdown backend), which is not installed; the "
-            "reference consumer pins result_type='text' so this branch is "
-            "dead in production"
-        ) from e
-
-    num_rows = df.shape[0]
-    _row = 0
-    chunks: list[str] = []
-
-    def fits(i: int) -> bool:
-        return len(df.iloc[_row : i + 1].to_markdown(index=False)) < chunk_size
-
-    while _row < num_rows:
-        if fits(num_rows - 1):
-            _p_row_num = num_rows - 1
-        elif not fits(_row):
-            _p_row_num = 0  # reference: inner loop breaks on first probe
-        else:
-            lo, step, hi = _row, 1, None
-            while hi is None:
-                probe = lo + step
-                if probe >= num_rows:
-                    hi = num_rows - 1
-                elif fits(probe):
-                    lo, step = probe, step * 2
-                else:
-                    hi = probe
-            while hi - lo > 1:
-                mid = (lo + hi) // 2
-                if fits(mid):
-                    lo = mid
-                else:
-                    hi = mid
-            _p_row_num = lo
-        if _p_row_num + 1 <= _row and _row > 0:
-            raise ValueError(
-                f"row {_row} alone exceeds chunk_size={chunk_size}; "
-                "reference semantics would loop forever"
-            )
-        chunks.append(df.iloc[_row:_p_row_num].to_markdown(index=False))
-        _row = _p_row_num + 1
-    return chunks
-
-
-# ---------------------------------------------------------------------------
-# PURE path: pandas-free parse + chunk for the restricted sheet grammar
-# ---------------------------------------------------------------------------
-#
-# pandas' per-call parser construction (TextFileReader -> engine -> C wrapper)
-# costs ~1.3 ms per sheet regardless of size and dominated the kernel profile
-# (xlsx+csv = 81% of extraction CPU, >half of it in read machinery).  For
-# sheets whose DATA region provably parses to an all-object frame of plain
-# strings — every cell matches [A-Za-z_][A-Za-z0-9_ ]* and is not a token
-# pandas would coerce (bool/NA/inf spellings; the leading-letter rule already
-# excludes every numeric form) — read_csv is observationally equivalent to
-# str.split, and to_string to the same width model the fast chunk path
-# already rides.  Anything outside the grammar (quotes, CR, blank lines,
-# empty/numeric/coercible cells, ragged rows, duplicate or all-"Unnamed"
-# labels that would exhaust the retry loop) returns None and falls back to
-# the pandas path, so error messages and exotic inference stay byte-exact.
-# Validated once per process by _pure_model_ok against read_csv +
-# chunk_frame_reference on an adversarial battery; any mismatch disables the
-# path for the process (correctness then rides the pandas path, as before).
 
 # one data line: non-empty cells matching [A-Za-z_][A-Za-z0-9_ ]*, comma-
 # joined -- the leading letter makes numeric coercion impossible, the charset
@@ -705,7 +303,7 @@ _PURE_BAD_TOKENS = frozenset(
 _PURE_OK: bool | None = None
 
 # byte-class LUT for the data block: letters, digits, '_', ' ', ',', '\n'
-# (exactly _PURE_BLOCK's charset plus the two separators).  A cell's FIRST
+# (the data-line charset above plus the two separators).  A cell's FIRST
 # byte must additionally be a letter/underscore — checked vectorized below.
 _PURE_LUT = np.zeros(256, dtype=bool)
 for _c in b"abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_ ,\n":
@@ -852,7 +450,7 @@ def _pure_sheet_chunks(
     hdr = _fmt_labels(labels)
     hdr_len = np.array([len(h) for h in hdr], dtype="int64")
     empty_repr = "Empty DataFrame\nColumns: [%s]\nIndex: []" % ", ".join(labels)
-    return _chunk_from_cells(rows, hdr, hdr_len, lens, lambda: empty_repr, chunk_size)
+    return _chunk_from_cells(rows, hdr, hdr_len, lens, empty_repr, chunk_size)
 
 
 def _pure_model_ok() -> bool:
@@ -925,37 +523,27 @@ def _pure_model_ok() -> bool:
 
 
 def walk_sheets(
-    raw_spans: list[dict],
-    excel_mode: bool,
-    chunk_size: int = CHUNK_SIZE,
-    result_type: str = "text",
+    raw_spans: list[dict], excel_mode: bool, chunk_size: int = CHUNK_SIZE
 ) -> list[dict]:
     """All sheets of one workbook (one raw span per sheet, in sheet order) ->
     concatenated chunk streams as {kind:'table_chunk', text, media_ref:''}.
-
-    result_type mirrors the reference loader option: "text" (the production
-    value — the consumer pins it) renders to_string chunks; "markdown"
-    renders to_markdown chunks (reference-dead branch, see
-    chunk_frame_markdown for the tabulate gate).
 
     File-level gate (ref simple_directory_reader: `if not docs[0].text`):
     if the FIRST emitted chunk has falsy text the whole file is skipped; if no
     chunks at all were produced the reference raises (docs[0] IndexError ->
     extraction error) and the file contributes nothing.
     """
-    chunker = chunk_frame if result_type == "text" else chunk_frame_markdown
     chunks: list[str] = []
     for sp in raw_spans:
         text = sp["text"] or ""
-        if result_type == "text":
-            pure = _pure_sheet_chunks(text, excel_mode, chunk_size)
-            if pure is not None:
-                chunks.extend(pure)
-                continue
+        pure = _pure_sheet_chunks(text, excel_mode, chunk_size)
+        if pure is not None:
+            chunks.extend(pure)
+            continue
         df = _read_with_unnamed_retry(text, excel_mode)
         if df is None:
             continue
-        chunks.extend(chunker(df, chunk_size))
+        chunks.extend(chunk_frame(df, chunk_size))
     if not chunks or not chunks[0]:
         return []
     return [{"kind": "table_chunk", "text": c, "media_ref": ""} for c in chunks]

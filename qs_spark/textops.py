@@ -543,7 +543,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     max_bucket_size: int = LSH_MAX_BUCKET,
     fps: DataFrame | None = None,
-    strategy: str = "pair_kernel",
     sigs: DataFrame | None = None,
     rep_ids: DataFrame | None = None,
     sigs_are_reps: bool = False,
@@ -556,23 +555,16 @@ def ngram_jaccard_pairs(
     bucket-local.  Recall is the LSH band guarantee (pairs under the band
     similarity threshold may be missed — by design); precision is exact.
 
-    Two exact-verify strategies, identical output (parity-tested):
-
-    'pair_kernel' (default, r05): ship both normalized texts to each pair
-    (one semi-join projects candidate-doc texts, two joins attach them) and
+    Exact verify (r05): ship both normalized texts to each pair (one
+    semi-join projects candidate-doc texts, two joins attach them) and
     compute |A∩B|, |A|, |B| per pair in one Arrow-batched kernel.  Plan is
-    3 slim stages after the candidate join vs ~8 for the shingle-join form —
+    3 slim stages after the candidate join vs ~8 for a shingle-join form —
     the scheduling-latency floor the r04 verdict flagged.  Text shipped is
     |pairs| x 2 texts; per-doc amplification is bounded by the bucket cap x
     bands (a doc joins at most that many pairs), and exact-dup mass
     collapsed to representatives upstream, so the degenerate web-corpus case
     stays linear.  Jaccard division + rounding stay JVM-side so oracle
     rounding semantics are unchanged.
-
-    'shingle_join' (r04 shape): explode candidate docs to distinct shingles
-    and count intersections via two shuffle joins — no text duplication, the
-    better shape if pair multiplicity per doc is ever unbounded (e.g. an
-    uncapped custom banding).  cand/sh are scoped-cached (multi-consumer).
 
     Candidate-text semi-join shape (r06, guide §3.2): unhinted, the planner
     sort-merge-joins docs against the candidate ids — which shuffles the
@@ -606,39 +598,21 @@ def ngram_jaccard_pairs(
     cdocs = cand.selectExpr("explode(array(doc_a, doc_b)) as doc_id")
     if cand.count() <= broadcast_cands_below:
         cdocs = F.broadcast(cdocs)
-    if strategy == "pair_kernel":
-        t = scoped_cache(
-            docs.join(cdocs, "doc_id", "left_semi")
-            .select("doc_id", norm_text().alias("_nt"))
-        )
-        withA = cand.join(t, cand.doc_a == t.doc_id).select(
-            "doc_a", "doc_b", F.col("_nt").alias("_ta")
-        )
-        withAB = withA.join(t, withA.doc_b == t.doc_id).select(
-            "doc_a", "doc_b", "_ta", F.col("_nt").alias("_tb")
-        )
-        id_t = docs.schema["doc_id"].dataType.simpleString()
-        stats = withAB.mapInPandas(
-            _pair_shingle_stats(n),
-            f"doc_a {id_t}, doc_b {id_t}, inter long, sza long, szb long",
-        )
-    else:
-        sh = scoped_cache(
-            docs.join(cdocs, "doc_id", "left_semi")
-            .select("doc_id", F.explode(shingles_col(n)).alias("sh"))
-            .distinct()
-        )
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-        inter = (
-            cand.join(sh.alias("a"), cand.doc_a == F.col("a.doc_id"))
-            .join(sh.alias("b"), (cand.doc_b == F.col("b.doc_id")) & (F.col("a.sh") == F.col("b.sh")))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        stats = (
-            inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza"), "doc_a")
-            .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb"), "doc_b")
-        )
+    t = scoped_cache(
+        docs.join(cdocs, "doc_id", "left_semi")
+        .select("doc_id", norm_text().alias("_nt"))
+    )
+    withA = cand.join(t, cand.doc_a == t.doc_id).select(
+        "doc_a", "doc_b", F.col("_nt").alias("_ta")
+    )
+    withAB = withA.join(t, withA.doc_b == t.doc_id).select(
+        "doc_a", "doc_b", "_ta", F.col("_nt").alias("_tb")
+    )
+    id_t = docs.schema["doc_id"].dataType.simpleString()
+    stats = withAB.mapInPandas(
+        _pair_shingle_stats(n),
+        f"doc_a {id_t}, doc_b {id_t}, inter long, sza long, szb long",
+    )
     return stats.select(
         "doc_a",
         "doc_b",
@@ -746,7 +720,7 @@ def connected_components(
         # parallelizes over default.parallelism — 64 Python-RDD tasks of a
         # few hundred rows each whose per-task overhead cost ~0.6 s of the
         # broadcast build (event-log stage s100).  The tier is bounded at
-        # 2 * local_below rows, so 50k-row slices cap it at 9 tasks.
+        # 2 * local_below rows; 50k-row slices, capped at 8 tasks.
         rows = [(x, find(x)) for x in sorted(nodes)]
         schema = f"node {ntype}, cluster {ntype}"
         return F.broadcast(

@@ -35,9 +35,9 @@ def test_fast_chunker_property(rows, budget):
 
 
 # mixed-dtype frames: ints at the int64 edges, floats incl. nan/inf, bools,
-# None, unicode, tab/newline escapes, and datetimes — exercises the FAST,
-# FLOAT-HINT and PROBE formatting paths (4k seeded examples passed offline
-# before this was frozen at a CI-sized budget).
+# None, unicode, tab/newline escapes, and datetimes — exercises pandas'
+# per-dtype formatters under the galloping chunker (4k seeded examples
+# passed offline before this was frozen at a CI-sized budget).
 _mixed_val = st.one_of(
     st.text(max_size=10),
     st.integers(min_value=-(2**63), max_value=2**63 - 1),

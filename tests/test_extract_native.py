@@ -125,6 +125,37 @@ def test_native_hostile_table(spark, tmp_path):
     assert out == ref
 
 
+def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
+    """extract_spans_native annotates its output with the small/mega
+    branches (_qs_store_branches), so build_store + write_store take the
+    per-branch rebalance path.  A select("*") drops the annotation and takes
+    the plain repartition(n) path.  Both stores must hold the same rows."""
+    from qs_spark.store import build_store, write_store
+
+    def span(kind, text, k):
+        return {"kind": kind, "text": text, "media_ref": "", "offset": k}
+
+    rows = [("d_mega", [span("pdf_text", f"page {i}", i) for i in range(100)])] + [
+        (f"d_small_{k}", [span("md", f"note {k}", 0), span("md", "", 1)])
+        for k in range(8)
+    ]
+    path = str(tmp_path / "branches.parquet")
+    _write_sc_table(spark.createDataFrame(rows, SCHEMA), path)
+
+    spans = extract_spans_native(spark, path)
+    annotated = build_store(spans)
+    assert len(annotated._qs_store_branches) == 2
+    plain = build_store(spans.select("*"))
+    assert getattr(plain, "_qs_store_branches", None) is None
+
+    write_store(annotated, str(tmp_path / "store_branches"))
+    write_store(plain, str(tmp_path / "store_plain"))
+    got = _rows(spark.read.parquet(str(tmp_path / "store_branches")))
+    want = _rows(spark.read.parquet(str(tmp_path / "store_plain")))
+    assert {r[1] for r in got} == {"d_mega"} | {f"d_small_{k}" for k in range(8)}
+    assert got == want
+
+
 def test_pack_splits_lpt_covers_exactly_once():
     splits = [(f"f{i}", 0, -1) for i in range(17)]
     sizes = [(i * 37) % 101 + 1 for i in range(17)]

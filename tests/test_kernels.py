@@ -77,8 +77,8 @@ def test_fast_chunker_equals_reference_loop():
                     chunk_frame_reference(df, cs)
                 continue
             assert a == chunk_frame_reference(df, cs), (trial, cs)
-    # formula/renderer path (>32 rows) incl. a >50-char cell (pandas
-    # truncation risk must be in the validation sample)
+    # a >32-row frame incl. a >50-char cell (pandas truncation risk must be
+    # in the validation sample)
     big = pd.DataFrame(
         {
             "a": ["x" * 120 if r == 77 else f"w{r}" for r in range(200)],
@@ -303,37 +303,21 @@ def test_stitch_collapses_part_errors(spark):
 def test_chunker_float_frames_stay_byte_equal():
     """r02 ADVICE (high): pandas formats float columns per printed sub-frame
     ('1.5' in a chunk of only 1.5-style values, '1.50' in the full frame), so
-    no frozen cell projection is slice-stable for float64 — float frames take
-    the hint+probe path (prediction CONFIRMED by real to_string probes).
-    This frame diverged at chunk 11 under the pre-r03 formula path."""
-    import pandas as pd
-
-    from qs_spark.kernels.sheet_kernel import (
-        _fast_cells,
-        chunk_frame,
-        chunk_frame_reference,
-    )
+    no frozen cell projection is slice-stable for float64.  This frame
+    diverged at chunk 11 under the pre-r03 formula path; a frame of
+    slice-stable dtypes (int/bool/object) must stay byte-equal too."""
+    from qs_spark.kernels.sheet_kernel import chunk_frame_reference
 
     df = pd.DataFrame({"a": [1.25] * 64 + [1.5] * 136, "b": ["x"] * 200})
-    assert _fast_cells(df) is None  # float frames rejected from the fast path
     assert chunk_frame(df, 400) == chunk_frame_reference(df, 400)
-    # slice-stable dtypes (int/bool/object) still take the fast path
     df2 = pd.DataFrame({"a": range(200), "b": [True, False] * 100, "c": ["yy"] * 200})
-    assert _fast_cells(df2) is not None
     assert chunk_frame(df2, 400) == chunk_frame_reference(df2, 400)
 
 
 def test_chunker_float_hint_matches_reference():
-    """The float-hint path (closed-form predicted boundary + probe confirm)
-    must be byte-equal to the reference on decimal-varying, sign-varying and
-    scientific-fallback frames (the last rejects the hint and gallops)."""
-    import pandas as pd
-
-    from qs_spark.kernels.sheet_kernel import (
-        _float_hint_matrices,
-        chunk_frame,
-        chunk_frame_reference,
-    )
+    """Float frames must chunk byte-equal to the reference on decimal-varying,
+    sign-varying and scientific-fallback frames (tiny and huge values)."""
+    from qs_spark.kernels.sheet_kernel import chunk_frame_reference
 
     df = pd.DataFrame(
         {
@@ -342,20 +326,14 @@ def test_chunker_float_hint_matches_reference():
             "s": ["ab", "c", "dd", "e", "ff", "g"] * 40,
         }
     )
-    assert _float_hint_matrices(df) is not None
     assert chunk_frame(df, 500) == chunk_frame_reference(df, 500)
-    # scientific-notation triggers (tiny / huge values) reject the hint but
-    # the probe fallback still matches byte-for-byte
     df2 = pd.DataFrame({"f": [1e-7, 1.5, 2.5] * 30, "s": ["x", "yy", "z"] * 30})
-    assert _float_hint_matrices(df2) is None
     assert chunk_frame(df2, 300) == chunk_frame_reference(df2, 300)
     df3 = pd.DataFrame({"f": [1e9, 1.5] * 30})
-    assert _float_hint_matrices(df3) is None
     assert chunk_frame(df3, 200) == chunk_frame_reference(df3, 200)
     # 1e7 renders fixed at 15 chars (> digits+6): pandas flips the printed
-    # slice to scientific -> hint must refuse, gallop must still match
+    # slice to scientific
     df4 = pd.DataFrame({"f": [1e7, 2.5] * 30})
-    assert _float_hint_matrices(df4) is None
     assert chunk_frame(df4, 250) == chunk_frame_reference(df4, 250)
 
 
@@ -481,44 +459,3 @@ def test_pure_sheet_unnamed_retry_and_quirks():
     assert pure == ["Empty DataFrame\nColumns: [a, b_col]\nIndex: []"]
     # retry exhaustion in excel mode: sheet skipped without pandas
     assert sk._pure_sheet_chunks(",,\n,,", True) == []
-
-
-# ---- result_type="markdown" branch (reference-dead code, tabulate-gated) ----
-
-
-def test_markdown_chunker_gated_on_tabulate():
-    """Without tabulate (this container), the markdown branch must raise a
-    clear NotImplementedError — same honest-gap policy as the codec stubs.
-    With tabulate, it must reproduce the reference loop: greedy fill,
-    end-exclusive emit (dropped row), to_markdown rendering."""
-    import qs_spark.kernels.sheet_kernel as sk
-
-    df = pd.DataFrame({"a": ["x1", "x2", "x3"], "b": ["y1", "y2", "y3"]})
-    try:
-        import tabulate  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="tabulate"):
-            sk.chunk_frame_markdown(df)
-        with pytest.raises(NotImplementedError, match="tabulate"):
-            sk.walk_sheets(
-                [_sp("sheet_rows", "a,b\nx,y\nz,w")],
-                excel_mode=True,
-                result_type="markdown",
-            )
-        return
-    # tabulate present: byte-equality with the reference's literal O(n^2) loop
-    def reference_md(df, chunk_size):
-        num_rows, _row, out = df.shape[0], 0, []
-        while _row < num_rows:
-            _p = 0
-            for i in range(_row, num_rows):
-                if len(df.iloc[_row : i + 1].to_markdown(index=False)) < chunk_size:
-                    _p = i
-                else:
-                    break
-            out.append(df.iloc[_row:_p].to_markdown(index=False))
-            _row = _p + 1
-        return out
-
-    for cs in (102400, 60, 40):
-        assert sk.chunk_frame_markdown(df, cs) == reference_md(df, cs), cs

@@ -68,3 +68,25 @@ def test_rerun_is_noop_and_idempotent(spark, tmp_path):
     assert n1 == n2
     ck = cat.read(spark, CKPT_TABLE).toPandas()
     assert (ck["run_id"] == "a").all()  # no bucket was re-claimed
+
+
+def test_lineage_doc_count_includes_spanless_docs(spark, tmp_path):
+    """Docs with null or empty spans write no span row, but they are input
+    docs of their bucket: the lineage doc_count must still count them,
+    across a crash and a resume."""
+    cat = ParquetCatalog(str(tmp_path / "wh3"))
+    corpus = corpus_df(spark, 40)
+    spanless = spark.createDataFrame(
+        [(f"null_spans_{k}", None) for k in range(6)]
+        + [(f"empty_spans_{k}", []) for k in range(6)],
+        corpus.schema,
+    )
+    docs = corpus.unionByName(spanless)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract_checkpointed(
+            spark, docs, cat, run_id="c1", n_buckets=4, buckets_per_wave=2, fail_after_waves=1
+        )
+    run_extract_checkpointed(spark, docs, cat, run_id="c2", n_buckets=4, buckets_per_wave=2)
+    ck = cat.read(spark, CKPT_TABLE).toPandas()
+    assert sorted(ck["bucket"]) == list(range(4))
+    assert int(ck["doc_count"].sum()) == 40 + 12
