@@ -444,9 +444,12 @@ def _pack_splits_lpt(
     """Longest-processing-time packing of splits into n_bins task bins:
     sort by byte weight descending, assign each to the lightest bin.  Bounds
     imbalance at (1 + 1/k) of optimal — good enough that ~2 waves of bins
-    per core beat per-file tasks, whose ~0.3 s Python-exec overhead each
-    dominated the job (measured: 390 one-file tasks = ~4 s of pure task
-    overhead at 32 cores)."""
+    per core beat per-file tasks, because every Python task pays a fixed
+    cost on top of its data: JVM scheduling, the worker handshake and the
+    Arrow stream, ~30-45 ms of CPU per no-op mapInArrow task (4 vCPUs,
+    local[4]).  Until qs_spark.pydaemon it was ~0.17-0.22 s, most of it
+    each task re-reading pyspark.zip's directory (r06: 390 one-file tasks =
+    ~4 s of pure task overhead at 32 cores)."""
     import heapq
 
     n_bins = max(1, min(n_bins, len(splits)))
@@ -504,14 +507,15 @@ def native_scan_table(spark, path: str, split_threshold: int) -> DataFrame | Non
     work"): the old form opened the whole table with spark.read.parquet —
     a full file listing + schema inference over every data file (~0.25 s
     per query on the sandbox's 390-file corpus) only to filter out the
-    ~0.2% mega partition.  Validation now reads ONE data-file footer
-    driver-side (pyarrow, ~ms) and only the mega directory is handed to
-    Spark, with an explicit schema so no inference pass runs.  The
-    trusted-threshold rule is unchanged in effect: parquet's partitionBy
-    drops column metadata (a stored with_size_class threshold never
-    round-trips — verified), so a bare-path table is only ever trusted at
-    the default derivation threshold; a table format with real column
-    metadata (Iceberg) would consult it here."""
+    ~0.2% mega partition.  Validation now reads one data-file footer per
+    partition driver-side (pyarrow, ~ms) and only the mega directory is
+    handed to Spark, with the explicit schema of a mega footer so no
+    inference pass runs.  The trusted-threshold rule is unchanged in
+    effect: parquet's partitionBy drops column metadata (a stored
+    with_size_class threshold never round-trips — verified), so a
+    bare-path table is only ever trusted at the default derivation
+    threshold; a table format with real column metadata (Iceberg) would
+    consult it here."""
     import glob
     import os
 
@@ -523,28 +527,29 @@ def native_scan_table(spark, path: str, split_threshold: int) -> DataFrame | Non
     if split_threshold != DEFAULT_SPLIT_THRESHOLD:
         return None
     mega_dir = os.path.join(path, f"{SIZE_CLASS_COL}=mega")
-    sample = next(
-        (
-            f
-            for d in (small_dir, mega_dir)
-            for f in sorted(glob.glob(os.path.join(d, "*.parquet")))
-            if os.path.getsize(f) > 0
-        ),
-        None,
-    )
-    if sample is None:
+    # one footer per partition: the small one is what the native reader
+    # depends on, the mega one types the mega read (the two partitions may
+    # come from different writers, e.g. int32 vs int64 span offsets)
+    samples = [
+        next(
+            (
+                f
+                for f in sorted(glob.glob(os.path.join(d, "*.parquet")))
+                if os.path.getsize(f) > 0
+            ),
+            None,
+        )
+        for d in (small_dir, mega_dir)
+    ]
+    schemas = [pq.read_schema(f) for f in samples if f is not None]
+    if not schemas or any(
+        "spans" not in s.names or "doc_id" not in s.names for s in schemas
+    ):
         return None
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    arrow_schema = pq.read_schema(sample)
-    if "spans" not in arrow_schema.names or "doc_id" not in arrow_schema.names:
-        return None
-    schema = from_arrow_schema(arrow_schema)
-    has_megas = any(
-        os.path.getsize(f) > 0
-        for f in glob.glob(os.path.join(mega_dir, "*.parquet"))
-    )
-    if not has_megas:
+    schema = from_arrow_schema(schemas[-1])
+    if samples[1] is None:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(mega_dir)
 
@@ -566,7 +571,7 @@ def extract_spans_native(
     the table lacks the trusted layout.
 
     task_waves: task bins per core (LPT-packed by bytes).  2 balances the
-    per-task Python-exec overhead (~0.3 s each, measured) against
+    fixed cost of a Python task (see _pack_splits_lpt) against
     straggler overlap; doc-level cost skew largely averages out at the
     bin level because each bin holds many hash-bucketed files."""
     import glob
@@ -603,8 +608,8 @@ def extract_spans_native(
         # bytes, so AQE's partition coalescing would legally collapse it to
         # one task and serialize every read — measured 40 s vs 4 s), and a
         # JVM range source avoids a Python-RDD lineage whose pickle pass
-        # would double the per-task Python-exec cost (measured 7.3 s vs
-        # 4.0 s per 390 no-op tasks)
+        # is a second Python task per bin (r06, at ~0.3 s per task: 7.3 s
+        # vs 4.0 s per 390 no-op tasks)
         bin_df = spark.range(len(bins), numPartitions=len(bins)).select(
             F.col("id").cast("int").alias("bin_idx")
         )
@@ -617,10 +622,11 @@ def extract_spans_native(
     # Size the mega branch's exchange by its DATA bytes (the partition dir
     # is the Iceberg-stats analog), not by 4x shuffle.partitions: megas are
     # ~0.2% of docs, and a cores-proportional partition count turned the
-    # branch into hundreds of near-empty Python tasks whose ~0.3 s each
-    # overhead GREW with cores (measured: 5 s at 8 cores -> 10 s at 32 on
-    # ~5 MB of megas, inverting the scaling curve).  Slices carry payload
-    # text, so bytes track kernel work here — 1 MB per task, floored at 1
+    # branch into hundreds of near-empty Python tasks whose fixed cost
+    # GREW with cores (r06, at ~0.3 s per task before qs_spark.pydaemon:
+    # 5 s at 8 cores -> 10 s at 32 on ~5 MB of megas, inverting the
+    # scaling curve; _pack_splits_lpt gives today's per-task cost).
+    # Slices carry payload text, so bytes track kernel work here — 1 MB per task, floored at 1
     # (r06: 4 MB/task put the sandbox's 5.4 MB mega dir on 2 kernel tasks of
     # ~0.5 s each, ~1 s of critical path the union stage waits on; 1 MB/task
     # measured 0.72 s vs 1.0-2.2 s across 3-trial A/B, still bytes-derived

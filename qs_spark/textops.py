@@ -59,18 +59,6 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles_col(n: int = 3, text_col="text"):
-    """Word n-gram shingles (distinct per doc when used with explode+distinct)."""
-    toks = F.split(norm_text(text_col), " ")
-    k = F.size(toks) - (n - 1)
-    return F.when(k <= 0, F.array(F.array_join(toks, " "))).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        )
-    )
-
-
 MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 
@@ -89,8 +77,10 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataF
     per doc) interpret at ~1.5us/element — measured 4.6 s at sf0.1, ~80% of
     dedup_lsh wall time — while the same md5 math in a mapInPandas kernel
     (hashlib + a comprehension, C-speed md5) runs in 1.9 s.  Output is
-    IDENTICAL (asserted by test_minhash_kernel_matches_jvm_exprs) and the
-    kernel is row-local — no shuffle, embarrassingly parallel at 100 TB.
+    IDENTICAL to that column-expression form, which lives on as the test
+    oracle in tests/test_textops.py (asserted by
+    test_minhash_kernel_matches_jvm_exprs), and the kernel is row-local —
+    no shuffle, embarrassingly parallel at 100 TB.
     Null-text docs drop, matching the r02 explode form's semantics.
     """
     return _sketches_impl(docs, k, n, with_fp=False)
@@ -136,7 +126,7 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
         import pandas as pd
 
         # text arrives already norm_text()-normalized (JVM-side lowercase +
-        # \s+ collapse, same expression the expr form shingles): the kernel
+        # \s+ collapse, same expression the test oracle shingles): the kernel
         # does only tokenize-join-md5, so Python lowercasing/regex semantics
         # can never diverge from the JVM form (r04 VERDICT #5 -- the old
         # str.lower() path differed on locale-ish codepoints like Turkish
@@ -216,11 +206,14 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
     #
     # Partition-count sizing (r06, guide §2): the kernel task count is
     # byte-derived — clamp(input_bytes / 4 MB, session cores,
-    # shuffle.partitions) — instead of a flat shuffle.partitions.  Per-task
-    # overhead is ~10 ms (Arrow stream + scheduling); on the sandbox's 6 MB
-    # documents table 64 tasks spent 0.9 s where 32 spend 0.5 s (measured,
-    # 3-trial medians), while the cores floor keeps the CPU-bound kernel
-    # fully parallel and real inputs grow the count back via bytes.
+    # shuffle.partitions) — instead of a flat shuffle.partitions.  Every
+    # Python task pays a fixed cost: ~30-45 ms of CPU per no-op task (JVM
+    # scheduling, worker handshake, Arrow stream; 4 vCPUs, local[4]) since
+    # qs_spark.pydaemon stopped each task re-reading pyspark.zip's
+    # directory, ~0.17-0.22 s before.  On the sandbox's 6 MB documents
+    # table 64 tasks spent 0.9 s where 32 spent 0.5 s (r06, 3-trial
+    # medians), while the cores floor keeps the CPU-bound kernel fully
+    # parallel and real inputs grow the count back via bytes.
     target = int(
         inp.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
@@ -242,23 +235,6 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
     if inp.rdd.getNumPartitions() < max(2, target // 2):
         inp = inp.repartition(target, "doc_id")
     return inp.mapInPandas(kernel, schema)
-
-
-def minhash_signatures_expr(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
-    """The pure-column-expression form of minhash_signatures (r02 shape):
-    shingle explode -> md5 split -> k min-aggregates.  Kept as the
-    JVM-side reference the kernel is equality-tested against, and for
-    callers that must stay UDF-free."""
-    sh = docs.select("doc_id", F.explode(shingles_col(n)).alias("sh"))
-    md5 = F.md5(F.col("sh"))
-    h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("bigint") % MINHASH_P
-    h2 = F.conv(F.substring(md5, 17, 15), 16, 10).cast("bigint") % MINHASH_P
-    sh = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % MINHASH_P).alias(f"mh{i}")
-        for i in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_buckets(sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K) -> DataFrame:
@@ -488,8 +464,9 @@ def simhash_near_dup_pairs(
 def _pair_shingle_stats(n: int):
     """mapInPandas kernel: (doc_a, doc_b, _ta, _tb) -> (doc_a, doc_b, inter,
     sza, szb) with inner-join semantics (a pair with an empty intersection —
-    including a null text on either side — emits nothing).  Shingling
-    mirrors shingles_col exactly on the pre-normalized text: split on a
+    including a null text on either side — emits nothing).  Shingling is
+    the MinHash kernel's rule (_sketches_impl; the column-expression oracle
+    in tests/test_textops.py pins it) on the pre-normalized text: split on a
     single space (norm_text collapsed runs already; a leading/trailing space
     yields an empty token, same as F.split), whole-text shingle when fewer
     than n tokens, DISTINCT per doc."""
@@ -548,7 +525,11 @@ def ngram_jaccard_pairs(
     sigs_are_reps: bool = False,
     broadcast_cands_below: int = 2_000_000,
 ) -> DataFrame:
-    """n-gram Jaccard similarity over LSH candidate pairs — the scale path.
+    """n-gram Jaccard over LSH pairs; runs an eager count() job when called.
+
+    The scale path.  The count is the broadcast gate below: it runs the
+    sketch + LSH pipeline when this function is called, even if the
+    returned DataFrame is never consumed.
 
     Candidate pairs come from MinHash-LSH banding (lsh_candidate_pairs:
     exact-dup representatives, hot buckets capped), so pair generation is
@@ -718,9 +699,13 @@ def connected_components(
         #
         # Slice count pinned to the data (r06): a bare createDataFrame
         # parallelizes over default.parallelism — 64 Python-RDD tasks of a
-        # few hundred rows each whose per-task overhead cost ~0.6 s of the
-        # broadcast build (event-log stage s100).  The tier is bounded at
-        # 2 * local_below rows; 50k-row slices, capped at 8 tasks.
+        # few hundred rows each, whose fixed cost per task was ~0.6 s of
+        # the broadcast build (r06, event-log stage s100).  Most of that
+        # cost was each task re-reading pyspark.zip's directory; under
+        # qs_spark.pydaemon 64 such tasks take ~1 s wall at 35-57 ms of CPU
+        # each (3.0-4.0 s and 0.18-0.25 s before; 4 vCPUs, local[4]).  The
+        # tier is bounded at 2 * local_below rows; 50k-row slices, capped
+        # at 8 tasks.
         rows = [(x, find(x)) for x in sorted(nodes)]
         schema = f"node {ntype}, cluster {ntype}"
         return F.broadcast(

@@ -23,6 +23,7 @@ from qs_spark.extract import (
     _plan_native_splits,
     extract_spans,
     extract_spans_native,
+    oracle_extract,
     with_size_class,
 )
 
@@ -123,6 +124,45 @@ def test_native_hostile_table(spark, tmp_path):
     out = _rows(extract_spans_native(spark, path))
     ref = _rows(extract_spans(df, repartition_input=False))
     assert out == ref
+
+
+def test_native_mega_schema_read_from_a_mega_footer(spark, tmp_path):
+    """The small and mega partitions may come from different writers: here
+    the mega file stores spans.offset as int64 and the small files as int32.
+    The mega read must use a mega footer's schema, not the small one's."""
+
+    def span_type(offset):
+        return pa.list_(
+            pa.struct(
+                [("kind", pa.string()), ("text", pa.string()),
+                 ("media_ref", pa.string()), ("offset", offset)]
+            )
+        )
+
+    def span(kind, text, k):
+        return {"kind": kind, "text": text, "media_ref": "", "offset": k}
+
+    small = [(f"d_small_{k}", [span("md", f"note {k}", 0)]) for k in range(6)]
+    mega = [("d_mega", [span("pdf_text", f"page {i} text", i) for i in range(100)])]
+    path = tmp_path / "mixed_writers.parquet"
+    for cls, docs, offset in (("small", small, pa.int32()), ("mega", mega, pa.int64())):
+        d = path / f"{SIZE_CLASS_COL}={cls}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table(
+                {"doc_id": [did for did, _ in docs],
+                 "spans": pa.array([s for _, s in docs], span_type(offset))}
+            ),
+            str(d / "part-0.parquet"),
+        )
+
+    got = sorted(
+        (r.doc_id, r.order, r.kind, r.text, r.media_ref)
+        for r in extract_spans_native(spark, str(path)).collect()
+    )
+    want = sorted(oracle_extract(small + mega).itertuples(index=False, name=None))
+    assert any(r[0] == "d_mega" for r in got)
+    assert got == want
 
 
 def test_store_branch_annotation_writes_same_rows(spark, tmp_path):

@@ -11,6 +11,36 @@ from qs_spark import textops as X
 SF = "/root/testdata/sf0.001"
 
 
+def shingles_col(n: int = 3, text_col="text"):
+    """Word n-gram shingles (distinct per doc when used with explode+distinct)."""
+    toks = F.split(X.norm_text(text_col), " ")
+    k = F.size(toks) - (n - 1)
+    return F.when(k <= 0, F.array(F.array_join(toks, " "))).otherwise(
+        F.transform(
+            F.sequence(F.lit(0), k - 1),
+            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+        )
+    )
+
+
+def minhash_signatures_expr(docs, k: int = X.MINHASH_K, n: int = 3):
+    """Oracle: the pure-column-expression form of X.minhash_signatures (r02
+    shape): shingle explode -> md5 split -> k min-aggregates.  The kernel
+    must equal it (the same md5 double-hashing math the DuckDB oracles
+    reproduce)."""
+    P = X.MINHASH_P
+    sh = docs.select("doc_id", F.explode(shingles_col(n)).alias("sh"))
+    md5 = F.md5(F.col("sh"))
+    h1 = F.conv(F.substring(md5, 1, 15), 16, 10).cast("bigint") % P
+    h2 = F.conv(F.substring(md5, 17, 15), 16, 10).cast("bigint") % P
+    sh = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
+    aggs = [
+        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % P).alias(f"mh{i}")
+        for i in range(k)
+    ]
+    return sh.groupBy("doc_id").agg(*aggs)
+
+
 def _docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
 
@@ -167,6 +197,25 @@ def test_jaccard_pairs_are_lsh_candidates(spark):
     if len(pairs):
         assert ((pairs.jaccard > 0) & (pairs.jaccard <= 1)).all()
         assert (pairs.doc_a < pairs.doc_b).all()
+
+
+def test_jaccard_pairs_above_broadcast_gate_match_default(spark):
+    """broadcast_cands_below=0 puts any candidate set above the gate, so the
+    candidate texts take the unhinted semi-join path; the rows must equal
+    the default (broadcast) call's."""
+    d = _docs(spark)
+    near = d.limit(1).select(
+        F.lit(900002).alias("doc_id"),
+        F.concat("text", F.lit(" zzzextra")).alias("text"),
+        "lang", "source", "n_chars",
+    )
+    d = d.unionByName(near)
+    default = sorted(map(tuple, X.ngram_jaccard_pairs(d).collect()))
+    above = sorted(
+        map(tuple, X.ngram_jaccard_pairs(d, broadcast_cands_below=0).collect())
+    )
+    assert default
+    assert above == default
 
 
 def test_ann_multiprobe_recall_dominates_single_probe(spark):
@@ -342,7 +391,7 @@ def test_minhash_kernel_matches_jvm_exprs(spark):
     d = _docs(spark).limit(100)
     a = X.minhash_signatures(d).toPandas().sort_values("doc_id").reset_index(drop=True)
     b = (
-        X.minhash_signatures_expr(d)
+        minhash_signatures_expr(d)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -365,7 +414,7 @@ def test_minhash_kernel_matches_jvm_exprs_non_ascii(spark):
     d = spark.createDataFrame(rows, "doc_id int, text string")
     a = X.minhash_signatures(d).toPandas().sort_values("doc_id").reset_index(drop=True)
     b = (
-        X.minhash_signatures_expr(d)
+        minhash_signatures_expr(d)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -398,7 +447,7 @@ def test_doc_sketches_matches_jvm_parts(spark):
     assert list(sk["doc_id"]) == list(fp["doc_id"])  # null rows kept
     assert list(sk["fp"]) == list(fp["fp"])
     mh = (
-        X.minhash_signatures_expr(d)
+        minhash_signatures_expr(d)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
