@@ -38,7 +38,12 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from qs_spark.kernels.dispatch import SPLITTABLE_FMTS, fmt_of_spans, safe_extract_doc
+from qs_spark.kernels.dispatch import (
+    _FMT_BY_KIND,
+    SPLITTABLE_FMTS,
+    fmt_of_spans,
+    safe_extract_doc,
+)
 from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
 
 SPAN_SCHEMA = T.StructType(
@@ -91,34 +96,47 @@ DEFAULT_SPLIT_THRESHOLD = 64
 SIZE_CLASS_COL = "size_class"
 
 
+def sql_str(s: str) -> str:
+    """SQL string literal for one of this package's constants.  Caller
+    values (tenant, state, version) never go through here: they stay
+    F.lit Columns, so no caller text is ever parsed as SQL."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_map(d: dict[str, str]) -> str:
+    """SQL `map(k1, v1, ...)` literal of a constant string map."""
+    return "map(" + ", ".join(sql_str(x) for kv in d.items() for x in kv) + ")"
+
+
+# The ingest plan's column logic is SQL text built once from the constant
+# maps: every Column op is one py4j round trip, and a DataFrame op takes one
+# JVM analyzer pass however many expressions it carries, so one expression
+# string per output column builds the same plan in a fraction of the calls
+# (the textops.lsh_buckets pattern).
+
+# first span whose kind is KNOWN decides the format (unknown/null kinds are
+# skipped, not defaulted), falling back to 'md'.  transform/filter/get are
+# null-safe on empty/null arrays (spans[0] would throw under ANSI mode), and
+# the coalesce keeps fmt non-null so neither branch filter can drop a doc.
+_FMT_SQL = (
+    f"coalesce(get(filter(transform(spans, s -> {sql_map(_FMT_BY_KIND)}[s.kind]),"
+    " f -> f IS NOT NULL), 0), 'md')"
+)
+
+
 def with_fmt(df: DataFrame) -> DataFrame:
     """JVM-side format derivation, semantically IDENTICAL to the oracle's
-    fmt_of_spans: the first span whose kind is KNOWN decides the format
-    (unknown/null kinds are skipped, not defaulted), falling back to 'md'.
-    F.get/filter are null-safe on empty/null arrays (spans[0] would throw
-    under ANSI mode), and the coalesce keeps fmt non-null so neither branch
-    filter can silently drop a doc.  The kind->fmt map is imported from
-    kernels.dispatch so pipeline and oracle can never drift."""
-    from qs_spark.kernels.dispatch import _FMT_BY_KIND
-
-    mapping = F.create_map(*[F.lit(x) for kv in _FMT_BY_KIND.items() for x in kv])
-    # null spans -> transform/filter/get propagate null -> coalesce to 'md'
-    first_known = F.get(
-        F.filter(
-            F.transform("spans", lambda s: mapping[s["kind"]]),
-            lambda x: x.isNotNull(),
-        ),
-        0,
-    )
-    return df.withColumn("fmt", F.coalesce(first_known, F.lit("md")))
+    fmt_of_spans (parity pinned by test_with_fmt_matches_fmt_of_spans).
+    The kind->fmt map is imported from kernels.dispatch so pipeline and
+    oracle can never drift."""
+    return df.withColumn("fmt", F.expr(_FMT_SQL))
 
 
-def mega_predicate(split_threshold: int = DEFAULT_SPLIT_THRESHOLD):
-    """Docs routed to the split/re-stitch path: page-local formats with more
-    raw spans than one kernel call should own."""
-    return F.col("fmt").isin(*SPLITTABLE_FMTS) & (
-        F.size("spans") > split_threshold
-    )
+def mega_predicate(split_threshold: int = DEFAULT_SPLIT_THRESHOLD) -> str:
+    """SQL predicate of the docs routed to the split/re-stitch path:
+    page-local formats with more raw spans than one kernel call should own."""
+    fmts = ", ".join(sql_str(f) for f in SPLITTABLE_FMTS)
+    return f"fmt IN ({fmts}) AND size(spans) > {int(split_threshold)}"
 
 
 def with_size_class(
@@ -130,8 +148,8 @@ def with_size_class(
     partition-pruned scans — each input byte is read once, not twice."""
     if "fmt" not in df.columns:
         df = with_fmt(df)
-    cls = F.when(mega_predicate(split_threshold), F.lit("mega")).otherwise(
-        F.lit("small")
+    cls = F.expr(
+        f"CASE WHEN {mega_predicate(split_threshold)} THEN 'mega' ELSE 'small' END"
     )
     # record the derivation threshold as column metadata (parquet round-trips
     # Spark schema metadata in the footer): extract_spans verifies it before
@@ -251,35 +269,24 @@ def _stitch(parts: DataFrame) -> DataFrame:
 
     Error-isolation parity with the whole-doc path: if ANY part's kernel
     raised, safe_extract_doc on the whole doc would have failed the whole doc
-    with a single order=-1 error span — collapse to the FIRST error row (by
-    part order).  Both the renumber and the collapse ride ONE window shuffle
-    (same partitioning/ordering), and the kernel child is consumed exactly
-    once — an applyInPandas stitch did the same logic but paid a second
-    Arrow->pandas round trip of the full mega payload."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy("part_k", "local_order")
-    wdoc = Window.partitionBy("doc_id")
-    is_err = F.when(F.col("kind") == "error", 1).otherwise(0)
-    # one select, not three withColumns: each chained op is a full analyzer
-    # pass over the tree on the driver; the window columns are unchanged
+    with a single order=-1 error span — collapse to the FIRST error row by
+    (part_k, local_order).  Both the renumber and the collapse ride ONE
+    window shuffle (same partitioning/ordering), and the kernel child is
+    consumed exactly once — an applyInPandas stitch did the same logic but
+    paid a second Arrow->pandas round trip of the full mega payload."""
+    is_err = "CASE WHEN kind = 'error' THEN 1 ELSE 0 END"
+    w = "PARTITION BY doc_id ORDER BY part_k, local_order"
     return (
-        parts.select(
+        parts.selectExpr(
             "*",
-            F.sum(is_err).over(wdoc).alias("n_err"),
-            F.sum(is_err).over(w).alias("err_seen"),  # running, incl. self
-            F.row_number().over(w).alias("rn"),
+            f"sum({is_err}) OVER (PARTITION BY doc_id) AS n_err",
+            f"sum({is_err}) OVER ({w}) AS err_seen",  # running, incl. self
+            f"row_number() OVER ({w}) AS rn",
         )
-        .filter(
-            (F.col("n_err") == 0)
-            | ((F.col("kind") == "error") & (F.col("err_seen") == 1))
-        )
-        .select(
+        .filter("n_err = 0 OR (kind = 'error' AND err_seen = 1)")
+        .selectExpr(
             "doc_id",
-            F.when(F.col("n_err") > 0, F.lit(-1))
-            .otherwise(F.col("rn") - 1)
-            .cast("int")
-            .alias("order"),
+            "CAST(CASE WHEN n_err > 0 THEN -1 ELSE rn - 1 END AS INT) AS `order`",
             "kind",
             "text",
             "media_ref",
@@ -342,18 +349,18 @@ def extract_spans(
     df = with_fmt(df)
     if has_class:
         # partition-column filters -> pruned scans, payload decoded once
-        small = df.filter(F.col(SIZE_CLASS_COL) == "small")
-        mega = df.filter(F.col(SIZE_CLASS_COL) == "mega")
+        small = df.filter(f"{SIZE_CLASS_COL} = 'small'")
+        mega = df.filter(f"{SIZE_CLASS_COL} = 'mega'")
     else:
         is_mega = mega_predicate(split_threshold)
-        small = df.filter(~is_mega)
+        small = df.filter(f"NOT ({is_mega})")
         mega = df.filter(is_mega)
 
     # prune to exactly the kernel's columns BEFORE the Arrow exchange —
     # mapInArrow ships every input column to Python otherwise
     small = small.select("doc_id", "spans", "fmt")
     if repartition_input:
-        small = small.repartition(num_partitions, F.xxhash64("doc_id"))
+        small = small.repartition(num_partitions, F.expr("xxhash64(doc_id)"))
     small_out = small.mapInArrow(_make_whole_doc_fn(chunk_size), schema=SPAN_SCHEMA)
 
     mega_out = _extract_mega(mega, chunk_size, split_threshold, num_partitions)
@@ -367,23 +374,18 @@ def _extract_mega(
     """The mega-doc split/extract/re-stitch branch (needs a `fmt` column).
     Shared by extract_spans and the native-scan path — megas are ~0.2% of
     docs, so both keep this tail on the JVM scan."""
-    n_spans = F.size("spans")
-    t = F.lit(split_threshold)
-    n_parts = F.ceil(n_spans / t).cast("int")
+    t = int(split_threshold)
     parts = (
-        mega.select(
+        mega.selectExpr(
             "doc_id",
             "fmt",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), n_parts - 1),
-                    lambda i: F.slice("spans", i * t + 1, split_threshold),
-                )
-            ).alias("part_k", "spans"),
+            "posexplode(transform("
+            f"sequence(0, CAST(ceil(size(spans) / {t}) AS INT) - 1), "
+            f"i -> slice(spans, i * {t} + 1, {t}))) AS (part_k, spans)",
         )
         # no reorder select: the part kernel reads Arrow columns by NAME
         # (_docs_from_arrow builds a name index), so column order is free
-        .repartition(num_partitions, F.xxhash64("doc_id", "part_k"))
+        .repartition(num_partitions, F.expr("xxhash64(doc_id, part_k)"))
         .mapInArrow(_make_part_fn(chunk_size), schema=_PART_SCHEMA)
     )
     return _stitch(parts)
@@ -570,10 +572,13 @@ def extract_spans_native(
     — pinned by test_extract_native — and falls back to exactly that when
     the table lacks the trusted layout.
 
-    task_waves: task bins per core (LPT-packed by bytes).  2 balances the
-    fixed cost of a Python task (see _pack_splits_lpt) against
-    straggler overlap; doc-level cost skew largely averages out at the
-    bin level because each bin holds many hash-bucketed files."""
+    task_waves: task bins per unit of defaultParallelism (LPT-packed by
+    bytes).  get_spark sets defaultParallelism to the shuffle partition
+    count, max(2 x cores, 8), so the default 2 plans 4 bins per core at 4+
+    cores.  It balances the fixed cost of a Python task (see
+    _pack_splits_lpt) against straggler overlap (an A/B of fewer bins alone
+    was flat); doc-level cost skew largely averages out at the bin level
+    because each bin holds many hash-bucketed files."""
     import glob
     import os
 
@@ -610,8 +615,8 @@ def extract_spans_native(
         # JVM range source avoids a Python-RDD lineage whose pickle pass
         # is a second Python task per bin (r06, at ~0.3 s per task: 7.3 s
         # vs 4.0 s per 390 no-op tasks)
-        bin_df = spark.range(len(bins), numPartitions=len(bins)).select(
-            F.col("id").cast("int").alias("bin_idx")
+        bin_df = spark.range(len(bins), numPartitions=len(bins)).selectExpr(
+            "CAST(id AS INT) AS bin_idx"
         )
         small_out = bin_df.mapInArrow(
             _make_native_reader_fn(bins, chunk_size), schema=SPAN_SCHEMA

@@ -19,19 +19,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from qs_spark.extract import sql_map
 from qs_spark.kernels.dispatch import EXT_BY_FMT
 
-
-def file_name_col(doc_id="doc_id", fmt="fmt"):
-    ext_map = F.create_map(*[F.lit(x) for kv in EXT_BY_FMT.items() for x in kv])
-    return F.concat(F.col(doc_id), ext_map[F.col(fmt)])
+# The projection is SQL text built once from EXT_BY_FMT (see extract.py:
+# one expression string per column instead of one py4j call per Column op).
+_EXT_MAP_SQL = sql_map(EXT_BY_FMT)
+_FILE_NAME_SQL = f"concat(doc_id, {_EXT_MAP_SQL}[fmt])"
+# F1 filename prepend, then F2 lower + newline flattening; the newlines
+# are raw characters inside the SQL literals, so no escape parsing applies
+_STORE_SQL = (
+    "concat_ws('#', doc_id, `order`) AS row_id",
+    "doc_id AS document_id",
+    f"{_FILE_NAME_SQL} AS document_name",
+    "`order` + 1 AS page_no",
+    "replace(lower(concat('File Name : ', "
+    f"{_FILE_NAME_SQL}, '\n\n\n', coalesce(text, ''))), '\n', ' ') AS text",
+    "kind",
+    "media_ref",
+    "fmt",
+)
 
 
 def failed_docs(spans: DataFrame) -> DataFrame:
     """Docs whose extraction failed (safe_extract_doc error spans) — feeds
     the Processing->Failed status write-back (registry.resolve_status, T2)."""
-    return spans.filter(F.col("kind") == "error").select(
-        "doc_id", F.col("text").alias("error"), F.lit("Failed").alias("outcome")
+    return spans.filter("kind = 'error'").selectExpr(
+        "doc_id", "text AS error", "'Failed' AS outcome"
     )
 
 
@@ -50,34 +64,22 @@ def build_store(
     Multi-tenancy (P4): every row carries the owning `uid` and a `realm`
     key->value tag map, mirroring the reference's per-document metadata
     (quanta-search-api/schemas/schema.py:33-41,137-147); retrieval filters on
-    them via search.filter_tenant (file_searcher.py:236,258,265)."""
-    fn = file_name_col()
-    f1 = F.concat(
-        F.lit("File Name : "), fn, F.lit("\n\n\n"), F.coalesce(F.col("text"), F.lit(""))
-    )
-    f2 = F.replace(F.lower(f1), F.lit("\n"), F.lit(" "))
-    realm = realm or {}
-    realm_col = (
-        F.create_map(*[F.lit(x) for kv in realm.items() for x in kv])
-        if realm
-        else F.create_map().cast("map<string,string>")
-    )
+    them via search.filter_tenant (file_searcher.py:236,258,265).  These
+    caller values are F.lit Columns, never SQL text."""
+    tenant = [
+        F.lit(state).alias("state"),
+        F.lit(version_id).alias("version_id"),
+        F.lit(uid).alias("uid"),
+        (
+            F.create_map(*[F.lit(x) for kv in realm.items() for x in kv])
+            if realm
+            else F.expr("CAST(map() AS map<string,string>)")
+        ).alias("realm"),
+    ]
+    cols = [F.expr(c) for c in _STORE_SQL] + tenant
 
     def project(df: DataFrame) -> DataFrame:
-        return df.filter(F.col("kind") != "error").select(
-            F.concat_ws("#", "doc_id", "order").alias("row_id"),
-            F.col("doc_id").alias("document_id"),
-            fn.alias("document_name"),
-            (F.col("order") + 1).alias("page_no"),
-            f2.alias("text"),
-            "kind",
-            "media_ref",
-            "fmt",
-            F.lit(state).alias("state"),
-            F.lit(version_id).alias("version_id"),
-            F.lit(uid).alias("uid"),
-            realm_col.alias("realm"),
-        )
+        return df.filter("kind != 'error'").select(*cols)
 
     # propagate extraction-branch annotation (see write_store): the same
     # projection applied per branch is row-identical to projecting the
@@ -136,9 +138,12 @@ def write_store(
         # the extraction union fuses both branches into one map stage, which
         # cannot start until the mega branch's stitch shuffle lands — the
         # wide native-kernel wave idles behind a 10-task pipeline (~1.3 s at
-        # sf0.1, event-log audit).  Rebalancing each branch separately keeps
-        # the total file count at n (byte-weighted split, every branch >= 1
-        # file) while the branches' exchanges materialize CONCURRENTLY.
+        # sf0.1, event-log audit).  Rebalancing each branch separately
+        # splits the n partitions byte-weighted (every branch >= 1) while
+        # the branches' exchanges materialize CONCURRENTLY.  The file count
+        # is not always sum(parts): on Spark 4.1 a union of branches that
+        # each get ONE partition reports one partition, and a single task
+        # writes one file (a small store at 4 cores: n = 2, split 1 + 1).
         # Row content is identical: union-then-repartition and
         # repartition-then-union write the same rows.
         total_w = sum(w for _, w in branches)

@@ -248,3 +248,49 @@ def test_native_reader_row_group_ranges_read_all(spark, tmp_path):
         for rb in fn(iter([b])):
             out.extend(rb.column(0).to_pylist())
     assert sorted(out) == sorted(d for d, _ in docs)
+
+
+def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
+    """Plan construction is driver time every ingest call pays before its
+    first job: each Column op is a py4j round trip.  The SQL-text builders
+    plan build_store(extract_spans_native(...)) in ~250 commands on a
+    size-classed table with megas; the Column-op builders sent ~1,500."""
+    import gc
+    import threading
+
+    import py4j.clientserver
+
+    from qs_spark.store import build_store
+
+    def span(kind, text, k):
+        return {"kind": kind, "text": text, "media_ref": "", "offset": k}
+
+    rows = [("d_mega", [span("pdf_text", f"page {i}", i) for i in range(100)])] + [
+        (f"d_small_{k}", [span("md", f"note {k}", 0)]) for k in range(8)
+    ]
+    path = str(tmp_path / "budget.parquet")
+    _write_sc_table(spark.createDataFrame(rows, SCHEMA), path)
+    build_store(extract_spans_native(spark, path))  # warm the lazy imports
+
+    conn = py4j.clientserver.ClientServerConnection
+    orig = conn.send_command
+    sent = [0]
+    me = threading.get_ident()
+
+    def counting(self, command):
+        # only this thread's commands: py4j flushes object-delete batches
+        # (0-260 of them) from a background thread at times of its own
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return orig(self, command)
+
+    gc.collect()  # earlier tests' garbage would add delete commands
+    gc.disable()
+    conn.send_command = counting
+    try:
+        store = build_store(extract_spans_native(spark, path))
+    finally:
+        conn.send_command = orig
+        gc.enable()
+    assert len(store._qs_store_branches) == 2  # the mega branch was planned
+    assert sent[0] <= 400, f"{sent[0]} py4j commands to plan one ingest call"

@@ -128,3 +128,88 @@ def test_csv_with_quotes_and_commas(spark):
     csv = 'a,b\n"x, with comma","quo""te"\nplain,2'
     units = extract_doc([{"kind": "csv_rows", "text": csv, "media_ref": "", "offset": 0}], "csv")
     assert units and "x, with comma" in units[0]["text"]
+
+
+def test_with_fmt_matches_fmt_of_spans(spark):
+    """with_fmt (JVM) and fmt_of_spans over the native path's records
+    (_docs_from_arrow: null elements dropped, null kinds '') agree on every
+    known kind and on the null/empty/unknown edge cases.  The store's
+    document_name extension is keyed on this fmt."""
+    import pyarrow as pa
+
+    from qs_spark.extract import _docs_from_arrow, with_fmt
+    from qs_spark.kernels.dispatch import _FMT_BY_KIND, fmt_of_spans
+
+    def sp(kind):
+        return {"kind": kind, "text": "t", "media_ref": "", "offset": 0}
+
+    rows = [(f"k_{k}", [sp(k)]) for k in _FMT_BY_KIND] + [
+        ("null_array", None),
+        ("empty_array", []),
+        ("null_elem_first", [None, sp("pdf_text")]),
+        ("only_null_elem", [None]),
+        ("null_kind_first", [sp(None), sp("sheet_rows")]),
+        ("only_null_kind", [sp(None)]),
+        ("unknown_first", [sp("bogus"), sp("docx_para")]),
+        ("only_unknown", [sp("bogus")]),
+        ("empty_kind_first", [sp(""), sp("csv_rows")]),
+    ]
+    got = {r.doc_id: r.fmt for r in with_fmt(spark.createDataFrame(rows, SCHEMA)).collect()}
+    batch = pa.RecordBatch.from_pylist(
+        [{"doc_id": d, "spans": s} for d, s in rows],
+        schema=pa.schema(
+            [
+                ("doc_id", pa.string()),
+                (
+                    "spans",
+                    pa.list_(
+                        pa.struct(
+                            [
+                                ("kind", pa.string()),
+                                ("text", pa.string()),
+                                ("media_ref", pa.string()),
+                                ("offset", pa.int32()),
+                            ]
+                        )
+                    ),
+                ),
+            ]
+        ),
+    )
+    want = {did: fmt_of_spans(recs) for did, _, _, recs in _docs_from_arrow(batch)}
+    assert len(want) == len(rows)
+    assert got == want
+    assert {got[f"k_{k}"] for k in _FMT_BY_KIND} == set(_FMT_BY_KIND.values())
+    assert got["null_array"] == got["empty_array"] == "md"
+    assert got["unknown_first"] == "docx"
+
+
+def test_build_store_keeps_tenant_values_verbatim(spark):
+    """state, version_id, uid and the realm keys/values are caller data: the
+    store carries them byte-for-byte, quotes, backslashes and newlines
+    included (they are literal Columns, never spliced into SQL text)."""
+    from qs_spark.extract import extract_spans
+    from qs_spark.store import build_store
+
+    nasty = "it's \\ a\nline' OR '1'='1"
+    realm = {"team's": "a\\b", "k\nv": "x'y", "plain": nasty}
+    rows = [("d1", [{"kind": "md", "text": "Hello\nWorld", "media_ref": "", "offset": 0}])]
+    store = build_store(
+        extract_spans(spark.createDataFrame(rows, SCHEMA)),
+        state=f"Pub'lish\\{nasty}",
+        version_id=7,
+        uid=f"u'\\\n{nasty}",
+        realm=realm,
+    )
+    got = store.collect()
+    assert len(got) == 1
+    r = got[0]
+    assert r.state == f"Pub'lish\\{nasty}"
+    assert r.version_id == 7
+    assert r.uid == f"u'\\\n{nasty}"
+    assert dict(r.realm) == realm
+    # the constant projection around them is unchanged
+    assert (r.row_id, r.document_id, r.document_name, r.page_no) == ("d1#0", "d1", "d1.md", 1)
+    assert r.text == "file name : d1.md   hello world"
+    empty = build_store(extract_spans(spark.createDataFrame(rows, SCHEMA))).collect()
+    assert dict(empty[0].realm) == {} and empty[0].state == "Publish"

@@ -290,14 +290,24 @@ def test_stitch_collapses_part_errors(spark):
             ("d", 1, 0, "pdf_text", "b", "", "pdf"),
             ("e", 1, 0, "pdf_text", "q", "", "pdf"),
             ("e", 0, 0, "pdf_text", "p", "", "pdf"),
+            # errors in parts 2 and 0: the first by (part_k, local_order)
+            # wins, whatever the input row order
+            ("f", 2, -1, "error", "Late: z", "", "pdf"),
+            ("f", 1, 0, "pdf_text", "m", "", "pdf"),
+            ("f", 0, -1, "error", "Early: y", "", "pdf"),
+            # a doc whose only part is an error
+            ("g", 0, -1, "error", "Only: w", "", "pdf"),
         ],
         "doc_id string, part_k int, local_order int, kind string, "
         "text string, media_ref string, fmt string",
     )
-    out = {(r.doc_id, r.order): r for r in _stitch(parts).collect()}
-    assert len(out) == 3
+    rows = _stitch(parts).collect()
+    out = {(r.doc_id, r.order): r for r in rows}
+    assert len(rows) == len(out) == 5
     assert out[("d", -1)].kind == "error" and out[("d", -1)].text == "Boom: x"
     assert out[("e", 0)].text == "p" and out[("e", 1)].text == "q"
+    assert out[("f", -1)].kind == "error" and out[("f", -1)].text == "Early: y"
+    assert out[("g", -1)].kind == "error" and out[("g", -1)].text == "Only: w"
 
 
 def test_chunker_float_frames_stay_byte_equal():
