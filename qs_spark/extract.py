@@ -10,9 +10,9 @@ Spark re-expression of the reference upload pipeline's parse stage
          shuffle-join skew but not UDF-compute skew — SURVEY.md §4.1)
       -> salted repartition on xxhash64(doc_id[, part]) -> Arrow-batched
          kernels (mapInArrow; no per-row Python in the exchange)
-      -> mega-doc parts re-stitched per doc (applyInPandas ordered merge,
-         `order` renumbered after empty-unit drops, matching add_metadata's
-         enumeration semantics)
+      -> mega-doc parts re-stitched per doc (_stitch: one JVM window over
+         (part_k, local_order), `order` renumbered after empty-unit drops,
+         matching add_metadata's enumeration semantics)
 
 Mega-doc routing is metadata-only when the input table carries a
 `size_class` partition column (the Iceberg hidden-partitioning analog,
@@ -372,8 +372,9 @@ def _extract_mega(
     mega: DataFrame, chunk_size: int, split_threshold: int, num_partitions: int
 ) -> DataFrame:
     """The mega-doc split/extract/re-stitch branch (needs a `fmt` column).
-    Shared by extract_spans and the native-scan path — megas are ~0.2% of
-    docs, so both keep this tail on the JVM scan."""
+    extract_spans sends every mega doc here; extract_spans_native only the
+    mega files heavier than a kernel bin's mean load (the rest extract
+    whole in its native wave)."""
     t = int(split_threshold)
     parts = (
         mega.selectExpr(
@@ -400,7 +401,8 @@ def _extract_mega(
 # manifest stand-in) plans (file, row-group-range) splits driver-side; each
 # task decodes its fragment Arrow-natively and runs the kernel in-process.
 # Real data crosses the Python/JVM boundary exactly once — the OUTPUT spans.
-# The mega tail (~0.2% of docs) stays on the JVM scan branch unchanged.
+# Mega files join the same bins whole unless one outweighs a bin's mean
+# load; only those go through a JVM scan and the split/stitch branch.
 # --------------------------------------------------------------------------
 
 _NATIVE_TARGET_SPLIT_BYTES = 128 * 1024 * 1024
@@ -499,61 +501,50 @@ def _make_native_reader_fn(
     return fn
 
 
-def native_scan_table(spark, path: str, split_threshold: int) -> DataFrame | None:
+def native_scan_table(
+    spark, path: str, split_threshold: int
+) -> tuple[dict[str, int], dict[str, int]] | None:
     """Validate `path` as a size_class-partitioned span table trusted for
-    metadata-only mega/small routing and return its MEGA partition as a
-    DataFrame (empty when there are no megas); None when the table can't be
-    trusted (caller falls back to the generic scan).
+    metadata-only mega/small routing and return its non-empty data files
+    with their bytes, (small, mega); None when the table can't be trusted
+    (caller falls back to the generic scan).
 
     Cost discipline (r06, guide §5 "the driver should do almost no data
     work"): the old form opened the whole table with spark.read.parquet —
     a full file listing + schema inference over every data file (~0.25 s
     per query on the sandbox's 390-file corpus) only to filter out the
-    ~0.2% mega partition.  Validation now reads one data-file footer per
-    partition driver-side (pyarrow, ~ms) and only the mega directory is
-    handed to Spark, with the explicit schema of a mega footer so no
-    inference pass runs.  The trusted-threshold rule is unchanged in
+    ~0.2% mega partition.  Validation reads one data-file footer per
+    partition driver-side (pyarrow, ~ms); Spark reads only the mega files
+    that are split, typed by one of their own footers so no inference pass
+    runs.  The trusted-threshold rule is unchanged in
     effect: parquet's partitionBy drops column metadata (a stored
     with_size_class threshold never round-trips — verified), so a
     bare-path table is only ever trusted at the default derivation
     threshold; a table format with real column metadata (Iceberg) would
-    consult it here."""
+    consult it here.  `spark` is not used; callers pass it."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
-    small_dir = os.path.join(path, f"{SIZE_CLASS_COL}=small")
-    if not os.path.isdir(small_dir):
+    if not os.path.isdir(os.path.join(path, f"{SIZE_CLASS_COL}=small")):
         return None
     if split_threshold != DEFAULT_SPLIT_THRESHOLD:
         return None
-    mega_dir = os.path.join(path, f"{SIZE_CLASS_COL}=mega")
-    # one footer per partition: the small one is what the native reader
-    # depends on, the mega one types the mega read (the two partitions may
-    # come from different writers, e.g. int32 vs int64 span offsets)
-    samples = [
-        next(
-            (
-                f
-                for f in sorted(glob.glob(os.path.join(d, "*.parquet")))
-                if os.path.getsize(f) > 0
-            ),
-            None,
-        )
-        for d in (small_dir, mega_dir)
-    ]
-    schemas = [pq.read_schema(f) for f in samples if f is not None]
+    files = []
+    for cls in ("small", "mega"):
+        pattern = os.path.join(path, f"{SIZE_CLASS_COL}={cls}", "*.parquet")
+        sizes = {f: os.path.getsize(f) for f in glob.glob(pattern)}
+        files.append({f: b for f, b in sizes.items() if b > 0})
+    # one footer per partition: the native reader reads both (light megas
+    # join its bins), and the two may come from different writers (e.g.
+    # int32 vs int64 span offsets)
+    schemas = [pq.read_schema(min(fs)) for fs in files if fs]
     if not schemas or any(
         "spans" not in s.names or "doc_id" not in s.names for s in schemas
     ):
         return None
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    schema = from_arrow_schema(schemas[-1])
-    if samples[1] is None:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(mega_dir)
+    return files[0], files[1]
 
 
 def extract_spans_native(
@@ -572,6 +563,15 @@ def extract_spans_native(
     — pinned by test_extract_native — and falls back to exactly that when
     the table lacks the trusted layout.
 
+    Mega files are routed by bytes: a mega file no heavier than a bin's
+    mean load (small + mega file bytes over the bins planned, at most one
+    bin per file) joins the LPT bins whole — whole-doc extraction IS the
+    reference, and such a file cannot raise the wave's lower bound,
+    max(heaviest file, mean load).  Only heavier mega files take the
+    split/part-kernel/stitch branch.  With none of those the kernel wave
+    itself is returned: one Python stage, and write_store takes its plain
+    path.
+
     task_waves: task bins per unit of defaultParallelism (LPT-packed by
     bytes).  get_spark sets defaultParallelism to the shuffle partition
     count, max(2 x cores, 8), so the default 2 plans 4 bins per core at 4+
@@ -579,11 +579,8 @@ def extract_spans_native(
     _pack_splits_lpt) against straggler overlap (an A/B of fewer bins alone
     was flat); doc-level cost skew largely averages out at the bin level
     because each bin holds many hash-bucketed files."""
-    import glob
-    import os
-
-    df = native_scan_table(spark, table_path, split_threshold)
-    if df is None:
+    table = native_scan_table(spark, table_path, split_threshold)
+    if table is None:
         return extract_spans(
             spark.read.parquet(table_path),
             chunk_size=chunk_size,
@@ -594,20 +591,19 @@ def extract_spans_native(
     if num_partitions is None:
         num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    small_dir = os.path.join(table_path, f"{SIZE_CLASS_COL}=small")
-    files = [
-        f
-        for f in glob.glob(os.path.join(small_dir, "*.parquet"))
-        if os.path.getsize(f) > 0
-    ]
-    splits = _plan_native_splits(files, target_split_bytes)
+    small, megas = table
+    n_bins = task_waves * spark.sparkContext.defaultParallelism
+    mean_load = (sum(small.values()) + sum(megas.values())) / max(
+        1, min(n_bins, len(small) + len(megas))
+    )
+    split = sorted(f for f, b in megas.items() if b > mean_load)
+    files = {**small, **{f: b for f, b in megas.items() if b <= mean_load}}
+    splits = _plan_native_splits(list(files), target_split_bytes)
+    sizes = [files[p] if r1 < 0 else target_split_bytes for p, _, r1 in splits]
+
+    branches: list[tuple[DataFrame, int]] = []
     if splits:
-        sizes = [
-            os.path.getsize(p) if r1 < 0 else target_split_bytes
-            for p, _, r1 in splits
-        ]
-        cores = spark.sparkContext.defaultParallelism
-        bins = _pack_splits_lpt(splits, sizes, n_bins=task_waves * cores)
+        bins = _pack_splits_lpt(splits, sizes, n_bins=n_bins)
         # one bin per partition via spark.range: partitioning is pinned (a
         # repartition() here is a shuffle whose payload is a few hundred
         # bytes, so AQE's partition coalescing would legally collapse it to
@@ -618,55 +614,44 @@ def extract_spans_native(
         bin_df = spark.range(len(bins), numPartitions=len(bins)).selectExpr(
             "CAST(id AS INT) AS bin_idx"
         )
-        small_out = bin_df.mapInArrow(
+        kernel = bin_df.mapInArrow(
             _make_native_reader_fn(bins, chunk_size), schema=SPAN_SCHEMA
         )
-    else:
-        small_out = spark.createDataFrame([], SPAN_SCHEMA)
+        branches.append((kernel, sum(sizes)))
+    if split:
+        # Size the split megas' exchange by their DATA bytes (the file sizes
+        # are the Iceberg-stats analog), not by 4x shuffle.partitions: a
+        # cores-proportional partition count turned the branch into hundreds
+        # of near-empty Python tasks whose fixed cost GREW with cores (r06,
+        # at ~0.3 s per task before qs_spark.pydaemon: 5 s at 8 cores -> 10 s
+        # at 32 on ~5 MB of megas; _pack_splits_lpt gives today's per-task
+        # cost).  Slices carry payload text, so bytes track kernel work:
+        # 1 MB per task, floored at 1 (r06: 1 MB/task measured 0.72 s vs
+        # 1.0-2.2 s for 4 MB/task across a 3-trial A/B).
+        mega_bytes = sum(megas[f] for f in split)
+        mega_nparts = max(1, min(num_partitions, mega_bytes // (1024 * 1024) + 1))
+        # typed by a split file's own footer: the megas that join the
+        # kernel bins may come from another writer
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-    # Size the mega branch's exchange by its DATA bytes (the partition dir
-    # is the Iceberg-stats analog), not by 4x shuffle.partitions: megas are
-    # ~0.2% of docs, and a cores-proportional partition count turned the
-    # branch into hundreds of near-empty Python tasks whose fixed cost
-    # GREW with cores (r06, at ~0.3 s per task before qs_spark.pydaemon:
-    # 5 s at 8 cores -> 10 s at 32 on ~5 MB of megas, inverting the
-    # scaling curve; _pack_splits_lpt gives today's per-task cost).
-    # Slices carry payload text, so bytes track kernel work here — 1 MB per task, floored at 1
-    # (r06: 4 MB/task put the sandbox's 5.4 MB mega dir on 2 kernel tasks of
-    # ~0.5 s each, ~1 s of critical path the union stage waits on; 1 MB/task
-    # measured 0.72 s vs 1.0-2.2 s across 3-trial A/B, still bytes-derived
-    # so the count cannot balloon with cores).
-    mega_dir = os.path.join(table_path, f"{SIZE_CLASS_COL}=mega")
-    mega_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(os.path.join(mega_dir, "*.parquet"))
-    )
-    if mega_bytes:
-        mega_nparts = int(max(1, min(num_partitions, mega_bytes // (1024 * 1024) + 1)))
-        # `df` is the mega partition itself (native_scan_table reads only
-        # that directory with an explicit schema — no full-table listing)
-        mega_out = _extract_mega(
-            with_fmt(df), chunk_size, split_threshold, mega_nparts
+        schema = from_arrow_schema(pq.read_schema(split[0]))
+        mega = spark.read.schema(schema).parquet(*split)
+        branches.append(
+            (_extract_mega(with_fmt(mega), chunk_size, split_threshold, mega_nparts),
+             mega_bytes)
         )
-    else:
-        # no megas: skip the whole split/stitch plan construction
-        mega_out = spark.createDataFrame([], SPAN_SCHEMA)
-    out = small_out.unionByName(mega_out)
-    # Branch annotation for write_store (r06, guide §2.6): a store write
-    # rebalances ABOVE this union, which fuses both branches into one map
-    # stage — and that stage cannot start until the mega chain's stitch
-    # shuffle is materialized, so the 100+-task native-kernel wave idles
-    # ~1.3 s behind a 10-task mega pipeline (event-log audit, sf0.1).
-    # Exposing the branches (with their byte weights) lets write_store
-    # rebalance each branch separately: the kernel's exchange then has no
-    # shuffle dependency and runs concurrently with the mega chain.
-    # Any intermediate transform drops the annotation (safe: the plain
-    # write path runs); setting it on a DataFrame that is not this union
-    # would change which rows get written.
-    small_bytes = sum(os.path.getsize(p) for p, _, _ in splits)
-    out._qs_store_branches = [
-        (small_out, max(small_bytes, 1)),
-        (mega_out, max(mega_bytes, 1)),
-    ]
+    if not branches:
+        return spark.createDataFrame([], SPAN_SCHEMA)
+    if len(branches) == 1:
+        return branches[0][0]
+    out = branches[0][0].unionByName(branches[1][0])
+    # Branch annotation (with byte weights): write_store rebalances each
+    # branch on its own, so the kernel wave's exchange never waits on the
+    # mega chain's stitch shuffle (see write_store).  Any intermediate
+    # transform drops it (safe: the plain write path runs); setting it on a
+    # DataFrame that is not this union would change which rows get written.
+    out._qs_store_branches = branches
     return out
 
 

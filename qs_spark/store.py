@@ -140,18 +140,21 @@ def write_store(
         # wide native-kernel wave idles behind a 10-task pipeline (~1.3 s at
         # sf0.1, event-log audit).  Rebalancing each branch separately
         # splits the n partitions byte-weighted (every branch >= 1) while
-        # the branches' exchanges materialize CONCURRENTLY.  The file count
-        # is not always sum(parts): on Spark 4.1 a union of branches that
-        # each get ONE partition reports one partition, and a single task
-        # writes one file (a small store at 4 cores: n = 2, split 1 + 1).
-        # Row content is identical: union-then-repartition and
-        # repartition-then-union write the same rows.
+        # the branches' exchanges materialize CONCURRENTLY.  Row content is
+        # identical: union-then-repartition and repartition-then-union
+        # write the same rows.
         total_w = sum(w for _, w in branches)
         parts = [max(1, round(n * w / total_w)) for _, w in branches]
         # trim overshoot from the largest branch so sum(parts) stays ~n
         while sum(parts) > max(n, len(parts)):
             i = parts.index(max(parts))
             parts[i] -= 1
+        # Spark 4.1 reports a union of branches that each have ONE partition
+        # as one partition, so a single task would write the whole store
+        # (n = 2 at 4 cores split 1 + 1; 2 + 1 runs 3 tasks): the heaviest
+        # branch takes >= 2 whenever n allows two writers
+        if n >= 2 and max(parts) < 2:
+            parts[max(range(len(parts)), key=lambda i: branches[i][1])] = 2
         df = None
         for (b, _), p in zip(branches, parts):
             rb = b.repartition(p)

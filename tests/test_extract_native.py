@@ -7,6 +7,7 @@ equality tests are the contract that lets bench/jobs swap the scan path
 without touching correctness entries (x33/q61 keep oracling the JVM path).
 """
 
+import hashlib
 import os
 
 import pyarrow as pa
@@ -51,6 +52,61 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _span(kind, text, k):
+    return {"kind": kind, "text": text, "media_ref": "", "offset": k}
+
+
+def _words(seed, n):
+    # incompressible text: file bytes then track the text written
+    return " ".join(hashlib.md5(f"{seed}:{j}".encode()).hexdigest() for j in range(n))
+
+
+def _mega_route(df):
+    """'split' when the mega split/stitch branch (its window) is planned,
+    else 'whole'."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "split" if "Window" in plan else "whole"
+
+
+def _executed_plan(df):
+    """Collect df and return (rows, the executed plan's final text)."""
+    rows = _rows(df)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return rows, plan.split("== Initial Plan ==")[0]
+
+
+def _oracle_rows(docs):
+    return sorted(oracle_extract(docs).itertuples(index=False, name=None))
+
+
+def _branch_table(spark, path):
+    """A 100-page pdf mega (heavier than a kernel bin: it takes the split
+    route) and 8 small md docs, in the size_class layout."""
+    rows = [("d_mega", [_span("pdf_text", f"page {i}", i) for i in range(100)])] + [
+        (f"d_small_{k}", [_span("md", f"note {k}", 0), _span("md", "", 1)])
+        for k in range(8)
+    ]
+    _write_sc_table(spark.createDataFrame(rows, SCHEMA), path)
+
+
+def _write_pa(file, docs, offset=pa.int32()):
+    """Write (doc_id, spans) docs to one parquet file with pyarrow."""
+    span_type = pa.list_(
+        pa.struct(
+            [("kind", pa.string()), ("text", pa.string()),
+             ("media_ref", pa.string()), ("offset", offset)]
+        )
+    )
+    file.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {"doc_id": [did for did, _ in docs],
+             "spans": pa.array([sp for _, sp in docs], span_type)}
+        ),
+        str(file),
+    )
+
+
 def _write_sc_table(df, path: str, threshold: int = DEFAULT_SPLIT_THRESHOLD):
     """Write the hive size_class layout corpus_parquet produces."""
     base = with_size_class(df, threshold)
@@ -65,15 +121,18 @@ def _write_sc_table(df, path: str, threshold: int = DEFAULT_SPLIT_THRESHOLD):
 
 
 def test_native_matches_jvm_path_on_corpus(spark):
-    # 1500 docs includes the mega tail (assert it, so the stitch branch is
-    # genuinely exercised through the native entry point)
+    # 1500 docs includes the mega tail (assert it); every mega file here
+    # fits a kernel bin, so the native wave extracts them whole while the
+    # JVM path splits and stitches them
     df = corpus_parquet(spark, 1500)
     path = [f for f in df.inputFiles() if "size_class=mega" in f]
     assert path, "corpus must contain mega docs for this test to mean anything"
     table = df.inputFiles()[0].split("/size_class=")[0]
     table = table[7:] if table.startswith("file://") else table
     jvm = _rows(extract_spans(df, repartition_input=False))
-    nat = _rows(extract_spans_native(spark, table))
+    native = extract_spans_native(spark, table)
+    assert _mega_route(native) == "whole"
+    nat = _rows(native)
     assert len(nat) > 0
     assert nat == jvm
 
@@ -127,73 +186,147 @@ def test_native_hostile_table(spark, tmp_path):
 
 
 def test_native_mega_schema_read_from_a_mega_footer(spark, tmp_path):
-    """The small and mega partitions may come from different writers: here
-    the mega file stores spans.offset as int64 and the small files as int32.
-    The mega read must use a mega footer's schema, not the small one's."""
+    """The partitions' files may come from different writers: here the
+    small files and a light mega file store spans.offset as int32, the
+    heavy mega file as int64.  Spark reads only the heavy (split) mega, so
+    its read must use that file's footer schema, not the small one's nor
+    the light mega's (which sorts first and extracts in the kernel wave)."""
 
-    def span_type(offset):
-        return pa.list_(
-            pa.struct(
-                [("kind", pa.string()), ("text", pa.string()),
-                 ("media_ref", pa.string()), ("offset", offset)]
-            )
-        )
-
-    def span(kind, text, k):
-        return {"kind": kind, "text": text, "media_ref": "", "offset": k}
-
-    small = [(f"d_small_{k}", [span("md", f"note {k}", 0)]) for k in range(6)]
-    mega = [("d_mega", [span("pdf_text", f"page {i} text", i) for i in range(100)])]
+    small = [(f"d_small_{k}", [_span("md", f"note {k}", 0)]) for k in range(6)]
+    light = [("d_mega_light", [_span("pdf_text", f"page {i}", i) for i in range(70)])]
+    heavy = [("d_mega", [_span("pdf_text", _words(-i, 10), i) for i in range(100)])]
     path = tmp_path / "mixed_writers.parquet"
-    for cls, docs, offset in (("small", small, pa.int32()), ("mega", mega, pa.int64())):
-        d = path / f"{SIZE_CLASS_COL}={cls}"
-        d.mkdir(parents=True)
-        pq.write_table(
-            pa.table(
-                {"doc_id": [did for did, _ in docs],
-                 "spans": pa.array([s for _, s in docs], span_type(offset))}
-            ),
-            str(d / "part-0.parquet"),
-        )
+    for cls, name, docs, offset in (
+        ("small", "part-0", small, pa.int32()),
+        ("mega", "a_light", light, pa.int32()),
+        ("mega", "b_heavy", heavy, pa.int64()),
+    ):
+        _write_pa(path / f"{SIZE_CLASS_COL}={cls}" / f"{name}.parquet", docs, offset)
+    spans = extract_spans_native(spark, str(path))
+    # the mega read is Spark's only on the split route
+    assert _mega_route(spans) == "split"
 
     got = sorted(
-        (r.doc_id, r.order, r.kind, r.text, r.media_ref)
-        for r in extract_spans_native(spark, str(path)).collect()
+        (r.doc_id, r.order, r.kind, r.text, r.media_ref) for r in spans.collect()
     )
-    want = sorted(oracle_extract(small + mega).itertuples(index=False, name=None))
-    assert any(r[0] == "d_mega" for r in got)
-    assert got == want
+    assert {"d_mega", "d_mega_light"} <= {r[0] for r in got}
+    assert got == _oracle_rows(small + light + heavy)
 
 
 def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
-    """extract_spans_native annotates its output with the small/mega
-    branches (_qs_store_branches), so build_store + write_store take the
-    per-branch rebalance path.  A select("*") drops the annotation and takes
-    the plain repartition(n) path.  Both stores must hold the same rows."""
+    """With a split mega, extract_spans_native annotates its output with the
+    kernel-wave and mega branches (_qs_store_branches), so build_store +
+    write_store take the per-branch rebalance path.  A select("*") drops the
+    annotation and takes the plain repartition(n) path.  Both stores must
+    hold the same rows, and at n = 2 (1 + 1 by weight) the per-branch write
+    must still run >= 2 writer tasks."""
     from qs_spark.store import build_store, write_store
 
-    def span(kind, text, k):
-        return {"kind": kind, "text": text, "media_ref": "", "offset": k}
-
-    rows = [("d_mega", [span("pdf_text", f"page {i}", i) for i in range(100)])] + [
-        (f"d_small_{k}", [span("md", f"note {k}", 0), span("md", "", 1)])
-        for k in range(8)
-    ]
     path = str(tmp_path / "branches.parquet")
-    _write_sc_table(spark.createDataFrame(rows, SCHEMA), path)
+    _branch_table(spark, path)
 
     spans = extract_spans_native(spark, path)
+    assert _mega_route(spans) == "split"
     annotated = build_store(spans)
     assert len(annotated._qs_store_branches) == 2
     plain = build_store(spans.select("*"))
     assert getattr(plain, "_qs_store_branches", None) is None
 
-    write_store(annotated, str(tmp_path / "store_branches"))
-    write_store(plain, str(tmp_path / "store_plain"))
+    write_store(annotated, str(tmp_path / "store_branches"), min_files=2)
+    write_store(plain, str(tmp_path / "store_plain"), min_files=2)
     got = _rows(spark.read.parquet(str(tmp_path / "store_branches")))
     want = _rows(spark.read.parquet(str(tmp_path / "store_plain")))
     assert {r[1] for r in got} == {"d_mega"} | {f"d_small_{k}" for k in range(8)}
     assert got == want
+    files = os.listdir(tmp_path / "store_branches")
+    assert sum(f.endswith(".parquet") for f in files) >= 2, files
+
+
+def test_store_branch_exchanges_stay_separate(spark, tmp_path, monkeypatch):
+    """With a split mega the store write rebalances each branch on its own:
+    the executed plan has no exchange above the branch union, and each
+    union input is its own shuffle stage, so the kernel wave's exchange
+    never waits on the mega chain's stitch shuffle."""
+    from qs_spark.store import build_store, write_store
+
+    path = str(tmp_path / "branches.parquet")
+    _branch_table(spark, path)
+    store = build_store(extract_spans_native(spark, path))
+    assert _mega_route(store) == "split"
+    # capture the DataFrame write_store writes, then run it for its plan
+    written, writer = [], type(store).write
+    monkeypatch.setattr(
+        type(store), "write", property(lambda df: written.append(df) or writer.fget(df))
+    )
+    write_store(store, str(tmp_path / "store"), min_files=2)
+    monkeypatch.undo()
+    _, plan = _executed_plan(written[0])
+    lines = plan.splitlines()
+    u = next(i for i, ln in enumerate(lines) if ln.lstrip(" :+-").startswith("Union"))
+    assert not any("Exchange" in ln for ln in lines[:u]), plan
+    col = lines[u].index("Union")
+    children = [
+        ln[col + 3 :] for ln in lines[u + 1 :] if ln[col : col + 3] in (":- ", "+- ")
+    ]
+    assert len(children) == 2, plan
+    assert all(c.startswith("ShuffleQueryStage") for c in children), plan
+
+
+def test_native_whole_megas_join_the_kernel_wave(spark, tmp_path):
+    """Mega files no heavier than a kernel bin's mean load extract whole in
+    the native wave: one Python map, no stitch window, no branch
+    annotation.  An erroring mega doc keeps per-doc isolation: one
+    order = -1 error span, its siblings unaffected."""
+    small = [(f"d_small_{k}", [_span("md", _words(k, 40), 0)]) for k in range(40)]
+    bad_html = [_span("html", f"<p>part {i}</p>", i) for i in range(70)]
+    bad_html[33] = _span("html", "<p>x</p><![xyz]>", 33)
+    megas = [
+        ("d_mega_pdf", [_span("pdf_text", f"page {i}", i) for i in range(80)]),
+        ("d_mega_docx", [_span("docx_para", f"para {i}", i) for i in range(90)]),
+        ("d_mega_bad", bad_html),
+    ]
+    df = spark.createDataFrame(small + megas, SCHEMA)
+    path = str(tmp_path / "whole.parquet")
+    _write_sc_table(df, path)
+
+    spans = extract_spans_native(spark, path)
+    assert getattr(spans, "_qs_store_branches", None) is None
+    rows, plan = _executed_plan(spans)
+    assert plan.count("MapInArrow") == 1 and "Window" not in plan, plan
+    assert rows == _rows(extract_spans(df, repartition_input=False))
+    assert [r[:5] for r in rows] == _oracle_rows(small + megas)
+    bad = [r for r in rows if r[0] == "d_mega_bad"]
+    assert len(bad) == 1 and bad[0][1] == -1 and bad[0][2] == "error"
+
+
+def test_native_routes_each_mega_file_by_its_bytes(spark, tmp_path):
+    """One call, both routes: the light mega file joins the kernel bins
+    whole, the heavy one (more bytes than a bin's mean load) is read by
+    Spark alone and split/stitched."""
+    small = [(f"d_small_{k}", [_span("md", _words(k, 40), 0)]) for k in range(40)]
+    light = [("d_mega_light", [_span("pdf_text", f"page {i}", i) for i in range(80)])]
+    heavy = [
+        ("d_mega_heavy", [_span("pdf_text", _words(-i, 10), i) for i in range(400)])
+    ]
+    path = tmp_path / "routes.parquet"
+    for cls, name, docs in (
+        ("small", "a", small[:20]),
+        ("small", "b", small[20:]),
+        ("mega", "light", light),
+        ("mega", "heavy", heavy),
+    ):
+        _write_pa(path / f"{SIZE_CLASS_COL}={cls}" / f"{name}.parquet", docs)
+
+    spans = extract_spans_native(spark, str(path))
+    rows, plan = _executed_plan(spans)
+    assert "Window" in plan and plan.count("MapInArrow") == 2, plan
+    # 3 kernel bins: the two small files and the light mega; Spark reads
+    # one file, the heavy mega
+    assert "Range (0, 3," in plan and "InMemoryFileIndex(1 paths)" in plan, plan
+    assert rows == _rows(
+        extract_spans(spark.read.parquet(str(path)), repartition_input=False)
+    )
+    assert [r[:5] for r in rows] == _oracle_rows(small + light + heavy)
 
 
 def test_pack_splits_lpt_covers_exactly_once():
@@ -254,7 +387,8 @@ def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
     """Plan construction is driver time every ingest call pays before its
     first job: each Column op is a py4j round trip.  The SQL-text builders
     plan build_store(extract_spans_native(...)) in ~250 commands on a
-    size-classed table with megas; the Column-op builders sent ~1,500."""
+    size-classed table with a split mega; the Column-op builders sent
+    ~1,500."""
     import gc
     import threading
 
@@ -262,14 +396,8 @@ def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
 
     from qs_spark.store import build_store
 
-    def span(kind, text, k):
-        return {"kind": kind, "text": text, "media_ref": "", "offset": k}
-
-    rows = [("d_mega", [span("pdf_text", f"page {i}", i) for i in range(100)])] + [
-        (f"d_small_{k}", [span("md", f"note {k}", 0)]) for k in range(8)
-    ]
     path = str(tmp_path / "budget.parquet")
-    _write_sc_table(spark.createDataFrame(rows, SCHEMA), path)
+    _branch_table(spark, path)
     build_store(extract_spans_native(spark, path))  # warm the lazy imports
 
     conn = py4j.clientserver.ClientServerConnection
@@ -292,5 +420,6 @@ def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
     finally:
         conn.send_command = orig
         gc.enable()
-    assert len(store._qs_store_branches) == 2  # the mega branch was planned
+    # the costlier route was planned: kernel wave + mega split/stitch
+    assert len(store._qs_store_branches) == 2 and _mega_route(store) == "split"
     assert sent[0] <= 400, f"{sent[0]} py4j commands to plan one ingest call"

@@ -6,6 +6,9 @@ Reads every uncompressed event-log file under the directory (enable with
 spark.eventLog.enabled=true, spark.eventLog.dir=file://<dir>,
 spark.eventLog.compress=false) and prints, per job and per stage that ran:
 
+  start_s     submission, as an offset from the first submission of the
+              selected jobs (so an op's jobs and stages read as a timeline)
+  end_s       completion, same origin
   wall_s      submission -> completion
   tasks       finished task attempts
   run_s       executor run time, summed over tasks
@@ -21,6 +24,12 @@ The Python metrics are summed over tasks and over every Python node of the
 stage.  Caveat: for a reused worker, "time to initialize Python workers"
 includes the idle wait between the worker's previous task and this one, so
 py_init_s overstates setup cost on stages that follow other Python stages.
+
+A stage line starting with "*" is on the critical path of the selected
+jobs: walking back from the stage that completed last, each step takes the
+stage that completed last no later than the current one's submission (its
+slowest parent, or the previous job's last stage).  Gaps between the marked
+stages are time no stage ran: driver work between and before jobs.
 
 --group G keeps only the jobs of job group G (SparkContext.setJobGroup).
 """
@@ -40,6 +49,7 @@ PY_METRICS = {
     "data returned from Python workers": ("py_ret_mb", _MB),
 }
 COLUMNS = ["wall_s", "tasks", "run_s", "cpu_s", *(c for c, _ in PY_METRICS.values())]
+TIMELINE = ["start_s", "end_s"]  # printed from the "submit" and "end" times
 
 
 def _events(log_dir: str):
@@ -54,14 +64,16 @@ def _events(log_dir: str):
 
 
 def load(log_dir: str) -> tuple[dict, dict]:
-    """(jobs, stages): jobs by id with group, description, wall and stage
-    ids; stages by (id, attempt) with name and the COLUMNS values."""
+    """(jobs, stages): jobs by id with group, description, submit/end times
+    (ms) and stage ids; stages by (id, attempt) with name, submit/end times
+    and the COLUMNS values."""
     jobs: dict[int, dict] = {}
     stages: dict[tuple[int, int], dict] = {}
 
     def stage(sid: int, attempt: int) -> dict:
         return stages.setdefault(
-            (sid, attempt), {"name": "", **{c: 0 for c in COLUMNS}}
+            (sid, attempt),
+            {"name": "", "submit": None, "end": None, **{c: 0 for c in COLUMNS}},
         )
 
     for ev in _events(log_dir):
@@ -82,8 +94,10 @@ def load(log_dir: str) -> tuple[dict, dict]:
             info = ev["Stage Info"]
             s = stage(info["Stage ID"], info.get("Stage Attempt ID", 0))
             s["name"] = info.get("Stage Name", "")
-            if info.get("Completion Time") and info.get("Submission Time"):
-                s["wall_s"] = (info["Completion Time"] - info["Submission Time"]) / 1e3
+            s["submit"] = info.get("Submission Time")
+            s["end"] = info.get("Completion Time")
+            if s["submit"] and s["end"]:
+                s["wall_s"] = (s["end"] - s["submit"]) / 1e3
         elif kind == "SparkListenerTaskEnd":
             s = stage(ev["Stage ID"], ev.get("Stage Attempt ID", 0))
             s["tasks"] += 1
@@ -98,37 +112,68 @@ def load(log_dir: str) -> tuple[dict, dict]:
     return jobs, stages
 
 
-def _row(label: str, vals: dict) -> str:
+def _row(label: str, t0: float, vals: dict) -> str:
     cells = [
-        f"{vals[c]:>11d}" if c == "tasks" else f"{vals[c]:>11.3f}" for c in COLUMNS
-    ]
+        f"{(vals[k] - t0) / 1e3:>9.3f}" if vals[k] is not None else f"{'-':>9s}"
+        for k in ("submit", "end")
+    ] + [f"{vals[c]:>11d}" if c == "tasks" else f"{vals[c]:>11.3f}" for c in COLUMNS]
     return f"{label:<34.34s}" + "".join(cells)
 
 
+def critical_path(ran: dict) -> set:
+    """Keys of the stages on the critical path of `ran` ({key: stage} of
+    stages with submit and end times): from the stage that completed last,
+    repeatedly step to the stage that completed last no later than the
+    current one's submission."""
+    timed = {k: s for k, s in ran.items() if s["submit"] and s["end"]}
+    path: set = set()
+    cur = max(timed, key=lambda k: timed[k]["end"], default=None)
+    while cur is not None:
+        path.add(cur)
+        before = [k for k, s in timed.items() if s["end"] <= timed[cur]["submit"]]
+        cur = max(before, key=lambda k: timed[k]["end"], default=None)
+    return path
+
+
 def report(jobs: dict, stages: dict, group: str | None = None) -> str:
-    """The printed table: one line per job, its stages indented below it,
-    and a total over the selected jobs' stages."""
-    lines = [f"{'job / stage':<34s}" + "".join(f"{c:>11s}" for c in COLUMNS)]
-    total = {c: 0 for c in COLUMNS}
-    for jid in sorted(jobs):
-        job = jobs[jid]
-        if group is not None and job["group"] != group:
-            continue
-        ran = [
-            (key, stages[key])
+    """The printed table: one line per job, its stages indented below it
+    (critical-path stages marked "*"), and a total over the selected jobs'
+    stages."""
+    lines = [
+        f"{'job / stage':<34s}"
+        + "".join(f"{c:>9s}" for c in TIMELINE)
+        + "".join(f"{c:>11s}" for c in COLUMNS)
+    ]
+    selected = {
+        jid: job
+        for jid, job in sorted(jobs.items())
+        if group is None or job["group"] == group
+    }
+    ran_by_job = {
+        jid: {
+            key: stages[key]
             for key in sorted(stages)
             if key[0] in job["stage_ids"] and stages[key]["tasks"]
-        ]
-        jv = {c: sum(s[c] for _, s in ran) for c in COLUMNS}
+        }
+        for jid, job in selected.items()
+    }
+    crit = critical_path({k: s for ran in ran_by_job.values() for k, s in ran.items()})
+    t0 = min((job["submit"] for job in selected.values()), default=0)
+    total = {c: 0 for c in COLUMNS}
+    for jid, job in selected.items():
+        ran = ran_by_job[jid]
+        jv = {c: sum(s[c] for s in ran.values()) for c in COLUMNS}
         if job["end"] is not None:
             jv["wall_s"] = (job["end"] - job["submit"]) / 1e3
-        lines.append(_row(f"job {jid} [{job['group']}] {job['desc']}", jv))
-        for (sid, att), s in ran:
-            label = f"  stage {sid}" + (f".{att}" if att else "") + f" {s['name']}"
-            lines.append(_row(label, s))
+        label = f"job {jid} [{job['group']}] {job['desc']}"
+        lines.append(_row(label, t0, {**job, **jv}))
+        for (sid, att), s in ran.items():
+            mark = "* " if (sid, att) in crit else "  "
+            label = f"{mark}stage {sid}" + (f".{att}" if att else "") + f" {s['name']}"
+            lines.append(_row(label, t0, s))
             for c in COLUMNS:
                 total[c] += s[c]
-    lines.append(_row("total (stage sums)", total))
+    lines.append(_row("total (stage sums)", t0, {"submit": None, "end": None, **total}))
     return "\n".join(lines)
 
 
