@@ -65,7 +65,9 @@ def run_extract_once(cores: int, sf_dir: str) -> dict:
     n_docs = _n_docs(spark, sf_dir) * DOCS_MULT
     input_df = corpus_parquet(spark, n_docs)
     table_path = _table_path_of(input_df)
-    tune_scan_split(spark, input_df)  # sizes the mega-branch JVM scan
+    # sizes the JVM scan of mega files heavier than a parallelism slot's
+    # share (the split route); this corpus's megas all extract whole
+    tune_scan_split(spark, input_df)
     # warmup: JVM + python worker pool (small slice, excluded from timing)
     extract_spans(corpus_df(spark, 512)).count()
     t0 = time.time()

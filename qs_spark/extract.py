@@ -373,7 +373,7 @@ def _extract_mega(
 ) -> DataFrame:
     """The mega-doc split/extract/re-stitch branch (needs a `fmt` column).
     extract_spans sends every mega doc here; extract_spans_native only the
-    mega files heavier than a kernel bin's mean load (the rest extract
+    mega files heavier than a parallelism slot's share (the rest extract
     whole in its native wave)."""
     t = int(split_threshold)
     parts = (
@@ -401,8 +401,8 @@ def _extract_mega(
 # manifest stand-in) plans (file, row-group-range) splits driver-side; each
 # task decodes its fragment Arrow-natively and runs the kernel in-process.
 # Real data crosses the Python/JVM boundary exactly once — the OUTPUT spans.
-# Mega files join the same bins whole unless one outweighs a bin's mean
-# load; only those go through a JVM scan and the split/stitch branch.
+# Mega files join the same bins whole unless one outweighs a parallelism
+# slot's share; only those go through a JVM scan and the split/stitch branch.
 # --------------------------------------------------------------------------
 
 _NATIVE_TARGET_SPLIT_BYTES = 128 * 1024 * 1024
@@ -552,9 +552,6 @@ def extract_spans_native(
     table_path: str,
     chunk_size: int = CHUNK_SIZE,
     split_threshold: int = DEFAULT_SPLIT_THRESHOLD,
-    num_partitions: int | None = None,
-    target_split_bytes: int = _NATIVE_TARGET_SPLIT_BYTES,
-    task_waves: int = 2,
 ) -> DataFrame:
     """extract_spans over an on-disk size_class-partitioned table, reading
     the small partition's parquet bytes pyarrow-natively inside the workers
@@ -563,47 +560,45 @@ def extract_spans_native(
     — pinned by test_extract_native — and falls back to exactly that when
     the table lacks the trusted layout.
 
-    Mega files are routed by bytes: a mega file no heavier than a bin's
-    mean load (small + mega file bytes over the bins planned, at most one
-    bin per file) joins the LPT bins whole — whole-doc extraction IS the
-    reference, and such a file cannot raise the wave's lower bound,
-    max(heaviest file, mean load).  Only heavier mega files take the
-    split/part-kernel/stitch branch.  With none of those the kernel wave
-    itself is returned: one Python stage, and write_store takes its plain
-    path.
-
-    task_waves: task bins per unit of defaultParallelism (LPT-packed by
-    bytes).  get_spark sets defaultParallelism to the shuffle partition
-    count, max(2 x cores, 8), so the default 2 plans 4 bins per core at 4+
-    cores.  It balances the fixed cost of a Python task (see
-    _pack_splits_lpt) against straggler overlap (an A/B of fewer bins alone
-    was flat); doc-level cost skew largely averages out at the bin level
-    because each bin holds many hash-bucketed files."""
+    Mega files are routed by bytes: a mega file no heavier than a
+    parallelism slot's share (small + mega file bytes over
+    min(defaultParallelism, data files)) joins the LPT bins whole —
+    whole-doc extraction IS the reference, and such a file cannot raise
+    the wave's lower bound, max(heaviest file, slot share).  Only heavier
+    mega files take the split/part-kernel/stitch branch, unioned after the
+    kernel wave; write_store repartitions that union as one, so on this
+    route the store write waits for the mega chain's stitch shuffle."""
     table = native_scan_table(spark, table_path, split_threshold)
     if table is None:
         return extract_spans(
             spark.read.parquet(table_path),
             chunk_size=chunk_size,
             split_threshold=split_threshold,
-            num_partitions=num_partitions,
             repartition_input=False,
         )
-    if num_partitions is None:
-        num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     small, megas = table
-    n_bins = task_waves * spark.sparkContext.defaultParallelism
-    mean_load = (sum(small.values()) + sum(megas.values())) / max(
-        1, min(n_bins, len(small) + len(megas))
+    slots = spark.sparkContext.defaultParallelism
+    share = (sum(small.values()) + sum(megas.values())) / max(
+        1, min(slots, len(small) + len(megas))
     )
-    split = sorted(f for f, b in megas.items() if b > mean_load)
-    files = {**small, **{f: b for f, b in megas.items() if b <= mean_load}}
-    splits = _plan_native_splits(list(files), target_split_bytes)
-    sizes = [files[p] if r1 < 0 else target_split_bytes for p, _, r1 in splits]
+    split = sorted(f for f, b in megas.items() if b > share)
+    files = {**small, **{f: b for f, b in megas.items() if b <= share}}
+    splits = _plan_native_splits(list(files))
+    sizes = [
+        files[p] if r1 < 0 else _NATIVE_TARGET_SPLIT_BYTES for p, _, r1 in splits
+    ]
 
-    branches: list[tuple[DataFrame, int]] = []
+    out = None
     if splits:
-        bins = _pack_splits_lpt(splits, sizes, n_bins=n_bins)
+        # two bins per slot (LPT-packed by bytes; get_spark sets
+        # defaultParallelism to the shuffle partition count, max(2 x cores,
+        # 8), so 4 bins per core at 4+ cores): balances the fixed cost of a
+        # Python task (see _pack_splits_lpt) against straggler overlap (an
+        # A/B of fewer bins alone was flat); doc-level cost skew largely
+        # averages out at the bin level because each bin holds many
+        # hash-bucketed files
+        bins = _pack_splits_lpt(splits, sizes, n_bins=2 * slots)
         # one bin per partition via spark.range: partitioning is pinned (a
         # repartition() here is a shuffle whose payload is a few hundred
         # bytes, so AQE's partition coalescing would legally collapse it to
@@ -614,10 +609,9 @@ def extract_spans_native(
         bin_df = spark.range(len(bins), numPartitions=len(bins)).selectExpr(
             "CAST(id AS INT) AS bin_idx"
         )
-        kernel = bin_df.mapInArrow(
+        out = bin_df.mapInArrow(
             _make_native_reader_fn(bins, chunk_size), schema=SPAN_SCHEMA
         )
-        branches.append((kernel, sum(sizes)))
     if split:
         # Size the split megas' exchange by their DATA bytes (the file sizes
         # are the Iceberg-stats analog), not by 4x shuffle.partitions: a
@@ -629,6 +623,7 @@ def extract_spans_native(
         # 1 MB per task, floored at 1 (r06: 1 MB/task measured 0.72 s vs
         # 1.0-2.2 s for 4 MB/task across a 3-trial A/B).
         mega_bytes = sum(megas[f] for f in split)
+        num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         mega_nparts = max(1, min(num_partitions, mega_bytes // (1024 * 1024) + 1))
         # typed by a split file's own footer: the megas that join the
         # kernel bins may come from another writer
@@ -637,22 +632,11 @@ def extract_spans_native(
 
         schema = from_arrow_schema(pq.read_schema(split[0]))
         mega = spark.read.schema(schema).parquet(*split)
-        branches.append(
-            (_extract_mega(with_fmt(mega), chunk_size, split_threshold, mega_nparts),
-             mega_bytes)
+        mega_out = _extract_mega(
+            with_fmt(mega), chunk_size, split_threshold, mega_nparts
         )
-    if not branches:
-        return spark.createDataFrame([], SPAN_SCHEMA)
-    if len(branches) == 1:
-        return branches[0][0]
-    out = branches[0][0].unionByName(branches[1][0])
-    # Branch annotation (with byte weights): write_store rebalances each
-    # branch on its own, so the kernel wave's exchange never waits on the
-    # mega chain's stitch shuffle (see write_store).  Any intermediate
-    # transform drops it (safe: the plain write path runs); setting it on a
-    # DataFrame that is not this union would change which rows get written.
-    out._qs_store_branches = branches
-    return out
+        out = mega_out if out is None else out.unionByName(mega_out)
+    return out if out is not None else spark.createDataFrame([], SPAN_SCHEMA)
 
 
 def oracle_extract(docs: list[tuple[str, list[dict]]], chunk_size: int = CHUNK_SIZE) -> pd.DataFrame:

@@ -22,9 +22,9 @@ Decode is REAL for every corpus format (round 5 closes the jpeg/mp4 stubs):
     is ENTROPY-CODED residual macroblocks (CAVLC/CABAC + prediction) in
     third-party streams — those raise NotImplementedError from the
     decoder and surface as per-row decode_error/frame_error.
-The digest-seeded deterministic stub (`QS_FAKE_DECODE=1`, default) now only
-covers mimes outside this set, keeping the plumbing testable for formats the
-container can't parse at all.
+Mimes outside this set have no parser: their decode raises
+NotImplementedError, which extract_features turns into a per-row
+decode_error.
 
 Media table schema:
   media_ref string, mime string, payload binary,
@@ -39,7 +39,6 @@ fixed-size float arrays so downstream ANN (textops.ann_*) applies directly.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -66,10 +65,6 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 EMBED_DIM = 32
-
-
-def fake_decode_enabled() -> bool:
-    return os.environ.get("QS_FAKE_DECODE", "1") == "1"
 
 
 def decode_wav(payload: bytes) -> np.ndarray:
@@ -234,11 +229,11 @@ def decode_mp4_stream(payload: bytes) -> np.ndarray:
     )
 
 
-def _decode_real(payload: bytes, mime: str) -> np.ndarray:
+def _decode(payload: bytes, mime: str) -> np.ndarray:
     """Real decoders for every corpus format: wav/bmp/png via stdlib
     parsers, jpeg via the from-scratch baseline codec, mp4 via the ISO-BMFF
-    box walk.  Mimes outside this set (e.g. image/gif) fall back to the
-    deterministic stub (or raise when QS_FAKE_DECODE=0)."""
+    box walk.  Mimes outside this set (e.g. image/gif) raise
+    NotImplementedError."""
     if mime == "audio/wav":
         return decode_wav(payload)
     if mime == "image/bmp":
@@ -249,31 +244,7 @@ def _decode_real(payload: bytes, mime: str) -> np.ndarray:
         return decode_jpeg(payload)
     if mime == "video/mp4":
         return decode_mp4_stream(payload)
-    raise NotImplementedError(
-        f"no parser for {mime} in this container; "
-        "set QS_FAKE_DECODE=1 for the deterministic stub"
-    )
-
-
-def _decode_fake(payload: bytes, mime: str) -> np.ndarray:
-    """Deterministic 'pixels': a uint8 array seeded by the payload digest —
-    stable across processes/partitions, so every downstream op is testable."""
-    digest = hashlib.sha256(payload).digest()
-    rng = np.random.default_rng(int.from_bytes(digest[:8], "big"))
-    n = 64 if mime.startswith("image/") else 256
-    return rng.integers(0, 256, size=n, dtype=np.uint8)
-
-
-_REAL_MIMES = ("audio/wav", "image/bmp", "image/png", "image/jpeg", "video/mp4")
-
-
-def _decode(payload: bytes, mime: str) -> np.ndarray:
-    """Dispatch: real decode wherever a parser exists (all five corpus
-    formats — ALWAYS real, the flag doesn't fake what can be decoded
-    honestly); unknown mimes use the stub unless QS_FAKE_DECODE=0."""
-    if mime in _REAL_MIMES:
-        return _decode_real(payload, mime)
-    return _decode_fake(payload, mime) if fake_decode_enabled() else _decode_real(payload, mime)
+    raise NotImplementedError(f"no parser for {mime}")
 
 
 # ---------------------------------------------------------------- corpus

@@ -106,7 +106,6 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_session(spark)
     return spark
 
 
@@ -117,72 +116,6 @@ def _worker_pythonpath(current: str) -> str:
     if root not in paths:
         paths.append(root)
     return os.pathsep.join(paths)
-
-
-def _warm_session(spark) -> None:
-    """One-time JVM warm-up per fresh session: run a tiny end-to-end job
-    through the engine's hot execution surfaces (range source -> Arrow
-    Python boundary -> round-robin repartition exchange -> zstd parquet
-    write) so their class-loading / JIT / codec-context costs are paid at
-    session build, not inside the first real query.
-
-    Measured (r06, sf0.1 extract, fresh session after the bench's own
-    kernel warm-up): the first full pipeline run pays ~0.8 s extra on the
-    native-scan plan and ~1.0 s extra on the first parquet write vs the
-    same job repeated — pure first-use overhead (writer stack, zstd native
-    contexts, exchange codegen), not data.  This probe computes nothing
-    from any input table and persists nothing (the probe dir is deleted);
-    it is infrastructure warm-up, the same category as the bench's own
-    untimed warm-up phase.  ~0.5-0.9 s per fresh session, skippable via
-    QS_SESSION_WARM=0."""
-    if os.environ.get("QS_SESSION_WARM", "1") == "0":
-        return
-    sc = spark.sparkContext
-    if sc is None or getattr(sc, "_jsc", None) is None:
-        return
-    appid = sc.applicationId
-    if appid in _WARMED_SESSIONS:
-        return
-    _WARMED_SESSIONS.add(appid)
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    def _ident(batches):
-        for b in batches:
-            yield b
-
-    probe_dir = os.path.join(
-        tempfile.gettempdir(), f"qs_session_warm_{os.getpid()}"
-    )
-    try:
-        sc.setJobDescription("session warm-up probe (untimed)")
-        (
-            spark.range(256, numPartitions=8)
-            .select(F.col("id").cast("int").alias("bin_idx"))
-            .mapInArrow(_ident, "bin_idx int")
-            # store-shaped columns so the parquet writer warms the same
-            # column-writer classes the real store write uses (string /
-            # long / map<string,string>)
-            .select(
-                "bin_idx",
-                F.col("bin_idx").cast("string").alias("s"),
-                F.col("bin_idx").cast("long").alias("l"),
-                F.create_map(F.lit("k"), F.lit("v")).alias("m"),
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(probe_dir)
-        )
-    except Exception:
-        pass
-    finally:
-        sc.setJobDescription(None)
-        shutil.rmtree(probe_dir, ignore_errors=True)
-
-
-_WARMED_SESSIONS: set = set()
 
 
 MIN_SPLIT_BYTES = 4 * 1024 * 1024

@@ -77,23 +77,7 @@ def build_store(
         ).alias("realm"),
     ]
     cols = [F.expr(c) for c in _STORE_SQL] + tenant
-
-    def project(df: DataFrame) -> DataFrame:
-        return df.filter("kind != 'error'").select(*cols)
-
-    # propagate extraction-branch annotation (see write_store): the same
-    # projection applied per branch is row-identical to projecting the
-    # union, so the union output is REBUILT from the projected branches —
-    # one analyzer pass per branch instead of branches + union
-    branches = getattr(spans, "_qs_store_branches", None)
-    if branches:
-        projected = [(project(b), w) for b, w in branches]
-        out = projected[0][0]
-        for b, _ in projected[1:]:
-            out = out.unionByName(b)
-        out._qs_store_branches = projected
-        return out
-    return project(spans)
+    return spans.filter("kind != 'error'").select(*cols)
 
 
 def write_store(
@@ -111,7 +95,10 @@ def write_store(
     paid 399 parquet-writer setups and every later scan paid 399 file opens
     — write 21 s -> 12 s and scan-path search 5.6 s -> 1.8 s after the
     rebalance).  Extraction parallelism upstream is untouched; the exchange
-    moves the finished rows once.
+    moves the finished rows once.  It sits above the whole extraction plan:
+    when extract_spans_native splits a mega file, the kernel wave and the
+    mega chain meet in one union, so the write's map stage also waits for
+    the mega chain's stitch shuffle.
 
     File-count sizing: est_bytes/target_file_bytes (pass table-stats bytes
     at scale — at 100 TB that is ~800k x 128 MB files), floored at
@@ -132,33 +119,4 @@ def write_store(
     # extract+search pairs) — the scan is decode-bound, not
     # parallelism-bound, and small row groups add per-group overhead.  The
     # default (one ~row-group per small file) stands.
-    branches = getattr(store, "_qs_store_branches", None)
-    if branches:
-        # Per-branch rebalance (r06, guide §2.6): a single repartition above
-        # the extraction union fuses both branches into one map stage, which
-        # cannot start until the mega branch's stitch shuffle lands — the
-        # wide native-kernel wave idles behind a 10-task pipeline (~1.3 s at
-        # sf0.1, event-log audit).  Rebalancing each branch separately
-        # splits the n partitions byte-weighted (every branch >= 1) while
-        # the branches' exchanges materialize CONCURRENTLY.  Row content is
-        # identical: union-then-repartition and repartition-then-union
-        # write the same rows.
-        total_w = sum(w for _, w in branches)
-        parts = [max(1, round(n * w / total_w)) for _, w in branches]
-        # trim overshoot from the largest branch so sum(parts) stays ~n
-        while sum(parts) > max(n, len(parts)):
-            i = parts.index(max(parts))
-            parts[i] -= 1
-        # Spark 4.1 reports a union of branches that each have ONE partition
-        # as one partition, so a single task would write the whole store
-        # (n = 2 at 4 cores split 1 + 1; 2 + 1 runs 3 tasks): the heaviest
-        # branch takes >= 2 whenever n allows two writers
-        if n >= 2 and max(parts) < 2:
-            parts[max(range(len(parts)), key=lambda i: branches[i][1])] = 2
-        df = None
-        for (b, _), p in zip(branches, parts):
-            rb = b.repartition(p)
-            df = rb if df is None else df.unionByName(rb)
-        df.write.mode("overwrite").parquet(path)
-        return
     store.repartition(n).write.mode("overwrite").parquet(path)

@@ -80,8 +80,8 @@ def _oracle_rows(docs):
 
 
 def _branch_table(spark, path):
-    """A 100-page pdf mega (heavier than a kernel bin: it takes the split
-    route) and 8 small md docs, in the size_class layout."""
+    """A 100-page pdf mega (heavier than a parallelism slot's share: it
+    takes the split route) and 8 small md docs, in the size_class layout."""
     rows = [("d_mega", [_span("pdf_text", f"page {i}", i) for i in range(100)])] + [
         (f"d_small_{k}", [_span("md", f"note {k}", 0), _span("md", "", 1)])
         for k in range(8)
@@ -121,9 +121,9 @@ def _write_sc_table(df, path: str, threshold: int = DEFAULT_SPLIT_THRESHOLD):
 
 
 def test_native_matches_jvm_path_on_corpus(spark):
-    # 1500 docs includes the mega tail (assert it); every mega file here
-    # fits a kernel bin, so the native wave extracts them whole while the
-    # JVM path splits and stitches them
+    # 1500 docs includes the mega tail (assert it); no mega file here is
+    # heavier than a slot's share, so the native wave extracts them whole
+    # while the JVM path splits and stitches them
     df = corpus_parquet(spark, 1500)
     path = [f for f in df.inputFiles() if "size_class=mega" in f]
     assert path, "corpus must contain mega docs for this test to mean anything"
@@ -214,12 +214,9 @@ def test_native_mega_schema_read_from_a_mega_footer(spark, tmp_path):
 
 
 def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
-    """With a split mega, extract_spans_native annotates its output with the
-    kernel-wave and mega branches (_qs_store_branches), so build_store +
-    write_store take the per-branch rebalance path.  A select("*") drops the
-    annotation and takes the plain repartition(n) path.  Both stores must
-    hold the same rows, and at n = 2 (1 + 1 by weight) the per-branch write
-    must still run >= 2 writer tasks."""
+    """On the split route build_store + write_store over the native extract
+    (kernel wave unioned with the mega chain) write the same rows as over
+    the JVM-path extract of the same table, in >= 2 files."""
     from qs_spark.store import build_store, write_store
 
     path = str(tmp_path / "branches.parquet")
@@ -227,56 +224,22 @@ def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
 
     spans = extract_spans_native(spark, path)
     assert _mega_route(spans) == "split"
-    annotated = build_store(spans)
-    assert len(annotated._qs_store_branches) == 2
-    plain = build_store(spans.select("*"))
-    assert getattr(plain, "_qs_store_branches", None) is None
-
-    write_store(annotated, str(tmp_path / "store_branches"), min_files=2)
-    write_store(plain, str(tmp_path / "store_plain"), min_files=2)
-    got = _rows(spark.read.parquet(str(tmp_path / "store_branches")))
-    want = _rows(spark.read.parquet(str(tmp_path / "store_plain")))
+    write_store(build_store(spans), str(tmp_path / "store_native"), min_files=2)
+    jvm = extract_spans(spark.read.parquet(path), repartition_input=False)
+    write_store(build_store(jvm), str(tmp_path / "store_jvm"), min_files=2)
+    got = _rows(spark.read.parquet(str(tmp_path / "store_native")))
+    want = _rows(spark.read.parquet(str(tmp_path / "store_jvm")))
     assert {r[1] for r in got} == {"d_mega"} | {f"d_small_{k}" for k in range(8)}
     assert got == want
-    files = os.listdir(tmp_path / "store_branches")
+    files = os.listdir(tmp_path / "store_native")
     assert sum(f.endswith(".parquet") for f in files) >= 2, files
 
 
-def test_store_branch_exchanges_stay_separate(spark, tmp_path, monkeypatch):
-    """With a split mega the store write rebalances each branch on its own:
-    the executed plan has no exchange above the branch union, and each
-    union input is its own shuffle stage, so the kernel wave's exchange
-    never waits on the mega chain's stitch shuffle."""
-    from qs_spark.store import build_store, write_store
-
-    path = str(tmp_path / "branches.parquet")
-    _branch_table(spark, path)
-    store = build_store(extract_spans_native(spark, path))
-    assert _mega_route(store) == "split"
-    # capture the DataFrame write_store writes, then run it for its plan
-    written, writer = [], type(store).write
-    monkeypatch.setattr(
-        type(store), "write", property(lambda df: written.append(df) or writer.fget(df))
-    )
-    write_store(store, str(tmp_path / "store"), min_files=2)
-    monkeypatch.undo()
-    _, plan = _executed_plan(written[0])
-    lines = plan.splitlines()
-    u = next(i for i, ln in enumerate(lines) if ln.lstrip(" :+-").startswith("Union"))
-    assert not any("Exchange" in ln for ln in lines[:u]), plan
-    col = lines[u].index("Union")
-    children = [
-        ln[col + 3 :] for ln in lines[u + 1 :] if ln[col : col + 3] in (":- ", "+- ")
-    ]
-    assert len(children) == 2, plan
-    assert all(c.startswith("ShuffleQueryStage") for c in children), plan
-
-
 def test_native_whole_megas_join_the_kernel_wave(spark, tmp_path):
-    """Mega files no heavier than a kernel bin's mean load extract whole in
-    the native wave: one Python map, no stitch window, no branch
-    annotation.  An erroring mega doc keeps per-doc isolation: one
-    order = -1 error span, its siblings unaffected."""
+    """Mega files no heavier than a parallelism slot's share extract whole
+    in the native wave: one Python map, no stitch window.  An erroring mega
+    doc keeps per-doc isolation: one order = -1 error span, its siblings
+    unaffected."""
     small = [(f"d_small_{k}", [_span("md", _words(k, 40), 0)]) for k in range(40)]
     bad_html = [_span("html", f"<p>part {i}</p>", i) for i in range(70)]
     bad_html[33] = _span("html", "<p>x</p><![xyz]>", 33)
@@ -290,7 +253,6 @@ def test_native_whole_megas_join_the_kernel_wave(spark, tmp_path):
     _write_sc_table(df, path)
 
     spans = extract_spans_native(spark, path)
-    assert getattr(spans, "_qs_store_branches", None) is None
     rows, plan = _executed_plan(spans)
     assert plan.count("MapInArrow") == 1 and "Window" not in plan, plan
     assert rows == _rows(extract_spans(df, repartition_input=False))
@@ -301,8 +263,8 @@ def test_native_whole_megas_join_the_kernel_wave(spark, tmp_path):
 
 def test_native_routes_each_mega_file_by_its_bytes(spark, tmp_path):
     """One call, both routes: the light mega file joins the kernel bins
-    whole, the heavy one (more bytes than a bin's mean load) is read by
-    Spark alone and split/stitched."""
+    whole, the heavy one (more bytes than a parallelism slot's share) is
+    read by Spark alone and split/stitched."""
     small = [(f"d_small_{k}", [_span("md", _words(k, 40), 0)]) for k in range(40)]
     light = [("d_mega_light", [_span("pdf_text", f"page {i}", i) for i in range(80)])]
     heavy = [
@@ -327,6 +289,29 @@ def test_native_routes_each_mega_file_by_its_bytes(spark, tmp_path):
         extract_spans(spark.read.parquet(str(path)), repartition_input=False)
     )
     assert [r[:5] for r in rows] == _oracle_rows(small + light + heavy)
+
+
+def test_native_routes_a_mega_by_a_slots_share(spark, tmp_path):
+    """The routing threshold is a parallelism slot's share, total bytes /
+    min(defaultParallelism, data files), not a kernel bin's mean load (two
+    bins share a slot): with more files than slots, a mega file heavier
+    than a bin's load but no heavier than a slot's share extracts whole."""
+    small = [(f"d_small_{k}", [_span("md", _words(k, 20), 0)]) for k in range(24)]
+    mega = [("d_mega", [_span("pdf_text", _words(-i, 2), i) for i in range(80)])]
+    path = tmp_path / "slot_share.parquet"
+    for k, doc in enumerate(small):
+        _write_pa(path / f"{SIZE_CLASS_COL}=small" / f"s{k:02d}.parquet", [doc])
+    _write_pa(path / f"{SIZE_CLASS_COL}=mega" / "m.parquet", mega)
+
+    sizes = [os.path.getsize(f) for f in path.glob("*/*.parquet")]
+    mega_bytes = os.path.getsize(path / f"{SIZE_CLASS_COL}=mega" / "m.parquet")
+    slots, n = spark.sparkContext.defaultParallelism, len(sizes)
+    assert n > slots, (n, slots)
+    assert sum(sizes) / min(2 * slots, n) < mega_bytes <= sum(sizes) / min(slots, n)
+
+    rows, plan = _executed_plan(extract_spans_native(spark, str(path)))
+    assert plan.count("MapInArrow") == 1 and "Window" not in plan, plan
+    assert [r[:5] for r in rows] == _oracle_rows(small + mega)
 
 
 def test_pack_splits_lpt_covers_exactly_once():
@@ -386,7 +371,7 @@ def test_native_reader_row_group_ranges_read_all(spark, tmp_path):
 def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
     """Plan construction is driver time every ingest call pays before its
     first job: each Column op is a py4j round trip.  The SQL-text builders
-    plan build_store(extract_spans_native(...)) in ~250 commands on a
+    plan build_store(extract_spans_native(...)) in ~230 commands on a
     size-classed table with a split mega; the Column-op builders sent
     ~1,500."""
     import gc
@@ -421,5 +406,5 @@ def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
         conn.send_command = orig
         gc.enable()
     # the costlier route was planned: kernel wave + mega split/stitch
-    assert len(store._qs_store_branches) == 2 and _mega_route(store) == "split"
+    assert _mega_route(store) == "split"
     assert sent[0] <= 400, f"{sent[0]} py4j commands to plan one ingest call"

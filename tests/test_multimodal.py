@@ -1,4 +1,4 @@
-"""Multimodal plumbing: binary payload columns, metadata-only ops, stubbed
+"""Multimodal plumbing: binary payload columns, metadata-only ops, real
 decode determinism, feature vectors feeding ANN."""
 
 from pyspark.sql import functions as F
@@ -19,7 +19,7 @@ def test_media_schema_and_determinism(spark):
     assert len(a) == 64
     assert (a["embedding"].map(len) == 32).all()
     for x, y in zip(a["embedding"], b["embedding"]):
-        assert list(x) == list(y)  # stub decode is deterministic across runs
+        assert list(x) == list(y)  # decode is deterministic across runs
 
 
 def test_resize_is_metadata_only(spark, tmp_path):
@@ -100,26 +100,32 @@ def test_real_bmp_decode_roundtrip():
     assert list(px[:6]) == [(0 * 31 + c * 7 + 3) % 256 for c in range(6)]
 
 
-def test_features_use_real_decode_for_wav_bmp(spark):
-    # flipping the fake-decode env must NOT change wav/bmp features (they
-    # are always real-decoded), proving the honest path is what runs
-    import os
+def _driver_embedding(payload, mime):
+    """extract_features' histogram of one payload's decode, in the driver."""
+    import numpy as np
 
+    from qs_spark.multimodal import EMBED_DIM, _decode
+
+    decoded = _decode(bytes(payload), mime)
+    hist, _ = np.histogram(decoded, bins=EMBED_DIM, range=(0, 256))
+    return (hist / max(len(decoded), 1)).astype(np.float32).tolist()
+
+
+def test_features_use_real_decode_for_wav_bmp(spark):
+    # every wav/bmp embedding is the histogram of the real parser's decode,
+    # proving the honest path is what runs
     from qs_spark.multimodal import extract_features, synth_media_df
 
     m = synth_media_df(spark, 32).filter(
         F.col("mime").isin("audio/wav", "image/bmp")
     )
     a = extract_features(m).toPandas().sort_values("media_ref").reset_index(drop=True)
-    os.environ["QS_FAKE_DECODE"] = "0"
-    try:
-        b = extract_features(m).toPandas().sort_values("media_ref").reset_index(drop=True)
-    finally:
-        os.environ["QS_FAKE_DECODE"] = "1"
+    src = m.toPandas().sort_values("media_ref").reset_index(drop=True)
     # r05: 5-mime cycle -> wav is i%5==2, bmp i%5==1 over 32 rows
     assert len(a) == sum(1 for i in range(32) if i % 5 in (1, 2))
-    for x, y in zip(a["embedding"], b["embedding"]):
-        assert list(x) == list(y)
+    assert a.decode_error.isna().all()
+    for x, payload, mime in zip(a["embedding"], src["payload"], src["mime"]):
+        assert list(x) == _driver_embedding(payload, mime)
 
 
 def test_real_png_decode_roundtrip():
@@ -230,25 +236,38 @@ def test_png_decode_rejects_unsupported():
 
 
 def test_features_use_real_decode_for_png(spark):
-    """PNG features must be env-flag-invariant (always real-decoded) — the
-    stub no longer has an image/png path in the synth corpus."""
-    import os
-
+    """PNG embeddings are the histogram of the real PNG decode."""
     from qs_spark.multimodal import extract_features, synth_media_df
 
     m = synth_media_df(spark, 32).filter(F.col("mime") == "image/png")
     a = extract_features(m).toPandas().sort_values("media_ref").reset_index(drop=True)
-    os.environ["QS_FAKE_DECODE"] = "0"
-    try:
-        b = extract_features(m).toPandas().sort_values("media_ref").reset_index(drop=True)
-    finally:
-        os.environ["QS_FAKE_DECODE"] = "1"
+    src = m.toPandas().sort_values("media_ref").reset_index(drop=True)
     assert len(a) == sum(1 for i in range(32) if i % 5 == 0)  # r05 5-mime cycle
-    for x, y in zip(a["embedding"], b["embedding"]):
-        assert list(x) == list(y)
+    assert a.decode_error.isna().all()
+    for x, payload in zip(a["embedding"], src["payload"]):
+        assert list(x) == _driver_embedding(payload, "image/png")
 
 
-# ---- round 5: real JPEG codec + MP4 box parse + payload probe ----
+def test_mime_without_parser_is_a_per_row_decode_error(spark):
+    """A mime with no parser (image/gif) gets embedding=None and a
+    NotImplementedError decode_error, never a made-up embedding; a wav row
+    in the same batch still embeds."""
+    import pandas as pd
+
+    m = synth_media_df(spark, 8).toPandas()
+    wav = m[m.mime == "audio/wav"].iloc[0]
+    gif = wav.copy()
+    gif["media_ref"], gif["mime"] = "media://gif0", "image/gif"
+    gif["payload"] = b"GIF89a" + bytes(40)
+    pdf = pd.DataFrame([gif, wav]).reset_index(drop=True)
+    feats = extract_features(spark.createDataFrame(pdf)).toPandas()
+    feats = feats.set_index("media_ref")
+    g = feats.loc["media://gif0"]
+    assert g.embedding is None
+    assert g.decode_error.startswith("NotImplementedError"), g.decode_error
+    w = feats.loc[wav.media_ref]
+    assert w.decode_error is None
+    assert list(w.embedding) == _driver_embedding(wav.payload, "audio/wav")
 
 
 def test_jpeg_zigzag_is_spec_order():
@@ -498,11 +517,10 @@ def test_mp4_box_roundtrip_and_robustness():
 
 
 def test_all_corpus_mimes_decode_real():
-    """Every synthetic payload must decode through a REAL parser — the
-    digest stub (env-flag sensitive) must be unreachable for corpus mimes."""
+    """Every synthetic payload's mime has a REAL parser."""
     import numpy as np
 
-    from qs_spark.multimodal import _decode, _decode_fake, synth_media_row
+    from qs_spark.multimodal import _decode, synth_media_row
 
     seen = set()
     for i in range(20):
@@ -511,8 +529,6 @@ def test_all_corpus_mimes_decode_real():
         real = _decode(payload, mime)
         assert isinstance(real, np.ndarray) and real.dtype == np.uint8
         assert len(real) > 0
-        fake = _decode_fake(payload, mime)
-        assert not np.array_equal(real, fake)  # the stub is NOT what ran
     assert seen == {"image/png", "image/bmp", "audio/wav", "video/mp4", "image/jpeg"}
 
 
