@@ -1,7 +1,7 @@
 """Query-scoped cache lifecycle.
 
 Several operators cache a slim intermediate as a deliberate materialization
-barrier (score_per_file, bm25l_phrase, lsh_candidate_pairs — plan audits in
+barrier (score_per_file, bm25l_phrase, ngram_jaccard_pairs — plan audits in
 their docstrings).  In a long-lived session, every query would otherwise
 leave its cached DataFrame behind, relying solely on LRU eviction under
 executor memory pressure (round-2 ADVICE).  Operators register their caches

@@ -100,6 +100,11 @@ def write_postings(store: DataFrame, path: str, n_buckets: int = POSTINGS_BUCKET
         # (measured: 25k files for a 461 MB index; a 3-bucket lookup then
         # opens ~1.2k tiny files and planning dominates the query)
         .repartition(n_buckets, F.col("term_bucket"))
+        # postings-key order inside each bucket: the repartition keeps the
+        # rows in the order the store's files fed them, so the same rows in
+        # a different number of files gave different parquet bytes (the
+        # bucket prefix also meets the partitioned writer's sort)
+        .sortWithinPartitions("term_bucket", "term", "row_id", "pos")
         .write.mode("overwrite")
         .partitionBy("term_bucket")
         .parquet(path)

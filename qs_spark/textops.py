@@ -9,12 +9,16 @@ so the DuckDB oracle can reproduce them exactly
 
 Scale notes per op:
   - exact dedup: single hash-aggregate shuffle on the 60-bit fingerprint.
-  - MinHash/LSH: shingle explode -> K min-aggregates -> band buckets; the
-    pair join is bucket-local (skew-bounded by band width), never all-pairs.
+  - MinHash/LSH: one sketch kernel pass (K minima over md5 shingles) ->
+    band buckets -> ONE (band, bucket) aggregate of sorted member ids,
+    expanded into pairs by two streaming generators; a bucket over the cap
+    emits a star from its min, so output stays linear in hot buckets.
   - SimHash: per-token hash bits weighted-summed in one aggregate; near-dup
     pairs via hamming-k pigeonhole bit-bands (lossless bucket-local join).
   - Jaccard pairs: candidates from MinHash-LSH banding, exact Jaccard only
-    on candidates — never group-quadratic.
+    on candidates — never group-quadratic; the verify kernel's input is
+    hash-partitioned by pair, so a capped bucket's hub (the doc_a of every
+    star pair) spreads over all tasks instead of one.
   - ANN: brute-force cosine is one scan + top-k (exact baseline); the LSH
     variant buckets by hyperplane signs so each probe touches ~N/2^H vectors;
     multiprobe flips lowest-margin bits first to recover recall.
@@ -22,7 +26,7 @@ Scale notes per op:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from qs_spark.cachereg import scoped_cache
 
@@ -42,7 +46,9 @@ def h60(col):
 
 
 def norm_text(col="text"):
-    return F.regexp_replace(F.lower(F.col(col)), r"\s+", " ")
+    """Lowercase, whitespace runs collapsed to one space.  Built from SQL
+    text: one py4j round trip, not one per Column op."""
+    return F.expr(rf"regexp_replace(lower(`{col}`), '\\s+', ' ')")
 
 
 def fingerprint(docs: DataFrame) -> DataFrame:
@@ -264,27 +270,23 @@ def lsh_buckets(sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K) -> 
 
 def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """Slim (fp, doc_id) projection — md5 of the normalized text, row-local.
-    Callers that need fingerprints more than once (near_dup_clusters uses
-    them for BOTH the exact-dup edges and the LSH representative filter)
-    should compute this once and cache it: each evaluation is a full
-    text scan at 100 TB."""
+    The JVM-expression form of doc_sketches' fp column (the parity test
+    pins them equal); each evaluation is a full text scan at 100 TB."""
     return docs.select(F.md5(norm_text()).alias("fp"), "doc_id")
 
 
-def exact_dedup_rep_ids(docs: DataFrame, fps: DataFrame | None = None) -> DataFrame:
-    """doc_ids of exact-dup cluster representatives (min doc_id per
-    normalized-text fingerprint).  The fingerprint is computed row-local and
-    only the slim (fp, doc_id) pair shuffles — never the text (the first
-    round-3 form windowed the full text by fp and cost ~60% extra wall time
-    at sf0.1); dedup_exact carries the per-cluster n_dups weight when a
-    caller needs to re-expand.  Pass a precomputed `fps` to share one
-    fingerprint scan across pipeline stages."""
-    return (
-        (fps if fps is not None else doc_fingerprints(docs))
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
+def _with_rep(sketches: DataFrame) -> DataFrame:
+    """Every sketch row plus `rep`, the min doc_id of its exact-dup cluster
+    (rows sharing an fp).  A window, not a groupBy(fp) aggregate joined
+    back: one exchange, and the whole row rides along for both consumers
+    (the exact-dup edges and the representatives' signatures)."""
+    return sketches.selectExpr("*", "min(doc_id) OVER (PARTITION BY fp) AS rep")
+
+
+def _rep_sigs(with_rep: DataFrame) -> DataFrame:
+    """The exact-dup representatives' signatures (doc_id, mh0..): one
+    bucket member per identical-copy cluster, null-text rows dropped."""
+    return with_rep.where("doc_id = rep AND mh0 IS NOT NULL").drop("fp", "rep")
 
 
 LSH_MAX_BUCKET = 4096
@@ -293,99 +295,52 @@ LSH_MAX_BUCKET = 4096
 def lsh_candidate_pairs(
     docs: DataFrame,
     max_bucket_size: int = LSH_MAX_BUCKET,
-    fps: DataFrame | None = None,
     sigs: DataFrame | None = None,
-    rep_ids: DataFrame | None = None,
-    sigs_are_reps: bool = False,
 ) -> DataFrame:
-    """Near-dup candidates: pairs of exact-dup-cluster REPRESENTATIVES
-    sharing any band bucket.
+    """Near-dup candidates (doc_a < doc_b): pairs of exact-dup-cluster
+    REPRESENTATIVES sharing any band bucket.
 
     Hot-bucket safety (the r02 weak spot): mass-duplicated boilerplate is
     the NORM in web corpora — m identical docs share ALL band buckets, and a
-    naive bucket-local self-join emits m²/2 pairs before any filter.  Two
-    guards make the join output linear in the degenerate case:
+    naive bucket-local expansion emits m²/2 pairs.  Two guards keep the
+    output linear in the degenerate case:
 
-      1. exact-dedup upstream (exact_dedup_rep_ids): an identical-copy
-         cluster contributes ONE bucket member; candidate pairs are between
-         representatives (dedup_exact's keep_doc_id/n_dups re-expands when
-         per-copy pairs are needed).  Applied as a slim semi-join on the
-         BUCKET table, not a text shuffle: signatures are computed for every
-         doc (linear), duplicates are dropped before the join (the only
-         quadratic risk).
-      2. bucket cap: a bucket still holding > max_bucket_size members after
-         dedup (near-identical template families) emits a STAR — every
-         member paired with the bucket's min doc_id — instead of all pairs:
-         O(m) output that preserves cluster connectivity for the standard
-         union-find/connected-components consumer downstream.
+      1. exact dedup upstream: an identical-copy cluster contributes ONE
+         bucket member, its min doc_id (a window over the sketch rows'
+         fp, before banding — the bucket table is never re-shuffled by
+         doc_id).
+      2. bucket cap: a bucket holding > max_bucket_size members (a
+         near-identical template family) emits a STAR — every member paired
+         with the bucket's min doc_id — instead of all pairs: O(m) output
+         that preserves connectivity for the connected-components consumer.
 
-    The annotated bucket table is CACHED before the self-join: plan audit
-    showed the self-join does NOT reuse exchanges across its sides, so
-    without the barrier the whole shingle->md5->16-min-agg pipeline (the
-    expensive part, reading every document's full text) executes once per
-    consumer.  The per-bucket size/representative are attached by a WINDOW
-    over (band, bucket) rather than an aggregate + join (r05): one exchange
-    instead of two, one cache instead of two (the window subsumes the sizes
-    table), and the cached plan RETAINS hashpartitioning(band, bucket), so
-    the self-join below consumes both sides exchange-free.  The cached set
-    is slim — LSH_BANDS rows of (doc_id, band, bucket-hash, 2 ints) per rep
-    — and spills to disk under pressure; callers release it via
-    cachereg.release_caches().
+    Shape: ONE aggregate per (band, bucket) collects the sorted member ids,
+    and two streaming generators expand it — posexplode gives each member
+    its position i (only position 0 in a capped bucket, whose array is cut
+    to its min), and explode(slice(ids, i + 2, ...)) pairs it with every
+    later member.  No cache and no self-join: the bucket table is consumed
+    once, inside the aggregate's output stage.  A distinct() drops pairs
+    that share several bands.  (A single inline(flatten(transform(...)))
+    generator builds every bucket's pair array before emitting a row; on a
+    4,000-member bucket it was about twice as slow.)
 
-    Pass precomputed `fps` (fp, doc_id) and/or `sigs` (doc_id, mh0..mh15) to
-    share scans across pipeline stages; when BOTH are absent they are fused
-    into one doc_sketches text scan here (r05: the standalone call previously
-    paid two full-text evaluations — fingerprints for the rep filter plus
-    the signature kernel).  `sigs_are_reps=True` declares the passed `sigs`
-    already filtered to exact-dup representatives, skipping the rep
-    semi-join entirely (r06, see below).
-
-    Representative filter shape (r06): the rep set used to be a groupBy(fp)
-    aggregate semi-joined against the BUCKET table on doc_id.  At scale that
-    semi-join is a second shuffle of the 4-rows-per-doc bucket table (or a
-    broadcast of every representative id); now a single window over the
-    cached sketch rows (min doc_id per fp, carried on the full row) filters
-    the SIGNATURES before banding, so the bucket table is built from
-    representatives only and is never re-shuffled by doc_id.  Same rep set
-    (min doc_id per fp, SQL null-grouping semantics unchanged), fewer
-    exchanges at every scale; q21/q23/q62 oracles pin the outputs."""
-    if fps is None and sigs is None:
-        sk = scoped_cache(doc_sketches(docs))
-        sk_ann = sk.withColumn(
-            "_krep", F.min("doc_id").over(Window.partitionBy("fp"))
+    `sigs` is the representatives' signatures (doc_id, mh0..mh15), as
+    near_dup_clusters passes them; when absent they come from one
+    doc_sketches scan of `docs`."""
+    if sigs is None:
+        sigs = _rep_sigs(_with_rep(doc_sketches(docs)))
+    cap = int(max_bucket_size)
+    return (
+        lsh_buckets(sigs)
+        .groupBy("band", "bucket")
+        .agg(F.expr("array_sort(collect_list(doc_id))").alias("ids"))
+        .selectExpr(
+            "ids",
+            f"posexplode(IF(size(ids) <= {cap}, ids, slice(ids, 1, 1))) AS (i, doc_a)",
         )
-        sigs = sk_ann.filter(
-            (F.col("doc_id") == F.col("_krep")) & F.col("mh0").isNotNull()
-        ).drop("fp", "_krep")
-        sigs_are_reps = True
-    bsrc = lsh_buckets(sigs if sigs is not None else minhash_signatures(docs))
-    if not sigs_are_reps:
-        if rep_ids is None:
-            rep_ids = exact_dedup_rep_ids(docs, fps=fps)
-        bsrc = bsrc.join(rep_ids, "doc_id", "left_semi")
-    w = Window.partitionBy("band", "bucket")
-    # one select, not two withColumns: both window columns share the spec
-    # (one Window node either way) and each chained op is a full analyzer
-    # pass over the signature tree on the driver
-    b2 = scoped_cache(
-        bsrc.select(
-            "*",
-            F.count("*").over(w).alias("_m"),
-            F.min("doc_id").over(w).alias("_rep"),
-        )
+        .selectExpr("doc_a", "explode(slice(ids, i + 2, size(ids) - i - 1)) AS doc_b")
+        .distinct()
     )
-    small = b2.filter(F.col("_m") <= max_bucket_size).select("band", "bucket", "doc_id")
-    all_pairs = (
-        small.alias("l")
-        .join(small.alias("r"), ["band", "bucket"])
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-    )
-    star_pairs = (
-        b2.filter((F.col("_m") > max_bucket_size) & (F.col("doc_id") > F.col("_rep")))
-        .select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-    return all_pairs.unionByName(star_pairs).distinct()
 
 
 def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
@@ -519,17 +474,15 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     max_bucket_size: int = LSH_MAX_BUCKET,
-    fps: DataFrame | None = None,
     sigs: DataFrame | None = None,
-    rep_ids: DataFrame | None = None,
-    sigs_are_reps: bool = False,
     broadcast_cands_below: int = 2_000_000,
 ) -> DataFrame:
     """n-gram Jaccard over LSH pairs; runs an eager count() job when called.
 
     The scale path.  The count is the broadcast gate below: it runs the
     sketch + LSH pipeline when this function is called, even if the
-    returned DataFrame is never consumed.
+    returned DataFrame is never consumed.  `sigs` is passed through to
+    lsh_candidate_pairs (the representatives' signatures).
 
     Candidate pairs come from MinHash-LSH banding (lsh_candidate_pairs:
     exact-dup representatives, hot buckets capped), so pair generation is
@@ -538,68 +491,59 @@ def ngram_jaccard_pairs(
 
     Exact verify (r05): ship both normalized texts to each pair (one
     semi-join projects candidate-doc texts, two joins attach them) and
-    compute |A∩B|, |A|, |B| per pair in one Arrow-batched kernel.  Plan is
-    3 slim stages after the candidate join vs ~8 for a shingle-join form —
-    the scheduling-latency floor the r04 verdict flagged.  Text shipped is
-    |pairs| x 2 texts; per-doc amplification is bounded by the bucket cap x
-    bands (a doc joins at most that many pairs), and exact-dup mass
-    collapsed to representatives upstream, so the degenerate web-corpus case
-    stays linear.  Jaccard division + rounding stay JVM-side so oracle
-    rounding semantics are unchanged.
+    compute |A∩B|, |A|, |B| per pair in one Arrow-batched kernel.  Text
+    shipped is |pairs| x 2 texts; per-doc amplification is bounded by the
+    bucket cap x bands, and exact-dup mass collapsed to representatives
+    upstream, so the degenerate web-corpus case stays linear.  Jaccard
+    division + rounding stay JVM-side so oracle rounding semantics are
+    unchanged.
 
-    Candidate-text semi-join shape (r06, guide §3.2): unhinted, the planner
+    Verify spread by pair: the pair table is the small side of both text
+    joins, so the joined rows come out in the task that scanned the
+    streamed text row — every star pair of a capped bucket shares doc_a,
+    the bucket's min, and landed in the one task holding that text.  The
+    pairs are hash-partitioned by (doc_a, doc_b) into
+    spark.sql.shuffle.partitions partitions before the kernel, a fixed
+    count AQE does not coalesce, so a hub's pairs spread over every task
+    (perfbench dedup_near, seed 1002, local[4]: the slowest kernel task
+    went from 0.33-0.39 s, ~6x the median, to at most 0.11 s, 1.4x).
+    The Hybrid Edge Partitioner idea (SIGMOD 2021): place a high-degree
+    vertex's edges apart.
+
+    Candidate-text semi-join shape (r06): unhinted, the planner
     sort-merge-joins docs against the candidate ids — which shuffles the
-    FULL corpus text by doc_id before the semi filter drops non-candidates
-    (event-log audit: the docs scan + full-text shuffle write ran as one
-    serial task costing ~0.7 s of the sandbox dedup_cluster wall, and at
-    100 TB it is a corpus-wide text shuffle to fetch a ~1% candidate set —
-    the §8 anti-pattern).  The candidate-id table is slim and its size is
-    known after one count on the already-cached pair table, so when the
-    pair count is under `broadcast_cands_below` the ids are BROADCAST and
-    the semi filter runs inside the scan stage: zero text ever leaves its
-    scan task.  Above the gate (web-scale candidate sets) the unhinted
-    sort-merge path stands unchanged.  The count is a size probe on the
-    cached slim pair table, not a result cache — every run computes it."""
-    cand = scoped_cache(
-        lsh_candidate_pairs(
-            docs,
-            max_bucket_size,
-            fps=fps,
-            sigs=sigs,
-            rep_ids=rep_ids,
-            sigs_are_reps=sigs_are_reps,
-        )
-    )
-    # no .distinct() here (r06): the only consumer is a left-semi join, which
-    # dedups by construction — the distinct was one full shuffle + aggregate
-    # of pure plan depth on the dedup_cluster path.  explode(array(a, b))
-    # yields the same id multiset as the former two-select union in ONE
-    # operator — one analyzer pass and one scan of the cached pair table
-    # instead of two union branches.
-    cdocs = cand.selectExpr("explode(array(doc_a, doc_b)) as doc_id")
+    FULL corpus text by doc_id before the semi filter drops non-candidates.
+    The candidate-id table is slim and its size is known after one count
+    on the cached pair table, so when the pair count is under
+    `broadcast_cands_below` the ids are BROADCAST and the semi filter runs
+    inside the scan stage: zero text ever leaves its scan task.  Above the
+    gate (web-scale candidate sets) the unhinted sort-merge path stands.
+    The count is a size probe on the cached slim pair table, not a result
+    cache — every run computes it."""
+    cand = scoped_cache(lsh_candidate_pairs(docs, max_bucket_size, sigs=sigs))
+    # no .distinct() (r06): the only consumer is a left-semi join, which
+    # dedups by construction; explode(array(a, b)) is the id multiset in
+    # one operator
+    cdocs = cand.selectExpr("explode(array(doc_a, doc_b)) AS doc_id")
     if cand.count() <= broadcast_cands_below:
         cdocs = F.broadcast(cdocs)
     t = scoped_cache(
-        docs.join(cdocs, "doc_id", "left_semi")
-        .select("doc_id", norm_text().alias("_nt"))
+        docs.join(cdocs, "doc_id", "left_semi").select(
+            "doc_id", norm_text().alias("_nt")
+        )
     )
-    withA = cand.join(t, cand.doc_a == t.doc_id).select(
-        "doc_a", "doc_b", F.col("_nt").alias("_ta")
-    )
-    withAB = withA.join(t, withA.doc_b == t.doc_id).select(
-        "doc_a", "doc_b", "_ta", F.col("_nt").alias("_tb")
+    nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    with_ab = (
+        cand.join(t.selectExpr("doc_id AS doc_a", "_nt AS _ta"), "doc_a")
+        .join(t.selectExpr("doc_id AS doc_b", "_nt AS _tb"), "doc_b")
+        .repartition(nparts, "doc_a", "doc_b")
     )
     id_t = docs.schema["doc_id"].dataType.simpleString()
-    stats = withAB.mapInPandas(
+    return with_ab.mapInPandas(
         _pair_shingle_stats(n),
         f"doc_a {id_t}, doc_b {id_t}, inter long, sza long, szb long",
-    )
-    return stats.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")), 6
-        ).alias("jaccard"),
+    ).selectExpr(
+        "doc_a", "doc_b", "round(inter / (sza + szb - inter), 6) AS jaccard"
     )
 
 
@@ -662,7 +606,7 @@ def connected_components(
         0.2 s for the raw probe (union-find needs neither symmetry nor
         distinctness).  Only a graph that overflows the local tier builds
         the symmetric edge table, where the loop's min-propagate needs it."""
-    raw = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    raw = pairs.selectExpr(f"`{a}` AS src", f"`{b}` AS dst")
     spark = pairs.sparkSession
     ntype = pairs.schema[a].dataType.simpleString()
     # ONE probe job sizes the graph AND, in the (overwhelmingly common) small
@@ -784,50 +728,36 @@ def near_dup_clusters(
     max_bucket_size: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """End-to-end near-dup clustering — the operator a training-data pipeline
-    actually runs to de-duplicate a corpus: exact-dup clusters (dedup_exact)
-    + LSH candidates verified by exact n-gram Jaccard >= threshold ->
-    connected components -> (doc_id, cluster, is_representative).  Keep rows
-    with is_representative to drop duplicates.  Every stage is the
-    bucket-local / capped scale path documented on its function."""
-    # ONE text scan (doc_sketches: fingerprint + minhash in the same kernel
-    # pass, r05) feeds the exact edges, the LSH representative filter, AND
-    # the banded signatures — the previous shape paid two full-corpus text
-    # evaluations before the candidate-text projection, a real cost at
-    # 100 TB.  The cached sketch table is slim (doc_id, fp, 16 ints).
-    # NOTE: sketches keep the minhash default shingle width (the LSH banding
-    # contract) — `n` parameterizes only the exact-Jaccard verify, exactly as
-    # before the fuse (lsh_candidate_pairs always banded 3-gram signatures).
-    sk = scoped_cache(doc_sketches(docs))
-    # ONE full-row fp window feeds the exact-dup edges AND the
-    # representative-filtered signatures (r06): min doc_id per fingerprint,
-    # carried on the whole sketch row, so (a) the two branches share a
-    # canonically-equal Exchange(hashpartitioning(fp)) that ReuseExchange
-    # materializes once, and (b) lsh_candidate_pairs skips its rep
-    # semi-join entirely — the bucket table is banded from representatives
-    # only and never re-shuffled by doc_id (sigs_are_reps).  Same rep set
-    # as the former groupBy(fp) aggregate (SQL null-group semantics incl.).
-    fp_ann = sk.withColumn("rep", F.min("doc_id").over(Window.partitionBy("fp")))
-    exact_edges = fp_ann.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    sigs_rep = fp_ann.filter(
-        (F.col("doc_id") == F.col("rep")) & F.col("mh0").isNotNull()
-    ).drop("fp", "rep")
+    actually runs to de-duplicate a corpus: exact-dup clusters + LSH
+    candidates verified by exact n-gram Jaccard >= threshold -> connected
+    components -> (doc_id, cluster, is_representative).  Keep rows with
+    is_representative to drop duplicates.  Every stage is the bucket-local /
+    capped scale path documented on its function.
+
+    ONE text scan (doc_sketches: fingerprint + minhash in one kernel pass)
+    and its fp window (_with_rep) are cached slim (doc_id, fp, 16 ints,
+    rep) and feed the exact-dup edges, the representatives' signatures and
+    the output ids: the window's shuffle runs once, in the gate count's
+    job, not again in the component collect.
+    The sketches keep the minhash shingle width (the LSH banding contract);
+    `n` parameterizes only the exact-Jaccard verify.  The plan is built from
+    SQL text, one DataFrame call per step: each Column op is a py4j round
+    trip on the driver, ahead of the op's first job."""
+    sk = scoped_cache(_with_rep(doc_sketches(docs)))
+    exact_edges = sk.where("doc_id != rep").selectExpr("rep AS doc_a", "doc_id AS doc_b")
     near_edges = ngram_jaccard_pairs(
-        docs, n, max_bucket_size, sigs=sigs_rep, sigs_are_reps=True
-    ).filter(
-        F.col("jaccard") >= jaccard_threshold
-    ).select("doc_a", "doc_b")
+        docs, n, max_bucket_size, sigs=_rep_sigs(sk)
+    ).where(F.col("jaccard") >= jaccard_threshold).select("doc_a", "doc_b")
     comp = connected_components(exact_edges.unionByName(near_edges))
-    ids = sk.select("doc_id")  # from the cached sketches — no second scan
-    cluster = F.coalesce("cluster", F.col("doc_id"))
-    # one select, not select+withColumn: is_representative restates the
-    # coalesce (identical value; codegen dedups the common subexpression)
-    # and each chained op is a full analyzer pass on the driver
-    return ids.join(comp, ids.doc_id == comp.node, "left").select(
-        "doc_id",
-        cluster.alias("cluster"),
-        (F.col("doc_id") == cluster).alias("is_representative"),
+    # the output ids come from the cached sketches — no second text scan
+    return (
+        sk.select("doc_id")
+        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+        .selectExpr(
+            "doc_id",
+            "coalesce(cluster, doc_id) AS cluster",
+            "doc_id = coalesce(cluster, doc_id) AS is_representative",
+        )
     )
 
 

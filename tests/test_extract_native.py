@@ -374,37 +374,15 @@ def test_ingest_plan_construction_py4j_budget(spark, tmp_path):
     plan build_store(extract_spans_native(...)) in ~230 commands on a
     size-classed table with a split mega; the Column-op builders sent
     ~1,500."""
-    import gc
-    import threading
-
-    import py4j.clientserver
-
+    from conftest import count_py4j_commands
     from qs_spark.store import build_store
 
     path = str(tmp_path / "budget.parquet")
     _branch_table(spark, path)
     build_store(extract_spans_native(spark, path))  # warm the lazy imports
-
-    conn = py4j.clientserver.ClientServerConnection
-    orig = conn.send_command
-    sent = [0]
-    me = threading.get_ident()
-
-    def counting(self, command):
-        # only this thread's commands: py4j flushes object-delete batches
-        # (0-260 of them) from a background thread at times of its own
-        if threading.get_ident() == me:
-            sent[0] += 1
-        return orig(self, command)
-
-    gc.collect()  # earlier tests' garbage would add delete commands
-    gc.disable()
-    conn.send_command = counting
-    try:
-        store = build_store(extract_spans_native(spark, path))
-    finally:
-        conn.send_command = orig
-        gc.enable()
+    store, sent = count_py4j_commands(
+        lambda: build_store(extract_spans_native(spark, path))
+    )
     # the costlier route was planned: kernel wave + mega split/stitch
     assert _mega_route(store) == "split"
-    assert sent[0] <= 400, f"{sent[0]} py4j commands to plan one ingest call"
+    assert sent <= 400, f"{sent} py4j commands to plan one ingest call"

@@ -3,6 +3,7 @@ emulation of the reference's query path on the same small store.
 """
 
 import math
+import os
 
 from pyspark.sql import functions as F
 
@@ -191,6 +192,31 @@ def test_postings_table_partition_pruning(spark, tmp_path):
     # plan must show a partition filter on term_bucket (directory pruning)
     plan = hits._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "term_bucket" in plan.split("PartitionFilters", 1)[1][:200]
+
+
+def test_postings_bytes_do_not_depend_on_store_files(spark, tmp_path):
+    """The same store rows written as 1 file and as 2 files must give
+    byte-identical postings parts: every bucket's rows are written in
+    postings-key order, not in the order the store's files feed them."""
+    import glob
+
+    st = _store(spark)
+    parts = {}
+    for n_files in (1, 2):
+        store_path = str(tmp_path / f"store{n_files}")
+        st.repartition(n_files).write.parquet(store_path)
+        stored = spark.read.parquet(store_path)
+        assert len(stored.inputFiles()) == n_files
+        out = str(tmp_path / f"postings{n_files}")
+        S.write_postings(stored, out, n_buckets=8)
+        parts[n_files] = {
+            os.path.basename(os.path.dirname(f)): open(f, "rb").read()
+            for f in glob.glob(f"{out}/term_bucket=*/*.parquet")
+        }
+    assert len(parts[1]) == 8
+    assert sorted(parts[1]) == sorted(parts[2])
+    diff = [b for b in parts[1] if parts[1][b] != parts[2][b]]
+    assert diff == []
 
 
 def test_bm25l_phrase(spark):

@@ -91,7 +91,7 @@ def test_stage_report_sums_tasks_and_python_metrics(tmp_path):
     assert s0["tasks"] == 2
     got = {c: s0[c] for c in stage_report.COLUMNS if c != "tasks"}
     assert got == pytest.approx({
-        "wall_s": 2.5, "run_s": 3.0, "cpu_s": 2.0, "py_start_s": 0,
+        "wall_s": 2.5, "run_s": 3.0, "max_task_s": 2.0, "cpu_s": 2.0, "py_start_s": 0,
         "py_init_s": 0.08, "py_run_s": 3.0, "py_sent_mb": 2.0, "py_ret_mb": 1.0,
     })
     assert (1, 0) not in stages  # the skipped stage never ran
@@ -107,16 +107,17 @@ def test_stage_report_prints_jobs_stages_and_group_filter(tmp_path, capsys):
     ]
     job0 = next(line for line in out if line.startswith("job 0 [op1] extract"))
     # job wall is job submit -> end; stage sums fill the other columns
-    assert job0.split()[-9:] == [
-        "3.000", "2", "3.000", "2.000", "0.000", "0.080", "3.000", "2.000", "1.000"
+    assert job0.split()[-10:] == [
+        "3.000", "2", "3.000", "2.000", "2.000", "0.000", "0.080", "3.000", "2.000",
+        "1.000",
     ]
     assert any(line.startswith("* stage 0 mapInArrow") for line in out)
-    assert out[-1].startswith("total") and out[-1].split()[-8] == "3"
+    assert out[-1].startswith("total") and out[-1].split()[-9] == "3"
 
     stage_report.main([log, "--group", "op2"])
     out = capsys.readouterr().out.splitlines()
     assert [line.lstrip("* ").split()[1] for line in out[1:-1]] == ["1", "2"]
-    assert out[-1].split()[-8] == "1"
+    assert out[-1].split()[-9] == "1"
 
 
 def _job(jid, submit, end, stage_ids, group):
@@ -156,7 +157,7 @@ def test_stage_report_timeline_offsets_and_critical_path(tmp_path, capsys):
     out = capsys.readouterr().out.splitlines()
     # offsets are from op3's first submission (10_000 ms)
     rows = {
-        line.lstrip("* ").split()[1]: (line.startswith("*"), line.split()[-11:-9])
+        line.lstrip("* ").split()[1]: (line.startswith("*"), line.split()[-12:-10])
         for line in out[1:-1]
     }
     assert rows == {
@@ -167,4 +168,30 @@ def test_stage_report_timeline_offsets_and_critical_path(tmp_path, capsys):
         "3": (False, ["4.500", "5.000"]),
         "7": (True, ["4.520", "4.950"]),
     }
-    assert out[-1].split()[-11:-9] == ["-", "-"]  # the total has no times
+    assert out[-1].split()[-12:-10] == ["-", "-"]  # the total has no times
+
+
+# op4: a skewed stage (one task holds most of the work, as a hub's pairs
+# did in the Jaccard verify) and an even one
+SKEW_EVENTS = EVENTS + [
+    *_job(4, 20_000, 22_000, [8, 9], "op4"),
+    _task(8, 100, 1), _task(8, 120, 1), _task(8, 900, 1),
+    _stage_done(8, 20_010, 21_000, "verify"),
+    _task(9, 200, 1), _task(9, 210, 1),
+    _stage_done(9, 21_010, 21_300, "count"),
+]
+
+
+def test_stage_report_max_task_shows_skew(tmp_path, capsys):
+    log = _write_log(tmp_path, SKEW_EVENTS)
+    _, stages = stage_report.load(log)
+    assert stages[(8, 0)]["max_task_s"] == pytest.approx(0.9)
+    assert stages[(9, 0)]["max_task_s"] == pytest.approx(0.21)
+
+    stage_report.main([log, "--group", "op4"])
+    out = capsys.readouterr().out.splitlines()
+    col = stage_report.COLUMNS.index("max_task_s") - len(stage_report.COLUMNS)
+    got = {line.lstrip("* ").split()[1]: line.split()[col] for line in out[1:-1]}
+    assert got == {"4": "0.900", "8": "0.900", "9": "0.210"}
+    # job and total lines carry the largest stage value, not a sum
+    assert out[-1].split()[col] == "0.900"

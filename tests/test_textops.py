@@ -4,7 +4,7 @@ driver harness)."""
 
 import math
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from qs_spark import textops as X
 
@@ -39,6 +39,28 @@ def minhash_signatures_expr(docs, k: int = X.MINHASH_K, n: int = 3):
         for i in range(k)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
+
+
+def lsh_pairs_selfjoin(sigs, max_bucket_size: int):
+    """Oracle: the r05 form of X.lsh_candidate_pairs over given signatures —
+    a (band, bucket) window attaches each bucket's size and min doc_id, a
+    self-join on (band, bucket) emits all pairs of buckets within the cap,
+    and a star (min, x) branch covers the buckets above it."""
+    w = Window.partitionBy("band", "bucket")
+    b2 = X.lsh_buckets(sigs).select(
+        "*", F.count("*").over(w).alias("_m"), F.min("doc_id").over(w).alias("_rep")
+    )
+    small = b2.filter(F.col("_m") <= max_bucket_size).select("band", "bucket", "doc_id")
+    all_pairs = (
+        small.alias("l")
+        .join(small.alias("r"), ["band", "bucket"])
+        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+    )
+    star_pairs = b2.filter(
+        (F.col("_m") > max_bucket_size) & (F.col("doc_id") > F.col("_rep"))
+    ).select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    return all_pairs.unionByName(star_pairs).distinct()
 
 
 def _docs(spark):
@@ -340,6 +362,67 @@ def test_lsh_bucket_cap_emits_star_not_quadratic(spark):
     assert set(capped.doc_a) | set(capped.doc_b) == set(range(40))
 
 
+def test_lsh_pairs_at_the_cap_boundary_match_selfjoin_oracle(spark):
+    """Hand-built signatures: a family of exactly `cap` members shares one
+    bucket per band (all pairs), a family of cap + 1 members does too (a
+    star from its min), one pair agrees on a single band only, and two
+    singletons agree on none.  lsh_candidate_pairs must equal the window +
+    self-join + star oracle, and the two families' expected shapes."""
+    cap = 6
+    k = X.MINHASH_K
+    rows = [(f"a{i:02d}", [7] * k) for i in range(cap)]
+    rows += [(f"b{i:02d}", [9] * k) for i in range(cap + 1)]
+    rows += [("p0", [1] * 4 + [2] * (k - 4)), ("p1", [1] * 4 + [3] * (k - 4))]
+    rows += [("s0", list(range(k))), ("s1", list(range(100, 100 + k)))]
+    schema = "doc_id string, " + ", ".join(f"mh{i} long" for i in range(k))
+    sigs = spark.createDataFrame([(d, *mh) for d, mh in rows], schema)
+    docs = sigs.selectExpr("doc_id", "'' AS text")  # unused when sigs given
+
+    got = sorted(map(tuple, X.lsh_candidate_pairs(docs, cap, sigs=sigs).collect()))
+    want = sorted(map(tuple, lsh_pairs_selfjoin(sigs, cap).collect()))
+    assert got == want
+    a = [f"a{i:02d}" for i in range(cap)]
+    b = [f"b{i:02d}" for i in range(cap + 1)]
+    assert [p for p in got if p[0].startswith("a")] == [
+        (x, y) for i, x in enumerate(a) for y in a[i + 1 :]
+    ]
+    assert [p for p in got if p[0].startswith("b")] == [("b00", y) for y in b[1:]]
+    assert [p for p in got if p[0].startswith(("p", "s"))] == [("p0", "p1")]
+
+
+def test_jaccard_verify_spreads_a_hub_over_partitions(spark):
+    """A template family above max_bucket_size=8 makes its min doc_id a hub:
+    every star pair shares it as doc_a.  The verify must not run them all in
+    one task — no output partition may hold more than half of the pairs —
+    and the pairs must equal the path above the broadcast gate."""
+    base_text = " ".join(f"w{i}" for i in range(200))
+    family = spark.range(40).selectExpr(
+        "CAST(id AS INT) AS doc_id", f"concat('{base_text} u', CAST(id AS STRING)) AS text"
+    )
+    other = spark.range(6).selectExpr(
+        "CAST(id + 1000 AS INT) AS doc_id",
+        "concat_ws(' ', transform(sequence(0, 30), j -> concat('t', id, '_', j))) AS text",
+    )
+    near = other.limit(1).selectExpr("1999 AS doc_id", "concat(text, ' extra') AS text")
+    docs = family.unionByName(other).unionByName(near)
+
+    pairs = X.ngram_jaccard_pairs(docs, max_bucket_size=8)
+    per_part = [
+        r["n"]
+        for r in pairs.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    got = sorted(map(tuple, pairs.collect()))
+    assert len(got) >= 39  # the star alone has 39 pairs
+    assert (1000, 1999) in {(a, b) for a, b, _ in got}  # an unrelated near-dup
+    assert max(per_part) <= len(got) / 2, per_part
+    above = sorted(
+        map(tuple, X.ngram_jaccard_pairs(docs, 3, 8, broadcast_cands_below=0).collect())
+    )
+    assert above == got
+
+
 def test_embedding_near_dup_cap_keeps_verified_star(spark):
     """Embedding hot-bucket cap: identical vectors land in one bucket per
     table; over the cap, only rep-star pairs come out — all cosine=1 — and
@@ -561,6 +644,31 @@ def test_near_dup_clusters_drop_duplicates(spark):
     per_cluster = cl.groupby("cluster").is_representative.sum()
     assert (per_cluster == 1).all()
     assert int(cl.is_representative.sum()) <= 40
+
+
+def test_near_dup_clusters_py4j_budget(spark):
+    """One near_dup_clusters call, its gate count and component collect
+    included, is driver time ahead of and between the op's jobs: each
+    DataFrame or Column call is a py4j round trip.  Built from SQL text it
+    sends ~390 commands on this table; the Column-op chains sent ~1,260."""
+    from conftest import count_py4j_commands
+    from qs_spark.cachereg import release_caches
+
+    d = _docs(spark).limit(60).select("doc_id", "text")
+    near = d.limit(1).select(
+        F.lit(900002).alias("doc_id"), F.concat("text", F.lit(" zzz")).alias("text")
+    )
+    d = d.unionByName(near)
+
+    def op():
+        return X.near_dup_clusters(d).filter("is_representative").count()
+
+    op()  # warm the lazy imports
+    release_caches()
+    n, sent = count_py4j_commands(op)
+    release_caches()
+    assert n <= 60  # the planted near copy clusters with its source
+    assert sent <= 600, f"{sent} py4j commands for one near_dup_clusters call"
 
 
 def test_ivf_indexed_equals_memory_and_prunes(spark, tmp_path):

@@ -12,6 +12,9 @@ spark.eventLog.compress=false) and prints, per job and per stage that ran:
   wall_s      submission -> completion
   tasks       finished task attempts
   run_s       executor run time, summed over tasks
+  max_task_s  the longest task's executor run time: against run_s / tasks
+              it shows skew (one task holding a hub's work); on a job line
+              and the total, the largest over the stages
   cpu_s       executor CPU time, summed over tasks (JVM task threads only;
               the Python worker's own CPU is not in it)
   py_start_s  SQL metric "time to start Python workers"
@@ -48,7 +51,11 @@ PY_METRICS = {
     "data sent to Python workers": ("py_sent_mb", _MB),
     "data returned from Python workers": ("py_ret_mb", _MB),
 }
-COLUMNS = ["wall_s", "tasks", "run_s", "cpu_s", *(c for c, _ in PY_METRICS.values())]
+COLUMNS = [
+    "wall_s", "tasks", "run_s", "max_task_s", "cpu_s",
+    *(c for c, _ in PY_METRICS.values()),
+]
+MAXED = {"max_task_s"}  # aggregated by max over stages; the rest by sum
 TIMELINE = ["start_s", "end_s"]  # printed from the "submit" and "end" times
 
 
@@ -102,7 +109,9 @@ def load(log_dir: str) -> tuple[dict, dict]:
             s = stage(ev["Stage ID"], ev.get("Stage Attempt ID", 0))
             s["tasks"] += 1
             m = ev.get("Task Metrics") or {}
-            s["run_s"] += m.get("Executor Run Time", 0) / 1e3
+            run_s = m.get("Executor Run Time", 0) / 1e3
+            s["run_s"] += run_s
+            s["max_task_s"] = max(s["max_task_s"], run_s)
             s["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
             for acc in (ev.get("Task Info") or {}).get("Accumulables", []):
                 metric = PY_METRICS.get(acc.get("Name"))
@@ -118,6 +127,10 @@ def _row(label: str, t0: float, vals: dict) -> str:
         for k in ("submit", "end")
     ] + [f"{vals[c]:>11d}" if c == "tasks" else f"{vals[c]:>11.3f}" for c in COLUMNS]
     return f"{label:<34.34s}" + "".join(cells)
+
+
+def _agg(col: str, vals) -> float:
+    return max(vals, default=0) if col in MAXED else sum(vals)
 
 
 def critical_path(ran: dict) -> set:
@@ -162,7 +175,7 @@ def report(jobs: dict, stages: dict, group: str | None = None) -> str:
     total = {c: 0 for c in COLUMNS}
     for jid, job in selected.items():
         ran = ran_by_job[jid]
-        jv = {c: sum(s[c] for s in ran.values()) for c in COLUMNS}
+        jv = {c: _agg(c, (s[c] for s in ran.values())) for c in COLUMNS}
         if job["end"] is not None:
             jv["wall_s"] = (job["end"] - job["submit"]) / 1e3
         label = f"job {jid} [{job['group']}] {job['desc']}"
@@ -172,7 +185,7 @@ def report(jobs: dict, stages: dict, group: str | None = None) -> str:
             label = f"{mark}stage {sid}" + (f".{att}" if att else "") + f" {s['name']}"
             lines.append(_row(label, t0, s))
             for c in COLUMNS:
-                total[c] += s[c]
+                total[c] = _agg(c, (total[c], s[c]))
     lines.append(_row("total (stage sums)", t0, {"submit": None, "end": None, **total}))
     return "\n".join(lines)
 
