@@ -103,7 +103,7 @@ def run_query_once(name: str, sf_dir: str, cores: int) -> dict:
     from qs_spark.session import get_spark
     from qs_spark.store import build_store
 
-    from qs_spark.session import tune_scan_split
+    from qs_spark.session import input_bytes, tune_scan_split
 
     spark = get_spark(f"bench_{name}", cores=cores)
     out: dict = {"query": name}
@@ -117,12 +117,7 @@ def run_query_once(name: str, sf_dir: str, cores: int) -> dict:
         # input-table bytes double as the store-size estimate for the
         # rebalanced write (store ≈ 1.2x input for this corpus; at scale
         # you'd pass table statistics)
-        import os as _os
-
-        est = sum(
-            _os.path.getsize(f[7:] if f.startswith("file://") else f)
-            for f in input_df.inputFiles()
-        )
+        est = input_bytes(input_df)
         t0 = time.time()
         # QS_EXTRACT_SCAN=jvm pins the pre-r05 JVM scan for A/B control runs
         if os.environ.get("QS_EXTRACT_SCAN") == "jvm":

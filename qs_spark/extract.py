@@ -34,9 +34,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from qs_spark.kernels.dispatch import (
     _FMT_BY_KIND,
@@ -45,29 +45,6 @@ from qs_spark.kernels.dispatch import (
     safe_extract_doc,
 )
 from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
-
-SPAN_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("order", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-    ]
-)
-
-_PART_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("part_k", T.IntegerType()),
-        T.StructField("local_order", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("fmt", T.StringType()),
-    ]
-)
 
 _SPAN_PA_SCHEMA = pa.schema(
     [
@@ -92,6 +69,13 @@ _PART_PA_SCHEMA = pa.schema(
     ]
 )
 
+SPAN_SCHEMA = from_arrow_schema(_SPAN_PA_SCHEMA)
+_PART_SCHEMA = from_arrow_schema(_PART_PA_SCHEMA)
+
+# max raw spans one kernel call handles for a page-local doc: larger docs are
+# sliced into ceil(n / threshold) parts that extract in parallel and
+# re-stitch, which bounds per-task memory and wall whatever the size tail.
+# The slicing never changes a doc's spans (page-local formats only).
 DEFAULT_SPLIT_THRESHOLD = 64
 SIZE_CLASS_COL = "size_class"
 
@@ -132,32 +116,23 @@ def with_fmt(df: DataFrame) -> DataFrame:
     return df.withColumn("fmt", F.expr(_FMT_SQL))
 
 
-def mega_predicate(split_threshold: int = DEFAULT_SPLIT_THRESHOLD) -> str:
-    """SQL predicate of the docs routed to the split/re-stitch path:
-    page-local formats with more raw spans than one kernel call should own."""
-    fmts = ", ".join(sql_str(f) for f in SPLITTABLE_FMTS)
-    return f"fmt IN ({fmts}) AND size(spans) > {int(split_threshold)}"
+# the docs routed to the split/re-stitch path: page-local formats with more
+# raw spans than one kernel call should own
+_MEGA_SQL = (
+    f"fmt IN ({', '.join(sql_str(f) for f in SPLITTABLE_FMTS)})"
+    f" AND size(spans) > {DEFAULT_SPLIT_THRESHOLD}"
+)
 
 
-def with_size_class(
-    df: DataFrame, split_threshold: int = DEFAULT_SPLIT_THRESHOLD
-) -> DataFrame:
+def with_size_class(df: DataFrame) -> DataFrame:
     """Derive the mega/small routing column.  Written as a PARTITION column
     at table-build time (corpus.corpus_parquet; on Iceberg you'd declare it
     as a hidden partition transform) so extract_spans' two branches become
     partition-pruned scans — each input byte is read once, not twice."""
     if "fmt" not in df.columns:
         df = with_fmt(df)
-    cls = F.expr(
-        f"CASE WHEN {mega_predicate(split_threshold)} THEN 'mega' ELSE 'small' END"
-    )
-    # record the derivation threshold as column metadata (parquet round-trips
-    # Spark schema metadata in the footer): extract_spans verifies it before
-    # trusting a stored routing column, so a table classed with a custom
-    # threshold can never be silently misrouted by a default-threshold job
     return df.withColumn(
-        SIZE_CLASS_COL,
-        cls.alias(SIZE_CLASS_COL, metadata={"split_threshold": split_threshold}),
+        SIZE_CLASS_COL, F.expr(f"CASE WHEN {_MEGA_SQL} THEN 'mega' ELSE 'small' END")
     )
 
 
@@ -298,27 +273,23 @@ def _stitch(parts: DataFrame) -> DataFrame:
 def extract_spans(
     df: DataFrame,
     chunk_size: int = CHUNK_SIZE,
-    split_threshold: int = DEFAULT_SPLIT_THRESHOLD,
-    num_partitions: int | None = None,
     repartition_input: bool = True,
 ) -> DataFrame:
     """(doc_id, spans[]) -> ordered extracted spans.
 
-    split_threshold: max raw spans a single kernel call handles for page-local
-    formats; larger docs are sliced into ceil(n/threshold) parts that extract
-    in parallel and re-stitch.  At 100 TB this is the knob that bounds
-    per-task memory and wall time regardless of the input's size tail.
-
-    num_partitions defaults to 4x shuffle.partitions: per-doc extraction cost
-    is long-tailed (a big sheet costs ~100x the median doc), so
+    Page-local docs with more than DEFAULT_SPLIT_THRESHOLD raw spans are
+    sliced into parts that extract in parallel and re-stitch.  Both
+    exchanges use 4x shuffle.partitions: per-doc extraction cost is
+    long-tailed (a big sheet costs ~100x the median doc), so
     over-partitioning keeps heavy docs from piling up in one task; the ~ms
     per-partition overhead is cheap against a multi-second straggler.
 
     The two branches each scan the input.  When the table carries the
-    `size_class` partition column AND split_threshold is the default the
-    branch filters are partition-pruned (each byte decoded once); otherwise
-    it's two real scans — cheap columnar reads on a real table, but callers
-    with a generated/expensive source should materialize first (see
+    `size_class` partition column the branch filters are partition-pruned
+    (each byte decoded once); the column only routes, so a table classed by
+    another writer yields the same spans.  Without it the filters are
+    derived, two real scans — cheap columnar reads on a real table, but
+    callers with a generated/expensive source should materialize first (see
     corpus.corpus_parquet).
 
     repartition_input=False skips the salted shuffle of raw payloads for
@@ -329,32 +300,16 @@ def extract_spans(
     skew splitting is independent of this and always on.
     """
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    # Trust a stored size_class only when its recorded derivation threshold
-    # matches this call's (r04 ADVICE: a table classed via
-    # with_size_class(df, custom) used to be silently misrouted at the
-    # default threshold).  Tables written before the metadata existed carry
-    # none and are trusted only at the default, as before.
-    if SIZE_CLASS_COL in df.columns:
-        stored_t = df.schema[SIZE_CLASS_COL].metadata.get("split_threshold")
-        has_class = (
-            stored_t == split_threshold
-            if stored_t is not None
-            else split_threshold == DEFAULT_SPLIT_THRESHOLD
-        )
-    else:
-        has_class = False
+    num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    has_class = SIZE_CLASS_COL in df.columns
     df = with_fmt(df)
     if has_class:
         # partition-column filters -> pruned scans, payload decoded once
         small = df.filter(f"{SIZE_CLASS_COL} = 'small'")
         mega = df.filter(f"{SIZE_CLASS_COL} = 'mega'")
     else:
-        is_mega = mega_predicate(split_threshold)
-        small = df.filter(f"NOT ({is_mega})")
-        mega = df.filter(is_mega)
+        small = df.filter(f"NOT ({_MEGA_SQL})")
+        mega = df.filter(_MEGA_SQL)
 
     # prune to exactly the kernel's columns BEFORE the Arrow exchange —
     # mapInArrow ships every input column to Python otherwise
@@ -363,19 +318,17 @@ def extract_spans(
         small = small.repartition(num_partitions, F.expr("xxhash64(doc_id)"))
     small_out = small.mapInArrow(_make_whole_doc_fn(chunk_size), schema=SPAN_SCHEMA)
 
-    mega_out = _extract_mega(mega, chunk_size, split_threshold, num_partitions)
+    mega_out = _extract_mega(mega, chunk_size, num_partitions)
 
     return small_out.unionByName(mega_out)
 
 
-def _extract_mega(
-    mega: DataFrame, chunk_size: int, split_threshold: int, num_partitions: int
-) -> DataFrame:
+def _extract_mega(mega: DataFrame, chunk_size: int, num_partitions: int) -> DataFrame:
     """The mega-doc split/extract/re-stitch branch (needs a `fmt` column).
     extract_spans sends every mega doc here; extract_spans_native only the
     mega files heavier than a parallelism slot's share (the rest extract
     whole in its native wave)."""
-    t = int(split_threshold)
+    t = DEFAULT_SPLIT_THRESHOLD
     parts = (
         mega.selectExpr(
             "doc_id",
@@ -406,6 +359,7 @@ def _extract_mega(
 # --------------------------------------------------------------------------
 
 _NATIVE_TARGET_SPLIT_BYTES = 128 * 1024 * 1024
+_NATIVE_BATCH_ROWS = 8192
 
 
 def _plan_native_splits(
@@ -467,9 +421,7 @@ def _pack_splits_lpt(
     return [b for b in bins if b]
 
 
-def _make_native_reader_fn(
-    bins: list[list[tuple[str, int, int]]], chunk_size: int, batch_rows: int = 8192
-):
+def _make_native_reader_fn(bins: list[list[tuple[str, int, int]]], chunk_size: int):
     """mapInArrow fn over a bin-index table: each task streams its bin's
     parquet fragments through the whole-doc kernel.  Bounded memory: one
     Arrow batch of raw payload + its extracted spans live at a time.  The
@@ -492,7 +444,7 @@ def _make_native_reader_fn(
                     if not rgs:
                         continue
                     raw = pf.iter_batches(
-                        batch_size=batch_rows,
+                        batch_size=_NATIVE_BATCH_ROWS,
                         row_groups=rgs,
                         columns=["doc_id", "spans"],
                     )
@@ -516,12 +468,10 @@ def native_scan_table(
     ~0.2% mega partition.  Validation reads one data-file footer per
     partition driver-side (pyarrow, ~ms); Spark reads only the mega files
     that are split, typed by one of their own footers so no inference pass
-    runs.  The trusted-threshold rule is unchanged in
-    effect: parquet's partitionBy drops column metadata (a stored
-    with_size_class threshold never round-trips — verified), so a
-    bare-path table is only ever trusted at the default derivation
-    threshold; a table format with real column metadata (Iceberg) would
-    consult it here.  `spark` is not used; callers pass it."""
+    runs.  `split_threshold` is the caller's: only DEFAULT_SPLIT_THRESHOLD
+    is served.  The layout's own classing is not checked, and need not be:
+    size_class only routes docs, and a mega doc yields the same spans on
+    either route.  `spark` is not used; callers pass it."""
     import glob
     import os
 
@@ -547,12 +497,7 @@ def native_scan_table(
     return files[0], files[1]
 
 
-def extract_spans_native(
-    spark,
-    table_path: str,
-    chunk_size: int = CHUNK_SIZE,
-    split_threshold: int = DEFAULT_SPLIT_THRESHOLD,
-) -> DataFrame:
+def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -> DataFrame:
     """extract_spans over an on-disk size_class-partitioned table, reading
     the small partition's parquet bytes pyarrow-natively inside the workers
     (see module note above).  Output is row-identical to
@@ -568,13 +513,10 @@ def extract_spans_native(
     mega files take the split/part-kernel/stitch branch, unioned after the
     kernel wave; write_store repartitions that union as one, so on this
     route the store write waits for the mega chain's stitch shuffle."""
-    table = native_scan_table(spark, table_path, split_threshold)
+    table = native_scan_table(spark, table_path, DEFAULT_SPLIT_THRESHOLD)
     if table is None:
         return extract_spans(
-            spark.read.parquet(table_path),
-            chunk_size=chunk_size,
-            split_threshold=split_threshold,
-            repartition_input=False,
+            spark.read.parquet(table_path), chunk_size, repartition_input=False
         )
 
     small, megas = table
@@ -628,21 +570,10 @@ def extract_spans_native(
         # typed by a split file's own footer: the megas that join the
         # kernel bins may come from another writer
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
 
         schema = from_arrow_schema(pq.read_schema(split[0]))
         mega = spark.read.schema(schema).parquet(*split)
-        mega_out = _extract_mega(
-            with_fmt(mega), chunk_size, split_threshold, mega_nparts
-        )
+        mega_out = _extract_mega(with_fmt(mega), chunk_size, mega_nparts)
         out = mega_out if out is None else out.unionByName(mega_out)
     return out if out is not None else spark.createDataFrame([], SPAN_SCHEMA)
 
-
-def oracle_extract(docs: list[tuple[str, list[dict]]], chunk_size: int = CHUNK_SIZE) -> pd.DataFrame:
-    """Single-threaded golden oracle over (doc_id, raw_spans) pairs."""
-    rows = []
-    for did, spans in docs:
-        for u in safe_extract_doc(spans, None, chunk_size):
-            rows.append((did, u["order"], u["kind"], u["text"], u["media_ref"]))
-    return pd.DataFrame(rows, columns=["doc_id", "order", "kind", "text", "media_ref"])

@@ -118,6 +118,26 @@ def _worker_pythonpath(current: str) -> str:
     return os.pathsep.join(paths)
 
 
+def input_bytes(df) -> int | None:
+    """Total bytes of `df`'s input files, or None when they aren't all local
+    files (on a cluster you'd size via the Hadoop FS API or the table
+    format's statistics).  The paths cross py4j as ONE string joined
+    JVM-side: iterating the Java array costs ~2 round trips per file."""
+    try:
+        joined = df.sparkSession._jvm.org.apache.hadoop.util.StringUtils.join(
+            "\0", df._jdf.inputFiles()
+        )
+        total = 0
+        for f in filter(None, joined.split("\0")):
+            p = f[7:] if f.startswith("file://") else f
+            if not p.startswith("/"):
+                return None
+            total += os.path.getsize(p)
+    except Exception:
+        return None
+    return total
+
+
 MIN_SPLIT_BYTES = 4 * 1024 * 1024
 MAX_SPLIT_BYTES = 256 * 1024 * 1024
 
@@ -133,20 +153,8 @@ def tune_scan_split(spark, input_df, waves: int = 4) -> int | None:
     applies to every subsequent scan in the session.
 
     Returns the chosen split, or None when input size isn't locally
-    determinable (non-local filesystem — on a cluster you'd size via the
-    Hadoop FS API or rely on the table format's statistics)."""
-    import os as _os
-
-    try:
-        files = input_df.inputFiles()
-        total = 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            if not p.startswith("/"):
-                return None
-            total += _os.path.getsize(p)
-    except Exception:
-        return None
+    determinable (see input_bytes)."""
+    total = input_bytes(input_df)
     if not total:
         return None
     cores = spark.sparkContext.defaultParallelism

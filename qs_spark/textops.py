@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from qs_spark.cachereg import scoped_cache
+from qs_spark.session import input_bytes
 
 MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
@@ -223,15 +224,7 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
     target = int(
         inp.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    try:
-        import os as _os
-
-        nbytes = sum(
-            _os.path.getsize(f[7:] if f.startswith("file://") else f)
-            for f in docs.inputFiles()
-        )
-    except Exception:
-        nbytes = 0
+    nbytes = input_bytes(docs)
     if nbytes:
         # cores floor from the SESSION (get_spark pins default.parallelism =
         # 2x cores), not from the env — a local[2] scaling run must not

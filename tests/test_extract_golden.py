@@ -6,8 +6,9 @@ are exercised in-corpus.
 
 import pandas as pd
 
+from conftest import oracle_extract
 from qs_spark.corpus import corpus_df, gen_doc
-from qs_spark.extract import extract_spans, oracle_extract
+from qs_spark.extract import extract_spans
 
 N_DOCS = 400
 CHUNK = 1500  # small budget -> multi-chunk sheets in the corpus
@@ -29,8 +30,9 @@ def test_golden_span_equality(spark):
 
 
 def test_mega_doc_split_stitch(spark):
-    # doc 175 is a mega-doc (400 pages) in the first 2000 — force the split
-    # path with a tiny threshold and verify the re-stitched ordering
+    # doc 175 is a mega-doc (400 pages) in the first 2000: it splits into
+    # ceil(400 / DEFAULT_SPLIT_THRESHOLD) = 7 parts; verify the re-stitched
+    # ordering
     idxs = [170, 175, 180]
     import pyspark.sql.types as T
 
@@ -63,32 +65,45 @@ def test_mega_doc_split_stitch(spark):
         }
     )
     df = spark.createDataFrame(gen_batch(idxs), schema=schema)
-    got = _canon(extract_spans(df, split_threshold=16).toPandas())
+    got = _canon(extract_spans(df).toPandas())
     want = _canon(oracle_extract([gen_doc(i) for i in idxs]))
     assert (got["doc_id"] == "doc00000175").sum() > 100  # mega actually extracted
     pd.testing.assert_frame_equal(got, want)
 
 
 def test_mega_parts_distribute_across_partitions(spark):
-    # skew-split parallelism: the 25 parts of a 400-page mega doc hash to
+    # skew-split parallelism: the parts of a 400-page mega doc hash to
     # MANY distinct shuffle partitions — one straggler task can never own the
     # whole doc
+    import math
+
     from pyspark.sql import functions as F
 
+    from qs_spark.extract import DEFAULT_SPLIT_THRESHOLD
+
+    n_parts = math.ceil(400 / DEFAULT_SPLIT_THRESHOLD)
     n = (
-        spark.range(25)
+        spark.range(n_parts)
         .select(F.pmod(F.xxhash64(F.lit("doc00000175"), "id"), F.lit(64)).alias("p"))
         .distinct()
         .count()
     )
-    assert n >= 15
+    assert n >= n_parts - 1
 
 
 def test_determinism_across_partitionings(spark):
-    # §5-5: identical output under different parallelism (8 vs 64 partitions)
+    # §5-5: identical output under different parallelism (extract_spans
+    # uses 4x shuffle.partitions: 4 vs 64 partitions)
     df = corpus_df(spark, 120)
-    a = _canon(extract_spans(df, num_partitions=4).toPandas())
-    b = _canon(extract_spans(df, num_partitions=64).toPandas())
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1")
+        a = _canon(extract_spans(df).toPandas())
+        spark.conf.set(key, "16")
+        b = _canon(extract_spans(df).toPandas())
+    finally:
+        spark.conf.set(key, saved)
     pd.testing.assert_frame_equal(a, b)
 
 
@@ -199,41 +214,3 @@ def test_size_class_partitioned_table_routes_identically(spark, tmp_path):
     )
     assert "PartitionFilters" in plan and "size_class" in plan
 
-
-def test_size_class_custom_threshold_not_misrouted(spark, tmp_path):
-    """r04 ADVICE: a table whose size_class was derived with a CUSTOM
-    split_threshold must not be trusted by a job running a different
-    threshold.  with_size_class records the threshold as column metadata
-    (parquet round-trips it); extract_spans verifies it and falls back to
-    derived filters on mismatch — output identical to the no-column path in
-    every combination."""
-    from qs_spark.corpus import corpus_df
-    from qs_spark.extract import SIZE_CLASS_COL, with_size_class
-
-    path = str(tmp_path / "custom_sc.parquet")
-    with_size_class(corpus_df(spark, 200), split_threshold=8).write.parquet(path)
-    table = spark.read.parquet(path)
-    # the derivation threshold survives the parquet round trip
-    assert table.schema[SIZE_CLASS_COL].metadata.get("split_threshold") == 8
-
-    def _routing_plan(df, threshold):
-        return (
-            extract_spans(df, split_threshold=threshold, repartition_input=False)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-
-    # matching threshold: the stored column IS the routing (filters on it)
-    assert f"{SIZE_CLASS_COL}#" in _routing_plan(table, 8).replace(" ", "")
-    # mismatched threshold: stored column ignored, filters re-derived
-    mismatch_plan = _routing_plan(table, 64)
-    assert "size(spans" in mismatch_plan
-    # and the mismatch output equals the no-column ground truth
-    got = _canon(
-        extract_spans(table, split_threshold=64, repartition_input=False).toPandas()
-    )
-    want = _canon(
-        extract_spans(table.drop(SIZE_CLASS_COL), split_threshold=64).toPandas()
-    )
-    pd.testing.assert_frame_equal(got, want)

@@ -15,6 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from conftest import oracle_extract
 from qs_spark.corpus import corpus_parquet
 from qs_spark.extract import (
     DEFAULT_SPLIT_THRESHOLD,
@@ -24,7 +25,7 @@ from qs_spark.extract import (
     _plan_native_splits,
     extract_spans,
     extract_spans_native,
-    oracle_extract,
+    native_scan_table,
     with_size_class,
 )
 
@@ -107,9 +108,9 @@ def _write_pa(file, docs, offset=pa.int32()):
     )
 
 
-def _write_sc_table(df, path: str, threshold: int = DEFAULT_SPLIT_THRESHOLD):
+def _write_sc_table(df, path: str):
     """Write the hive size_class layout corpus_parquet produces."""
-    base = with_size_class(df, threshold)
+    base = with_size_class(df)
     for cls in ("small", "mega"):
         (
             base.filter(F.col(SIZE_CLASS_COL) == cls)
@@ -137,29 +138,52 @@ def test_native_matches_jvm_path_on_corpus(spark):
     assert nat == jvm
 
 
-def test_native_falls_back_on_untrusted_threshold(spark, tmp_path):
-    docs = [
-        (
-            "d_big",
-            [
-                {"kind": "pdf_text", "text": f"page {i}", "media_ref": "", "offset": i}
-                for i in range(30)
-            ],
-        ),
-        ("d_small", [{"kind": "md", "text": "tiny", "media_ref": "", "offset": 0}]),
+def test_native_reads_a_layout_classed_at_another_threshold(
+    spark, tmp_path, monkeypatch
+):
+    """Another writer classed its docs at threshold 8, so a 30-page pdf
+    (small at the engine's threshold) sits in the mega partition.  The
+    layout is read natively, not through the JVM fallback, with the rows
+    extract_spans gives: size_class only routes docs."""
+    import qs_spark.extract as extract
+
+    big = [("d_big", [_span("pdf_text", f"page {i}", i) for i in range(30)])]
+    small = [("d_small", [_span("md", "tiny", 0)])]
+    path = tmp_path / "classed_at_8.parquet"
+    _write_pa(path / f"{SIZE_CLASS_COL}=small" / "part-0.parquet", small)
+    _write_pa(path / f"{SIZE_CLASS_COL}=mega" / "part-0.parquet", big)
+    ref = _rows(
+        extract_spans(spark.createDataFrame(big + small, SCHEMA), repartition_input=False)
+    )
+    # the JVM path trusts the stored classing and agrees
+    assert _rows(
+        extract_spans(spark.read.parquet(str(path)), repartition_input=False)
+    ) == ref
+
+    def fallback(*args, **kwargs):
+        raise AssertionError("extract_spans_native took the JVM fallback")
+
+    monkeypatch.setattr(extract, "extract_spans", fallback)
+    out = _rows(extract_spans_native(spark, str(path)))
+    assert out == ref
+    assert [r[:5] for r in out] == _oracle_rows(big + small)
+    # only the engine's own threshold is served
+    assert native_scan_table(spark, str(path), DEFAULT_SPLIT_THRESHOLD) is not None
+    assert native_scan_table(spark, str(path), 8) is None
+
+
+def test_native_falls_back_on_a_plain_table(spark, tmp_path):
+    """A table without the size_class layout goes through extract_spans."""
+    docs = [("d_big", [_span("pdf_text", f"page {i}", i) for i in range(70)])] + [
+        (f"d_small_{k}", [_span("md", f"note {k}", 0)]) for k in range(3)
     ]
     df = spark.createDataFrame(docs, SCHEMA)
-    path = str(tmp_path / "custom_thresh.parquet")
-    _write_sc_table(df, path, threshold=8)  # d_big is MEGA under 8
-    # default-threshold native call must NOT trust the stored routing
-    # (under 64 nothing is mega) — the fallback's derived filters re-route
+    path = str(tmp_path / "plain.parquet")
+    df.write.parquet(path)
+    assert native_scan_table(spark, path, DEFAULT_SPLIT_THRESHOLD) is None
     out = _rows(extract_spans_native(spark, path))
-    ref = _rows(extract_spans(df, repartition_input=False))
-    assert out == ref
-    # matching threshold takes the native path and agrees too
-    out8 = _rows(extract_spans_native(spark, path, split_threshold=8))
-    ref8 = _rows(extract_spans(df, split_threshold=8, repartition_input=False))
-    assert out8 == ref8
+    assert out == _rows(extract_spans(df, repartition_input=False))
+    assert [r[:5] for r in out] == _oracle_rows(docs)
 
 
 def test_native_hostile_table(spark, tmp_path):

@@ -119,7 +119,6 @@ def test_workers_run_guarded_from_a_neutral_cwd(tmp_path):
     script.write_text(_WORKER_PROBE.format(repo=REPO))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
-    env["QS_SESSION_WARM"] = "0"
     env["QS_DRIVER_MEM"] = "1g"
     r = subprocess.run(
         [sys.executable, str(script)],

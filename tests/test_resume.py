@@ -6,6 +6,7 @@ monotonicity.
 import pandas as pd
 import pytest
 
+from conftest import oracle_extract
 from qs_spark.catalog import ParquetCatalog
 from qs_spark.checkpoint import (
     CKPT_TABLE,
@@ -14,7 +15,6 @@ from qs_spark.checkpoint import (
     run_extract_checkpointed,
 )
 from qs_spark.corpus import corpus_df, gen_doc
-from qs_spark.extract import oracle_extract
 
 N_DOCS = 150
 

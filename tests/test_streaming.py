@@ -4,8 +4,8 @@ idempotent append; exactly-once-effective via dedup-on-read (T5 contract).
 
 import pandas as pd
 
+from conftest import oracle_extract
 from qs_spark.corpus import corpus_df, gen_doc
-from qs_spark.extract import oracle_extract
 from qs_spark.streaming import dedup_on_read, stream_extract, windowed_event_counts
 
 
