@@ -224,33 +224,14 @@ def gen_batch(indices) -> pd.DataFrame:
 
 def corpus_df(spark, n_docs: int):
     """Distributed corpus as a DataFrame (no driver materialization)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("text", T.StringType()),
-                            T.StructField("media_ref", T.StringType()),
-                            T.StructField("offset", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
+    from qs_spark.extract import DOC_SCHEMA
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield gen_batch(pdf["id"].tolist())
 
     n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 8)
-    return spark.range(n_docs, numPartitions=n_parts).mapInPandas(gen, schema=schema)
+    return spark.range(n_docs, numPartitions=n_parts).mapInPandas(gen, schema=DOC_SCHEMA)
 
 
 def corpus_parquet(spark, n_docs: int, path: str | None = None, n_buckets: int | None = None):

@@ -72,6 +72,13 @@ _PART_PA_SCHEMA = pa.schema(
 SPAN_SCHEMA = from_arrow_schema(_SPAN_PA_SCHEMA)
 _PART_SCHEMA = from_arrow_schema(_PART_PA_SCHEMA)
 
+# the input docs table: what the corpus generator writes, a stream's source
+# files hold and extract_spans reads
+DOC_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind: string, text: string, media_ref: string, offset: int>>"
+)
+
 # max raw spans one kernel call handles for a page-local doc: larger docs are
 # sliced into ceil(n / threshold) parts that extract in parallel and
 # re-stitch, which bounds per-task memory and wall whatever the size tail.

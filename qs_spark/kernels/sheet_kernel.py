@@ -57,16 +57,23 @@ Each sheet takes exactly one of two paths, both byte-equal to the reference
 from __future__ import annotations
 
 import io
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
+
+if TYPE_CHECKING:  # annotations only: pandas loads with the first sheet
+    import pandas as pd
 
 CHUNK_SIZE = 102400  # ref: simple_reader_extractor.py:18 (excel/csv/txt)
 
 
 def _read_with_unnamed_retry(sheet_csv: str, excel_mode: bool) -> pd.DataFrame | None:
     """Parse + reproduce the all-Unnamed skiprows retry loop.
-    EmptyDataError propagates where the reference lets it (csv mode)."""
+    EmptyDataError propagates where the reference lets it (csv mode).
+    The only pandas caller: the PURE path parses without it, so importing
+    the extraction modules stays pandas-free until the first sheet."""
+    import pandas as pd
+
     try:
         df = pd.read_csv(io.StringIO(sheet_csv))
     except pd.errors.EmptyDataError:

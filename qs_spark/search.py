@@ -94,7 +94,7 @@ def write_postings(store: DataFrame, path: str, n_buckets: int = POSTINGS_BUCKET
     fast_inverted_index lookup, as table layout)."""
     (
         build_postings(store)
-        .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
+        .withColumn("term_bucket", term_bucket_col(n_buckets))
         # co-locate each bucket into one writer task BEFORE partitionBy:
         # otherwise every upstream task writes a sliver into every bucket dir
         # (measured: 25k files for a 461 MB index; a 3-bucket lookup then
@@ -128,9 +128,7 @@ def compact_postings(spark, path: str, n_buckets: int = POSTINGS_BUCKETS) -> Non
     cat = ParquetCatalog(os.path.dirname(path.rstrip("/")))
     table = os.path.basename(path.rstrip("/"))
     df = cat.read(spark, table).repartition(n_buckets, F.col("term_bucket"))
-    stage = cat.path(table) + ".__stage__"
-    df.write.mode("overwrite").partitionBy("term_bucket").parquet(stage)
-    cat._swap_stage(table)
+    cat._rewrite(df, table, ["term_bucket"])
 
 
 # XXH64 constants (public algorithm, Collet; Spark's xxhash64 expression is
@@ -198,6 +196,13 @@ def term_bucket(term: str, n_buckets: int = POSTINGS_BUCKETS) -> int:
     """Driver-side pmod(xxhash64(term), n_buckets) — the postings partition a
     term lives in (Python % on the signed hash == Spark's pmod)."""
     return _xxh64(term.encode("utf-8")) % n_buckets
+
+
+def term_bucket_col(n_buckets: int):
+    """term_bucket() as a column over `term`: the postings partition every
+    writer of the layout (write_postings, streaming.stream_update_index)
+    stores."""
+    return F.expr(f"CAST(pmod(xxhash64(term), {int(n_buckets)}) AS INT)")
 
 
 def lookup_postings(spark, path: str, terms: list[str], n_buckets: int = POSTINGS_BUCKETS) -> DataFrame:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from qs_spark.extract import extract_spans
+from qs_spark.extract import DOC_SCHEMA, extract_spans
 
 
 def stream_extract(
@@ -40,27 +40,7 @@ def stream_extract(
     Returns the StreamingQuery.  trigger_once processes the backlog and
     stops (the test/CI mode); production would use a processingTime trigger.
     """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("text", T.StringType()),
-                            T.StructField("media_ref", T.StringType()),
-                            T.StructField("offset", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
@@ -102,31 +82,11 @@ def stream_update_index(
     made harmless by postings_dedup_on_read (the document's latest batch
     wins whole — a changed doc's stale surplus rows drop out too) — the T5
     contract, same as the spans stream."""
-    from pyspark.sql import types as T
-
-    from qs_spark.search import POSTINGS_BUCKETS, build_postings
+    from qs_spark.search import POSTINGS_BUCKETS, build_postings, term_bucket_col
     from qs_spark.store import build_store
 
     n_buckets = n_buckets or POSTINGS_BUCKETS
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("text", T.StringType()),
-                            T.StructField("media_ref", T.StringType()),
-                            T.StructField("offset", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
@@ -139,9 +99,7 @@ def stream_update_index(
             # postings derive from the just-written durable rows (filtered to
             # this batch): no second extraction pass and no cache to manage
             build_postings(spark.read.parquet(store_dir).filter(F.col("batch_id") == batch_id))
-            .withColumn(
-                "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-            )
+            .withColumn("term_bucket", term_bucket_col(n_buckets))
             .withColumn("batch_id", F.lit(batch_id))
             .repartition(n_buckets, F.col("term_bucket"))
             .write.mode("append")

@@ -70,7 +70,10 @@ MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 
 def minhash_signatures(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
-    """K-permutation MinHash over word-3-gram shingles.
+    """K-permutation MinHash over word-3-gram shingles: (doc_id, mh0..mh{k-1}),
+    doc_sketches' signature columns with null-text docs dropped (a null
+    text is the only source of a null signature), matching the r02 explode
+    form's semantics.
 
     One md5 per shingle, split into two 60-bit halves h1/h2; permutation i is
     (h1 + i*h2) mod P (Kirsch-Mitzenmacher double hashing, 2006 — k
@@ -88,15 +91,14 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataF
     oracle in tests/test_textops.py (asserted by
     test_minhash_kernel_matches_jvm_exprs), and the kernel is row-local —
     no shuffle, embarrassingly parallel at 100 TB.
-    Null-text docs drop, matching the r02 explode form's semantics.
     """
-    return _sketches_impl(docs, k, n, with_fp=False)
+    return doc_sketches(docs, k, n).where("mh0 IS NOT NULL").drop("fp")
 
 
 def doc_sketches(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
     """ONE full-text scan emitting BOTH dedup sketches: the exact-dup
     fingerprint (md5 of the normalized text) and the k MinHash permutation
-    minima — (doc_id, fp, mh0..mh{k-1}).
+    minima — (doc_id, fp, mh0..mh{k-1}), one row per input row.
 
     Why fused (r05): near_dup_clusters previously paid two full-corpus text
     evaluations — the JVM fingerprint projection and the signature kernel —
@@ -108,22 +110,16 @@ def doc_sketches(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
 
     Parity: the input projection is norm_text() JVM-side, so the kernel
     hashes exactly the bytes F.md5(norm_text()) hashes — fp is bit-identical
-    to doc_fingerprints (asserted by test_doc_sketches_matches_jvm_parts).
-    Unlike minhash_signatures, null-text rows are KEPT (fp/mh* null), so
-    fp consumers see doc_fingerprints' exact row set; signature consumers
-    must drop the null-signature rows (lsh_candidate_pairs does)."""
-    return _sketches_impl(docs, k, n, with_fp=True)
-
-
-def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
+    to fingerprint()'s column (asserted by test_doc_sketches_matches_jvm_parts).
+    Null-text rows are KEPT with fp and mh* null, so fp consumers see every
+    doc; signature consumers drop them (minhash_signatures, _rep_sigs)."""
     import hashlib
 
     from pyspark.sql import types as T
 
     id_field = docs.schema["doc_id"]
     schema = T.StructType(
-        [T.StructField("doc_id", id_field.dataType)]
-        + ([T.StructField("fp", T.StringType())] if with_fp else [])
+        [T.StructField("doc_id", id_field.dataType), T.StructField("fp", T.StringType())]
         + [T.StructField(f"mh{i}", T.LongType()) for i in range(k)]
     )
     P = MINHASH_P
@@ -150,7 +146,7 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
         from_bytes = int.from_bytes
         for pdf in batches:
             ids, sigs, fps = [], [], []
-            null_ids = []  # with_fp only: rows kept with null fp/signature
+            null_ids = []  # rows kept with null fp/signature
             # md5 memo, per Arrow batch: the permutation minimum is invariant
             # under shingle multiplicity, so each DISTINCT shingle hashes
             # once per doc — and near/exact-dup docs in the same batch (the
@@ -161,14 +157,12 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
             memo: dict = {}
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
-                    if with_fp:
-                        null_ids.append(did)
+                    null_ids.append(did)
                     continue
-                if with_fp:
-                    # md5 of the SAME utf-8 bytes F.md5(norm_text()) hashes
-                    # (text is the norm_text() projection) -> bit-identical
-                    # to doc_fingerprints, one digest per document.
-                    fps.append(md5(text.encode("utf-8")).hexdigest())
+                # md5 of the SAME utf-8 bytes F.md5(norm_text()) hashes
+                # (text is the norm_text() projection) -> bit-identical
+                # to fingerprint(), one digest per document.
+                fps.append(md5(text.encode("utf-8")).hexdigest())
                 toks = text.split(" ")  # pre-normalized upstream
                 if len(toks) < n:
                     shs = {" ".join(toks)}
@@ -187,9 +181,7 @@ def _sketches_impl(docs: DataFrame, k: int, n: int, with_fp: bool) -> DataFrame:
                     h1[j], h2[j] = hh
                 ids.append(did)
                 sigs.append(((h1 % P + perm * (h2 % P)) % P).min(axis=1))
-            out = {"doc_id": ids + null_ids}
-            if with_fp:
-                out["fp"] = fps + [None] * len(null_ids)
+            out = {"doc_id": ids + null_ids, "fp": fps + [None] * len(null_ids)}
             sig_mat = (
                 np.stack(sigs) if sigs else np.empty((0, k), dtype=np.int64)
             )
@@ -259,13 +251,6 @@ def lsh_buckets(sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K) -> 
         for b in range(bands)
     )
     return sigs.selectExpr("doc_id", f"inline(array({bands_sql}))")
-
-
-def doc_fingerprints(docs: DataFrame) -> DataFrame:
-    """Slim (fp, doc_id) projection — md5 of the normalized text, row-local.
-    The JVM-expression form of doc_sketches' fp column (the parity test
-    pins them equal); each evaluation is a full text scan at 100 TB."""
-    return docs.select(F.md5(norm_text()).alias("fp"), "doc_id")
 
 
 def _with_rep(sketches: DataFrame) -> DataFrame:
@@ -413,7 +398,7 @@ def _pair_shingle_stats(n: int):
     """mapInPandas kernel: (doc_a, doc_b, _ta, _tb) -> (doc_a, doc_b, inter,
     sza, szb) with inner-join semantics (a pair with an empty intersection —
     including a null text on either side — emits nothing).  Shingling is
-    the MinHash kernel's rule (_sketches_impl; the column-expression oracle
+    the MinHash kernel's rule (doc_sketches; the column-expression oracle
     in tests/test_textops.py pins it) on the pre-normalized text: split on a
     single space (norm_text collapsed runs already; a leading/trailing space
     yields an empty token, same as F.split), whole-text shingle when fewer
@@ -540,20 +525,31 @@ def ngram_jaccard_pairs(
     )
 
 
+# symmetric edges up to which connected_components' loop hints its joins
+_BROADCAST_EDGES = 2_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a: str = "doc_a",
     b: str = "doc_b",
     max_iter: int = 50,
     local_below: int = 200_000,
-    broadcast_below: int = 2_000_000,
 ) -> DataFrame:
     """Cluster assignment for a near-dup pair graph — the stage every dedup
     pipeline needs after candidate pairs: (node, cluster) where cluster is
-    the MIN node id reachable from it.
+    the MIN node id reachable from it.  Two tiers with identical output (by
+    test): a driver-local union-find up to `local_below` pairs, and above it
+    one distributed loop.  While the symmetric edge table holds at most
+    _BROADCAST_EDGES rows the loop hints its three joins to broadcast: Spark
+    sizes a join's output as the product of its inputs, so it never
+    broadcasts the per-round message and parent tables by itself, and
+    shuffling them cost 12-20% more per call on 10-node chain graphs of 270k
+    and 1.35M edges (local[4]).  Above the bound every table shuffles, and
+    AQE sizes those shuffles.
 
-    Iterative min-label propagation with pointer jumping: each round (1)
-    takes the min over each node's neighborhood labels (one slim shuffle
+    The loop is iterative min-label propagation with pointer jumping: each
+    round (1) takes the min over each node's neighborhood labels (one slim
     join + aggregate) and (2) jumps label -> label(label), halving chain
     depth, so convergence is O(log diameter) rounds.  Each round's result is
     `localCheckpoint(eager=True)`-ed — a plain .cache() is NOT enough for a
@@ -566,14 +562,14 @@ def connected_components(
     The driver reads only a per-round changed-count.
 
     Loop sizing (r04): the dup-pair graph is a tiny fraction of the corpus
-    (only near-dup candidates carry edges), so the loop's shuffles are sized
+    (only near-dup candidates carry edges), so the edge table is laid out
     from the ACTUAL edge count — clamp(edges / 200k, 1, shuffle.partitions)
-    partitions — instead of inheriting the session default; at sandbox scale
-    every round becomes single-task jobs, at 100 TB the count grows the
-    parallelism back.  Each round is exactly ONE Spark job: the round plan
-    carries a `_changed` flag, is marked localCheckpoint(eager=False), and a
-    single sum(_changed) action both materializes the checkpoint (truncating
-    the plan for the next round) and returns the convergence signal.
+    partitions — when AQE's coalesced layout is far off it, instead of
+    inheriting the session default.  Each round is exactly ONE Spark job:
+    the round plan carries a `_changed` flag, is marked
+    localCheckpoint(eager=False), and a single sum(_changed) action both
+    materializes the checkpoint (truncating the plan for the next round)
+    and returns the convergence signal.
 
     Round-5 stage-count cuts (the sandbox floor was ~20 slim
     scheduling-bound stages, r04 VERDICT #6):
@@ -587,14 +583,12 @@ def connected_components(
         would ship through the driver, replaces 3-4 scheduling-bound jobs
         PER ROUND with one toPandas, and is identical-output by test.  A
         248-edge sf0.1 dup graph went from ~6 s of distributed rounds to
-        <0.5 s.  Above the threshold (real 100 TB dup graphs) the r04
-        shuffle loop runs unchanged;
-      - below `broadcast_below` edges (but above local), the per-round
-        joins broadcast the label/message sides instead of shuffling both;
+        <0.5 s.  Its labels return as a broadcast-hinted frame built from
+        pandas (a local relation under Arrow: no Python tasks);
       - the probe reads the RAW pair list, NOT the symmetrized+distinct
         edge table (r05): symmetrizing unions the pair plan with its own
         mirror, so Catalyst plans the whole upstream (sketch kernel,
-        bucket self-join, jaccard verify) TWICE and pays a distinct
+        bucket aggregate, jaccard verify) TWICE and pays a distinct
         shuffle — measured 12.6 s of the sandbox dedup_cluster wall, vs
         0.2 s for the raw probe (union-find needs neither symmetry nor
         distinctness).  Only a graph that overflows the local tier builds
@@ -602,14 +596,17 @@ def connected_components(
     raw = pairs.selectExpr(f"`{a}` AS src", f"`{b}` AS dst")
     spark = pairs.sparkSession
     ntype = pairs.schema[a].dataType.simpleString()
+    schema = f"node {ntype}, cluster {ntype}"
     # ONE probe job sizes the graph AND, in the (overwhelmingly common) small
     # case, already IS the local tier's collect: if the limit didn't
     # truncate, pdf holds every pair and no count job runs at all.
     pdf = raw.limit(local_below + 1).toPandas()
     ne = len(pdf)
     if ne == 0:
-        return spark.createDataFrame([], f"node {ntype}, cluster {ntype}")
+        return spark.createDataFrame([], schema)
     if ne <= local_below:
+        import pandas as pd
+
         parent: dict = {}
 
         def find(x):
@@ -626,33 +623,15 @@ def connected_components(
                 if rd < rs:
                     rs, rd = rd, rs
                 parent[rd] = rs  # union by MIN: every root is its comp min
-        nodes = set(pdf["src"].tolist()) | set(pdf["dst"].tolist())
+        nodes = sorted(set(pdf["src"].tolist()) | set(pdf["dst"].tolist()))
         # broadcast hint (r06): this tier's result is bounded (<= 2 *
         # local_below driver-local rows), and its consumers join it against
         # the full doc table — without the hint Spark picked a SortMergeJoin
         # whose two exchanges + sorts cost ~0.9 s of the dedup_cluster bench
-        # on a 500-row build side.  The distributed tiers below return
-        # unhinted (their label table scales with the graph).
-        #
-        # Slice count pinned to the data (r06): a bare createDataFrame
-        # parallelizes over default.parallelism — 64 Python-RDD tasks of a
-        # few hundred rows each, whose fixed cost per task was ~0.6 s of
-        # the broadcast build (r06, event-log stage s100).  Most of that
-        # cost was each task re-reading pyspark.zip's directory; under
-        # qs_spark.pydaemon 64 such tasks take ~1 s wall at 35-57 ms of CPU
-        # each (3.0-4.0 s and 0.18-0.25 s before; 4 vCPUs, local[4]).  The
-        # tier is bounded at 2 * local_below rows; 50k-row slices, capped
-        # at 8 tasks.
-        rows = [(x, find(x)) for x in sorted(nodes)]
-        schema = f"node {ntype}, cluster {ntype}"
-        return F.broadcast(
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(
-                    rows, max(1, min(8, len(rows) // 50_000 + 1))
-                ),
-                schema,
-            )
-        )
+        # on a 500-row build side.  The distributed tier returns unhinted
+        # (its label table scales with the graph).
+        labels = pd.DataFrame({"node": nodes, "cluster": [find(x) for x in nodes]})
+        return F.broadcast(spark.createDataFrame(labels, schema))
     # overflow: build the symmetric distinct edge table the distributed
     # min-propagate loop requires, and size the loop from its real count
     edges = raw.unionByName(
@@ -661,8 +640,7 @@ def connected_components(
     ne = edges.count()
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     nparts = max(1, min(default_parts, ne // 200_000))
-    small_graph = ne <= broadcast_below
-    bc = F.broadcast if small_graph else (lambda d: d)
+    bc = F.broadcast if ne <= _BROADCAST_EDGES else (lambda d: d)
     if edges.rdd.getNumPartitions() > 4 * nparts:
         # only re-materialize when AQE's coalesced layout is far off target
         edges = edges.repartition(nparts, "src").localCheckpoint(eager=True)
@@ -670,10 +648,8 @@ def connected_components(
     labels = (
         edges.groupBy(F.col("dst").alias("node"))
         .agg(F.least(F.col("dst"), F.min("src")).alias("label"))
+        .localCheckpoint(eager=True)
     )
-    if not small_graph:
-        labels = labels.repartition(nparts, "node")
-    labels = labels.localCheckpoint(eager=True)
     for _ in range(max_iter):
         msgs = (
             edges.join(bc(labels), edges.src == labels.node)
@@ -700,10 +676,7 @@ def connected_components(
             (F.coalesce("_plabel", F.col("label")) != F.col("_old")).alias(
                 "_changed"
             ),
-        )
-        if not small_graph:
-            jumped = jumped.repartition(nparts, "node")
-        jumped = jumped.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         # ONE action: materializes the lazy checkpoint AND reads the signal
         changed = jumped.agg(
             F.sum(F.col("_changed").cast("long")).alias("c")

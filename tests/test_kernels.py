@@ -3,6 +3,10 @@ test skeleton (every wheel's test/unit/unit_test.py is 0 bytes, SURVEY.md §5)
 with tests for the documented behaviors, including the §2.12 quirks.
 """
 
+import os
+import subprocess
+import sys
+
 import pandas as pd
 import pytest
 
@@ -12,6 +16,9 @@ from qs_spark.kernels.ocr_kernel import ocr_lines, stitch_page
 from qs_spark.kernels.pdf_kernel import walk_pages
 from qs_spark.kernels.sheet_kernel import chunk_frame, walk_sheets
 from qs_spark.kernels.txt_kernel import chunk_text
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _sp(kind, text="", media_ref="", offset=0):
@@ -469,3 +476,28 @@ def test_pure_sheet_unnamed_retry_and_quirks():
     assert pure == ["Empty DataFrame\nColumns: [a, b_col]\nIndex: []"]
     # retry exhaustion in excel mode: sheet skipped without pandas
     assert sk._pure_sheet_chunks(",,\n,,", True) == []
+
+
+_PANDAS_PROBE = """
+import sys
+import qs_spark.extract
+from qs_spark.kernels.sheet_kernel import walk_sheets
+before = "pandas" in sys.modules
+walk_sheets([{"kind": "sheet", "text": "a,b\\nfoo,bar", "media_ref": "", "offset": 0}], True)
+print(before, "pandas" in sys.modules)
+"""
+
+
+def test_extraction_import_leaves_pandas_unloaded():
+    """Importing the extraction path loads no pandas (the driver and every
+    Python worker import it before their first task); the first sheet does,
+    through the once-per-process PURE validation's read_csv."""
+    r = subprocess.run(
+        [sys.executable, "-c", _PANDAS_PROBE],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    assert r.stdout.split() == ["False", "True"]

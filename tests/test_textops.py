@@ -493,6 +493,7 @@ def test_minhash_kernel_matches_jvm_exprs_non_ascii(spark):
         (3, "a\xa0b\xa0c d　e f g h i j"),  # NBSP + ideographic space
         (4, "ΣΊΣΥΦΟΣ ΑΘΗΝΑ ελληνικά κείμενο με περισσότερες λέξεις"),
         (5, "plain ascii control row with enough words to shingle"),
+        (6, None),  # null text: no signature row in either form
     ]
     d = spark.createDataFrame(rows, "doc_id int, text string")
     a = X.minhash_signatures(d).toPandas().sort_values("doc_id").reset_index(drop=True)
@@ -502,11 +503,12 @@ def test_minhash_kernel_matches_jvm_exprs_non_ascii(spark):
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
+    assert list(a["doc_id"]) == [1, 2, 3, 4, 5]
     assert a.equals(b.astype(a.dtypes.to_dict()))
 
 
 def test_doc_sketches_matches_jvm_parts(spark):
-    """doc_sketches (r05 fused scan) must equal doc_fingerprints (JVM
+    """doc_sketches (r05 fused scan) must equal X.fingerprint (JVM
     F.md5(norm_text())) on fp — including null-text rows, which it KEEPS —
     and minhash_signatures_expr on the signature columns, including planted
     non-ASCII (the fp hashes the same UTF-8 bytes the JVM md5 hashes)."""
@@ -521,14 +523,9 @@ def test_doc_sketches_matches_jvm_parts(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id int, text string")
     sk = X.doc_sketches(d).toPandas().sort_values("doc_id").reset_index(drop=True)
-    fp = (
-        X.doc_fingerprints(d)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
+    fp = X.fingerprint(d).toPandas().sort_values("doc_id").reset_index(drop=True)
     assert list(sk["doc_id"]) == list(fp["doc_id"])  # null rows kept
-    assert list(sk["fp"]) == list(fp["fp"])
+    assert list(sk["fp"]) == list(fp["fingerprint"])
     mh = (
         minhash_signatures_expr(d)
         .toPandas()
@@ -592,11 +589,11 @@ def test_connected_components_min_label(spark):
     assert all(got[10 + i] == 10 for i in range(9))
 
 
-def test_connected_components_tiers_identical(spark):
-    """r05: the three execution tiers — driver-local union-find (tiny
-    graphs), broadcast-join rounds (small), shuffle-join rounds (the 100 TB
-    plan) — must produce IDENTICAL labels.  Mixed topology: clique + long
-    chain + star + singletons-in-pairs."""
+def test_connected_components_tiers_identical(spark, monkeypatch):
+    """r05: the execution tiers — driver-local union-find (tiny graphs) and
+    the distributed loop, broadcast-hinted (small) or shuffling every table
+    (the 100 TB plan) — must produce IDENTICAL labels.  Mixed topology:
+    clique + long chain + star + singletons-in-pairs."""
     edges = (
         [(1, 2), (2, 3), (1, 3)]
         + [(10 + i, 11 + i) for i in range(12)]
@@ -615,7 +612,8 @@ def test_connected_components_tiers_identical(spark):
 
     via_local = run()
     via_broadcast = run(local_below=0)
-    via_shuffle = run(local_below=0, broadcast_below=0)
+    monkeypatch.setattr(X, "_BROADCAST_EDGES", 0)
+    via_shuffle = run(local_below=0)
     assert via_local.equals(via_broadcast)
     assert via_local.equals(via_shuffle)
     assert set(via_local.cluster) == {1, 10, 100, 500}
@@ -644,6 +642,21 @@ def test_near_dup_clusters_drop_duplicates(spark):
     per_cluster = cl.groupby("cluster").is_representative.sum()
     assert (per_cluster == 1).all()
     assert int(cl.is_representative.sum()) <= 40
+
+
+def test_near_dup_clusters_broadcasts_the_component_table(spark):
+    """The driver tier's labels are a broadcast-hinted frame built from
+    pandas: the executed plan joins them to the sketch ids with a
+    BroadcastHashJoin, not a SortMergeJoin with two exchanges and sorts."""
+    d = _docs(spark).limit(40).select("doc_id", "text")
+    dup = d.limit(1).select(F.lit(900001).alias("doc_id"), "text")
+    cl = X.near_dup_clusters(d.unionByName(dup))
+    assert len(cl.collect()) == 41
+    plan = cl._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    joins = [ln for ln in final.splitlines() if "Join" in ln]
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], final
+    assert "LeftOuter" in joins[0]
 
 
 def test_near_dup_clusters_py4j_budget(spark):
