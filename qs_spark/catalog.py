@@ -67,13 +67,7 @@ class ParquetCatalog:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
 
-    def overwrite_partitions(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str],
-        files_per_partition: int = 1,
-    ):
+    def overwrite_partitions(self, df: DataFrame, table: str, partition_by: list[str]):
         """Dynamic partition overwrite: only partitions present in df are
         replaced (Iceberg: overwritePartitions / INSERT OVERWRITE dynamic).
 
@@ -81,29 +75,9 @@ class ParquetCatalog:
         write.distribution-mode=hash analog, same reasoning as
         search.write_postings): without it every upstream task writes a
         sliver file into every partition directory it touches, and both the
-        write and every later scan pay per-file overhead.  A partition too
-        big for one writer task can be spread with files_per_partition > 1
-        (deterministic salt from the first non-partition column)."""
+        write and every later scan pay per-file overhead."""
         spark = df.sparkSession
-        from pyspark.sql import functions as F
-
-        cols = [F.col(c) for c in partition_by]
-        if files_per_partition > 1:
-            salt_src = next(
-                (c for c in df.columns if c not in partition_by), None
-            )
-            salt = (
-                F.pmod(F.xxhash64(salt_src), F.lit(files_per_partition))
-                if salt_src
-                else F.lit(0)
-            )
-            out = (
-                df.withColumn("_fsalt", salt)
-                .repartition(*(cols + [F.col("_fsalt")]))
-                .drop("_fsalt")
-            )
-        else:
-            out = df.repartition(*cols)
+        out = df.repartition(*[F.col(c) for c in partition_by])
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -298,8 +272,7 @@ class IcebergCatalog:
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
         w.createOrReplace()
 
-    def overwrite_partitions(self, df: DataFrame, table: str,
-                             partition_by: list[str], files_per_partition: int = 1):
+    def overwrite_partitions(self, df: DataFrame, table: str, partition_by: list[str]):
         """Dynamic partition overwrite (Iceberg overwritePartitions), with
         the same pre-write co-location as the parquet path — on Iceberg
         prefer setting table property write.distribution-mode=hash, which

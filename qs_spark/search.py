@@ -274,34 +274,11 @@ def and_search_postings(postings: DataFrame, terms: list[str]) -> DataFrame:
     )
 
 
-def dedup_first_per_file(rows: DataFrame) -> DataFrame:
-    """A1: one representative row per file.  The reference's $group $first
-    takes Mongo natural order; our deterministic equivalent is the earliest
-    (document_id, page_no) row."""
-    w = Window.partitionBy("document_name").orderBy("document_id", "page_no")
-    return rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-
-
 def compute_score_col(count_col, n_files_col):
     """F10 (quanta-search-api/utils/util.py:165-192): log-scaled count score,
     rounded to 6 like the caller (file_searcher.py:325)."""
     scale = F.log(F.lit(1.0) + count_col) / F.log(F.lit(1.0) + n_files_col)
     return F.round(F.least(F.lit(BASE_SCORE) + (1 - BASE_SCORE) * scale, F.lit(0.9995)), 6)
-
-
-def preview_score_col(avg_score, n_previews):
-    """F11 (utils/util.py:195-221): lift to BASE_PREVIEW_SCORE if any preview,
-    then add (MAX-score)*min(n/10,1), cap MAX_SCORE."""
-    lifted = F.when(
-        (avg_score < BASE_PREVIEW_SCORE) & (n_previews > 0), F.lit(BASE_PREVIEW_SCORE)
-    ).otherwise(avg_score)
-    mul = F.least(n_previews / F.lit(PREVIEW_DIVISOR), F.lit(1.0))
-    return F.least(lifted + (F.lit(MAX_SCORE) - lifted) * mul, F.lit(MAX_SCORE))
-
-
-def sigmoid_score_col(score_col):
-    """F9 (inverted_index_retiver.py:126-144): sigmoid of 3x textScore."""
-    return 1 / (1 + F.exp(-3.0 * score_col))
 
 
 def filter_tenant(

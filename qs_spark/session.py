@@ -140,12 +140,13 @@ def input_bytes(df) -> int | None:
 
 MIN_SPLIT_BYTES = 4 * 1024 * 1024
 MAX_SPLIT_BYTES = 256 * 1024 * 1024
+SCAN_WAVES = 4  # scan tasks per core tune_scan_split aims for
 
 
-def tune_scan_split(spark, input_df, waves: int = 4) -> int | None:
+def tune_scan_split(spark, input_df) -> int | None:
     """Size-derive spark.sql.files.maxPartitionBytes from the ACTUAL input
     instead of the session default: split = clamp(input_bytes /
-    (cores * waves), 4 MB, 256 MB), targeting ~`waves` scan tasks per core.
+    (cores * SCAN_WAVES), 4 MB, 256 MB), ~SCAN_WAVES scan tasks per core.
 
     The 4 MB session default is tuned for this sandbox's 100k-doc corpus; at
     a real 100 TB the same constant would create 25M scan tasks — the split
@@ -158,7 +159,7 @@ def tune_scan_split(spark, input_df, waves: int = 4) -> int | None:
     if not total:
         return None
     cores = spark.sparkContext.defaultParallelism
-    split = max(MIN_SPLIT_BYTES, min(MAX_SPLIT_BYTES, total // max(cores * waves, 1)))
+    split = max(MIN_SPLIT_BYTES, min(MAX_SPLIT_BYTES, total // (cores * SCAN_WAVES)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(min(split, MIN_SPLIT_BYTES)))
     return split

@@ -80,11 +80,14 @@ def build_store(
     return spans.filter("kind != 'error'").select(*cols)
 
 
+# store file size write_store aims for when given the table's bytes
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
 def write_store(
     store: DataFrame,
     path: str,
     est_bytes: int | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
     min_files: int | None = None,
 ) -> None:
     """Materialize the store with a REBALANCE exchange before the write —
@@ -100,7 +103,7 @@ def write_store(
     mega chain meet in one union, so the write's map stage also waits for
     the mega chain's stitch shuffle.
 
-    File-count sizing: est_bytes/target_file_bytes (pass table-stats bytes
+    File-count sizing: est_bytes/TARGET_FILE_BYTES (pass table-stats bytes
     at scale — at 100 TB that is ~800k x 128 MB files), floored at
     min_files (default shuffle.partitions/4) so the writer stage keeps
     enough parallelism on small inputs.  AQE's REBALANCE hint was tried and
@@ -111,7 +114,7 @@ def write_store(
         min_files = max(
             1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4
         )
-    n = int(max(min_files, (est_bytes or 0) // target_file_bytes))
+    n = int(max(min_files, (est_bytes or 0) // TARGET_FILE_BYTES))
     # Row-group sizing was A/B'd and rejected (r06): shrinking
     # parquet.block.size so each ~4 MB store file splits into several row
     # groups raised the scan's task count (16 -> 60+ splits) but search read

@@ -148,11 +148,6 @@ def postings_dedup_on_read(postings: DataFrame) -> DataFrame:
     return _latest_batch_per_doc(postings, "document_id", ["row_id", "pos"])
 
 
-def store_dedup_on_read(store: DataFrame) -> DataFrame:
-    """Same view for streamed store rows (document_id granularity)."""
-    return _latest_batch_per_doc(store, "document_id", ["row_id"])
-
-
 def dedup_on_read(spans: DataFrame) -> DataFrame:
     """Exactly-once-effective view over at-least-once span appends: the
     doc's latest batch wins whole, then (doc_id, order) collapses same-batch

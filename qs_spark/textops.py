@@ -22,6 +22,9 @@ Scale notes per op:
   - ANN: brute-force cosine is one scan + top-k (exact baseline); the LSH
     variant buckets by hyperplane signs so each probe touches ~N/2^H vectors;
     multiprobe flips lowest-margin bits first to recover recall.
+  - embedding near-dup: hyperplane-sign buckets per hash table, expanded
+    into pairs by the same capped (table, sig) aggregate as MinHash-LSH;
+    exact cosine only on candidates, vectors joined back by id.
 """
 
 from __future__ import annotations
@@ -270,6 +273,40 @@ def _rep_sigs(with_rep: DataFrame) -> DataFrame:
 LSH_MAX_BUCKET = 4096
 
 
+def _capped_bucket_pairs(
+    members: DataFrame, bucket: list[str], id_col: str, cap: int, a: str, b: str
+) -> DataFrame:
+    """Distinct pairs (a < b) of ids sharing a bucket, with a hot bucket
+    capped: a bucket of more than `cap` ids emits a STAR — every member
+    paired with the bucket's min id — instead of all pairs, so output stays
+    linear in hot buckets.  The min id is a hub kept apart from the ordinary
+    pairs (the Hybrid Edge Partitioner's high-degree vertex, SIGMOD 2021).
+
+    Shape: ONE aggregate per bucket collects the sorted member ids, and two
+    streaming generators expand it — posexplode gives each member its
+    position i (only position 0 in a capped bucket, whose array is cut to
+    its min), and explode(slice(ids, i + 2, ...)) pairs it with every later
+    member.  No cache and no self-join: the member table is consumed once,
+    inside the aggregate's output stage.  A distinct() drops pairs that
+    share several buckets.  (A single inline(flatten(transform(...)))
+    generator builds every bucket's pair array before emitting a row; on a
+    4,000-member bucket it was about twice as slow.)
+
+    Precondition: an id appears at most once per bucket.  A repeated id
+    pairs with itself and counts twice toward the cap; a caller whose ids
+    can repeat drops the a = b pairs itself."""
+    return (
+        members.groupBy(*bucket)
+        .agg(F.expr(f"array_sort(collect_list({id_col}))").alias("ids"))
+        .selectExpr(
+            "ids",
+            f"posexplode(IF(size(ids) <= {int(cap)}, ids, slice(ids, 1, 1))) AS (i, {a})",
+        )
+        .selectExpr(a, f"explode(slice(ids, i + 2, size(ids) - i - 1)) AS {b}")
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     max_bucket_size: int = LSH_MAX_BUCKET,
@@ -287,37 +324,19 @@ def lsh_candidate_pairs(
          bucket member, its min doc_id (a window over the sketch rows'
          fp, before banding — the bucket table is never re-shuffled by
          doc_id).
-      2. bucket cap: a bucket holding > max_bucket_size members (a
-         near-identical template family) emits a STAR — every member paired
-         with the bucket's min doc_id — instead of all pairs: O(m) output
-         that preserves connectivity for the connected-components consumer.
-
-    Shape: ONE aggregate per (band, bucket) collects the sorted member ids,
-    and two streaming generators expand it — posexplode gives each member
-    its position i (only position 0 in a capped bucket, whose array is cut
-    to its min), and explode(slice(ids, i + 2, ...)) pairs it with every
-    later member.  No cache and no self-join: the bucket table is consumed
-    once, inside the aggregate's output stage.  A distinct() drops pairs
-    that share several bands.  (A single inline(flatten(transform(...)))
-    generator builds every bucket's pair array before emitting a row; on a
-    4,000-member bucket it was about twice as slow.)
+      2. bucket cap: a (band, bucket) holding > max_bucket_size members (a
+         near-identical template family) emits a STAR from its min doc_id
+         instead of all pairs (_capped_bucket_pairs): O(m) output that
+         preserves connectivity for the connected-components consumer.
 
     `sigs` is the representatives' signatures (doc_id, mh0..mh15), as
     near_dup_clusters passes them; when absent they come from one
     doc_sketches scan of `docs`."""
     if sigs is None:
         sigs = _rep_sigs(_with_rep(doc_sketches(docs)))
-    cap = int(max_bucket_size)
-    return (
-        lsh_buckets(sigs)
-        .groupBy("band", "bucket")
-        .agg(F.expr("array_sort(collect_list(doc_id))").alias("ids"))
-        .selectExpr(
-            "ids",
-            f"posexplode(IF(size(ids) <= {cap}, ids, slice(ids, 1, 1))) AS (i, doc_a)",
-        )
-        .selectExpr("doc_a", "explode(slice(ids, i + 2, size(ids) - i - 1)) AS doc_b")
-        .distinct()
+    return _capped_bucket_pairs(
+        lsh_buckets(sigs), ["band", "bucket"], "doc_id", max_bucket_size,
+        "doc_a", "doc_b",
     )
 
 
@@ -448,12 +467,17 @@ def _pair_shingle_stats(n: int):
     return kernel
 
 
+# candidate pairs up to which ngram_jaccard_pairs broadcasts their ids
+_BROADCAST_CANDS = 2_000_000
+# symmetric edges up to which connected_components' loop hints its joins
+_BROADCAST_EDGES = 2_000_000
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     max_bucket_size: int = LSH_MAX_BUCKET,
     sigs: DataFrame | None = None,
-    broadcast_cands_below: int = 2_000_000,
 ) -> DataFrame:
     """n-gram Jaccard over LSH pairs; runs an eager count() job when called.
 
@@ -492,18 +516,22 @@ def ngram_jaccard_pairs(
     sort-merge-joins docs against the candidate ids — which shuffles the
     FULL corpus text by doc_id before the semi filter drops non-candidates.
     The candidate-id table is slim and its size is known after one count
-    on the cached pair table, so when the pair count is under
-    `broadcast_cands_below` the ids are BROADCAST and the semi filter runs
-    inside the scan stage: zero text ever leaves its scan task.  Above the
-    gate (web-scale candidate sets) the unhinted sort-merge path stands.
-    The count is a size probe on the cached slim pair table, not a result
-    cache — every run computes it."""
+    on the cached pair table, so when the pair count is at most
+    _BROADCAST_CANDS the ids are BROADCAST and the semi filter runs inside
+    the scan stage: zero text ever leaves its scan task.  Above the gate
+    (web-scale candidate sets) the unhinted sort-merge path stands.  The
+    count is a size probe on the cached slim pair table, not a result
+    cache — every run computes it.  Spark's own plan-time estimate of the
+    id side cannot stand in for it: it scales with the corpus bytes, not
+    the pair count (seed 1002: 112,780 B for the ids against 236,303 B for
+    the docs), so past autoBroadcastJoinThreshold the unhinted semi-join
+    sort-merges and shuffles the corpus text."""
     cand = scoped_cache(lsh_candidate_pairs(docs, max_bucket_size, sigs=sigs))
     # no .distinct() (r06): the only consumer is a left-semi join, which
     # dedups by construction; explode(array(a, b)) is the id multiset in
     # one operator
     cdocs = cand.selectExpr("explode(array(doc_a, doc_b)) AS doc_id")
-    if cand.count() <= broadcast_cands_below:
+    if cand.count() <= _BROADCAST_CANDS:
         cdocs = F.broadcast(cdocs)
     t = scoped_cache(
         docs.join(cdocs, "doc_id", "left_semi").select(
@@ -523,10 +551,6 @@ def ngram_jaccard_pairs(
     ).selectExpr(
         "doc_a", "doc_b", "round(inter / (sza + szb - inter), 6) AS jaccard"
     )
-
-
-# symmetric edges up to which connected_components' loop hints its joins
-_BROADCAST_EDGES = 2_000_000
 
 
 def connected_components(
@@ -766,17 +790,21 @@ def cosine_col(vec_col, qvec: list[float]):
     return dot / (n1 * n2)
 
 
+def _cosine_topk(vecs: DataFrame, vec_col: str, qvec: list[float], k: int) -> DataFrame:
+    """(vec_id, cosine) of the k rows nearest qvec, cosine rounded to 6,
+    ties by vec_id: the exact-rank tail of every ANN search."""
+    return (
+        vecs.select("vec_id", F.round(cosine_col(vec_col, qvec), 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), "vec_id")
+        .limit(k)
+    )
+
+
 def ann_bruteforce(embeddings: DataFrame, qvec: list[float], k: int = 10) -> DataFrame:
     """Exact cosine top-k: one scan, JVM-side arithmetic, global top-k via
     orderBy+limit (Spark plans this as TakeOrderedAndProject — per-partition
     heaps then a k-merge, no full sort at scale)."""
-    return (
-        embeddings.select(
-            "vec_id", F.round(cosine_col("embedding", qvec), 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    return _cosine_topk(embeddings, "embedding", qvec, k)
 
 
 def _hyperplane(i: int, dim: int) -> list[float]:
@@ -856,12 +884,7 @@ def ann_lsh(
     planes = [_hyperplane(i, len(qvec)) for i in range(n_planes)]
     probes = ann_probe_seq(qvec, n_planes, n_probes)
     bucketed = embeddings.withColumn("sig", ann_sig_col(F.col("embedding"), planes))
-    return (
-        bucketed.filter(F.col("sig").isin(probes))
-        .select("vec_id", F.round(cosine_col("embedding", qvec), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    return _cosine_topk(bucketed.filter(F.col("sig").isin(probes)), "embedding", qvec, k)
 
 
 def write_ann_index(
@@ -902,13 +925,8 @@ def ann_lsh_indexed(
     difference is the plan: PartitionFilters on sig instead of a full-table
     signature recompute."""
     probes = ann_probe_seq(qvec, n_planes, n_probes)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("sig").isin(probes))
-        .select("vec_id", F.round(cosine_col(vec_col, qvec), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    hits = spark.read.parquet(path).filter(F.col("sig").isin(probes))
+    return _cosine_topk(hits, vec_col, qvec, k)
 
 
 def ivf_index(
@@ -978,12 +996,7 @@ def ann_ivf_search(
         sum((c - q) ** 2 for c, q in zip(center, qvec)) for center in centers
     ]
     probes = sorted(range(len(centers)), key=lambda i: dists[i])[: max(1, nprobe)]
-    return (
-        assigned.filter(F.col("_cell").isin(probes))
-        .select("vec_id", F.round(cosine_col(vec_col, qvec), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    return _cosine_topk(assigned.filter(F.col("_cell").isin(probes)), vec_col, qvec, k)
 
 
 def write_ivf_index(assigned: DataFrame, path: str) -> None:
@@ -1023,77 +1036,45 @@ def embedding_near_dup_lsh(
     vec_col: str = "embedding",
     max_bucket_size: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
-    """GLOBAL embedding near-dup pairs — the scale path for pairwise cosine:
-    L hash tables of hyperplane sign-signatures; candidates = pairs sharing a
-    full signature in ANY table (bucket-local join, never all-pairs); each
-    candidate verified by exact cosine >= threshold.  Precision exact, recall
-    = 1-(1-p^n)^L with p = 1 - theta/pi (standard SimHash-for-cosine bound);
-    raise n_tables for recall, n_planes for precision of the buckets.
+    """GLOBAL embedding near-dup pairs (vec_a < vec_b, cosine >= threshold),
+    never all-pairs.  Each of n_tables tables signs n_planes hyperplanes
+    (ann_sig_col), unfolded by one inline into (vec_id, table, sig) rows.
+    The pairs sharing a signature in ANY table come from
+    _capped_bucket_pairs, so a (table, sig) bucket of more than
+    max_bucket_size rows — a mass-duplicated cluster — emits a star from
+    its min vec_id (recall inside it drops to rep-connectivity by design).
+    Each pair's cosine is computed on the two vectors joined back by id.
+    Precision is exact; recall = 1-(1-p^n)^L with p = 1 - theta/pi (the
+    SimHash-for-cosine bound): raise n_tables for recall, n_planes for
+    bucket precision.
 
-    Hot-bucket cap (r02 weak spot): a (table, sig) bucket with more than
-    max_bucket_size members — a mass-duplicated embedding cluster — emits a
-    cosine-verified STAR to the bucket's min vec_id instead of all pairs:
-    O(m) output preserving cluster connectivity; precision stays exact
-    (every emitted pair is still cosine-verified), recall within an
-    over-cap bucket drops to rep-connectivity by design."""
+    A vec_id names one vector.  A repeated row counts toward the cap as a
+    bucket row, and yields no self-pair (vec_a < vec_b) and no duplicate
+    row (the final distinct)."""
     dim = len(embeddings.select(vec_col).first()[0])
-    sig_structs = []
-    for t in range(n_tables):
-        bits = None
-        for i in range(n_planes):
-            pl = F.array(*[F.lit(x) for x in _hyperplane(t * n_planes + i + 1, dim)])
-            dot = F.aggregate(
-                F.zip_with(F.col(vec_col), pl, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            bit = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            bits = bit if bits is None else bits + bit
-        sig_structs.append(F.struct(F.lit(t).alias("table"), bits.alias("sig")))
-    b = embeddings.select(
-        "vec_id", vec_col, F.explode(F.array(*sig_structs)).alias("ts")
-    ).select("vec_id", vec_col, F.col("ts.table").alias("table"), F.col("ts.sig").alias("sig"))
-    b = scoped_cache(b)
-    sizes = b.groupBy("table", "sig").agg(
-        F.count("*").alias("_m"), F.min("vec_id").alias("_rep")
-    )
-    b2 = b.join(sizes, ["table", "sig"])
-    small = b2.filter(F.col("_m") <= max_bucket_size).drop("_m", "_rep")
-    dot = F.aggregate(
-        F.zip_with(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n1 = F.sqrt(F.aggregate(F.col(f"a.{vec_col}"), F.lit(0.0), lambda a, x: a + x * x))
-    n2 = F.sqrt(F.aggregate(F.col(f"b.{vec_col}"), F.lit(0.0), lambda a, x: a + x * x))
-    all_pairs = (
-        small.alias("a")
-        .join(small.alias("b"), ["table", "sig"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-    )
-    # over-cap buckets: star to the bucket representative (rep side aliased
-    # 'a' so the cosine exprs apply unchanged)
-    over = b2.filter(F.col("_m") > max_bucket_size)
-    rep_rows = over.filter(F.col("vec_id") == F.col("_rep")).select(
-        "table", "sig", "vec_id", vec_col
-    )
-    members = over.filter(F.col("vec_id") > F.col("_rep")).select(
-        "table", "sig", "vec_id", vec_col
-    )
-    star_pairs = rep_rows.alias("a").join(members.alias("b"), ["table", "sig"])
-
-    def verified(joined):
-        return joined.select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(dot / (n1 * n2), 6).alias("cosine"),
+    tables = [
+        F.struct(
+            F.lit(t).alias("table"),
+            ann_sig_col(
+                F.col(vec_col),
+                [_hyperplane(t * n_planes + i + 1, dim) for i in range(n_planes)],
+            ).alias("sig"),
         )
-
+        for t in range(n_tables)
+    ]
+    sigs = embeddings.select("vec_id", F.inline(F.array(*tables)))
+    pairs = _capped_bucket_pairs(
+        sigs, ["table", "sig"], "vec_id", max_bucket_size, "vec_a", "vec_b"
+    ).where("vec_a < vec_b")
+    dot = "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (s, x) -> s + x)"
+    n1 = "sqrt(aggregate(a, 0D, (s, x) -> s + x * x))"
+    n2 = "sqrt(aggregate(b, 0D, (s, x) -> s + x * x))"
     return (
-        verified(all_pairs)
-        .unionByName(verified(star_pairs))
+        pairs.join(embeddings.selectExpr("vec_id AS vec_a", f"`{vec_col}` AS a"), "vec_a")
+        .join(embeddings.selectExpr("vec_id AS vec_b", f"`{vec_col}` AS b"), "vec_b")
+        .selectExpr("vec_a", "vec_b", f"round({dot} / ({n1} * {n2}), 6) AS cosine")
         .filter(F.col("cosine") >= threshold)
-        .distinct()  # a pair can collide in several tables
+        .distinct()
     )
 
 

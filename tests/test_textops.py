@@ -63,6 +63,73 @@ def lsh_pairs_selfjoin(sigs, max_bucket_size: int):
     return all_pairs.unionByName(star_pairs).distinct()
 
 
+def embedding_near_dup_selfjoin(
+    embeddings, threshold, n_planes=8, n_tables=4, vec_col="embedding",
+    max_bucket_size=X.LSH_MAX_BUCKET,
+):
+    """Oracle: the r06 form of X.embedding_near_dup_lsh — inline hyperplane
+    sign bits per table, a (table, sig) size/min aggregate joined back, an
+    all-pairs self-join of the buckets within the cap and a star join from
+    the min of those above it, unioned and cosine-verified on the vectors
+    the rows carry."""
+    dim = len(embeddings.select(vec_col).first()[0])
+    sig_structs = []
+    for t in range(n_tables):
+        bits = None
+        for i in range(n_planes):
+            pl = F.array(*[F.lit(x) for x in X._hyperplane(t * n_planes + i + 1, dim)])
+            dot = F.aggregate(
+                F.zip_with(F.col(vec_col), pl, lambda a, b: a * b),
+                F.lit(0.0),
+                lambda a, x: a + x,
+            )
+            bit = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+            bits = bit if bits is None else bits + bit
+        sig_structs.append(F.struct(F.lit(t).alias("table"), bits.alias("sig")))
+    b = embeddings.select(
+        "vec_id", vec_col, F.explode(F.array(*sig_structs)).alias("ts")
+    ).select("vec_id", vec_col, F.col("ts.table").alias("table"), F.col("ts.sig").alias("sig"))
+    sizes = b.groupBy("table", "sig").agg(
+        F.count("*").alias("_m"), F.min("vec_id").alias("_rep")
+    )
+    b2 = b.join(sizes, ["table", "sig"])
+    small = b2.filter(F.col("_m") <= max_bucket_size).drop("_m", "_rep")
+    dot = F.aggregate(
+        F.zip_with(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    n1 = F.sqrt(F.aggregate(F.col(f"a.{vec_col}"), F.lit(0.0), lambda a, x: a + x * x))
+    n2 = F.sqrt(F.aggregate(F.col(f"b.{vec_col}"), F.lit(0.0), lambda a, x: a + x * x))
+    all_pairs = (
+        small.alias("a")
+        .join(small.alias("b"), ["table", "sig"])
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+    )
+    over = b2.filter(F.col("_m") > max_bucket_size)
+    rep_rows = over.filter(F.col("vec_id") == F.col("_rep")).select(
+        "table", "sig", "vec_id", vec_col
+    )
+    members = over.filter(F.col("vec_id") > F.col("_rep")).select(
+        "table", "sig", "vec_id", vec_col
+    )
+    star_pairs = rep_rows.alias("a").join(members.alias("b"), ["table", "sig"])
+
+    def verified(joined):
+        return joined.select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            F.round(dot / (n1 * n2), 6).alias("cosine"),
+        )
+
+    return (
+        verified(all_pairs)
+        .unionByName(verified(star_pairs))
+        .filter(F.col("cosine") >= threshold)
+        .distinct()
+    )
+
+
 def _docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
 
@@ -221,8 +288,8 @@ def test_jaccard_pairs_are_lsh_candidates(spark):
         assert (pairs.doc_a < pairs.doc_b).all()
 
 
-def test_jaccard_pairs_above_broadcast_gate_match_default(spark):
-    """broadcast_cands_below=0 puts any candidate set above the gate, so the
+def test_jaccard_pairs_above_broadcast_gate_match_default(spark, monkeypatch):
+    """_BROADCAST_CANDS=0 puts any candidate set above the gate, so the
     candidate texts take the unhinted semi-join path; the rows must equal
     the default (broadcast) call's."""
     d = _docs(spark)
@@ -233,9 +300,8 @@ def test_jaccard_pairs_above_broadcast_gate_match_default(spark):
     )
     d = d.unionByName(near)
     default = sorted(map(tuple, X.ngram_jaccard_pairs(d).collect()))
-    above = sorted(
-        map(tuple, X.ngram_jaccard_pairs(d, broadcast_cands_below=0).collect())
-    )
+    monkeypatch.setattr(X, "_BROADCAST_CANDS", 0)
+    above = sorted(map(tuple, X.ngram_jaccard_pairs(d).collect()))
     assert default
     assert above == default
 
@@ -390,7 +456,7 @@ def test_lsh_pairs_at_the_cap_boundary_match_selfjoin_oracle(spark):
     assert [p for p in got if p[0].startswith(("p", "s"))] == [("p0", "p1")]
 
 
-def test_jaccard_verify_spreads_a_hub_over_partitions(spark):
+def test_jaccard_verify_spreads_a_hub_over_partitions(spark, monkeypatch):
     """A template family above max_bucket_size=8 makes its min doc_id a hub:
     every star pair shares it as doc_a.  The verify must not run them all in
     one task — no output partition may hold more than half of the pairs —
@@ -417,9 +483,8 @@ def test_jaccard_verify_spreads_a_hub_over_partitions(spark):
     assert len(got) >= 39  # the star alone has 39 pairs
     assert (1000, 1999) in {(a, b) for a, b, _ in got}  # an unrelated near-dup
     assert max(per_part) <= len(got) / 2, per_part
-    above = sorted(
-        map(tuple, X.ngram_jaccard_pairs(docs, 3, 8, broadcast_cands_below=0).collect())
-    )
+    monkeypatch.setattr(X, "_BROADCAST_CANDS", 0)
+    above = sorted(map(tuple, X.ngram_jaccard_pairs(docs, 3, 8).collect()))
     assert above == got
 
 
@@ -437,6 +502,58 @@ def test_embedding_near_dup_cap_keeps_verified_star(spark):
     assert (capped.cosine >= 0.999999).all()
     uncapped = X.embedding_near_dup_lsh(e, threshold=0.99).toPandas()
     assert len(uncapped) == 30 * 29 // 2
+
+
+def _near_dup_families(spark):
+    """Built embeddings (dim 16): 10 families of 5 perturbed copies of a
+    random base (noise 0.08), a hot family of 20 near-identical copies
+    (noise 0.005, vec_id 500..519) that fills its buckets past a cap of 8,
+    30 random singletons, and identical repeated rows of vec_id 12, 500
+    (the hot family's min) and 515."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for f in range(10):
+        base = rng.normal(size=16)
+        rows += [(f * 10 + j, base + 0.08 * rng.normal(size=16)) for j in range(5)]
+    hot = rng.normal(size=16)
+    rows += [(500 + j, hot + 0.005 * rng.normal(size=16)) for j in range(20)]
+    rows += [(900 + j, rng.normal(size=16)) for j in range(30)]
+    rows += [r for r in rows if r[0] in (12, 500, 515)]
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in rows], "vec_id int, embedding array<double>"
+    )
+
+
+def test_embedding_near_dup_matches_selfjoin_oracle(spark):
+    """embedding_near_dup_lsh equals the r06 self-join + star form, row for
+    row, on near-dup families with and without a bucket cap and with
+    repeated vec_id rows (no self-pair, no duplicate row)."""
+    e = _near_dup_families(spark)
+    for threshold, cap in [(0.9, X.LSH_MAX_BUCKET), (0.9, 8), (0.5, 8)]:
+        got = sorted(map(tuple, X.embedding_near_dup_lsh(
+            e, threshold=threshold, max_bucket_size=cap).collect()))
+        want = sorted(map(tuple, embedding_near_dup_selfjoin(
+            e, threshold, max_bucket_size=cap).collect()))
+        assert got == want, (threshold, cap)
+        assert len(got) > 60 and all(a < b for a, b, _ in got)
+        hot = [(a, b) for a, b, _ in got if a >= 500 and b < 600]
+        if cap == 8:  # the hot family is a star from its min
+            assert {a for a, _ in hot} == {500}
+            assert {b for _, b in hot} == set(range(501, 520))
+        else:
+            assert len(hot) == 20 * 19 // 2
+
+
+def test_embedding_near_dup_plan_has_no_cache_or_bucket_join(spark):
+    """Pairs come from the (table, sig) aggregate and the vectors join back
+    by id: the executed plan caches nothing and joins on no (table, sig)."""
+    e = _near_dup_families(spark)
+    plan = X.embedding_near_dup_lsh(e, 0.9)._jdf.queryExecution().executedPlan().toString()
+    assert "InMemory" not in plan
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert joins and not any("table#" in ln or "sig#" in ln for ln in joins), joins
 
 
 def test_ann_indexed_equals_scan_and_prunes(spark, tmp_path):
