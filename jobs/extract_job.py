@@ -41,6 +41,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv=None) -> int:
+    from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
+
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="input docs table path (doc_id, spans[])")
     p.add_argument("--synthetic", type=int, help="generate N synthetic docs instead")
@@ -54,7 +56,7 @@ def main(argv=None) -> int:
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--buckets-per-wave", type=int, default=16)
-    p.add_argument("--chunk-size", type=int, default=102400)
+    p.add_argument("--chunk-size", type=int, default=CHUNK_SIZE)
     p.add_argument("--cores", type=int, default=None, help="local mode cores (omit on a cluster)")
     p.add_argument(
         "--fail-after-waves",

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from qs_spark.catalog import ParquetCatalog
 from qs_spark.extract import extract_spans
+from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
 
 CKPT_TABLE = "checkpoints"
 SPANS_TABLE = "spans_extracted"
@@ -94,7 +95,7 @@ def run_extract_checkpointed(
     run_id: str,
     n_buckets: int = 16,
     buckets_per_wave: int = 4,
-    chunk_size: int = 102400,
+    chunk_size: int = CHUNK_SIZE,
     fail_after_waves: int | None = None,
 ) -> DataFrame:
     """Extract with per-bucket lineage; resumes past committed buckets.

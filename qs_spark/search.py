@@ -86,48 +86,58 @@ def build_postings(store: DataFrame) -> DataFrame:
 POSTINGS_BUCKETS = 64
 
 
-def write_postings(store: DataFrame, path: str, n_buckets: int = POSTINGS_BUCKETS) -> None:
-    """Materialize the postings table partitioned by term-hash bucket — the
-    parquet stand-in for an Iceberg `bucket(term)` layout.  Term lookups then
-    prune to the query terms' buckets: at 100 TB a 3-term query touches
-    3/n_buckets of the index instead of scanning it (the reference's
-    fast_inverted_index lookup, as table layout)."""
+def _write_postings_layout(postings: DataFrame, path: str, mode: str) -> None:
+    """The one writer of the postings layout: every row goes to directory
+    term_bucket = pmod(xxhash64(term), POSTINGS_BUCKETS) (term_bucket(),
+    driver side), in postings-key order.  POSTINGS_BUCKETS is read here and
+    in term_bucket() at call time, so a table's writer and reader agree."""
+    n = POSTINGS_BUCKETS
     (
-        build_postings(store)
-        .withColumn("term_bucket", term_bucket_col(n_buckets))
+        postings.withColumn("term_bucket", F.expr(f"CAST(pmod(xxhash64(term), {n}) AS INT)"))
         # co-locate each bucket into one writer task BEFORE partitionBy:
         # otherwise every upstream task writes a sliver into every bucket dir
         # (measured: 25k files for a 461 MB index; a 3-bucket lookup then
         # opens ~1.2k tiny files and planning dominates the query)
-        .repartition(n_buckets, F.col("term_bucket"))
+        .repartition(n, F.col("term_bucket"))
         # postings-key order inside each bucket: the repartition keeps the
         # rows in the order the store's files fed them, so the same rows in
         # a different number of files gave different parquet bytes (the
         # bucket prefix also meets the partitioned writer's sort)
         .sortWithinPartitions("term_bucket", "term", "row_id", "pos")
-        .write.mode("overwrite")
+        .write.mode(mode)
         .partitionBy("term_bucket")
         .parquet(path)
     )
 
 
-def compact_postings(spark, path: str, n_buckets: int = POSTINGS_BUCKETS) -> None:
+def write_postings(store: DataFrame, path: str) -> None:
+    """Materialize the postings table partitioned by term-hash bucket — the
+    parquet stand-in for an Iceberg `bucket(term)` layout — replacing any
+    table at `path`.  Term lookups then prune to the query terms' buckets:
+    at 100 TB a 3-term query touches 3/POSTINGS_BUCKETS of the index instead
+    of scanning it (the reference's fast_inverted_index lookup, as table
+    layout).  streaming.stream_update_index appends to the same layout."""
+    _write_postings_layout(build_postings(store), path, "overwrite")
+
+
+def compact_postings(spark, path: str) -> None:
     """The reference's periodic index 'optimize'
     (quanta-search-consumer/core/file_upload.py:411-412,441-442: every 1000
     docs) as table maintenance — the Iceberg rewrite_data_files analog for
     the bucket-partitioned postings layout.  Streaming appends
     (streaming.stream_update_index) add one file per micro-batch per bucket;
     lookup planning cost grows with file count, so compaction rewrites each
-    bucket back to a single file.  Rows are preserved verbatim (any
-    batch_id column included — the dedup-on-read view stays correct);
-    crash-safe via ParquetCatalog's staged two-rename swap + _recover."""
+    bucket back to a single file, one writer task per bucket.  Rows and
+    their term_bucket directories are preserved verbatim (any batch_id
+    column included — the dedup-on-read view stays correct); crash-safe via
+    ParquetCatalog's staged two-rename swap + _recover."""
     import os
 
     from qs_spark.catalog import ParquetCatalog
 
     cat = ParquetCatalog(os.path.dirname(path.rstrip("/")))
     table = os.path.basename(path.rstrip("/"))
-    df = cat.read(spark, table).repartition(n_buckets, F.col("term_bucket"))
+    df = cat.read(spark, table).repartition(POSTINGS_BUCKETS, F.col("term_bucket"))
     cat._rewrite(df, table, ["term_bucket"])
 
 
@@ -192,24 +202,19 @@ def _xxh64(data: bytes, seed: int = 42) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def term_bucket(term: str, n_buckets: int = POSTINGS_BUCKETS) -> int:
-    """Driver-side pmod(xxhash64(term), n_buckets) — the postings partition a
-    term lives in (Python % on the signed hash == Spark's pmod)."""
-    return _xxh64(term.encode("utf-8")) % n_buckets
+def term_bucket(term: str) -> int:
+    """Driver-side pmod(xxhash64(term), POSTINGS_BUCKETS) — the postings
+    partition a term lives in (Python % on the signed hash == Spark's pmod)."""
+    return _xxh64(term.encode("utf-8")) % POSTINGS_BUCKETS
 
 
-def term_bucket_col(n_buckets: int):
-    """term_bucket() as a column over `term`: the postings partition every
-    writer of the layout (write_postings, streaming.stream_update_index)
-    stores."""
-    return F.expr(f"CAST(pmod(xxhash64(term), {int(n_buckets)}) AS INT)")
-
-
-def lookup_postings(spark, path: str, terms: list[str], n_buckets: int = POSTINGS_BUCKETS) -> DataFrame:
-    """Partition-pruned posting lookup for a term set.  Bucket ids come from
-    the driver-side hash (no Spark job — at 100 TB the lookup's cost should
-    be the pruned scan, not a scheduling round trip per query)."""
-    buckets = sorted({term_bucket(t, n_buckets) for t in terms})
+def lookup_postings(spark, path: str, terms: list[str]) -> DataFrame:
+    """Partition-pruned posting lookup for a term set over a table in the
+    write_postings layout.  Bucket ids come from the driver-side hash with
+    the same POSTINGS_BUCKETS the writer used (no Spark job — at 100 TB the
+    lookup's cost should be the pruned scan, not a scheduling round trip per
+    query)."""
+    buckets = sorted({term_bucket(t) for t in terms})
     return (
         spark.read.parquet(path)
         .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
@@ -251,19 +256,13 @@ def _match_rows_and(store: DataFrame, terms: list[str]) -> DataFrame:
     return with_tokens(store)
 
 
-def or_search_postings(postings: DataFrame, terms: list[str]) -> DataFrame:
-    """Postings-table OR retrieval: broadcast semi-join of terms (J1 analog,
-    the scale path when a postings table is materialized)."""
-    term_df = postings.sparkSession.createDataFrame([(t,) for t in terms], ["term"])
-    return postings.join(F.broadcast(term_df), "term", "left_semi").select("row_id").distinct()
-
-
 def and_search_postings(postings: DataFrame, terms: list[str]) -> DataFrame:
     """Postings-table AND retrieval (the reference's and_query on the
     inverted index): row ids containing EVERY query term = distinct
     (row_id, term) hits grouped by row_id, kept when the distinct-term count
-    equals len(terms).  Bucket-pruned like the OR path; replaces a chained
-    full-store array_contains scan for exact-match queries."""
+    equals len(terms).  Bucket-pruned when fed lookup_postings' rows, as
+    match_query_rows does; replaces a chained full-store array_contains scan
+    for exact-match queries."""
     uniq = sorted(set(terms))
     hits = postings.filter(F.col("term").isin(uniq)).select("row_id", "term").distinct()
     return (
@@ -318,9 +317,9 @@ def search_rank(
 
     When `postings_path` points at a write_postings table, OR retrieval uses
     the partition-pruned postings lookup + semi-join back to store rows (the
-    scale default: a 3-term query scans 3/n_buckets of the index instead of
-    the whole store).  Tenant filters (state/uid/realm, P4) apply to the
-    store rows before scoring.
+    scale default: a 3-term query scans 3/POSTINGS_BUCKETS of the index
+    instead of the whole store).  Tenant filters (state/uid/realm, P4) apply
+    to the store rows before scoring.
 
     Returns (document_name, match_count, relavence_score) — score scaled
     x100 round 3 like the response (file_searcher.py:341).

@@ -12,7 +12,9 @@ Spark mapping: a file-source stream (arriving parquet batches of
 extraction pipeline -> idempotent append keyed by (doc_id, order).
 foreachBatch gives at-least-once per micro-batch; the dedup-on-read view
 (latest batch_id wins per doc) makes replays harmless — the streaming analog
-of the checkpoint module's bucket overwrite.
+of the checkpoint module's bucket overwrite.  Both stream entry points run
+on an availableNow trigger: a start processes the backlog that has arrived
+and stops, and the caller's next start resumes from the checkpoint.
 
 For event-time analytics over the `events` table we expose a windowed
 aggregation builder usable both in batch (tests/oracle) and with
@@ -26,40 +28,38 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from qs_spark.extract import DOC_SCHEMA, extract_spans
 
 
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    chunk_size: int = 102400,
-    trigger_once: bool = True,
-):
-    """Continuous extraction: watch input_dir for doc-table parquet files,
-    extract each micro-batch, append spans tagged with the batch id.
-
-    Returns the StreamingQuery.  trigger_once processes the backlog and
-    stops (the test/CI mode); production would use a processingTime trigger.
-    """
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
+def _run_doc_stream(spark: SparkSession, input_dir: str, checkpoint_dir: str, body):
+    """Stream the DOC_SCHEMA parquet files arriving in input_dir through
+    body(batch_df, batch_id), skipping empty micro-batches, with progress in
+    checkpoint_dir; an availableNow trigger.  Returns the StreamingQuery."""
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        spans = extract_spans(batch_df, chunk_size=chunk_size)
-        (
-            spans.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(output_dir)
-        )
+        if not batch_df.isEmpty():
+            body(batch_df, batch_id)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        spark.readStream.schema(DOC_SCHEMA)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
+
+
+def stream_extract(spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str):
+    """Continuous extraction: extract each micro-batch of the doc-table
+    parquet files arriving in input_dir, append its spans to output_dir
+    tagged with the batch id (read them through dedup_on_read).
+
+    Returns the StreamingQuery; availableNow: it processes the backlog and
+    stops."""
+
+    def body(batch_df: DataFrame, batch_id: int):
+        spans = extract_spans(batch_df).withColumn("batch_id", F.lit(batch_id))
+        spans.write.mode("append").parquet(output_dir)
+
+    return _run_doc_stream(spark, input_dir, checkpoint_dir, body)
 
 
 def stream_update_index(
@@ -68,52 +68,38 @@ def stream_update_index(
     store_dir: str,
     postings_dir: str,
     checkpoint_dir: str,
-    chunk_size: int = 102400,
-    trigger_once: bool = True,
-    n_buckets: int | None = None,
 ):
     """Streaming index maintenance — the reference's IndexUpdateEvent
     (quanta-search-consumer/core/file_upload.py:362-476) as a continuous
     operator: each arriving micro-batch of docs is extracted, its store rows
-    appended, and its postings appended INTO THE SAME term-bucket layout
-    write_postings creates — so the partition-pruned lookup path
+    appended, and its postings appended by search's one postings writer, in
+    the layout write_postings creates — so the partition-pruned lookup path
     (search.lookup_postings) immediately serves queries over freshly
     streamed documents.  At-least-once appends AND re-streamed updates are
     made harmless by postings_dedup_on_read (the document's latest batch
     wins whole — a changed doc's stale surplus rows drop out too) — the T5
-    contract, same as the spans stream."""
-    from qs_spark.search import POSTINGS_BUCKETS, build_postings, term_bucket_col
+    contract, same as the spans stream.
+
+    Returns the StreamingQuery; availableNow: it processes the backlog and
+    stops."""
+    from qs_spark.search import _write_postings_layout, build_postings
     from qs_spark.store import build_store
 
-    n_buckets = n_buckets or POSTINGS_BUCKETS
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        store = build_store(extract_spans(batch_df, chunk_size=chunk_size))
+    def body(batch_df: DataFrame, batch_id: int):
+        store = build_store(extract_spans(batch_df))
         store.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             store_dir
         )
-        (
-            # postings derive from the just-written durable rows (filtered to
-            # this batch): no second extraction pass and no cache to manage
-            build_postings(spark.read.parquet(store_dir).filter(F.col("batch_id") == batch_id))
-            .withColumn("term_bucket", term_bucket_col(n_buckets))
-            .withColumn("batch_id", F.lit(batch_id))
-            .repartition(n_buckets, F.col("term_bucket"))
-            .write.mode("append")
-            .partitionBy("term_bucket")
-            .parquet(postings_dir)
+        # postings derive from the just-written durable rows (filtered to
+        # this batch): no second extraction pass and no cache to manage
+        batch_rows = spark.read.parquet(store_dir).filter(F.col("batch_id") == batch_id)
+        _write_postings_layout(
+            build_postings(batch_rows).withColumn("batch_id", F.lit(batch_id)),
+            postings_dir,
+            "append",
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    writer = writer.trigger(availableNow=True) if trigger_once else writer.trigger(
-        processingTime="10 seconds"
-    )
-    return writer.start()
+    return _run_doc_stream(spark, input_dir, checkpoint_dir, body)
 
 
 def _latest_batch_per_doc(df: DataFrame, doc_col: str, natural_key: list[str]) -> DataFrame:
@@ -156,10 +142,11 @@ def dedup_on_read(spans: DataFrame) -> DataFrame:
 
 
 _FIRST_SEEN_OUT = "doc_id string, fingerprint bigint, bucket int"
+_FIRST_SEEN_BUCKETS = 16
 _FIRST_SEEN_STATE = "seen array<bigint>"
 
 
-def stateful_first_seen(docs_stream, n_buckets: int = 16, bloom_bits: int | None = None):
+def stateful_first_seen(docs_stream, bloom_bits: int | None = None):
     """Custom stateful streaming operator (applyInPandasWithState): streaming
     exact dedup — emit a doc only the FIRST time its content fingerprint is
     seen, with the seen-set held in partitioned operator state that survives
@@ -167,7 +154,8 @@ def stateful_first_seen(docs_stream, n_buckets: int = 16, bloom_bits: int | None
 
     The reference's analog is the version-exists skip applied per upload
     event (file_upload.py:85-95) — here as a continuous operator.  Keying by
-    fingerprint bucket spreads state across partitions.
+    fingerprint bucket (_FIRST_SEEN_BUCKETS of them) spreads state across
+    partitions.
 
     bloom_bits: the 100 TB state shape — instead of the exact seen-set
     (state grows with distinct docs), hold a per-bucket bloom filter of
@@ -184,7 +172,7 @@ def stateful_first_seen(docs_stream, n_buckets: int = 16, bloom_bits: int | None
         F.xxhash64(F.concat_ws("\x1f", F.transform("spans", lambda s: s["text"]))).alias(
             "fingerprint"
         ),
-    ).withColumn("bucket", F.pmod(F.col("fingerprint"), F.lit(n_buckets)).cast("int"))
+    ).withColumn("bucket", F.pmod(F.col("fingerprint"), F.lit(_FIRST_SEEN_BUCKETS)).cast("int"))
 
     def dedup_exact_fn(key, pdf_iter, state):
         seen = set(state.get[0]) if state.exists else set()

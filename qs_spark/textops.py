@@ -819,17 +819,23 @@ def _hyperplane(i: int, dim: int) -> list[float]:
     ]
 
 
-def ann_sig_col(vec_col, planes: list[list[float]]):
-    """Hyperplane sign signature of a vector column: bit i = (vec . plane_i >= 0)."""
-    bits = None
-    for i, p in enumerate(planes):
-        pl = F.array(*[F.lit(x) for x in p])
-        dot = F.aggregate(
-            F.zip_with(vec_col, pl, lambda a, b: a * b), F.lit(0.0), lambda a, x: a + x
-        )
-        bit = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bits = bit if bits is None else bits + bit
-    return bits
+def ann_sig_col(vec_col: str, plane_ids: range):
+    """Hyperplane sign signature of the vector column `vec_col`: bit j =
+    (vec . _hyperplane(plane_ids[j], len(vec)) >= 0).  Each plane's
+    components are the closed form of _hyperplane in (i, d), computed in
+    BIGINT inside one SQL transform (d * 19349663 overflows an INT past
+    d = 110), so no dimension is needed and building the column runs no
+    job.  The sum runs in component order from 0D, as a dot product against
+    literal planes does, so the bits match on any fixed-dimension table.  A
+    row of another dimension is signed against the planes cut or extended
+    to its own length; a NULL vector, or one holding a NULL, gets 0 in every
+    bit."""
+    bits = []
+    for j, i in enumerate(plane_ids):
+        comp = f"CAST(({i * 73856093}L + d * 19349663L) % 2039 % 21 - 10 AS DOUBLE)"
+        dot = f"aggregate(transform(`{vec_col}`, (x, d) -> x * {comp}), 0D, (s, x) -> s + x)"
+        bits.append(f"IF({dot} >= 0, {1 << j}, 0)")
+    return F.expr(" + ".join(bits))
 
 
 def ann_probe_seq(qvec: list[float], n_planes: int, n_probes: int) -> list[int]:
@@ -881,9 +887,8 @@ def ann_lsh(
     table per query — correct, but not the serving path.  The scale path is
     write_ann_index + ann_lsh_indexed: signatures materialized once as a
     partition column, per-query cost pruned to the probed partitions."""
-    planes = [_hyperplane(i, len(qvec)) for i in range(n_planes)]
     probes = ann_probe_seq(qvec, n_planes, n_probes)
-    bucketed = embeddings.withColumn("sig", ann_sig_col(F.col("embedding"), planes))
+    bucketed = embeddings.withColumn("sig", ann_sig_col("embedding", range(n_planes)))
     return _cosine_topk(bucketed.filter(F.col("sig").isin(probes)), "embedding", qvec, k)
 
 
@@ -899,10 +904,8 @@ def write_ann_index(
 
     Repartition by sig BEFORE partitionBy so each bucket is a handful of
     files, not a sliver per upstream task (same fix as write_postings)."""
-    dim = len(embeddings.select(vec_col).first()[0])
-    planes = [_hyperplane(i, dim) for i in range(n_planes)]
     (
-        embeddings.withColumn("sig", ann_sig_col(F.col(vec_col), planes))
+        embeddings.withColumn("sig", ann_sig_col(vec_col, range(n_planes)))
         .repartition(max(1, 2**n_planes // 4), F.col("sig"))
         .write.mode("overwrite")
         .partitionBy("sig")
@@ -1051,14 +1054,10 @@ def embedding_near_dup_lsh(
     A vec_id names one vector.  A repeated row counts toward the cap as a
     bucket row, and yields no self-pair (vec_a < vec_b) and no duplicate
     row (the final distinct)."""
-    dim = len(embeddings.select(vec_col).first()[0])
     tables = [
         F.struct(
             F.lit(t).alias("table"),
-            ann_sig_col(
-                F.col(vec_col),
-                [_hyperplane(t * n_planes + i + 1, dim) for i in range(n_planes)],
-            ).alias("sig"),
+            ann_sig_col(vec_col, range(t * n_planes + 1, (t + 1) * n_planes + 1)).alias("sig"),
         )
         for t in range(n_tables)
     ]

@@ -49,14 +49,19 @@ def test_or_vs_and_retrieval(spark):
     assert or_rows > 0
 
 
-def test_or_scan_equals_postings_join(spark):
+def test_or_scan_equals_postings_join(spark, tmp_path, monkeypatch):
+    """J1: the postings path's left-semi join back to store rows
+    (match_query_rows over a write_postings table) selects exactly the rows
+    the OR scan matches."""
+    monkeypatch.setattr(S, "POSTINGS_BUCKETS", 8)
     st = _store(spark)
-    terms = ["spark", "vector"]
-    scan_ids = {r.row_id for r in S._match_rows_or(st, terms).select("row_id").collect()}
-    post_ids = {
-        r.row_id for r in S.or_search_postings(S.build_postings(st), terms).collect()
-    }
-    assert scan_ids == post_ids
+    path = str(tmp_path / "postings")
+    S.write_postings(st, path)
+    scan = S._match_rows_or(st, ["spark", "vector"])
+    post = S.match_query_rows(st, "spark vector", False, postings_path=path)
+    scan_ids = {r.row_id for r in scan.select("row_id").collect()}
+    post_ids = {r.row_id for r in post.select("row_id").collect()}
+    assert scan_ids == post_ids and scan_ids
 
 
 def test_search_rank_matches_reference_formula(spark):
@@ -181,11 +186,12 @@ def test_preview_survivors_not_force_broadcast(spark):
     assert bad == []
 
 
-def test_postings_table_partition_pruning(spark, tmp_path):
+def test_postings_table_partition_pruning(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(S, "POSTINGS_BUCKETS", 16)
     path = str(tmp_path / "postings")
     st = _store(spark)
-    S.write_postings(st, path, n_buckets=16)
-    hits = S.lookup_postings(spark, path, ["spark", "vector"], n_buckets=16)
+    S.write_postings(st, path)
+    hits = S.lookup_postings(spark, path, ["spark", "vector"])
     # pruned lookup == full-scan lookup
     full = spark.read.parquet(path).filter(F.col("term").isin(["spark", "vector"]))
     assert hits.count() == full.count() > 0
@@ -194,12 +200,13 @@ def test_postings_table_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "term_bucket" in plan.split("PartitionFilters", 1)[1][:200]
 
 
-def test_postings_bytes_do_not_depend_on_store_files(spark, tmp_path):
+def test_postings_bytes_do_not_depend_on_store_files(spark, tmp_path, monkeypatch):
     """The same store rows written as 1 file and as 2 files must give
     byte-identical postings parts: every bucket's rows are written in
     postings-key order, not in the order the store's files feed them."""
     import glob
 
+    monkeypatch.setattr(S, "POSTINGS_BUCKETS", 8)
     st = _store(spark)
     parts = {}
     for n_files in (1, 2):
@@ -208,7 +215,7 @@ def test_postings_bytes_do_not_depend_on_store_files(spark, tmp_path):
         stored = spark.read.parquet(store_path)
         assert len(stored.inputFiles()) == n_files
         out = str(tmp_path / f"postings{n_files}")
-        S.write_postings(stored, out, n_buckets=8)
+        S.write_postings(stored, out)
         parts[n_files] = {
             os.path.basename(os.path.dirname(f)): open(f, "rb").read()
             for f in glob.glob(f"{out}/term_bucket=*/*.parquet")
@@ -365,11 +372,11 @@ def test_python_xxh64_matches_spark_expression(spark):
     df = spark.createDataFrame([(t,) for t in terms], ["term"]).select(
         "term",
         F.xxhash64("term").alias("h"),
-        F.pmod(F.xxhash64("term"), F.lit(64)).cast("int").alias("b"),
+        F.pmod(F.xxhash64("term"), F.lit(S.POSTINGS_BUCKETS)).cast("int").alias("b"),
     )
     for r in df.collect():
         assert S._xxh64(r.term.encode("utf-8")) == r.h, r.term
-        assert S.term_bucket(r.term, 64) == r.b, r.term
+        assert S.term_bucket(r.term) == r.b, r.term
 
 
 def test_search_rank_postings_single_aggregate_exchange(spark, tmp_path):

@@ -323,19 +323,21 @@ def test_stateful_first_seen_bloom_state(spark, tmp_path):
     assert got2 <= {"n"}
 
 
-def test_stream_update_index_serves_pruned_lookups(spark, tmp_path):
+def test_stream_update_index_serves_pruned_lookups(spark, tmp_path, monkeypatch):
     """Streaming index maintenance (IndexUpdateEvent analog): streamed docs
     become lookup-able through the bucket-pruned postings path, and a
     replayed batch vanishes under postings_dedup_on_read."""
     from pyspark.sql import functions as F
 
+    from qs_spark import search
     from qs_spark.search import lookup_postings
     from qs_spark.streaming import postings_dedup_on_read, stream_update_index
 
+    monkeypatch.setattr(search, "POSTINGS_BUCKETS", 16)
     in_dir, st_dir = str(tmp_path / "in"), str(tmp_path / "store")
     po_dir, ck = str(tmp_path / "postings"), str(tmp_path / "ck")
     corpus_df(spark, 30).write.mode("overwrite").parquet(in_dir)
-    stream_update_index(spark, in_dir, st_dir, po_dir, ck, n_buckets=16).awaitTermination(180)
+    stream_update_index(spark, in_dir, st_dir, po_dir, ck).awaitTermination(180)
 
     # a term from a streamed doc is reachable via the pruned lookup
     store = spark.read.parquet(st_dir)
@@ -343,34 +345,36 @@ def test_stream_update_index_serves_pruned_lookups(spark, tmp_path):
         store.select(F.explode(F.split("text", " ")).alias("t"))
         .filter(F.length("t") > 3).first().t
     )
-    hits = lookup_postings(spark, po_dir, [some_term], n_buckets=16)
+    hits = lookup_postings(spark, po_dir, [some_term])
     assert hits.count() > 0
     before = postings_dedup_on_read(spark.read.parquet(po_dir)).count()
 
     # replay: the SAME docs arrive again as a new file -> new micro-batch
     corpus_df(spark, 30).write.mode("append").parquet(in_dir)
-    stream_update_index(spark, in_dir, st_dir, po_dir, ck, n_buckets=16).awaitTermination(180)
+    stream_update_index(spark, in_dir, st_dir, po_dir, ck).awaitTermination(180)
     raw = spark.read.parquet(po_dir)
     deduped = postings_dedup_on_read(raw)
     assert deduped.count() == before  # replays vanish
     assert raw.count() > before  # but were really appended
 
 
-def test_compact_postings_preserves_lookups(spark, tmp_path):
+def test_compact_postings_preserves_lookups(spark, tmp_path, monkeypatch):
     """Index 'optimize' parity: after two streamed batches each bucket holds
     multiple files; compaction rewrites to one file per bucket and the
     deduped lookup result is unchanged."""
     import os
 
+    from qs_spark import search
     from qs_spark.search import compact_postings, lookup_postings
     from qs_spark.streaming import postings_dedup_on_read, stream_update_index
 
+    monkeypatch.setattr(search, "POSTINGS_BUCKETS", 8)
     in_dir, st_dir = str(tmp_path / "in"), str(tmp_path / "store")
     po_dir, ck = str(tmp_path / "postings"), str(tmp_path / "ck")
     corpus_df(spark, 20).write.mode("overwrite").parquet(in_dir)
-    stream_update_index(spark, in_dir, st_dir, po_dir, ck, n_buckets=8).awaitTermination(180)
+    stream_update_index(spark, in_dir, st_dir, po_dir, ck).awaitTermination(180)
     corpus_df(spark, 20).write.mode("append").parquet(in_dir)  # replay batch
-    stream_update_index(spark, in_dir, st_dir, po_dir, ck, n_buckets=8).awaitTermination(180)
+    stream_update_index(spark, in_dir, st_dir, po_dir, ck).awaitTermination(180)
 
     def files_per_bucket():
         counts = {}
@@ -382,7 +386,7 @@ def test_compact_postings_preserves_lookups(spark, tmp_path):
     before_files = files_per_bucket()
     assert max(before_files.values()) > 1  # sliver files from two batches
     before = postings_dedup_on_read(spark.read.parquet(po_dir)).toPandas()
-    compact_postings(spark, po_dir, n_buckets=8)
+    compact_postings(spark, po_dir)
     after_files = files_per_bucket()
     assert max(after_files.values()) == 1
     after = postings_dedup_on_read(spark.read.parquet(po_dir)).toPandas()
@@ -392,4 +396,56 @@ def test_compact_postings_preserves_lookups(spark, tmp_path):
     )
     # pruned lookup still works against the compacted layout
     some_term = before.iloc[0]["term"]
-    assert lookup_postings(spark, po_dir, [some_term], n_buckets=8).count() > 0
+    assert lookup_postings(spark, po_dir, [some_term]).count() > 0
+
+
+def test_postings_layout_contract(spark, tmp_path, monkeypatch):
+    """One postings layout, however the table was written: by write_postings,
+    by two stream_update_index batches (the second a replay) and by
+    compact_postings over that streamed table.  Every row sits in directory
+    term_bucket=<term_bucket(term)> with the same column value, and
+    lookup_postings returns exactly the rows a full-scan term filter does.
+    A non-default bucket count shows that writer and reader both read
+    POSTINGS_BUCKETS when called."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from qs_spark import search
+    from qs_spark.streaming import stream_update_index
+
+    monkeypatch.setattr(search, "POSTINGS_BUCKETS", 8)
+    in_dir, st_dir = str(tmp_path / "in"), str(tmp_path / "store")
+    streamed, ck = str(tmp_path / "streamed"), str(tmp_path / "ck")
+    corpus_df(spark, 20).write.mode("overwrite").parquet(in_dir)
+    stream_update_index(spark, in_dir, st_dir, streamed, ck).awaitTermination(180)
+    batch0 = spark.read.parquet(st_dir).filter("batch_id = 0").drop("batch_id")
+    written = str(tmp_path / "written")
+    search.write_postings(batch0, written)
+    corpus_df(spark, 20).write.mode("append").parquet(in_dir)  # replay batch
+    stream_update_index(spark, in_dir, st_dir, streamed, ck).awaitTermination(180)
+
+    def check_layout(path):
+        table = spark.read.parquet(path)
+        dir_bucket = F.regexp_extract(F.input_file_name(), r"term_bucket=(\d+)/", 1)
+        placed = (
+            table.select("term", "term_bucket", dir_bucket.cast("int").alias("dir_bucket"))
+            .distinct()
+            .collect()
+        )
+        assert {r.term_bucket for r in placed} == set(range(8))
+        terms = sorted({r.term for r in placed})
+        bad = [r for r in placed if not r.term_bucket == r.dir_bucket == search.term_bucket(r.term)]
+        assert bad == []
+        for term in random.Random(3).sample(terms, 12):
+            got = sorted(map(tuple, search.lookup_postings(spark, path, [term]).collect()))
+            want = sorted(map(tuple, table.filter(F.col("term") == term).collect()))
+            assert got == want and want, term
+        return table
+
+    assert check_layout(written).count() > 0
+    before = sorted(map(tuple, check_layout(streamed).collect()))
+    batches = spark.read.parquet(streamed).select("batch_id").distinct().collect()
+    assert {r.batch_id for r in batches} == {0, 1}
+    search.compact_postings(spark, streamed)
+    assert sorted(map(tuple, check_layout(streamed).collect())) == before

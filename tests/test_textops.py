@@ -63,6 +63,22 @@ def lsh_pairs_selfjoin(sigs, max_bucket_size: int):
     return all_pairs.unionByName(star_pairs).distinct()
 
 
+def ann_sig_literal(vec_col, plane_ids, dim):
+    """Oracle: the literal-plane form of X.ann_sig_col — each plane an array
+    of _hyperplane(i, dim) literals, zip_with'd against the vector."""
+    bits = None
+    for j, i in enumerate(plane_ids):
+        pl = F.array(*[F.lit(x) for x in X._hyperplane(i, dim)])
+        dot = F.aggregate(
+            F.zip_with(F.col(vec_col), pl, lambda a, b: a * b),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        bit = F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        bits = bit if bits is None else bits + bit
+    return bits
+
+
 def embedding_near_dup_selfjoin(
     embeddings, threshold, n_planes=8, n_tables=4, vec_col="embedding",
     max_bucket_size=X.LSH_MAX_BUCKET,
@@ -73,19 +89,14 @@ def embedding_near_dup_selfjoin(
     the min of those above it, unioned and cosine-verified on the vectors
     the rows carry."""
     dim = len(embeddings.select(vec_col).first()[0])
-    sig_structs = []
-    for t in range(n_tables):
-        bits = None
-        for i in range(n_planes):
-            pl = F.array(*[F.lit(x) for x in X._hyperplane(t * n_planes + i + 1, dim)])
-            dot = F.aggregate(
-                F.zip_with(F.col(vec_col), pl, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            bit = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            bits = bit if bits is None else bits + bit
-        sig_structs.append(F.struct(F.lit(t).alias("table"), bits.alias("sig")))
+    sig_structs = [
+        F.struct(
+            F.lit(t).alias("table"),
+            ann_sig_literal(vec_col, range(t * n_planes + 1, (t + 1) * n_planes + 1), dim)
+            .alias("sig"),
+        )
+        for t in range(n_tables)
+    ]
     b = embeddings.select(
         "vec_id", vec_col, F.explode(F.array(*sig_structs)).alias("ts")
     ).select("vec_id", vec_col, F.col("ts.table").alias("table"), F.col("ts.sig").alias("sig"))
@@ -554,6 +565,37 @@ def test_embedding_near_dup_plan_has_no_cache_or_bucket_join(spark):
     assert "InMemory" not in plan
     joins = [ln for ln in plan.splitlines() if "Join" in ln]
     assert joins and not any("table#" in ln or "sig#" in ln for ln in joins), joins
+
+
+def test_ann_sig_col_matches_literal_planes_without_a_job(spark):
+    """ann_sig_col's closed-form planes give the literal-plane signatures bit
+    for bit: float and double vectors of dim 64 (the sf embeddings) and
+    double vectors of dim 200 (d * 19349663 past INT range).  Building the
+    signature plans and embedding_near_dup_lsh's plan runs no Spark job."""
+    import random
+
+    rnd = random.Random(5)
+    wide = spark.createDataFrame(
+        [(i, [rnd.uniform(-1, 1) for _ in range(200)]) for i in range(40)],
+        "vec_id int, embedding array<double>",
+    )
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    ed = e.withColumn("embedding", F.transform("embedding", lambda x: x.cast("double")))
+    tables = [(e, 64), (ed, 64), (wide, 200)]
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    built = [
+        (t.select("vec_id", X.ann_sig_col("embedding", ids).alias("sig")), t, ids, dim)
+        for t, dim in tables
+        for ids in (range(6), range(9, 17))
+    ]
+    X.embedding_near_dup_lsh(wide, 0.9)._jdf.queryExecution().optimizedPlan()
+    assert set(tracker.getJobIdsForGroup(None)) == set(before)
+    for got, t, ids, dim in built:
+        want = t.select("vec_id", ann_sig_literal("embedding", ids, dim).alias("sig"))
+        got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+        assert got_rows == want_rows, (dim, ids)
+        assert len({r.sig for r in got_rows}) > 4
 
 
 def test_ann_indexed_equals_scan_and_prunes(spark, tmp_path):
