@@ -1,8 +1,8 @@
 """Query-scoped cache lifecycle.
 
 Several operators cache a slim intermediate as a deliberate materialization
-barrier (score_per_file, bm25l_phrase, ngram_jaccard_pairs — plan audits in
-their docstrings).  In a long-lived session, every query would otherwise
+barrier (score_per_file, bm25l_phrase, near_dup_clusters' sketches — plan
+audits in their docstrings).  In a long-lived session, every query would otherwise
 leave its cached DataFrame behind, relying solely on LRU eviction under
 executor memory pressure (round-2 ADVICE).  Operators register their caches
 here; callers release them once the query's result is materialized — the

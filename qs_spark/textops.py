@@ -414,14 +414,16 @@ def simhash_near_dup_pairs(
 
 
 def _pair_shingle_stats(n: int):
-    """mapInPandas kernel: (doc_a, doc_b, _ta, _tb) -> (doc_a, doc_b, inter,
-    sza, szb) with inner-join semantics (a pair with an empty intersection —
-    including a null text on either side — emits nothing).  Shingling is
-    the MinHash kernel's rule (doc_sketches; the column-expression oracle
-    in tests/test_textops.py pins it) on the pre-normalized text: split on a
-    single space (norm_text collapsed runs already; a leading/trailing space
-    yields an empty token, same as F.split), whole-text shingle when fewer
-    than n tokens, DISTINCT per doc."""
+    """mapInPandas kernel: pair sides (doc_a, doc_b, _t), two rows per pair
+    -> (doc_a, doc_b, inter, uni) with inner-join semantics (a pair with an
+    empty intersection — including a null text on either side — emits
+    nothing).  A pair's first side waits for its second in a dict that
+    lives across the partition's Arrow batches.  Shingling is the MinHash
+    kernel's rule (doc_sketches; the column-expression oracle in
+    tests/test_textops.py pins it) on the pre-normalized text: split on a
+    single space (norm_text collapsed runs already; a leading/trailing
+    space yields an empty token, same as F.split), whole-text shingle when
+    fewer than n tokens, DISTINCT per doc."""
 
     def shingle_set(text):
         if text is None:
@@ -434,6 +436,7 @@ def _pair_shingle_stats(n: int):
     def kernel(batches):
         import pandas as pd
 
+        waiting: dict = {}  # (doc_a, doc_b) -> the first side's text
         for pdf in batches:
             rows = []
             # batch-local shingle memo (r06): a doc in k candidate pairs
@@ -451,23 +454,23 @@ def _pair_shingle_stats(n: int):
                     memo[text] = s
                 return s
 
-            for da, db, ta, tb in zip(
-                pdf["doc_a"], pdf["doc_b"], pdf["_ta"], pdf["_tb"]
-            ):
-                sa, sb = cached(ta), cached(tb)
+            for da, db, t in zip(pdf["doc_a"], pdf["doc_b"], pdf["_t"]):
+                key = (da, db)
+                if key not in waiting:
+                    waiting[key] = t
+                    continue
+                sa, sb = cached(waiting.pop(key)), cached(t)
                 if not sa or not sb:
                     continue
                 inter = len(sa & sb)
                 if inter:
-                    rows.append((da, db, inter, len(sa), len(sb)))
-            yield pd.DataFrame(
-                rows, columns=["doc_a", "doc_b", "inter", "sza", "szb"]
-            )
+                    rows.append((da, db, inter, len(sa) + len(sb) - inter))
+            yield pd.DataFrame(rows, columns=["doc_a", "doc_b", "inter", "uni"])
 
     return kernel
 
 
-# candidate pairs up to which ngram_jaccard_pairs broadcasts their ids
+# candidate pairs up to which ngram_jaccard_pairs broadcasts their sides
 _BROADCAST_CANDS = 2_000_000
 # symmetric edges up to which connected_components' loop hints its joins
 _BROADCAST_EDGES = 2_000_000
@@ -479,77 +482,74 @@ def ngram_jaccard_pairs(
     max_bucket_size: int = LSH_MAX_BUCKET,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """n-gram Jaccard over LSH pairs; runs an eager count() job when called.
+    """n-gram Jaccard over LSH pairs; collects up to _BROADCAST_CANDS + 1
+    candidate pairs to the driver when called.
 
-    The scale path.  The count is the broadcast gate below: it runs the
+    The scale path.  The collect is the broadcast gate below: it runs the
     sketch + LSH pipeline when this function is called, even if the
     returned DataFrame is never consumed.  `sigs` is passed through to
-    lsh_candidate_pairs (the representatives' signatures).
+    lsh_candidate_pairs (the representatives' signatures).  Precondition:
+    doc_id is unique in `docs` (the kernel pairs exactly two side rows per
+    pair, as _capped_bucket_pairs needs an id once per bucket).
 
     Candidate pairs come from MinHash-LSH banding (lsh_candidate_pairs:
     exact-dup representatives, hot buckets capped), so pair generation is
     bucket-local.  Recall is the LSH band guarantee (pairs under the band
     similarity threshold may be missed — by design); precision is exact.
 
-    Exact verify (r05): ship both normalized texts to each pair (one
-    semi-join projects candidate-doc texts, two joins attach them) and
-    compute |A∩B|, |A|, |B| per pair in one Arrow-batched kernel.  Text
-    shipped is |pairs| x 2 texts; per-doc amplification is bounded by the
-    bucket cap x bands, and exact-dup mass collapsed to representatives
-    upstream, so the degenerate web-corpus case stays linear.  Jaccard
-    division + rounding stay JVM-side so oracle rounding semantics are
-    unchanged.
+    Exact verify: each pair becomes two SIDE rows (doc_id, doc_a, doc_b);
+    ONE join attaches each side's normalized text, and one Arrow-batched
+    kernel pairs the two rows and computes |A∩B| and |A∪B|.  Text shipped
+    is |pairs| x 2 texts; per-doc amplification is bounded by the bucket
+    cap x bands, and exact-dup mass collapsed to representatives upstream,
+    so the degenerate web-corpus case stays linear.  Jaccard division +
+    rounding stay JVM-side so oracle rounding semantics are unchanged.
 
-    Verify spread by pair: the pair table is the small side of both text
-    joins, so the joined rows come out in the task that scanned the
-    streamed text row — every star pair of a capped bucket shares doc_a,
-    the bucket's min, and landed in the one task holding that text.  The
-    pairs are hash-partitioned by (doc_a, doc_b) into
-    spark.sql.shuffle.partitions partitions before the kernel, a fixed
-    count AQE does not coalesce, so a hub's pairs spread over every task
-    (perfbench dedup_near, seed 1002, local[4]: the slowest kernel task
-    went from 0.33-0.39 s, ~6x the median, to at most 0.11 s, 1.4x).
-    The Hybrid Edge Partitioner idea (SIGMOD 2021): place a high-degree
-    vertex's edges apart.
+    Verify spread by pair: every star pair of a capped bucket shares doc_a,
+    the bucket's min.  The sides are hash-partitioned by (doc_a, doc_b)
+    into spark.sql.shuffle.partitions partitions before the kernel, a fixed
+    count AQE does not coalesce, so a pair's two rows meet in one task and
+    a hub's pairs spread over every task (perfbench dedup_near, seed 1002,
+    local[4]: the slowest kernel task went from 0.33-0.39 s, ~6x the
+    median, to at most 0.11 s, 1.4x).  The Hybrid Edge Partitioner idea
+    (SIGMOD 2021): place a high-degree vertex's edges apart.
 
-    Candidate-text semi-join shape (r06): unhinted, the planner
-    sort-merge-joins docs against the candidate ids — which shuffles the
-    FULL corpus text by doc_id before the semi filter drops non-candidates.
-    The candidate-id table is slim and its size is known after one count
-    on the cached pair table, so when the pair count is at most
-    _BROADCAST_CANDS the ids are BROADCAST and the semi filter runs inside
-    the scan stage: zero text ever leaves its scan task.  Above the gate
-    (web-scale candidate sets) the unhinted sort-merge path stands.  The
-    count is a size probe on the cached slim pair table, not a result
-    cache — every run computes it.  Spark's own plan-time estimate of the
-    id side cannot stand in for it: it scales with the corpus bytes, not
-    the pair count (seed 1002: 112,780 B for the ids against 236,303 B for
-    the docs), so past autoBroadcastJoinThreshold the unhinted semi-join
-    sort-merges and shuffles the corpus text."""
-    cand = scoped_cache(lsh_candidate_pairs(docs, max_bucket_size, sigs=sigs))
-    # no .distinct() (r06): the only consumer is a left-semi join, which
-    # dedups by construction; explode(array(a, b)) is the id multiset in
-    # one operator
-    cdocs = cand.selectExpr("explode(array(doc_a, doc_b)) AS doc_id")
-    if cand.count() <= _BROADCAST_CANDS:
-        cdocs = F.broadcast(cdocs)
-    t = scoped_cache(
-        docs.join(cdocs, "doc_id", "left_semi").select(
-            "doc_id", norm_text().alias("_nt")
+    The gate: ONE probe, cand.limit(_BROADCAST_CANDS + 1).toArrow(), sizes
+    the candidate set exactly and, below the gate, IS the pair list: the
+    sides are built from it on the driver and BROADCAST, so the text join
+    runs inside the docs scan stage.  Spark's plan-time estimate of the
+    pair side cannot stand in for the probe: it scales with the corpus
+    bytes, not the pair count (seed 1002: 112,780 B for the candidate ids
+    against 236,303 B for the docs), so past autoBroadcastJoinThreshold an
+    unhinted join would sort-merge and shuffle the corpus text.  Above the
+    gate the same plan runs unhinted, on sides exploded from the candidate
+    DataFrame (its banding aggregate runs again)."""
+    cand = lsh_candidate_pairs(docs, max_bucket_size, sigs=sigs)
+    probe = cand.limit(_BROADCAST_CANDS + 1).toArrow()
+    if probe.num_rows <= _BROADCAST_CANDS:
+        import pyarrow as pa
+
+        a, b = probe["doc_a"], probe["doc_b"]
+        sides = F.broadcast(docs.sparkSession.createDataFrame(pa.table({
+            "doc_id": pa.chunked_array(a.chunks + b.chunks, a.type),
+            "doc_a": pa.chunked_array(a.chunks * 2, a.type),
+            "doc_b": pa.chunked_array(b.chunks * 2, b.type),
+        })))
+    else:
+        sides = cand.selectExpr(
+            "explode(array(doc_a, doc_b)) AS doc_id", "doc_a", "doc_b"
         )
-    )
     nparts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    with_ab = (
-        cand.join(t.selectExpr("doc_id AS doc_a", "_nt AS _ta"), "doc_a")
-        .join(t.selectExpr("doc_id AS doc_b", "_nt AS _tb"), "doc_b")
-        .repartition(nparts, "doc_a", "doc_b")
-    )
     id_t = docs.schema["doc_id"].dataType.simpleString()
-    return with_ab.mapInPandas(
-        _pair_shingle_stats(n),
-        f"doc_a {id_t}, doc_b {id_t}, inter long, sza long, szb long",
-    ).selectExpr(
-        "doc_a", "doc_b", "round(inter / (sza + szb - inter), 6) AS jaccard"
+    return (
+        docs.join(sides, "doc_id")
+        .select("doc_a", "doc_b", norm_text().alias("_t"))
+        .repartition(nparts, "doc_a", "doc_b")
+        .mapInPandas(
+            _pair_shingle_stats(n),
+            f"doc_a {id_t}, doc_b {id_t}, inter long, uni long",
+        )
+        .selectExpr("doc_a", "doc_b", "round(inter / uni, 6) AS jaccard")
     )
 
 
@@ -605,10 +605,11 @@ def connected_components(
         compression + union-by-min, so each root IS the component minimum).
         This moves exactly the bytes a broadcast join of the same graph
         would ship through the driver, replaces 3-4 scheduling-bound jobs
-        PER ROUND with one toPandas, and is identical-output by test.  A
+        PER ROUND with one collect, and is identical-output by test.  A
         248-edge sf0.1 dup graph went from ~6 s of distributed rounds to
-        <0.5 s.  Its labels return as a broadcast-hinted frame built from
-        pandas (a local relation under Arrow: no Python tasks);
+        <0.5 s.  The probe collects with toArrow() and its labels return as
+        a broadcast-hinted frame built from a pa.Table (a local relation,
+        no Python tasks, whether or not the session enables Arrow);
       - the probe reads the RAW pair list, NOT the symmetrized+distinct
         edge table (r05): symmetrizing unions the pair plan with its own
         mirror, so Catalyst plans the whole upstream (sketch kernel,
@@ -623,13 +624,13 @@ def connected_components(
     schema = f"node {ntype}, cluster {ntype}"
     # ONE probe job sizes the graph AND, in the (overwhelmingly common) small
     # case, already IS the local tier's collect: if the limit didn't
-    # truncate, pdf holds every pair and no count job runs at all.
-    pdf = raw.limit(local_below + 1).toPandas()
-    ne = len(pdf)
+    # truncate, tbl holds every pair and no count job runs at all.
+    tbl = raw.limit(local_below + 1).toArrow()
+    ne = tbl.num_rows
     if ne == 0:
         return spark.createDataFrame([], schema)
     if ne <= local_below:
-        import pandas as pd
+        import pyarrow as pa
 
         parent: dict = {}
 
@@ -641,20 +642,23 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        src, dst = tbl["src"].to_pylist(), tbl["dst"].to_pylist()
+        for s, d in zip(src, dst):
             rs, rd = find(s), find(d)
             if rs != rd:
                 if rd < rs:
                     rs, rd = rd, rs
                 parent[rd] = rs  # union by MIN: every root is its comp min
-        nodes = sorted(set(pdf["src"].tolist()) | set(pdf["dst"].tolist()))
+        nodes = sorted(set(src) | set(dst))
         # broadcast hint (r06): this tier's result is bounded (<= 2 *
         # local_below driver-local rows), and its consumers join it against
         # the full doc table — without the hint Spark picked a SortMergeJoin
         # whose two exchanges + sorts cost ~0.9 s of the dedup_cluster bench
         # on a 500-row build side.  The distributed tier returns unhinted
-        # (its label table scales with the graph).
-        labels = pd.DataFrame({"node": nodes, "cluster": [find(x) for x in nodes]})
+        # (its label table scales with the graph).  A pa.Table frame is a
+        # local relation even with Arrow off, where a pandas one becomes a
+        # parallelized RDD scan.
+        labels = pa.table({"node": nodes, "cluster": [find(x) for x in nodes]})
         return F.broadcast(spark.createDataFrame(labels, schema))
     # overflow: build the symmetric distinct edge table the distributed
     # min-propagate loop requires, and size the loop from its real count
@@ -726,27 +730,31 @@ def near_dup_clusters(
 
     ONE text scan (doc_sketches: fingerprint + minhash in one kernel pass)
     and its fp window (_with_rep) are cached slim (doc_id, fp, 16 ints,
-    rep) and feed the exact-dup edges, the representatives' signatures and
-    the output ids: the window's shuffle runs once, in the gate count's
-    job, not again in the component collect.
+    rep) and feed the representatives' signatures and the output ids: the
+    window's shuffle runs once, in the candidate probe's job, not again in
+    the output join.
+
+    Components over representatives only: near edges link reps, and a rep
+    is the min doc_id of its fp group (null texts form one group), so a
+    doc's cluster is its rep's component min, or its rep when the rep has
+    no near edge.  The exact-copy edges never enter the collected graph.
     The sketches keep the minhash shingle width (the LSH banding contract);
     `n` parameterizes only the exact-Jaccard verify.  The plan is built from
     SQL text, one DataFrame call per step: each Column op is a py4j round
     trip on the driver, ahead of the op's first job."""
     sk = scoped_cache(_with_rep(doc_sketches(docs)))
-    exact_edges = sk.where("doc_id != rep").selectExpr("rep AS doc_a", "doc_id AS doc_b")
     near_edges = ngram_jaccard_pairs(
         docs, n, max_bucket_size, sigs=_rep_sigs(sk)
     ).where(F.col("jaccard") >= jaccard_threshold).select("doc_a", "doc_b")
-    comp = connected_components(exact_edges.unionByName(near_edges))
+    comp = connected_components(near_edges)
     # the output ids come from the cached sketches — no second text scan
     return (
-        sk.select("doc_id")
-        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+        sk.select("doc_id", "rep")
+        .join(comp.withColumnRenamed("node", "rep"), "rep", "left")
         .selectExpr(
             "doc_id",
-            "coalesce(cluster, doc_id) AS cluster",
-            "doc_id = coalesce(cluster, doc_id) AS is_representative",
+            "coalesce(cluster, rep) AS cluster",
+            "doc_id = coalesce(cluster, rep) AS is_representative",
         )
     )
 

@@ -63,6 +63,30 @@ def lsh_pairs_selfjoin(sigs, max_bucket_size: int):
     return all_pairs.unionByName(star_pairs).distinct()
 
 
+def near_dup_clusters_with_exact_edges(docs, jaccard_threshold=0.8, n=3):
+    """Oracle: the r06 form of X.near_dup_clusters — the exact-copy edges
+    (rep, doc_id) unioned with the Jaccard-verified near edges, one
+    connected_components over the union, its labels joined back by
+    doc_id."""
+    sk = X._with_rep(X.doc_sketches(docs))
+    exact = sk.where("doc_id != rep").selectExpr("rep AS doc_a", "doc_id AS doc_b")
+    near = (
+        X.ngram_jaccard_pairs(docs, n, sigs=X._rep_sigs(sk))
+        .where(F.col("jaccard") >= jaccard_threshold)
+        .select("doc_a", "doc_b")
+    )
+    comp = X.connected_components(exact.unionByName(near))
+    return (
+        sk.select("doc_id")
+        .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+        .selectExpr(
+            "doc_id",
+            "coalesce(cluster, doc_id) AS cluster",
+            "doc_id = coalesce(cluster, doc_id) AS is_representative",
+        )
+    )
+
+
 def ann_sig_literal(vec_col, plane_ids, dim):
     """Oracle: the literal-plane form of X.ann_sig_col — each plane an array
     of _hyperplane(i, dim) literals, zip_with'd against the vector."""
@@ -300,9 +324,11 @@ def test_jaccard_pairs_are_lsh_candidates(spark):
 
 
 def test_jaccard_pairs_above_broadcast_gate_match_default(spark, monkeypatch):
-    """_BROADCAST_CANDS=0 puts any candidate set above the gate, so the
-    candidate texts take the unhinted semi-join path; the rows must equal
-    the default (broadcast) call's."""
+    """_BROADCAST_CANDS=0 puts any candidate set above the gate (the
+    toArrow probe returns more pairs than the gate), so the pair sides are
+    exploded from the candidate DataFrame and joined to the texts unhinted;
+    the rows must equal the default call's, whose sides are built on the
+    driver from the probe and broadcast."""
     d = _docs(spark)
     near = d.limit(1).select(
         F.lit(900002).alias("doc_id"),
@@ -819,7 +845,7 @@ def test_near_dup_clusters_broadcasts_the_component_table(spark):
 
 
 def test_near_dup_clusters_py4j_budget(spark):
-    """One near_dup_clusters call, its gate count and component collect
+    """One near_dup_clusters call, its candidate probe and component collect
     included, is driver time ahead of and between the op's jobs: each
     DataFrame or Column call is a py4j round trip.  Built from SQL text it
     sends ~390 commands on this table; the Column-op chains sent ~1,260."""
@@ -841,6 +867,112 @@ def test_near_dup_clusters_py4j_budget(spark):
     release_caches()
     assert n <= 60  # the planted near copy clusters with its source
     assert sent <= 600, f"{sent} py4j commands for one near_dup_clusters call"
+
+
+def _planted_dups(spark):
+    """40 sf0.001 docs plus three exact copies of the smallest-id doc, a
+    near copy of one of those copies, two null-text rows and two
+    empty-text rows; the other docs are (mostly) singletons."""
+    d = _docs(spark).limit(40).select("doc_id", "text")
+    src = d.orderBy("doc_id").first()
+    extra = spark.createDataFrame(
+        [(900001 + i, src.text) for i in range(3)]
+        + [(900004, src.text + " zzz")]
+        + [(900005, None), (900006, None), (900007, ""), (900008, "")],
+        d.schema,
+    )
+    return d.unionByName(extra), src.doc_id
+
+
+def test_near_dup_clusters_reps_only_match_exact_edge_oracle(spark):
+    """Components over representatives only: the exact-copy edges no
+    longer enter the graph, and the labels join back on rep.  The rows
+    must equal the oracle that unions the exact edges into the graph —
+    copies and the near copy with their source, each of the null-text and
+    empty-text pairs with its own minimum."""
+    docs, src = _planted_dups(spark)
+    got = sorted(map(tuple, X.near_dup_clusters(docs, jaccard_threshold=0.5).collect()))
+    want = sorted(
+        map(tuple, near_dup_clusters_with_exact_edges(docs, jaccard_threshold=0.5).collect())
+    )
+    assert got == want
+    cluster = {d: c for d, c, _ in got}
+    assert len(got) == 48
+    assert {cluster[i] for i in (src, 900001, 900002, 900003, 900004)} == {src}
+    assert cluster[900005] == cluster[900006] == 900005
+    assert cluster[900007] == cluster[900008] == 900007
+
+
+def test_near_dup_clusters_job_count(spark):
+    """One near_dup_clusters(...).filter("is_representative").collect()
+    runs 13 jobs on the planted table in this session: AQE query stages
+    of the candidate probe (the sketch kernel and the LSH aggregates) and
+    of the verify, and the output join.  With the count gate, the cached
+    candidate-text table and the exact-copy edges in the component graph
+    the same collect ran 20."""
+    from qs_spark.cachereg import release_caches
+
+    docs, _ = _planted_dups(spark)
+    sc = spark.sparkContext
+    group = "test_near_dup_clusters_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        reps = X.near_dup_clusters(docs).filter("is_representative").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_caches()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(reps) < 48
+    assert n_jobs <= 13, f"{n_jobs} jobs for one near_dup_clusters collect"
+
+
+def test_jaccard_pairs_sides_meet_across_arrow_batches(spark, monkeypatch):
+    """The verify kernel pairs a pair's two side rows in a dict that lives
+    across the partition's Arrow batches.  At maxRecordsPerBatch=2 a
+    partition's ~20 side rows arrive in ~10 batches, so most pairs' sides
+    arrive in different batches; the rows must equal the default batch
+    size's and those of the path above the broadcast gate."""
+    base_text = " ".join(f"w{i}" for i in range(60))
+    docs = spark.range(20).selectExpr(
+        "CAST(id AS INT) AS doc_id", f"concat('{base_text} u', CAST(id AS STRING)) AS text"
+    )
+    default = sorted(map(tuple, X.ngram_jaccard_pairs(docs).collect()))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        small = sorted(map(tuple, X.ngram_jaccard_pairs(docs).collect()))
+        monkeypatch.setattr(X, "_BROADCAST_CANDS", 0)
+        above = sorted(map(tuple, X.ngram_jaccard_pairs(docs).collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert len(default) == 190  # every pair of the 20-doc family
+    assert small == default
+    assert above == default
+
+
+def test_connected_components_driver_tier_without_arrow(spark):
+    """With spark.sql.execution.arrow.pyspark.enabled off (a bare
+    SparkSession's default) the driver tier's labels are still a local
+    relation: built from a pa.Table they plan as a LocalTableScan, not as
+    a parallelized Python RDD (Scan ExistingRDD), and equal the labels of
+    a run with Arrow on."""
+    edges = [(1, 2), (2, 3), (5, 6)] + [(10 + i, 11 + i) for i in range(8)]
+    pairs = spark.createDataFrame(edges, "doc_a int, doc_b int")
+    default = sorted(map(tuple, X.connected_components(pairs).collect()))
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        labels = X.connected_components(pairs)
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+        got = sorted(map(tuple, labels.collect()))
+    finally:
+        spark.conf.set(key, prev)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert labels.schema.simpleString() == "struct<node:int,cluster:int>"
+    assert got == default
 
 
 def test_ivf_indexed_equals_memory_and_prunes(spark, tmp_path):
