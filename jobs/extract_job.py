@@ -11,7 +11,7 @@ run at N and 4N executors):
         jobs/extract_job.py \\
         --input  <parquet path | table:lake.qs.documents> \\
         --output <warehouse dir | iceberg://lake/qs> \\
-        --run-id r-$(date +%s) [--n-buckets 256] [--chunk-size 102400]
+        --run-id r-$(date +%s) [--n-buckets 256]
 
 With --output iceberg://<catalog>/<namespace> the spans + checkpoint
 tables are managed through IcebergCatalog (MERGE INTO lineage, DELETE FROM
@@ -41,8 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv=None) -> int:
-    from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
-
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="input docs table path (doc_id, spans[])")
     p.add_argument("--synthetic", type=int, help="generate N synthetic docs instead")
@@ -56,7 +54,6 @@ def main(argv=None) -> int:
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--buckets-per-wave", type=int, default=16)
-    p.add_argument("--chunk-size", type=int, default=CHUNK_SIZE)
     p.add_argument("--cores", type=int, default=None, help="local mode cores (omit on a cluster)")
     p.add_argument(
         "--fail-after-waves",
@@ -104,7 +101,6 @@ def main(argv=None) -> int:
         run_id=args.run_id,
         n_buckets=args.n_buckets,
         buckets_per_wave=args.buckets_per_wave,
-        chunk_size=args.chunk_size,
         fail_after_waves=args.fail_after_waves,
     )
     n = spans.count()

@@ -24,11 +24,10 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from qs_spark.catalog import ParquetCatalog
-from qs_spark.extract import extract_spans
-from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
+from qs_spark.extract import SPAN_SCHEMA, extract_spans
 
 CKPT_TABLE = "checkpoints"
 SPANS_TABLE = "spans_extracted"
@@ -95,7 +94,6 @@ def run_extract_checkpointed(
     run_id: str,
     n_buckets: int = 16,
     buckets_per_wave: int = 4,
-    chunk_size: int = CHUNK_SIZE,
     fail_after_waves: int | None = None,
 ) -> DataFrame:
     """Extract with per-bucket lineage; resumes past committed buckets.
@@ -113,7 +111,7 @@ def run_extract_checkpointed(
             raise RuntimeError(f"injected failure before wave {w_i} (run {run_id})")
         t0 = time.time()
         part = docs.filter(F.col("bucket").isin(wave))
-        spans = extract_spans(part.drop("bucket"), chunk_size=chunk_size).withColumn(
+        spans = extract_spans(part.drop("bucket")).withColumn(
             "bucket", bucket_col(n_buckets)
         )
         # idempotent write: replaces exactly the wave's bucket partitions
@@ -153,7 +151,6 @@ def run_extract_checkpointed(
         cat.merge_by_key(metrics, CKPT_TABLE, ["bucket"])
 
     if not cat.exists(SPANS_TABLE):
-        return spark.createDataFrame(
-            [], "doc_id string, order int, kind string, text string, media_ref string, fmt string, bucket int"
-        )
+        schema = T.StructType([*SPAN_SCHEMA, T.StructField("bucket", T.IntegerType())])
+        return spark.createDataFrame([], schema)
     return cat.read(spark, SPANS_TABLE)

@@ -8,8 +8,9 @@ Spark re-expression of the reference upload pipeline's parse stage
       -> skew split: docs with many page-local units are sliced into parts
          BEFORE the shuffle, so one mega-doc never stalls a task (AQE handles
          shuffle-join skew but not UDF-compute skew — SURVEY.md §4.1)
-      -> salted repartition on xxhash64(doc_id[, part]) -> Arrow-batched
-         kernels (mapInArrow; no per-row Python in the exchange)
+      -> salted repartition on xxhash64(doc_id[, part]) -> ONE Arrow-batched
+         per-doc kernel for whole docs and mega parts alike (_make_doc_fn;
+         mapInArrow, no per-row Python in the exchange)
       -> mega-doc parts re-stitched per doc (_stitch: one JVM window over
          (part_k, local_order), `order` renumbered after empty-unit drops,
          matching add_metadata's enumeration semantics)
@@ -25,6 +26,10 @@ list<struct> -> pandas conversion materializes one dict per span and the
 kernel-side record build used to allocate a second — flattening the struct
 column once per batch and building the kernel records directly from the flat
 field arrays measured ~25% faster end-to-end on the 100k-doc corpus.
+
+Sheets and txt chunk at the reference loaders' hard-coded budget
+(kernels.sheet_kernel.CHUNK_SIZE = 102400) and at no other: the span
+contract is equality with those loaders, so no entry point takes a budget.
 
 Output: (doc_id, order, kind, text, media_ref, fmt) — the first five columns
 are the span contract; `fmt` rides along for the store builder.
@@ -44,7 +49,6 @@ from qs_spark.kernels.dispatch import (
     fmt_of_spans,
     safe_extract_doc,
 )
-from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
 
 _SPAN_PA_SCHEMA = pa.schema(
     [
@@ -57,16 +61,10 @@ _SPAN_PA_SCHEMA = pa.schema(
     ]
 )
 
-_PART_PA_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("part_k", pa.int32()),
-        ("local_order", pa.int32()),
-        ("kind", pa.string()),
-        ("text", pa.string()),
-        ("media_ref", pa.string()),
-        ("fmt", pa.string()),
-    ]
+# a mega-doc part's spans: `order` is local to the part (renumbered at
+# _stitch) and part_k rides through from the input
+_PART_PA_SCHEMA = _SPAN_PA_SCHEMA.set(1, pa.field("local_order", pa.int32())).append(
+    pa.field("part_k", pa.int32())
 )
 
 SPAN_SCHEMA = from_arrow_schema(_SPAN_PA_SCHEMA)
@@ -77,6 +75,14 @@ _PART_SCHEMA = from_arrow_schema(_PART_PA_SCHEMA)
 DOC_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind: string, text: string, media_ref: string, offset: int>>"
+)
+
+# the split mega files' Spark read schema: one fixed type for every writer.
+# Parquet files may store spans.offset as int32 or int64, and Spark reads
+# either as bigint but an int64 file fails under `int`
+_SPLIT_READ_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind: string, text: string, media_ref: string, offset: bigint>>"
 )
 
 # max raw spans one kernel call handles for a page-local doc: larger docs are
@@ -143,8 +149,8 @@ def with_size_class(df: DataFrame) -> DataFrame:
     )
 
 
-def _docs_from_arrow(batch: pa.RecordBatch, with_part_k: bool = False):
-    """Yield (doc_id, fmt[, part_k], records) per document from one Arrow
+def _docs_from_arrow(batch: pa.RecordBatch):
+    """Yield (doc_id, fmt, part_k, records) per document from one Arrow
     batch, building the kernel's list-of-dict span records straight from the
     flattened struct children (no pandas, no intermediate dict per span).
 
@@ -152,6 +158,7 @@ def _docs_from_arrow(batch: pa.RecordBatch, with_part_k: bool = False):
     table batches straight off parquet), fmt is yielded as None and the
     caller derives it per doc with kernels.dispatch.fmt_of_spans — the exact
     Python mirror of with_fmt (parity pinned by test_extract_golden).
+    part_k is None likewise unless the batch has that column (mega parts).
 
     Null-safety mirrors the old pandas path: a null spans array or a null
     struct element is treated as absent, null fields as ''/0 — a 100 TB table
@@ -169,7 +176,7 @@ def _docs_from_arrow(batch: pa.RecordBatch, with_part_k: bool = False):
     offs = flat.field("offset").to_pylist()
     dids = batch.column(idx["doc_id"]).to_pylist()
     fmts = batch.column(idx["fmt"]).to_pylist() if "fmt" in idx else None
-    parts = batch.column(idx["part_k"]).to_pylist() if with_part_k else None
+    parts = batch.column(idx["part_k"]).to_pylist() if "part_k" in idx else None
     pos = 0
     for i in range(batch.num_rows):
         ln = lengths[i]
@@ -187,59 +194,42 @@ def _docs_from_arrow(batch: pa.RecordBatch, with_part_k: bool = False):
             )
         pos += ln
         fmt = fmts[i] if fmts is not None else None
-        if with_part_k:
-            yield dids[i], fmt, parts[i], recs
-        else:
-            yield dids[i], fmt, None, recs
+        part_k = parts[i] if parts is not None else None
+        yield dids[i], fmt, part_k, recs
 
 
-def _make_whole_doc_fn(chunk_size: int):
+def _make_doc_fn(schema: pa.Schema):
+    """The per-doc mapInArrow kernel: every doc of a batch through
+    safe_extract_doc, one output row per span.  With _SPAN_PA_SCHEMA it
+    serves whole docs (the small branch and the native bins); with
+    _PART_PA_SCHEMA mega-doc parts, each row carrying its part's part_k."""
+    with_part_k = "part_k" in schema.names
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            cols: tuple[list, ...] = ([], [], [], [], [], [])
-            o_did, o_order, o_kind, o_text, o_ref, o_fmt = cols
-            for did, fmt, _, recs in _docs_from_arrow(batch):
+            cols: tuple[list, ...] = tuple([] for _ in schema)
+            o_did, o_order, o_kind, o_text, o_ref, o_fmt = cols[:6]
+            for did, fmt, part_k, recs in _docs_from_arrow(batch):
                 if fmt is None:  # native-scan batches carry no fmt column
                     fmt = fmt_of_spans(recs)
-                for u in safe_extract_doc(recs, fmt, chunk_size):
+                # page-local formats only reach the part path, so extracting
+                # a slice is semantics-preserving; a part's order is LOCAL
+                # and renumbered at stitch
+                units = safe_extract_doc(recs, fmt)
+                for u in units:
                     o_did.append(did)
                     o_order.append(u["order"])
                     o_kind.append(u["kind"])
                     o_text.append(u["text"])
                     o_ref.append(u["media_ref"])
                     o_fmt.append(fmt)
+                if with_part_k:
+                    cols[6].extend([part_k] * len(units))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, _SPAN_PA_SCHEMA)],
-                schema=_SPAN_PA_SCHEMA,
-            )
-
-    return fn
-
-
-def _make_part_fn(chunk_size: int):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols: tuple[list, ...] = ([], [], [], [], [], [], [])
-            o_did, o_part, o_lorder, o_kind, o_text, o_ref, o_fmt = cols
-            for did, fmt, part_k, recs in _docs_from_arrow(batch, with_part_k=True):
-                # page-local formats only reach this path, so extracting a
-                # slice is semantics-preserving; order is LOCAL here and
-                # renumbered at stitch
-                for u in safe_extract_doc(recs, fmt, chunk_size):
-                    o_did.append(did)
-                    o_part.append(int(part_k))
-                    o_lorder.append(u["order"])
-                    o_kind.append(u["kind"])
-                    o_text.append(u["text"])
-                    o_ref.append(u["media_ref"])
-                    o_fmt.append(fmt)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, _PART_PA_SCHEMA)],
-                schema=_PART_PA_SCHEMA,
+                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                schema=schema,
             )
 
     return fn
@@ -277,11 +267,7 @@ def _stitch(parts: DataFrame) -> DataFrame:
     )
 
 
-def extract_spans(
-    df: DataFrame,
-    chunk_size: int = CHUNK_SIZE,
-    repartition_input: bool = True,
-) -> DataFrame:
+def extract_spans(df: DataFrame, repartition_input: bool = True) -> DataFrame:
     """(doc_id, spans[]) -> ordered extracted spans.
 
     Page-local docs with more than DEFAULT_SPLIT_THRESHOLD raw spans are
@@ -323,18 +309,20 @@ def extract_spans(
     small = small.select("doc_id", "spans", "fmt")
     if repartition_input:
         small = small.repartition(num_partitions, F.expr("xxhash64(doc_id)"))
-    small_out = small.mapInArrow(_make_whole_doc_fn(chunk_size), schema=SPAN_SCHEMA)
+    small_out = small.mapInArrow(_make_doc_fn(_SPAN_PA_SCHEMA), schema=SPAN_SCHEMA)
 
-    mega_out = _extract_mega(mega, chunk_size, num_partitions)
+    mega_out = _extract_mega(mega, num_partitions)
 
     return small_out.unionByName(mega_out)
 
 
-def _extract_mega(mega: DataFrame, chunk_size: int, num_partitions: int) -> DataFrame:
-    """The mega-doc split/extract/re-stitch branch (needs a `fmt` column).
-    extract_spans sends every mega doc here; extract_spans_native only the
-    mega files heavier than a parallelism slot's share (the rest extract
-    whole in its native wave)."""
+def _extract_mega(mega: DataFrame, num_partitions: int) -> DataFrame:
+    """The mega-doc split/extract/re-stitch branch (needs a `fmt` column):
+    slices of DEFAULT_SPLIT_THRESHOLD raw spans run through the same per-doc
+    kernel as whole docs, and _stitch renumbers them.  extract_spans sends
+    every mega doc here; extract_spans_native only the mega files heavier
+    than a parallelism slot's share (the rest extract whole in its native
+    wave)."""
     t = DEFAULT_SPLIT_THRESHOLD
     parts = (
         mega.selectExpr(
@@ -344,10 +332,10 @@ def _extract_mega(mega: DataFrame, chunk_size: int, num_partitions: int) -> Data
             f"sequence(0, CAST(ceil(size(spans) / {t}) AS INT) - 1), "
             f"i -> slice(spans, i * {t} + 1, {t}))) AS (part_k, spans)",
         )
-        # no reorder select: the part kernel reads Arrow columns by NAME
+        # no reorder select: the kernel reads Arrow columns by NAME
         # (_docs_from_arrow builds a name index), so column order is free
         .repartition(num_partitions, F.expr("xxhash64(doc_id, part_k)"))
-        .mapInArrow(_make_part_fn(chunk_size), schema=_PART_SCHEMA)
+        .mapInArrow(_make_doc_fn(_PART_PA_SCHEMA), schema=_PART_SCHEMA)
     )
     return _stitch(parts)
 
@@ -370,20 +358,20 @@ _NATIVE_BATCH_ROWS = 8192
 
 
 def _plan_native_splits(
-    files: list[str], target_bytes: int = _NATIVE_TARGET_SPLIT_BYTES
-) -> list[tuple[str, int, int]]:
-    """(path, rg_start, rg_end) splits; rg_end == -1 means "whole file"
-    (footer never read driver-side for files under target_bytes — at 100 TB
-    only the rare oversized data file pays a metadata read; Iceberg manifests
-    carry row-group offsets and would make even that free)."""
-    import os
-
+    files: dict[str, int], target_bytes: int = _NATIVE_TARGET_SPLIT_BYTES
+) -> list[tuple[tuple[str, int, int], int]]:
+    """((path, rg_start, rg_end), weight) splits of a {path: bytes} map;
+    rg_end == -1 means "whole file", weighted by its bytes (footer never
+    read driver-side for files under target_bytes — at 100 TB only the rare
+    oversized data file pays a metadata read; Iceberg manifests carry
+    row-group offsets and would make even that free).  A row-group range
+    weighs target_bytes."""
     import pyarrow.parquet as pq
 
-    splits: list[tuple[str, int, int]] = []
+    splits: list[tuple[tuple[str, int, int], int]] = []
     for f in sorted(files):
-        if os.path.getsize(f) <= target_bytes:
-            splits.append((f, 0, -1))
+        if files[f] <= target_bytes:
+            splits.append(((f, 0, -1), files[f]))
             continue
         meta = pq.ParquetFile(f).metadata
         n_rg = meta.num_row_groups
@@ -394,47 +382,47 @@ def _plan_native_splits(
         for g in range(n_rg):
             run_bytes += meta.row_group(g).total_byte_size
             if run_bytes >= target_bytes:
-                splits.append((f, run_start, g + 1))
+                splits.append(((f, run_start, g + 1), target_bytes))
                 run_start, run_bytes = g + 1, 0
         if run_start < n_rg:
-            splits.append((f, run_start, n_rg))
+            splits.append(((f, run_start, n_rg), target_bytes))
         if n_rg == 0:
-            splits.append((f, 0, -1))
+            splits.append(((f, 0, -1), files[f]))
     return splits
 
 
 def _pack_splits_lpt(
-    splits: list[tuple[str, int, int]], sizes: list[int], n_bins: int
+    splits: list[tuple[tuple[str, int, int], int]], n_bins: int
 ) -> list[list[tuple[str, int, int]]]:
-    """Longest-processing-time packing of splits into n_bins task bins:
-    sort by byte weight descending, assign each to the lightest bin.  Bounds
-    imbalance at (1 + 1/k) of optimal — good enough that ~2 waves of bins
-    per core beat per-file tasks, because every Python task pays a fixed
-    cost on top of its data: JVM scheduling, the worker handshake and the
-    Arrow stream, ~30-45 ms of CPU per no-op mapInArrow task (4 vCPUs,
-    local[4]).  Until qs_spark.pydaemon it was ~0.17-0.22 s, most of it
-    each task re-reading pyspark.zip's directory (r06: 390 one-file tasks =
-    ~4 s of pure task overhead at 32 cores)."""
+    """Longest-processing-time packing of (split, weight) pairs into n_bins
+    task bins: sort by byte weight descending, assign each to the lightest
+    bin.  Bounds imbalance at (1 + 1/k) of optimal — good enough that ~2
+    waves of bins per core beat per-file tasks, because every Python task
+    pays a fixed cost on top of its data: JVM scheduling, the worker
+    handshake and the Arrow stream, ~30-45 ms of CPU per no-op mapInArrow
+    task (4 vCPUs, local[4]).  Until qs_spark.pydaemon it was ~0.17-0.22 s,
+    most of it each task re-reading pyspark.zip's directory (r06: 390
+    one-file tasks = ~4 s of pure task overhead at 32 cores)."""
     import heapq
 
     n_bins = max(1, min(n_bins, len(splits)))
     heap = [(0, i) for i in range(n_bins)]
     heapq.heapify(heap)
     bins: list[list[tuple[str, int, int]]] = [[] for _ in range(n_bins)]
-    for w, s in sorted(zip(sizes, splits), key=lambda x: -x[0]):
+    for s, w in sorted(splits, key=lambda x: -x[1]):
         load, i = heapq.heappop(heap)
         bins[i].append(s)
         heapq.heappush(heap, (load + w, i))
     return [b for b in bins if b]
 
 
-def _make_native_reader_fn(bins: list[list[tuple[str, int, int]]], chunk_size: int):
+def _make_native_reader_fn(bins: list[list[tuple[str, int, int]]]):
     """mapInArrow fn over a bin-index table: each task streams its bin's
-    parquet fragments through the whole-doc kernel.  Bounded memory: one
+    parquet fragments through the per-doc kernel.  Bounded memory: one
     Arrow batch of raw payload + its extracted spans live at a time.  The
     bin list rides the task closure (paths only — at real scale you'd ship
     it as a broadcast of the Iceberg scan-task list; same shape)."""
-    whole = _make_whole_doc_fn(chunk_size)
+    whole = _make_doc_fn(_SPAN_PA_SCHEMA)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -466,7 +454,7 @@ def native_scan_table(
     """Validate `path` as a size_class-partitioned span table trusted for
     metadata-only mega/small routing and return its non-empty data files
     with their bytes, (small, mega); None when the table can't be trusted
-    (caller falls back to the generic scan).
+    (extract_spans_native then raises).
 
     Cost discipline (r06, guide §5 "the driver should do almost no data
     work"): the old form opened the whole table with spark.read.parquet —
@@ -474,8 +462,8 @@ def native_scan_table(
     per query on the sandbox's 390-file corpus) only to filter out the
     ~0.2% mega partition.  Validation reads one data-file footer per
     partition driver-side (pyarrow, ~ms); Spark reads only the mega files
-    that are split, typed by one of their own footers so no inference pass
-    runs.  `split_threshold` is the caller's: only DEFAULT_SPLIT_THRESHOLD
+    that are split, with a fixed schema so no inference pass runs.
+    `split_threshold` is the caller's: only DEFAULT_SPLIT_THRESHOLD
     is served.  The layout's own classing is not checked, and need not be:
     size_class only routes docs, and a mega doc yields the same spans on
     either route.  `spark` is not used; callers pass it."""
@@ -504,13 +492,14 @@ def native_scan_table(
     return files[0], files[1]
 
 
-def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -> DataFrame:
+def extract_spans_native(spark, table_path: str) -> DataFrame:
     """extract_spans over an on-disk size_class-partitioned table, reading
     the small partition's parquet bytes pyarrow-natively inside the workers
     (see module note above).  Output is row-identical to
     extract_spans(spark.read.parquet(table_path), repartition_input=False)
-    — pinned by test_extract_native — and falls back to exactly that when
-    the table lacks the trusted layout.
+    — pinned by test_extract_native.  A table without the trusted layout
+    (native_scan_table returns None) raises ValueError: the caller decides
+    whether extract_spans over a generic scan is what it wants.
 
     Mega files are routed by bytes: a mega file no heavier than a
     parallelism slot's share (small + mega file bytes over
@@ -522,8 +511,9 @@ def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -
     route the store write waits for the mega chain's stitch shuffle."""
     table = native_scan_table(spark, table_path, DEFAULT_SPLIT_THRESHOLD)
     if table is None:
-        return extract_spans(
-            spark.read.parquet(table_path), chunk_size, repartition_input=False
+        raise ValueError(
+            f"{table_path} is not a size_class-partitioned span table; "
+            "use extract_spans(spark.read.parquet(path)) for a generic scan"
         )
 
     small, megas = table
@@ -532,11 +522,9 @@ def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -
         1, min(slots, len(small) + len(megas))
     )
     split = sorted(f for f, b in megas.items() if b > share)
-    files = {**small, **{f: b for f, b in megas.items() if b <= share}}
-    splits = _plan_native_splits(list(files))
-    sizes = [
-        files[p] if r1 < 0 else _NATIVE_TARGET_SPLIT_BYTES for p, _, r1 in splits
-    ]
+    splits = _plan_native_splits(
+        {**small, **{f: b for f, b in megas.items() if b <= share}}
+    )
 
     out = None
     if splits:
@@ -547,7 +535,7 @@ def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -
         # A/B of fewer bins alone was flat); doc-level cost skew largely
         # averages out at the bin level because each bin holds many
         # hash-bucketed files
-        bins = _pack_splits_lpt(splits, sizes, n_bins=2 * slots)
+        bins = _pack_splits_lpt(splits, n_bins=2 * slots)
         # one bin per partition via spark.range: partitioning is pinned (a
         # repartition() here is a shuffle whose payload is a few hundred
         # bytes, so AQE's partition coalescing would legally collapse it to
@@ -558,9 +546,7 @@ def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -
         bin_df = spark.range(len(bins), numPartitions=len(bins)).selectExpr(
             "CAST(id AS INT) AS bin_idx"
         )
-        out = bin_df.mapInArrow(
-            _make_native_reader_fn(bins, chunk_size), schema=SPAN_SCHEMA
-        )
+        out = bin_df.mapInArrow(_make_native_reader_fn(bins), schema=SPAN_SCHEMA)
     if split:
         # Size the split megas' exchange by their DATA bytes (the file sizes
         # are the Iceberg-stats analog), not by 4x shuffle.partitions: a
@@ -574,13 +560,7 @@ def extract_spans_native(spark, table_path: str, chunk_size: int = CHUNK_SIZE) -
         mega_bytes = sum(megas[f] for f in split)
         num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         mega_nparts = max(1, min(num_partitions, mega_bytes // (1024 * 1024) + 1))
-        # typed by a split file's own footer: the megas that join the
-        # kernel bins may come from another writer
-        import pyarrow.parquet as pq
-
-        schema = from_arrow_schema(pq.read_schema(split[0]))
-        mega = spark.read.schema(schema).parquet(*split)
-        mega_out = _extract_mega(with_fmt(mega), chunk_size, mega_nparts)
+        mega = spark.read.schema(_SPLIT_READ_SCHEMA).parquet(*split)
+        mega_out = _extract_mega(with_fmt(mega), mega_nparts)
         out = mega_out if out is None else out.unionByName(mega_out)
     return out if out is not None else spark.createDataFrame([], SPAN_SCHEMA)
-

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from qs_spark.kernels.html_kernel import walk_html
 from qs_spark.kernels.pdf_kernel import walk_pages
-from qs_spark.kernels.sheet_kernel import CHUNK_SIZE, walk_sheets
+from qs_spark.kernels.sheet_kernel import walk_sheets
 from qs_spark.kernels.txt_kernel import walk_txt
 
 # raw-span kind -> document format
@@ -66,12 +66,10 @@ def _walk_md(raw_spans: list[dict]) -> list[dict]:
 
 
 def extract_doc(
-    raw_spans: list[dict],
-    fmt: str | None = None,
-    chunk_size: int = CHUNK_SIZE,
-    plan: str | None = None,
+    raw_spans: list[dict], fmt: str | None = None, plan: str | None = None
 ) -> list[dict]:
     """One doc's raw spans -> ordered extracted spans with `order` assigned.
+    Sheets and txt chunk at the reference budget (sheet_kernel.CHUNK_SIZE).
 
     Also the golden oracle: tests run this single-threaded over the corpus and
     compare with the distributed pipeline's output.
@@ -84,11 +82,11 @@ def extract_doc(
     if fmt in ("pdf", "docx"):
         units = walk_pages(raw_spans, plan=plan or "basic +")
     elif fmt == "xlsx":
-        units = walk_sheets(raw_spans, excel_mode=True, chunk_size=chunk_size)
+        units = walk_sheets(raw_spans, excel_mode=True)
     elif fmt == "csv":
-        units = walk_sheets(raw_spans, excel_mode=False, chunk_size=chunk_size)
+        units = walk_sheets(raw_spans, excel_mode=False)
     elif fmt == "txt":
-        units = walk_txt(raw_spans, chunk_size=chunk_size)
+        units = walk_txt(raw_spans)
     elif fmt == "md":
         units = _walk_md(raw_spans)
     elif fmt == "html":
@@ -101,10 +99,7 @@ def extract_doc(
 
 
 def safe_extract_doc(
-    raw_spans: list[dict],
-    fmt: str | None = None,
-    chunk_size: int = CHUNK_SIZE,
-    plan: str | None = None,
+    raw_spans: list[dict], fmt: str | None = None, plan: str | None = None
 ) -> list[dict]:
     """extract_doc with per-document error isolation: a malformed file yields
     a single diagnostic span (kind='error', order=-1) instead of killing the
@@ -115,7 +110,7 @@ def safe_extract_doc(
     span-equality contract covers failing docs too.
     """
     try:
-        return extract_doc(raw_spans, fmt, chunk_size, plan)
+        return extract_doc(raw_spans, fmt, plan)
     except Exception as e:  # noqa: BLE001 — any kernel error = this doc Failed
         return [
             {

@@ -88,7 +88,6 @@ def write_store(
     store: DataFrame,
     path: str,
     est_bytes: int | None = None,
-    min_files: int | None = None,
 ) -> None:
     """Materialize the store with a REBALANCE exchange before the write —
     the Iceberg `write.distribution-mode` analog.
@@ -105,15 +104,12 @@ def write_store(
 
     File-count sizing: est_bytes/TARGET_FILE_BYTES (pass table-stats bytes
     at scale — at 100 TB that is ~800k x 128 MB files), floored at
-    min_files (default shuffle.partitions/4) so the writer stage keeps
-    enough parallelism on small inputs.  AQE's REBALANCE hint was tried and
+    shuffle.partitions/4 so the writer stage keeps enough parallelism on
+    small inputs.  AQE's REBALANCE hint was tried and
     rejected: it sizes by in-memory estimates and left 64 files where 16
     were right."""
     spark = store.sparkSession
-    if min_files is None:
-        min_files = max(
-            1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4
-        )
+    min_files = max(1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4)
     n = int(max(min_files, (est_bytes or 0) // TARGET_FILE_BYTES))
     # Row-group sizing was A/B'd and rejected (r06): shrinking
     # parquet.block.size so each ~4 MB store file splits into several row

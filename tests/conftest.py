@@ -6,7 +6,6 @@ import py4j.clientserver
 import pytest
 
 from qs_spark.kernels.dispatch import safe_extract_doc
-from qs_spark.kernels.sheet_kernel import CHUNK_SIZE
 from qs_spark.session import get_spark
 
 
@@ -44,10 +43,10 @@ def count_py4j_commands(fn):
     return out, sent[0]
 
 
-def oracle_extract(docs: list[tuple[str, list[dict]]], chunk_size: int = CHUNK_SIZE) -> pd.DataFrame:
+def oracle_extract(docs: list[tuple[str, list[dict]]]) -> pd.DataFrame:
     """Single-threaded golden oracle over (doc_id, raw_spans) pairs."""
     rows = []
     for did, spans in docs:
-        for u in safe_extract_doc(spans, None, chunk_size):
+        for u in safe_extract_doc(spans):
             rows.append((did, u["order"], u["kind"], u["text"], u["media_ref"]))
     return pd.DataFrame(rows, columns=["doc_id", "order", "kind", "text", "media_ref"])

@@ -1,7 +1,9 @@
 """Golden end-to-end: distributed extraction == single-threaded oracle, on the
 synthetic interleaved corpus, under (kind, text, media_ref, order) equality
-(the north-rule invariant).  chunk_size is lowered so sheet chunk boundaries
-are exercised in-corpus.
+(the north-rule invariant), at the reference chunk size (the only one the
+engine runs).  Docs that span several chunks at that budget (a PURE-path
+sheet, a pandas-path sheet, a txt doc) are built by hand: the corpus's
+sheets fit one chunk.
 """
 
 import pandas as pd
@@ -11,7 +13,6 @@ from qs_spark.corpus import corpus_df, gen_doc
 from qs_spark.extract import extract_spans
 
 N_DOCS = 400
-CHUNK = 1500  # small budget -> multi-chunk sheets in the corpus
 
 KEY = ["doc_id", "order", "kind", "text", "media_ref"]
 
@@ -23,9 +24,59 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def test_golden_span_equality(spark):
-    got = _canon(extract_spans(corpus_df(spark, N_DOCS), chunk_size=CHUNK).toPandas())
-    want = _canon(oracle_extract([gen_doc(i) for i in range(N_DOCS)], chunk_size=CHUNK))
+    got = _canon(extract_spans(corpus_df(spark, N_DOCS)).toPandas())
+    want = _canon(oracle_extract([gen_doc(i) for i in range(N_DOCS)]))
     assert len(got) == len(want)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def _multi_chunk_docs():
+    """Three docs whose rendering exceeds the reference budget: an
+    in-grammar xlsx sheet (the PURE chunker), a numeric csv sheet (the
+    pandas chunker) and a txt doc."""
+    sheet = ["name_a,label b,tag_c"] + [
+        f"row_{i},word w{i % 97},item_{i % 13} x" for i in range(4000)
+    ]
+    csv = ["qty,price,total"] + [
+        f"{1000000 + i * 7919},{i * 1234.56789:.5f},{i * 98765432101}" for i in range(3000)
+    ]
+    txt = " ".join(f"Sentence number {i} says something plain." for i in range(3000))
+    return [
+        (did, [{"kind": kind, "text": text, "media_ref": "", "offset": 0}])
+        for did, kind, text in (
+            ("d_sheet", "sheet_rows", "\n".join(sheet)),
+            ("d_csv", "csv_rows", "\n".join(csv)),
+            ("d_txt", "txt", txt),
+        )
+    ]
+
+
+def test_multi_chunk_docs_at_reference_budget(spark, tmp_path):
+    """Docs that span several chunks at CHUNK_SIZE extract identically on
+    the JVM-scan and the native path."""
+    from qs_spark.extract import (
+        DOC_SCHEMA,
+        SIZE_CLASS_COL,
+        extract_spans_native,
+        with_size_class,
+    )
+    from qs_spark.kernels.sheet_kernel import _pure_sheet_chunks
+
+    docs = _multi_chunk_docs()
+    # the two sheets take the two chunker paths
+    assert _pure_sheet_chunks(docs[0][1][0]["text"], True) is not None
+    assert _pure_sheet_chunks(docs[1][1][0]["text"], False) is None
+    want = _canon(oracle_extract(docs))
+    assert "error" not in set(want["kind"])
+    assert want.groupby("doc_id").size().to_dict() == {
+        "d_csv": 2, "d_sheet": 2, "d_txt": 2
+    }
+
+    df = spark.createDataFrame(docs, DOC_SCHEMA)
+    pd.testing.assert_frame_equal(_canon(extract_spans(df).toPandas()), want)
+    path = str(tmp_path / "multi_chunk.parquet")
+    with_size_class(df).drop("fmt").write.partitionBy(SIZE_CLASS_COL).parquet(path)
+    got = _canon(extract_spans_native(spark, path).toPandas())
     pd.testing.assert_frame_equal(got, want)
 
 

@@ -1,8 +1,8 @@
 """Native-scan extraction path (extract.extract_spans_native).
 
 The native path must be row-identical to the JVM-scan path on every input
-it accepts, fall back to the JVM path when the table layout can't be
-trusted, and plan splits/bins that cover the input exactly once.  The
+it accepts, refuse a table whose layout can't be trusted, and plan
+splits/bins that cover the input exactly once.  The
 equality tests are the contract that lets bench/jobs swap the scan path
 without touching correctness entries (x33/q61 keep oracling the JVM path).
 """
@@ -138,15 +138,11 @@ def test_native_matches_jvm_path_on_corpus(spark):
     assert nat == jvm
 
 
-def test_native_reads_a_layout_classed_at_another_threshold(
-    spark, tmp_path, monkeypatch
-):
+def test_native_reads_a_layout_classed_at_another_threshold(spark, tmp_path):
     """Another writer classed its docs at threshold 8, so a 30-page pdf
     (small at the engine's threshold) sits in the mega partition.  The
-    layout is read natively, not through the JVM fallback, with the rows
-    extract_spans gives: size_class only routes docs."""
-    import qs_spark.extract as extract
-
+    layout is read natively with the rows extract_spans gives: size_class
+    only routes docs."""
     big = [("d_big", [_span("pdf_text", f"page {i}", i) for i in range(30)])]
     small = [("d_small", [_span("md", "tiny", 0)])]
     path = tmp_path / "classed_at_8.parquet"
@@ -159,11 +155,6 @@ def test_native_reads_a_layout_classed_at_another_threshold(
     assert _rows(
         extract_spans(spark.read.parquet(str(path)), repartition_input=False)
     ) == ref
-
-    def fallback(*args, **kwargs):
-        raise AssertionError("extract_spans_native took the JVM fallback")
-
-    monkeypatch.setattr(extract, "extract_spans", fallback)
     out = _rows(extract_spans_native(spark, str(path)))
     assert out == ref
     assert [r[:5] for r in out] == _oracle_rows(big + small)
@@ -172,8 +163,9 @@ def test_native_reads_a_layout_classed_at_another_threshold(
     assert native_scan_table(spark, str(path), 8) is None
 
 
-def test_native_falls_back_on_a_plain_table(spark, tmp_path):
-    """A table without the size_class layout goes through extract_spans."""
+def test_native_rejects_a_plain_table(spark, tmp_path):
+    """A table without the size_class layout raises, naming the path; the
+    caller's generic route, extract_spans, extracts it."""
     docs = [("d_big", [_span("pdf_text", f"page {i}", i) for i in range(70)])] + [
         (f"d_small_{k}", [_span("md", f"note {k}", 0)]) for k in range(3)
     ]
@@ -181,8 +173,9 @@ def test_native_falls_back_on_a_plain_table(spark, tmp_path):
     path = str(tmp_path / "plain.parquet")
     df.write.parquet(path)
     assert native_scan_table(spark, path, DEFAULT_SPLIT_THRESHOLD) is None
-    out = _rows(extract_spans_native(spark, path))
-    assert out == _rows(extract_spans(df, repartition_input=False))
+    with pytest.raises(ValueError, match="plain.parquet"):
+        extract_spans_native(spark, path)
+    out = _rows(extract_spans(df, repartition_input=False))
     assert [r[:5] for r in out] == _oracle_rows(docs)
 
 
@@ -209,32 +202,27 @@ def test_native_hostile_table(spark, tmp_path):
     assert out == ref
 
 
-def test_native_mega_schema_read_from_a_mega_footer(spark, tmp_path):
-    """The partitions' files may come from different writers: here the
-    small files and a light mega file store spans.offset as int32, the
-    heavy mega file as int64.  Spark reads only the heavy (split) mega, so
-    its read must use that file's footer schema, not the small one's nor
-    the light mega's (which sorts first and extracts in the kernel wave)."""
-
+@pytest.mark.parametrize(
+    "offsets", [(pa.int32(), pa.int64()), (pa.int64(), pa.int32())], ids=["a32_b64", "a64_b32"]
+)
+def test_native_split_megas_from_two_writers(spark, tmp_path, offsets):
+    """Mega files may come from different writers: a.parquet and b.parquet
+    store spans.offset as int32 and int64, in either order.  Both are
+    heavier than a parallelism slot's share, so Spark reads both on the
+    split route, and its one read schema must type either file."""
     small = [(f"d_small_{k}", [_span("md", f"note {k}", 0)]) for k in range(6)]
-    light = [("d_mega_light", [_span("pdf_text", f"page {i}", i) for i in range(70)])]
-    heavy = [("d_mega", [_span("pdf_text", _words(-i, 10), i) for i in range(100)])]
-    path = tmp_path / "mixed_writers.parquet"
-    for cls, name, docs, offset in (
-        ("small", "part-0", small, pa.int32()),
-        ("mega", "a_light", light, pa.int32()),
-        ("mega", "b_heavy", heavy, pa.int64()),
-    ):
-        _write_pa(path / f"{SIZE_CLASS_COL}={cls}" / f"{name}.parquet", docs, offset)
-    spans = extract_spans_native(spark, str(path))
-    # the mega read is Spark's only on the split route
-    assert _mega_route(spans) == "split"
-
-    got = sorted(
-        (r.doc_id, r.order, r.kind, r.text, r.media_ref) for r in spans.collect()
-    )
-    assert {"d_mega", "d_mega_light"} <= {r[0] for r in got}
-    assert got == _oracle_rows(small + light + heavy)
+    megas = {
+        n: [(f"d_mega_{n}", [_span("pdf_text", _words(f"{n}{i}", 10), i) for i in range(100)])]
+        for n in "ab"
+    }
+    path = tmp_path / "two_writers.parquet"
+    _write_pa(path / f"{SIZE_CLASS_COL}=small" / "part-0.parquet", small)
+    for (n, docs), offset in zip(megas.items(), offsets):
+        _write_pa(path / f"{SIZE_CLASS_COL}=mega" / f"{n}.parquet", docs, offset)
+    rows, plan = _executed_plan(extract_spans_native(spark, str(path)))
+    # Spark reads both mega files: both take the split route
+    assert "Window" in plan and "InMemoryFileIndex(2 paths)" in plan, plan
+    assert [r[:5] for r in rows] == _oracle_rows(small + megas["a"] + megas["b"])
 
 
 def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
@@ -248,9 +236,9 @@ def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
 
     spans = extract_spans_native(spark, path)
     assert _mega_route(spans) == "split"
-    write_store(build_store(spans), str(tmp_path / "store_native"), min_files=2)
+    write_store(build_store(spans), str(tmp_path / "store_native"))
     jvm = extract_spans(spark.read.parquet(path), repartition_input=False)
-    write_store(build_store(jvm), str(tmp_path / "store_jvm"), min_files=2)
+    write_store(build_store(jvm), str(tmp_path / "store_jvm"))
     got = _rows(spark.read.parquet(str(tmp_path / "store_native")))
     want = _rows(spark.read.parquet(str(tmp_path / "store_jvm")))
     assert {r[1] for r in got} == {"d_mega"} | {f"d_small_{k}" for k in range(8)}
@@ -341,7 +329,7 @@ def test_native_routes_a_mega_by_a_slots_share(spark, tmp_path):
 def test_pack_splits_lpt_covers_exactly_once():
     splits = [(f"f{i}", 0, -1) for i in range(17)]
     sizes = [(i * 37) % 101 + 1 for i in range(17)]
-    bins = _pack_splits_lpt(splits, sizes, n_bins=5)
+    bins = _pack_splits_lpt(list(zip(splits, sizes)), n_bins=5)
     assert len(bins) <= 5
     flat = [s for b in bins for s in b]
     assert sorted(flat) == sorted(splits)
@@ -359,16 +347,18 @@ def test_plan_native_splits_row_group_ranges(tmp_path):
     meta = pq.ParquetFile(f).metadata
     assert meta.num_row_groups == 7
     target = meta.row_group(0).total_byte_size * 2
-    splits = _plan_native_splits([f], target_bytes=target)
-    # ranges tile [0, 7) exactly, in order, no overlap
+    size = os.path.getsize(f)
+    splits = _plan_native_splits({f: size}, target_bytes=target)
+    # ranges tile [0, 7) exactly, in order, no overlap, each weighing target
     covered = []
-    for p, r0, r1 in splits:
-        assert p == f and r1 > r0
+    for (p, r0, r1), w in splits:
+        assert p == f and r1 > r0 and w == target
         covered.extend(range(r0, r1))
     assert covered == list(range(7))
     # small files under target never pay a footer read: sentinel whole-file
-    small = _plan_native_splits([f], target_bytes=10**9)
-    assert small == [(f, 0, -1)]
+    # weighted by the file's bytes
+    small = _plan_native_splits({f: size}, target_bytes=10**9)
+    assert small == [((f, 0, -1), size)]
 
 
 def test_native_reader_row_group_ranges_read_all(spark, tmp_path):
@@ -383,7 +373,7 @@ def test_native_reader_row_group_ranges_read_all(spark, tmp_path):
     f = str(tmp_path / "two_rg.parquet")
     pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), f, row_group_size=20)
     bins = [[(f, 0, 1)], [(f, 1, 2)]]
-    fn = _make_native_reader_fn(bins, chunk_size=102400)
+    fn = _make_native_reader_fn(bins)
     out = []
     for i in range(2):
         b = pa.RecordBatch.from_arrays([pa.array([i], pa.int32())], names=["bin_idx"])

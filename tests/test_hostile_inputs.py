@@ -122,6 +122,12 @@ def test_all_empty_bucket_still_commits(spark, tmp_path):
     out = run_extract_checkpointed(spark, df, cat, run_id="empty", n_buckets=4, buckets_per_wave=2)
     assert out.count() == 0
     assert committed_buckets(spark, cat) == {0, 1, 2, 3}
+    # the empty result carries the schema a run that wrote spans reads back
+    one = spark.createDataFrame([("d", [{"kind": "md", "text": "x", "media_ref": "", "offset": 0}])], SCHEMA)
+    cat_one = ParquetCatalog(str(tmp_path / "wh_one"))
+    full = run_extract_checkpointed(spark, one, cat_one, run_id="one", n_buckets=4, buckets_per_wave=2)
+    assert full.count() == 1
+    assert out.schema == full.schema
 
 
 def test_csv_with_quotes_and_commas(spark):

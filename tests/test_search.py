@@ -157,7 +157,7 @@ def test_write_store_rebalances_files(spark, tmp_path):
 
     st = _store(spark)
     path = str(tmp_path / "st")
-    write_store(st, path, est_bytes=0, min_files=4)
+    write_store(st, path, est_bytes=0)
     files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert len(files) == 4
     back = spark.read.parquet(path)
