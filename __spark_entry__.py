@@ -683,7 +683,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q46_embedding_near_dup"] = q46
 
     def q50(spark, sf):
-        return X.simhash_near_dup_pairs(_docs(spark, sf), max_hamming=4)
+        return X.simhash_near_dup_pairs(_docs(spark, sf))
 
     q["q50_simhash_near_dup"] = q50
 

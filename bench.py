@@ -119,11 +119,7 @@ def run_query_once(name: str, sf_dir: str, cores: int) -> dict:
         # you'd pass table statistics)
         est = input_bytes(input_df)
         t0 = time.time()
-        # QS_EXTRACT_SCAN=jvm pins the pre-r05 JVM scan for A/B control runs
-        if os.environ.get("QS_EXTRACT_SCAN") == "jvm":
-            spans = extract_spans(input_df, repartition_input=False)
-        else:
-            spans = extract_spans_native(spark, _table_path_of(input_df))
+        spans = extract_spans_native(spark, _table_path_of(input_df))
         store = build_store(spans)
         write_store(store, "/tmp/qs_bench_store", est_bytes=est)
         out["sec"] = round(time.time() - t0, 3)
@@ -197,7 +193,7 @@ def run_query_once(name: str, sf_dir: str, cores: int) -> dict:
             release_caches()
             t0 = time.time()
             out["survivors"] = (
-                X.near_dup_clusters(docs, jaccard_threshold=0.8)
+                X.near_dup_clusters(docs)
                 .filter("is_representative")
                 .count()
             )

@@ -134,7 +134,7 @@ def dedup_phases():
     sc.setJobDescription("bx: near_dup_clusters")
     timed(
         "cluster_survivors",
-        lambda: X.near_dup_clusters(docs, jaccard_threshold=0.8)
+        lambda: X.near_dup_clusters(docs)
         .filter("is_representative")
         .count(),
         out,
@@ -205,7 +205,7 @@ def plans(tag: str):
     dump("extract_store", build_store(extract_spans_native(spark, tp)))
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     dump("dedup_lsh", X.lsh_candidate_pairs(docs))
-    dump("dedup_cluster", X.near_dup_clusters(docs, jaccard_threshold=0.8))
+    dump("dedup_cluster", X.near_dup_clusters(docs))
     if os.path.isdir("/tmp/qs_bench_store"):
         store = spark.read.parquet("/tmp/qs_bench_store")
         dump("search_scan", S.search_rank(store, "spark join window"))

@@ -250,9 +250,8 @@ def corpus_parquet(spark, n_docs: int, path: str | None = None, n_buckets: int |
         derived-filter alternative re-decoded every byte a second time just
         to find the ~0.2% mega docs);
       - bucketing by xxhash64(doc_id) moves the "salted repartition" to
-        WRITE time: extraction scans co-located, size-balanced splits and
-        needs no per-job shuffle of raw payloads
-        (extract_spans(..., repartition_input=False)).
+        WRITE time: extract_spans_native reads co-located, size-balanced
+        files and needs no per-job shuffle of raw payloads.
     """
     import os
 

@@ -267,7 +267,7 @@ def _stitch(parts: DataFrame) -> DataFrame:
     )
 
 
-def extract_spans(df: DataFrame, repartition_input: bool = True) -> DataFrame:
+def extract_spans(df: DataFrame) -> DataFrame:
     """(doc_id, spans[]) -> ordered extracted spans.
 
     Page-local docs with more than DEFAULT_SPLIT_THRESHOLD raw spans are
@@ -285,12 +285,10 @@ def extract_spans(df: DataFrame, repartition_input: bool = True) -> DataFrame:
     callers with a generated/expensive source should materialize first (see
     corpus.corpus_parquet).
 
-    repartition_input=False skips the salted shuffle of raw payloads for
-    inputs that are ALREADY bucket-partitioned by doc_id hash (Iceberg
-    bucket(doc_id) layout / corpus_parquet): the salting then happened once
-    at write time and the kernel maps directly over scan splits — at 100 TB
-    this removes the single biggest data movement of the job.  Mega-doc
-    skew splitting is independent of this and always on.
+    The small branch always takes a salted shuffle (xxhash64(doc_id)) of
+    its raw payloads before the kernel, whatever the input's layout.  A
+    bucket-partitioned on-disk table skips that shuffle through
+    extract_spans_native, which maps its kernel over the table's files.
     """
     spark = df.sparkSession
     num_partitions = 4 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -306,9 +304,9 @@ def extract_spans(df: DataFrame, repartition_input: bool = True) -> DataFrame:
 
     # prune to exactly the kernel's columns BEFORE the Arrow exchange —
     # mapInArrow ships every input column to Python otherwise
-    small = small.select("doc_id", "spans", "fmt")
-    if repartition_input:
-        small = small.repartition(num_partitions, F.expr("xxhash64(doc_id)"))
+    small = small.select("doc_id", "spans", "fmt").repartition(
+        num_partitions, F.expr("xxhash64(doc_id)")
+    )
     small_out = small.mapInArrow(_make_doc_fn(_SPAN_PA_SCHEMA), schema=SPAN_SCHEMA)
 
     mega_out = _extract_mega(mega, num_partitions)
@@ -496,8 +494,8 @@ def extract_spans_native(spark, table_path: str) -> DataFrame:
     """extract_spans over an on-disk size_class-partitioned table, reading
     the small partition's parquet bytes pyarrow-natively inside the workers
     (see module note above).  Output is row-identical to
-    extract_spans(spark.read.parquet(table_path), repartition_input=False)
-    — pinned by test_extract_native.  A table without the trusted layout
+    extract_spans(spark.read.parquet(table_path)) — pinned by
+    test_extract_native.  A table without the trusted layout
     (native_scan_table returns None) raises ValueError: the caller decides
     whether extract_spans over a generic scan is what it wants.
 

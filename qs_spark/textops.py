@@ -2,10 +2,14 @@
 (doc_id, text, ...): deduplication, similarity search, text analysis.
 
 These are the 100 TB-pipeline additions the north rule asks for beyond the
-reference's own surface.  Everything is built from JVM-side column
-expressions (no Python in the hot path); hashes use md5-hex-prefix -> bigint
-so the DuckDB oracle can reproduce them exactly
+reference's own surface.  Most operators are JVM-side column expressions;
+the two text-heavy near-dup stages, the sketch (fingerprint + MinHash) and
+the exact-Jaccard verify, are Arrow-batched pandas kernels whose output
+equals the column-expression form (kept as the test oracle).  Hashes use
+md5-hex-prefix -> bigint so the DuckDB oracle can reproduce them exactly
 (Spark: conv(substr(md5(x),1,15),16,10) == DuckDB: ('0x'||substr(md5(x),1,15))::bigint).
+The near-dup operators take only their input; their tuning is the module
+constants below (shingle width, bands, bucket cap, thresholds, tiers).
 
 Scale notes per op:
   - exact dedup: single hash-aggregate shuffle on the 60-bit fingerprint.
@@ -36,12 +40,16 @@ from qs_spark.session import input_bytes
 
 MINHASH_K = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
+# word n-gram width of every shingle, sketch and verify alike (_shingles)
+SHINGLE_N = 3
 # 32 bits: wide enough that hamming<=k pairs are REAL near-dups (16 bits
 # made most pairs hash noise) and that pigeonhole bands carry 6-7 bits each
 # (64-128 bucket values per band — bucket-join fan-out stays bounded as the
 # corpus grows); still cheap as 32 JVM-side sum aggregates and fully
 # reproducible in the DuckDB oracle's BIGINT arithmetic
 SIMHASH_BITS = 32
+# simhash_near_dup_pairs keeps pairs differing in at most this many bits
+SIMHASH_MAX_HAMMING = 4
 
 
 def h60(col):
@@ -72,11 +80,22 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
 MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne prime)
 
 
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
-    """K-permutation MinHash over word-3-gram shingles: (doc_id, mh0..mh{k-1}),
-    doc_sketches' signature columns with null-text docs dropped (a null
-    text is the only source of a null signature), matching the r02 explode
-    form's semantics.
+def _shingles(text: str) -> set[str]:
+    """The distinct word SHINGLE_N-grams of a norm_text()-normalized text:
+    the one shingle rule of the sketch and verify kernels (the
+    column-expression oracle in tests/test_textops.py pins it).  Split on
+    a single space (norm_text collapsed runs already; a leading or
+    trailing space yields an empty token, as F.split does); a text of
+    fewer than SHINGLE_N tokens is one whole-text shingle."""
+    toks, n = text.split(" "), SHINGLE_N
+    return {" ".join(toks[i : i + n]) for i in range(max(1, len(toks) - n + 1))}
+
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """MINHASH_K-permutation MinHash over word-SHINGLE_N-gram shingles:
+    (doc_id, mh0..mh{MINHASH_K-1}), doc_sketches' signature columns with
+    null-text docs dropped (a null text is the only source of a null
+    signature), matching the r02 explode form's semantics.
 
     One md5 per shingle, split into two 60-bit halves h1/h2; permutation i is
     (h1 + i*h2) mod P (Kirsch-Mitzenmacher double hashing, 2006 — k
@@ -95,13 +114,14 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataF
     test_minhash_kernel_matches_jvm_exprs), and the kernel is row-local —
     no shuffle, embarrassingly parallel at 100 TB.
     """
-    return doc_sketches(docs, k, n).where("mh0 IS NOT NULL").drop("fp")
+    return doc_sketches(docs).where("mh0 IS NOT NULL").drop("fp")
 
 
-def doc_sketches(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
+def doc_sketches(docs: DataFrame) -> DataFrame:
     """ONE full-text scan emitting BOTH dedup sketches: the exact-dup
-    fingerprint (md5 of the normalized text) and the k MinHash permutation
-    minima — (doc_id, fp, mh0..mh{k-1}), one row per input row.
+    fingerprint (md5 of the normalized text) and the MINHASH_K MinHash
+    permutation minima — (doc_id, fp, mh0..mh{MINHASH_K-1}), one row per
+    input row.
 
     Why fused (r05): near_dup_clusters previously paid two full-corpus text
     evaluations — the JVM fingerprint projection and the signature kernel —
@@ -120,6 +140,7 @@ def doc_sketches(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
 
     from pyspark.sql import types as T
 
+    k = MINHASH_K
     id_field = docs.schema["doc_id"]
     schema = T.StructType(
         [T.StructField("doc_id", id_field.dataType), T.StructField("fp", T.StringType())]
@@ -166,11 +187,7 @@ def doc_sketches(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
                 # (text is the norm_text() projection) -> bit-identical
                 # to fingerprint(), one digest per document.
                 fps.append(md5(text.encode("utf-8")).hexdigest())
-                toks = text.split(" ")  # pre-normalized upstream
-                if len(toks) < n:
-                    shs = {" ".join(toks)}
-                else:
-                    shs = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+                shs = _shingles(text)
                 m = len(shs)
                 h1 = np.empty(m, dtype=np.int64)
                 h2 = np.empty(m, dtype=np.int64)
@@ -231,11 +248,11 @@ def doc_sketches(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
     return inp.mapInPandas(kernel, schema)
 
 
-def lsh_buckets(sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K) -> DataFrame:
-    """Band the signature: bucket = md5 of the band's joined minhashes.
-    Bands unfold via ONE explode — a union of per-band selects would
-    re-execute the whole signature pipeline once per band."""
-    rows_per_band = k // bands
+def lsh_buckets(sigs: DataFrame) -> DataFrame:
+    """Band the signature into LSH_BANDS bands: bucket = md5 of the band's
+    joined minhashes.  Bands unfold via ONE explode — a union of per-band
+    selects would re-execute the whole signature pipeline once per band."""
+    rows_per_band = MINHASH_K // LSH_BANDS
     # ONE select via inline() (r06): the explode-struct-then-unpack form was
     # two selects — two full analyzer passes over the (deep) signature tree
     # per construction, ~0.1-0.2 s of driver wall on the sandbox dedup
@@ -251,7 +268,7 @@ def lsh_buckets(sigs: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K) -> 
                 for r in range(rows_per_band)
             ),
         )
-        for b in range(bands)
+        for b in range(LSH_BANDS)
     )
     return sigs.selectExpr("doc_id", f"inline(array({bands_sql}))")
 
@@ -307,11 +324,17 @@ def _capped_bucket_pairs(
     )
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    max_bucket_size: int = LSH_MAX_BUCKET,
-    sigs: DataFrame | None = None,
-) -> DataFrame:
+def _candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """Banding and the capped expansion: pairs (doc_a < doc_b) of signature
+    rows (doc_id, mh0..) sharing any band bucket, a bucket of more than
+    LSH_MAX_BUCKET members cut to a star from its min."""
+    return _capped_bucket_pairs(
+        lsh_buckets(sigs), ["band", "bucket"], "doc_id", LSH_MAX_BUCKET,
+        "doc_a", "doc_b",
+    )
+
+
+def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidates (doc_a < doc_b): pairs of exact-dup-cluster
     REPRESENTATIVES sharing any band bucket.
 
@@ -324,25 +347,16 @@ def lsh_candidate_pairs(
          bucket member, its min doc_id (a window over the sketch rows'
          fp, before banding — the bucket table is never re-shuffled by
          doc_id).
-      2. bucket cap: a (band, bucket) holding > max_bucket_size members (a
+      2. bucket cap: a (band, bucket) holding > LSH_MAX_BUCKET members (a
          near-identical template family) emits a STAR from its min doc_id
          instead of all pairs (_capped_bucket_pairs): O(m) output that
-         preserves connectivity for the connected-components consumer.
-
-    `sigs` is the representatives' signatures (doc_id, mh0..mh15), as
-    near_dup_clusters passes them; when absent they come from one
-    doc_sketches scan of `docs`."""
-    if sigs is None:
-        sigs = _rep_sigs(_with_rep(doc_sketches(docs)))
-    return _capped_bucket_pairs(
-        lsh_buckets(sigs), ["band", "bucket"], "doc_id", max_bucket_size,
-        "doc_a", "doc_b",
-    )
+         preserves connectivity for the connected-components consumer."""
+    return _candidate_pairs(_rep_sigs(_with_rep(doc_sketches(docs))))
 
 
-def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash: per token t with weight 1, bit j of h60(t) votes +-1;
-    fingerprint bit j = 1 iff the sum is > 0."""
+    fingerprint bit j (of SIMHASH_BITS) = 1 iff the sum is > 0."""
     toks = docs.select(
         "doc_id", F.explode(F.split(norm_text(), " ")).alias("tok")
     ).withColumn("h", h60(F.col("tok")))
@@ -350,11 +364,11 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
         F.sum(
             F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
     per_doc = toks.groupBy("doc_id").agg(*aggs)
     sim = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(F.col(f"b{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return per_doc.select("doc_id", sim.cast("bigint").alias("simhash"))
@@ -372,28 +386,26 @@ def _simhash_band_bounds(bits: int, n_bands: int) -> list[tuple[int, int]]:
     return bounds
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame, max_hamming: int = 3, bits: int = SIMHASH_BITS
-) -> DataFrame:
-    """SimHash near-dup: all pairs whose fingerprints differ in <= max_hamming
-    bits — GLOBAL, no group blocking.
+def simhash_near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """SimHash near-dup: all pairs whose fingerprints differ in <=
+    SIMHASH_MAX_HAMMING bits — GLOBAL, no group blocking.
 
-    Scale path (hamming-k pigeonhole): split the fingerprint into
-    (max_hamming + 1) contiguous bit-bands; any pair within hamming k differs
-    in at most k bands, so it matches EXACTLY on at least one band.  Candidate
-    generation is therefore a bucket-local equi-join on (band, band_value) —
-    never an all-pairs join — and exact hamming verifies each candidate.
-    Result is identical to brute force (the band join is lossless for
-    hamming <= max_hamming); residual skew risk is a hot band bucket, bounded
-    by band width (bits/(k+1) bits per band)."""
-    s = simhash(docs, bits)
-    n_bands = max_hamming + 1
+    Scale path (hamming-k pigeonhole, k = SIMHASH_MAX_HAMMING): split the
+    fingerprint into k + 1 contiguous bit-bands; any pair within hamming k
+    differs in at most k bands, so it matches EXACTLY on at least one band.
+    Candidate generation is therefore a bucket-local equi-join on (band,
+    band_value) — never an all-pairs join — and exact hamming verifies each
+    candidate.  Result is identical to brute force (the band join is
+    lossless for hamming <= k); residual skew risk is a hot band bucket,
+    bounded by band width (SIMHASH_BITS/(k+1) bits per band)."""
+    s = simhash(docs)
+    n_bands = SIMHASH_MAX_HAMMING + 1
     band_structs = [
         F.struct(
             F.lit(j).alias("band"),
             F.shiftright(F.col("simhash"), lo).bitwiseAND(F.lit((1 << w) - 1)).alias("val"),
         )
-        for j, (lo, w) in enumerate(_simhash_band_bounds(bits, n_bands))
+        for j, (lo, w) in enumerate(_simhash_band_bounds(SIMHASH_BITS, n_bands))
     ]
     b = s.select(
         "doc_id", "simhash", F.explode(F.array(*band_structs)).alias("bb")
@@ -408,94 +420,80 @@ def simhash_near_dup_pairs(
             F.col("b.doc_id").alias("doc_b"),
             ham.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()  # a pair can agree on several bands
     )
 
 
-def _pair_shingle_stats(n: int):
+def _pair_shingle_stats(batches):
     """mapInPandas kernel: pair sides (doc_a, doc_b, _t), two rows per pair
     -> (doc_a, doc_b, inter, uni) with inner-join semantics (a pair with an
     empty intersection — including a null text on either side — emits
     nothing).  A pair's first side waits for its second in a dict that
-    lives across the partition's Arrow batches.  Shingling is the MinHash
-    kernel's rule (doc_sketches; the column-expression oracle in
-    tests/test_textops.py pins it) on the pre-normalized text: split on a
-    single space (norm_text collapsed runs already; a leading/trailing
-    space yields an empty token, same as F.split), whole-text shingle when
-    fewer than n tokens, DISTINCT per doc."""
+    lives across the partition's Arrow batches.  Shingles are the MinHash
+    kernel's (_shingles) on the pre-normalized text."""
+    import pandas as pd
 
-    def shingle_set(text):
-        if text is None:
-            return None
-        toks = text.split(" ")
-        if len(toks) - (n - 1) <= 0:
-            return {" ".join(toks)}
-        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    waiting: dict = {}  # (doc_a, doc_b) -> the first side's text
+    for pdf in batches:
+        rows = []
+        # batch-local shingle memo (r06): a doc in k candidate pairs
+        # used to be re-shingled k times; pair multiplicity per doc is
+        # bounded by bands x bucket cap, and near-dup texts recur by
+        # construction, so the memo (keyed on the text object) turns
+        # repeats into dict hits.  Bounded by the batch's distinct
+        # texts; output unchanged.
+        memo: dict = {}
 
-    def kernel(batches):
-        import pandas as pd
+        def cached(text):
+            s = memo.get(text)
+            if s is None and text is not None:
+                s = memo[text] = _shingles(text)
+            return s
 
-        waiting: dict = {}  # (doc_a, doc_b) -> the first side's text
-        for pdf in batches:
-            rows = []
-            # batch-local shingle memo (r06): a doc in k candidate pairs
-            # used to be re-shingled k times; pair multiplicity per doc is
-            # bounded by bands x bucket cap, and near-dup texts recur by
-            # construction, so the memo (keyed on the text object) turns
-            # repeats into dict hits.  Bounded by the batch's distinct
-            # texts; output unchanged.
-            memo: dict = {}
-
-            def cached(text):
-                s = memo.get(text)
-                if s is None and text not in memo:
-                    s = shingle_set(text)
-                    memo[text] = s
-                return s
-
-            for da, db, t in zip(pdf["doc_a"], pdf["doc_b"], pdf["_t"]):
-                key = (da, db)
-                if key not in waiting:
-                    waiting[key] = t
-                    continue
-                sa, sb = cached(waiting.pop(key)), cached(t)
-                if not sa or not sb:
-                    continue
-                inter = len(sa & sb)
-                if inter:
-                    rows.append((da, db, inter, len(sa) + len(sb) - inter))
-            yield pd.DataFrame(rows, columns=["doc_a", "doc_b", "inter", "uni"])
-
-    return kernel
+        for da, db, t in zip(pdf["doc_a"], pdf["doc_b"], pdf["_t"]):
+            key = (da, db)
+            if key not in waiting:
+                waiting[key] = t
+                continue
+            sa, sb = cached(waiting.pop(key)), cached(t)
+            if not sa or not sb:
+                continue
+            inter = len(sa & sb)
+            if inter:
+                rows.append((da, db, inter, len(sa) + len(sb) - inter))
+        yield pd.DataFrame(rows, columns=["doc_a", "doc_b", "inter", "uni"])
 
 
-# candidate pairs up to which ngram_jaccard_pairs broadcasts their sides
+# candidate pairs up to which _jaccard_verify broadcasts their sides
 _BROADCAST_CANDS = 2_000_000
 # symmetric edges up to which connected_components' loop hints its joins
 _BROADCAST_EDGES = 2_000_000
+# pairs up to which connected_components runs its driver-local union-find
+_LOCAL_EDGES = 200_000
+# rounds after which connected_components' distributed loop gives up
+_MAX_ROUNDS = 50
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    max_bucket_size: int = LSH_MAX_BUCKET,
-    sigs: DataFrame | None = None,
-) -> DataFrame:
-    """n-gram Jaccard over LSH pairs; collects up to _BROADCAST_CANDS + 1
-    candidate pairs to the driver when called.
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Word-SHINGLE_N-gram Jaccard (doc_a, doc_b, jaccard) over the
+    lsh_candidate_pairs of `docs`; collects up to _BROADCAST_CANDS + 1
+    candidate pairs to the driver when called (_jaccard_verify's gate).
 
-    The scale path.  The collect is the broadcast gate below: it runs the
-    sketch + LSH pipeline when this function is called, even if the
-    returned DataFrame is never consumed.  `sigs` is passed through to
-    lsh_candidate_pairs (the representatives' signatures).  Precondition:
-    doc_id is unique in `docs` (the kernel pairs exactly two side rows per
-    pair, as _capped_bucket_pairs needs an id once per bucket).
-
-    Candidate pairs come from MinHash-LSH banding (lsh_candidate_pairs:
-    exact-dup representatives, hot buckets capped), so pair generation is
+    Candidate pairs come from MinHash-LSH banding (exact-dup
+    representatives, hot buckets capped), so pair generation is
     bucket-local.  Recall is the LSH band guarantee (pairs under the band
-    similarity threshold may be missed — by design); precision is exact.
+    similarity threshold may be missed — by design); precision is exact."""
+    return _jaccard_verify(docs, lsh_candidate_pairs(docs))
+
+
+def _jaccard_verify(docs: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact Jaccard of the candidate pairs `cand` (doc_a, doc_b) over the
+    texts of `docs`.  The scale path.  The probe below is the broadcast
+    gate: it runs the candidate plan when this function is called, even if
+    the returned DataFrame is never consumed.  Precondition: doc_id is
+    unique in `docs` (the kernel pairs exactly two side rows per pair, as
+    _capped_bucket_pairs needs an id once per bucket).
 
     Exact verify: each pair becomes two SIDE rows (doc_id, doc_a, doc_b);
     ONE join attaches each side's normalized text, and one Arrow-batched
@@ -524,7 +522,6 @@ def ngram_jaccard_pairs(
     unhinted join would sort-merge and shuffle the corpus text.  Above the
     gate the same plan runs unhinted, on sides exploded from the candidate
     DataFrame (its banding aggregate runs again)."""
-    cand = lsh_candidate_pairs(docs, max_bucket_size, sigs=sigs)
     probe = cand.limit(_BROADCAST_CANDS + 1).toArrow()
     if probe.num_rows <= _BROADCAST_CANDS:
         import pyarrow as pa
@@ -546,25 +543,20 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b", norm_text().alias("_t"))
         .repartition(nparts, "doc_a", "doc_b")
         .mapInPandas(
-            _pair_shingle_stats(n),
+            _pair_shingle_stats,
             f"doc_a {id_t}, doc_b {id_t}, inter long, uni long",
         )
         .selectExpr("doc_a", "doc_b", "round(inter / uni, 6) AS jaccard")
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iter: int = 50,
-    local_below: int = 200_000,
-) -> DataFrame:
-    """Cluster assignment for a near-dup pair graph — the stage every dedup
-    pipeline needs after candidate pairs: (node, cluster) where cluster is
-    the MIN node id reachable from it.  Two tiers with identical output (by
-    test): a driver-local union-find up to `local_below` pairs, and above it
-    one distributed loop.  While the symmetric edge table holds at most
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Cluster assignment for a near-dup pair graph (doc_a, doc_b) — the
+    stage every dedup pipeline needs after candidate pairs: (node, cluster)
+    where cluster is the MIN node id reachable from it.  Two tiers with
+    identical output (by test): a driver-local union-find up to
+    _LOCAL_EDGES pairs, and above it one distributed loop of at most
+    _MAX_ROUNDS rounds.  While the symmetric edge table holds at most
     _BROADCAST_EDGES rows the loop hints its three joins to broadcast: Spark
     sizes a join's output as the product of its inputs, so it never
     broadcasts the per-round message and parent tables by itself, and
@@ -600,7 +592,7 @@ def connected_components(
       - label init is FUSED into the first propagate: symmetric edges mean
         every node appears as dst, so labels0 = least(dst, min(src)) per dst
         — one aggregate replaces distinct + init-join + a full first round;
-      - below `local_below` edges the component computation runs as a
+      - below _LOCAL_EDGES edges the component computation runs as a
         DRIVER-LOCAL union-find over the collected edge list (path
         compression + union-by-min, so each root IS the component minimum).
         This moves exactly the bytes a broadcast join of the same graph
@@ -618,18 +610,18 @@ def connected_components(
         0.2 s for the raw probe (union-find needs neither symmetry nor
         distinctness).  Only a graph that overflows the local tier builds
         the symmetric edge table, where the loop's min-propagate needs it."""
-    raw = pairs.selectExpr(f"`{a}` AS src", f"`{b}` AS dst")
+    raw = pairs.selectExpr("doc_a AS src", "doc_b AS dst")
     spark = pairs.sparkSession
-    ntype = pairs.schema[a].dataType.simpleString()
+    ntype = pairs.schema["doc_a"].dataType.simpleString()
     schema = f"node {ntype}, cluster {ntype}"
     # ONE probe job sizes the graph AND, in the (overwhelmingly common) small
     # case, already IS the local tier's collect: if the limit didn't
     # truncate, tbl holds every pair and no count job runs at all.
-    tbl = raw.limit(local_below + 1).toArrow()
+    tbl = raw.limit(_LOCAL_EDGES + 1).toArrow()
     ne = tbl.num_rows
     if ne == 0:
         return spark.createDataFrame([], schema)
-    if ne <= local_below:
+    if ne <= _LOCAL_EDGES:
         import pyarrow as pa
 
         parent: dict = {}
@@ -651,7 +643,7 @@ def connected_components(
                 parent[rd] = rs  # union by MIN: every root is its comp min
         nodes = sorted(set(src) | set(dst))
         # broadcast hint (r06): this tier's result is bounded (<= 2 *
-        # local_below driver-local rows), and its consumers join it against
+        # _LOCAL_EDGES driver-local rows), and its consumers join it against
         # the full doc table — without the hint Spark picked a SortMergeJoin
         # whose two exchanges + sorts cost ~0.9 s of the dedup_cluster bench
         # on a 500-row build side.  The distributed tier returns unhinted
@@ -678,7 +670,7 @@ def connected_components(
         .agg(F.least(F.col("dst"), F.min("src")).alias("label"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         msgs = (
             edges.join(bc(labels), edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
@@ -712,20 +704,19 @@ def connected_components(
         labels = jumped.drop("_changed")
         if not changed:
             return labels.select("node", F.col("label").alias("cluster"))
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {_MAX_ROUNDS} rounds")
 
 
-def near_dup_clusters(
-    docs: DataFrame,
-    jaccard_threshold: float = 0.8,
-    n: int = 3,
-    max_bucket_size: int = LSH_MAX_BUCKET,
-) -> DataFrame:
+# near_dup_clusters links two representatives at this exact Jaccard or above
+NEAR_DUP_JACCARD = 0.8
+
+
+def near_dup_clusters(docs: DataFrame) -> DataFrame:
     """End-to-end near-dup clustering — the operator a training-data pipeline
     actually runs to de-duplicate a corpus: exact-dup clusters + LSH
-    candidates verified by exact n-gram Jaccard >= threshold -> connected
-    components -> (doc_id, cluster, is_representative).  Keep rows with
-    is_representative to drop duplicates.  Every stage is the bucket-local /
+    candidates verified by exact n-gram Jaccard >= NEAR_DUP_JACCARD ->
+    connected components -> (doc_id, cluster, is_representative).  Keep
+    rows with is_representative to drop duplicates.  Every stage is the bucket-local /
     capped scale path documented on its function.
 
     ONE text scan (doc_sketches: fingerprint + minhash in one kernel pass)
@@ -738,14 +729,13 @@ def near_dup_clusters(
     is the min doc_id of its fp group (null texts form one group), so a
     doc's cluster is its rep's component min, or its rep when the rep has
     no near edge.  The exact-copy edges never enter the collected graph.
-    The sketches keep the minhash shingle width (the LSH banding contract);
-    `n` parameterizes only the exact-Jaccard verify.  The plan is built from
-    SQL text, one DataFrame call per step: each Column op is a py4j round
-    trip on the driver, ahead of the op's first job."""
+    The plan is built from SQL text, one DataFrame call per step: each
+    Column op is a py4j round trip on the driver, ahead of the op's first
+    job."""
     sk = scoped_cache(_with_rep(doc_sketches(docs)))
-    near_edges = ngram_jaccard_pairs(
-        docs, n, max_bucket_size, sigs=_rep_sigs(sk)
-    ).where(F.col("jaccard") >= jaccard_threshold).select("doc_a", "doc_b")
+    near_edges = _jaccard_verify(docs, _candidate_pairs(_rep_sigs(sk))).where(
+        F.col("jaccard") >= NEAR_DUP_JACCARD
+    ).select("doc_a", "doc_b")
     comp = connected_components(near_edges)
     # the output ids come from the cached sketches — no second text scan
     return (

@@ -39,3 +39,29 @@ def test_every_public_function_is_referenced():
         if words[name] <= len(re.findall(rf"\b{name}\b", def_line))
     )
     assert not unreferenced, unreferenced
+
+
+# Defaulted parameters of the public top-level functions in qs_spark/.
+# Raising the bound goes in CHANGES.md, with the reason.
+MAX_OPTIONS = 126
+
+
+def test_options_do_not_grow():
+    """Option ratchet: a defaulted parameter that every caller runs at one
+    value is a module constant, not an option."""
+    n = 0
+    for p in _py_files():
+        if p.relative_to(ROOT).parts[0] != "qs_spark":
+            continue
+        for node in ast.parse(p.read_text(encoding="utf-8")).body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) and not node.name.startswith("_"):
+                args = node.args
+                n += len(args.defaults) + sum(d is not None for d in args.kw_defaults)
+    assert n <= MAX_OPTIONS, (
+        f"{n} defaulted parameters on public functions in qs_spark/, bound "
+        f"{MAX_OPTIONS}: a new option needs two existing non-test callers that "
+        "set different values; otherwise make it a module constant.  Raising "
+        "the bound goes in CHANGES.md with the reason."
+    )

@@ -251,7 +251,7 @@ def test_size_class_partitioned_table_routes_identically(spark, tmp_path):
     assert SIZE_CLASS_COL in table.columns
     # both partitions materialized (doc 175 is a 400-page mega)
     assert table.filter(f"{SIZE_CLASS_COL} = 'mega'").count() > 0
-    got = _canon(extract_spans(table, repartition_input=False).toPandas())
+    got = _canon(extract_spans(table).toPandas())
     want = _canon(
         extract_spans(table.drop(SIZE_CLASS_COL)).toPandas()
     )  # derived-filter path

@@ -130,7 +130,7 @@ def test_native_matches_jvm_path_on_corpus(spark):
     assert path, "corpus must contain mega docs for this test to mean anything"
     table = df.inputFiles()[0].split("/size_class=")[0]
     table = table[7:] if table.startswith("file://") else table
-    jvm = _rows(extract_spans(df, repartition_input=False))
+    jvm = _rows(extract_spans(df))
     native = extract_spans_native(spark, table)
     assert _mega_route(native) == "whole"
     nat = _rows(native)
@@ -149,11 +149,11 @@ def test_native_reads_a_layout_classed_at_another_threshold(spark, tmp_path):
     _write_pa(path / f"{SIZE_CLASS_COL}=small" / "part-0.parquet", small)
     _write_pa(path / f"{SIZE_CLASS_COL}=mega" / "part-0.parquet", big)
     ref = _rows(
-        extract_spans(spark.createDataFrame(big + small, SCHEMA), repartition_input=False)
+        extract_spans(spark.createDataFrame(big + small, SCHEMA))
     )
     # the JVM path trusts the stored classing and agrees
     assert _rows(
-        extract_spans(spark.read.parquet(str(path)), repartition_input=False)
+        extract_spans(spark.read.parquet(str(path)))
     ) == ref
     out = _rows(extract_spans_native(spark, str(path)))
     assert out == ref
@@ -175,7 +175,7 @@ def test_native_rejects_a_plain_table(spark, tmp_path):
     assert native_scan_table(spark, path, DEFAULT_SPLIT_THRESHOLD) is None
     with pytest.raises(ValueError, match="plain.parquet"):
         extract_spans_native(spark, path)
-    out = _rows(extract_spans(df, repartition_input=False))
+    out = _rows(extract_spans(df))
     assert [r[:5] for r in out] == _oracle_rows(docs)
 
 
@@ -198,7 +198,7 @@ def test_native_hostile_table(spark, tmp_path):
     path = str(tmp_path / "hostile.parquet")
     _write_sc_table(df, path)
     out = _rows(extract_spans_native(spark, path))
-    ref = _rows(extract_spans(df, repartition_input=False))
+    ref = _rows(extract_spans(df))
     assert out == ref
 
 
@@ -237,7 +237,7 @@ def test_store_branch_annotation_writes_same_rows(spark, tmp_path):
     spans = extract_spans_native(spark, path)
     assert _mega_route(spans) == "split"
     write_store(build_store(spans), str(tmp_path / "store_native"))
-    jvm = extract_spans(spark.read.parquet(path), repartition_input=False)
+    jvm = extract_spans(spark.read.parquet(path))
     write_store(build_store(jvm), str(tmp_path / "store_jvm"))
     got = _rows(spark.read.parquet(str(tmp_path / "store_native")))
     want = _rows(spark.read.parquet(str(tmp_path / "store_jvm")))
@@ -267,7 +267,7 @@ def test_native_whole_megas_join_the_kernel_wave(spark, tmp_path):
     spans = extract_spans_native(spark, path)
     rows, plan = _executed_plan(spans)
     assert plan.count("MapInArrow") == 1 and "Window" not in plan, plan
-    assert rows == _rows(extract_spans(df, repartition_input=False))
+    assert rows == _rows(extract_spans(df))
     assert [r[:5] for r in rows] == _oracle_rows(small + megas)
     bad = [r for r in rows if r[0] == "d_mega_bad"]
     assert len(bad) == 1 and bad[0][1] == -1 and bad[0][2] == "error"
@@ -298,7 +298,7 @@ def test_native_routes_each_mega_file_by_its_bytes(spark, tmp_path):
     # one file, the heavy mega
     assert "Range (0, 3," in plan and "InMemoryFileIndex(1 paths)" in plan, plan
     assert rows == _rows(
-        extract_spans(spark.read.parquet(str(path)), repartition_input=False)
+        extract_spans(spark.read.parquet(str(path)))
     )
     assert [r[:5] for r in rows] == _oracle_rows(small + light + heavy)
 

@@ -11,7 +11,7 @@ from qs_spark import textops as X
 SF = "/root/testdata/sf0.001"
 
 
-def shingles_col(n: int = 3, text_col="text"):
+def shingles_col(n: int = X.SHINGLE_N, text_col="text"):
     """Word n-gram shingles (distinct per doc when used with explode+distinct)."""
     toks = F.split(X.norm_text(text_col), " ")
     k = F.size(toks) - (n - 1)
@@ -23,7 +23,7 @@ def shingles_col(n: int = 3, text_col="text"):
     )
 
 
-def minhash_signatures_expr(docs, k: int = X.MINHASH_K, n: int = 3):
+def minhash_signatures_expr(docs, k: int = X.MINHASH_K, n: int = X.SHINGLE_N):
     """Oracle: the pure-column-expression form of X.minhash_signatures (r02
     shape): shingle explode -> md5 split -> k min-aggregates.  The kernel
     must equal it (the same md5 double-hashing math the DuckDB oracles
@@ -63,7 +63,7 @@ def lsh_pairs_selfjoin(sigs, max_bucket_size: int):
     return all_pairs.unionByName(star_pairs).distinct()
 
 
-def near_dup_clusters_with_exact_edges(docs, jaccard_threshold=0.8, n=3):
+def near_dup_clusters_with_exact_edges(docs, jaccard_threshold):
     """Oracle: the r06 form of X.near_dup_clusters — the exact-copy edges
     (rep, doc_id) unioned with the Jaccard-verified near edges, one
     connected_components over the union, its labels joined back by
@@ -71,7 +71,7 @@ def near_dup_clusters_with_exact_edges(docs, jaccard_threshold=0.8, n=3):
     sk = X._with_rep(X.doc_sketches(docs))
     exact = sk.where("doc_id != rep").selectExpr("rep AS doc_a", "doc_id AS doc_b")
     near = (
-        X.ngram_jaccard_pairs(docs, n, sigs=X._rep_sigs(sk))
+        X._jaccard_verify(docs, X._candidate_pairs(X._rep_sigs(sk)))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("doc_a", "doc_b")
     )
@@ -289,7 +289,8 @@ def test_simhash_banded_equals_bruteforce(spark):
     import itertools
 
     d = _docs(spark).limit(80)
-    got = X.simhash_near_dup_pairs(d, max_hamming=4).toPandas()
+    assert X.SIMHASH_MAX_HAMMING == 4  # q50's oracle_sql() keeps <= 4
+    got = X.simhash_near_dup_pairs(d).toPandas()
     sims = X.simhash(d).toPandas().set_index("doc_id")["simhash"]
     expect = {
         (a, b)
@@ -303,7 +304,7 @@ def test_simhash_banded_equals_bruteforce(spark):
 def test_simhash_banded_plan_has_no_cartesian(spark):
     d = _docs(spark).limit(50)
     plan = (
-        X.simhash_near_dup_pairs(d, max_hamming=4)
+        X.simhash_near_dup_pairs(d)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan
@@ -448,7 +449,7 @@ def test_lsh_degenerate_dup_corpus_stays_linear(spark):
     assert not ((pairs.doc_a > 100_000) | (pairs.doc_b > 100_000)).any()
 
 
-def test_lsh_bucket_cap_emits_star_not_quadratic(spark):
+def test_lsh_bucket_cap_emits_star_not_quadratic(spark, monkeypatch):
     """Near-identical family (shared 200-token text + unique suffix) is NOT
     collapsed by exact dedup; the bucket cap must turn its all-pairs output
     into a connectivity-preserving star."""
@@ -457,20 +458,23 @@ def test_lsh_bucket_cap_emits_star_not_quadratic(spark):
         F.col("id").cast("int").alias("doc_id"),
         F.concat(F.lit(base_text + " u"), F.col("id").cast("string")).alias("text"),
     )
-    capped = X.lsh_candidate_pairs(docs, max_bucket_size=8).toPandas()
-    uncapped = X.lsh_candidate_pairs(docs, max_bucket_size=10_000).toPandas()
+    monkeypatch.setattr(X, "LSH_MAX_BUCKET", 8)
+    capped = X.lsh_candidate_pairs(docs).toPandas()
+    monkeypatch.setattr(X, "LSH_MAX_BUCKET", 10_000)
+    uncapped = X.lsh_candidate_pairs(docs).toPandas()
     assert len(uncapped) > 600  # the family really is all-pairs-dense
     assert len(capped) < len(uncapped) / 3  # star output is O(m), not m^2/2
     # connectivity: every member still reachable (appears in some pair)
     assert set(capped.doc_a) | set(capped.doc_b) == set(range(40))
 
 
-def test_lsh_pairs_at_the_cap_boundary_match_selfjoin_oracle(spark):
+def test_lsh_pairs_at_the_cap_boundary_match_selfjoin_oracle(spark, monkeypatch):
     """Hand-built signatures: a family of exactly `cap` members shares one
     bucket per band (all pairs), a family of cap + 1 members does too (a
     star from its min), one pair agrees on a single band only, and two
-    singletons agree on none.  lsh_candidate_pairs must equal the window +
-    self-join + star oracle, and the two families' expected shapes."""
+    singletons agree on none.  lsh_candidate_pairs' banding stage
+    (_candidate_pairs) must equal the window + self-join + star oracle,
+    and the two families' expected shapes."""
     cap = 6
     k = X.MINHASH_K
     rows = [(f"a{i:02d}", [7] * k) for i in range(cap)]
@@ -479,9 +483,9 @@ def test_lsh_pairs_at_the_cap_boundary_match_selfjoin_oracle(spark):
     rows += [("s0", list(range(k))), ("s1", list(range(100, 100 + k)))]
     schema = "doc_id string, " + ", ".join(f"mh{i} long" for i in range(k))
     sigs = spark.createDataFrame([(d, *mh) for d, mh in rows], schema)
-    docs = sigs.selectExpr("doc_id", "'' AS text")  # unused when sigs given
 
-    got = sorted(map(tuple, X.lsh_candidate_pairs(docs, cap, sigs=sigs).collect()))
+    monkeypatch.setattr(X, "LSH_MAX_BUCKET", cap)
+    got = sorted(map(tuple, X._candidate_pairs(sigs).collect()))
     want = sorted(map(tuple, lsh_pairs_selfjoin(sigs, cap).collect()))
     assert got == want
     a = [f"a{i:02d}" for i in range(cap)]
@@ -494,7 +498,7 @@ def test_lsh_pairs_at_the_cap_boundary_match_selfjoin_oracle(spark):
 
 
 def test_jaccard_verify_spreads_a_hub_over_partitions(spark, monkeypatch):
-    """A template family above max_bucket_size=8 makes its min doc_id a hub:
+    """A template family above a bucket cap of 8 makes its min doc_id a hub:
     every star pair shares it as doc_a.  The verify must not run them all in
     one task — no output partition may hold more than half of the pairs —
     and the pairs must equal the path above the broadcast gate."""
@@ -509,7 +513,8 @@ def test_jaccard_verify_spreads_a_hub_over_partitions(spark, monkeypatch):
     near = other.limit(1).selectExpr("1999 AS doc_id", "concat(text, ' extra') AS text")
     docs = family.unionByName(other).unionByName(near)
 
-    pairs = X.ngram_jaccard_pairs(docs, max_bucket_size=8)
+    monkeypatch.setattr(X, "LSH_MAX_BUCKET", 8)
+    pairs = X.ngram_jaccard_pairs(docs)
     per_part = [
         r["n"]
         for r in pairs.groupBy(F.spark_partition_id().alias("p"))
@@ -521,7 +526,7 @@ def test_jaccard_verify_spreads_a_hub_over_partitions(spark, monkeypatch):
     assert (1000, 1999) in {(a, b) for a, b, _ in got}  # an unrelated near-dup
     assert max(per_part) <= len(got) / 2, per_part
     monkeypatch.setattr(X, "_BROADCAST_CANDS", 0)
-    above = sorted(map(tuple, X.ngram_jaccard_pairs(docs, 3, 8).collect()))
+    above = sorted(map(tuple, X.ngram_jaccard_pairs(docs).collect()))
     assert above == got
 
 
@@ -787,24 +792,25 @@ def test_connected_components_tiers_identical(spark, monkeypatch):
     )
     pairs = spark.createDataFrame(edges, "doc_a int, doc_b int")
 
-    def run(**kw):
+    def run():
         return (
-            X.connected_components(pairs, **kw)
+            X.connected_components(pairs)
             .toPandas()
             .sort_values("node")
             .reset_index(drop=True)
         )
 
     via_local = run()
-    via_broadcast = run(local_below=0)
+    monkeypatch.setattr(X, "_LOCAL_EDGES", 0)
+    via_broadcast = run()
     monkeypatch.setattr(X, "_BROADCAST_EDGES", 0)
-    via_shuffle = run(local_below=0)
+    via_shuffle = run()
     assert via_local.equals(via_broadcast)
     assert via_local.equals(via_shuffle)
     assert set(via_local.cluster) == {1, 10, 100, 500}
 
 
-def test_near_dup_clusters_drop_duplicates(spark):
+def test_near_dup_clusters_drop_duplicates(spark, monkeypatch):
     """End-to-end dedup: exact copy + near copy cluster with the original;
     keeping representatives drops exactly the duplicates."""
     d = _docs(spark).limit(40).select("doc_id", "text")
@@ -814,7 +820,8 @@ def test_near_dup_clusters_drop_duplicates(spark):
         F.lit(900002).alias("doc_id"), F.concat("text", F.lit(" zzz")).alias("text")
     )
     planted = d.unionByName(exact).unionByName(near)
-    cl = X.near_dup_clusters(planted, jaccard_threshold=0.5).toPandas()
+    monkeypatch.setattr(X, "NEAR_DUP_JACCARD", 0.5)
+    cl = X.near_dup_clusters(planted).toPandas()
     assert len(cl) == 42
     byid = cl.set_index("doc_id")
     assert byid.loc[900001, "cluster"] == first.doc_id
@@ -884,14 +891,15 @@ def _planted_dups(spark):
     return d.unionByName(extra), src.doc_id
 
 
-def test_near_dup_clusters_reps_only_match_exact_edge_oracle(spark):
+def test_near_dup_clusters_reps_only_match_exact_edge_oracle(spark, monkeypatch):
     """Components over representatives only: the exact-copy edges no
     longer enter the graph, and the labels join back on rep.  The rows
     must equal the oracle that unions the exact edges into the graph —
     copies and the near copy with their source, each of the null-text and
     empty-text pairs with its own minimum."""
     docs, src = _planted_dups(spark)
-    got = sorted(map(tuple, X.near_dup_clusters(docs, jaccard_threshold=0.5).collect()))
+    monkeypatch.setattr(X, "NEAR_DUP_JACCARD", 0.5)
+    got = sorted(map(tuple, X.near_dup_clusters(docs).collect()))
     want = sorted(
         map(tuple, near_dup_clusters_with_exact_edges(docs, jaccard_threshold=0.5).collect())
     )
@@ -950,6 +958,49 @@ def test_jaccard_pairs_sides_meet_across_arrow_batches(spark, monkeypatch):
     assert len(default) == 190  # every pair of the 20-doc family
     assert small == default
     assert above == default
+
+
+def test_shingle_rule_at_the_short_end_matches_column_oracle(spark):
+    """One shingle rule serves both kernels, below SHINGLE_N tokens too.
+    Over an explicit all-pairs candidate table of docs with 0-4 tokens,
+    leading and trailing whitespace, repeated tokens, a case and
+    whitespace-run variant and a null text, _jaccard_verify's Jaccard of
+    each pair equals the set Jaccard of the shingles_col oracle rounded to
+    6; a pair with an empty intersection or a null side emits no row.
+    The sketch kernel's signatures equal the oracle's on the same docs."""
+    texts = {
+        1: "", 2: "a", 3: "a b", 4: "a b c", 5: "a b c d", 6: "  a b c ",
+        7: " a b", 8: "a b a b a b", 9: "A  B\tc", 10: "b c d",
+        11: "a b c d a b c d", 12: None,
+    }
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id int, text string")
+    ids = sorted(texts)
+    cand = spark.createDataFrame(
+        [(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]], "doc_a int, doc_b int"
+    )
+    got = {(a, b): j for a, b, j in X._jaccard_verify(docs, cand).collect()}
+
+    sh = {
+        r.doc_id: set(r.sh)
+        for r in docs.select("doc_id", shingles_col().alias("sh")).collect()
+        if r.sh is not None
+    }
+    assert sh[1] == {""} and sh[2] == {"a"} and sh[4] == sh[9] == {"a b c"}
+    assert sh[6] == {" a b", "a b c", "b c "} and sh[8] == {"a b a", "b a b"}
+    want = {
+        (a, b): round(len(sh[a] & sh[b]) / len(sh[a] | sh[b]), 6)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if a in sh and b in sh and sh[a] & sh[b]
+    }
+    assert got == want
+    assert not any(12 in p for p in got)
+    assert len(want) >= 8
+
+    a = X.minhash_signatures(docs).toPandas().sort_values("doc_id").reset_index(drop=True)
+    b = minhash_signatures_expr(docs).toPandas().sort_values("doc_id").reset_index(drop=True)
+    assert list(a.doc_id) == ids[:-1]
+    assert a.equals(b.astype(a.dtypes.to_dict()))
 
 
 def test_connected_components_driver_tier_without_arrow(spark):
