@@ -147,21 +147,6 @@ class BitReader:
 # ------------------------------------------------- emulation prevention
 
 
-def _escape_rbsp_ref(rbsp: bytes) -> bytes:
-    """Byte-walking reference implementation of spec 7.4.1 (the semantics
-    the fast path must match bit-for-bit; pinned by a hypothesis parity
-    test).  O(n) Python — too slow for multi-hundred-KB I_PCM slices."""
-    out = bytearray()
-    zeros = 0
-    for b in rbsp:
-        if zeros >= 2 and b <= 3:
-            out.append(3)
-            zeros = 0
-        out.append(b)
-        zeros = zeros + 1 if b == 0 else 0
-    return bytes(out)
-
-
 _ESC_RE = None
 
 
@@ -178,22 +163,6 @@ def escape_rbsp(rbsp: bytes) -> bytes:
 
         _ESC_RE = re.compile(rb"\x00\x00(?=[\x00-\x03])")
     return _ESC_RE.sub(b"\x00\x00\x03", rbsp)
-
-
-def _unescape_rbsp_ref(data: bytes) -> bytes:
-    """Byte-walking reference unescape (see _escape_rbsp_ref)."""
-    out = bytearray()
-    zeros = 0
-    i = 0
-    while i < len(data):
-        b = data[i]
-        if zeros >= 2 and b == 3 and i + 1 < len(data) and data[i + 1] <= 3:
-            zeros = 0  # the escape byte itself: drop it
-        else:
-            out.append(b)
-            zeros = zeros + 1 if b == 0 else 0
-        i += 1
-    return bytes(out)
 
 
 def unescape_rbsp(data: bytes) -> bytes:

@@ -37,7 +37,7 @@ Only the reference's text rendering exists: the consumer pins the loaders'
 text result type, so their to_markdown branch is never reached.
 
 Each sheet takes exactly one of two paths, both byte-equal to the reference
-(property-tested against chunk_frame_reference):
+(tested against the serial reference's greedy loop, tools/serial_reference.py):
 
   PURE: sheets whose data region provably parses to an all-object frame of
      plain strings (every cell [A-Za-z_][A-Za-z0-9_ ]*, no coercible
@@ -45,8 +45,7 @@ Each sheet takes exactly one of two paths, both byte-equal to the reference
      closed-form width model, direct render.  pandas' per-call parser
      construction (~1.3 ms/sheet regardless of size) was 55% of the whole
      extraction kernel's CPU; this path is ~15x cheaper per small sheet and
-     carries the generated corpus's sheets.  _pure_model_ok validates it
-     against read_csv + chunk_frame_reference once per process (see
+     carries the generated corpus's sheets.  It loads no pandas (see
      _pure_sheet_chunks for the full gate list).
   PANDAS: everything else — plain read_csv (with the retry loop), then
      chunk_frame: galloping + binary search over real to_string lengths,
@@ -61,7 +60,7 @@ from typing import TYPE_CHECKING
 
 import numpy as np
 
-if TYPE_CHECKING:  # annotations only: pandas loads with the first sheet
+if TYPE_CHECKING:  # annotations only: pandas loads with the first non-PURE sheet
     import pandas as pd
 
 CHUNK_SIZE = 102400  # ref: simple_reader_extractor.py:18 (excel/csv/txt)
@@ -70,8 +69,8 @@ CHUNK_SIZE = 102400  # ref: simple_reader_extractor.py:18 (excel/csv/txt)
 def _read_with_unnamed_retry(sheet_csv: str, excel_mode: bool) -> pd.DataFrame | None:
     """Parse + reproduce the all-Unnamed skiprows retry loop.
     EmptyDataError propagates where the reference lets it (csv mode).
-    The only pandas caller: the PURE path parses without it, so importing
-    the extraction modules stays pandas-free until the first sheet."""
+    The only pandas caller: the PURE path parses without it, so a process
+    stays pandas-free until its first sheet outside the PURE grammar."""
     import pandas as pd
 
     try:
@@ -97,34 +96,10 @@ def _read_with_unnamed_retry(sheet_csv: str, excel_mode: bool) -> pd.DataFrame |
     return df
 
 
-def chunk_frame_reference(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> list[str]:
-    """The reference's greedy chunker, byte-for-byte (incl. the dropped row).
-    O(rows^2) to_string calls — kept as the oracle; the pipeline uses the
-    equivalent O(rows) chunk_frame below."""
-    num_rows = df.shape[0]
-    _row = 0
-    chunks: list[str] = []
-    while _row < num_rows:
-        _p_row_num = 0
-        for i in range(_row, num_rows):
-            text = df.iloc[_row : i + 1].to_string(index=False)
-            if len(text) < chunk_size:
-                _p_row_num = i
-            else:
-                break
-        if _p_row_num + 1 <= _row and _row > 0:
-            raise ValueError(
-                f"row {_row} alone exceeds chunk_size={chunk_size}; "
-                "reference semantics would loop forever"
-            )
-        chunks.append(df.iloc[_row:_p_row_num].to_string(index=False))
-        _row = _p_row_num + 1
-    return chunks
-
-
 def chunk_frame(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> list[str]:
-    """Semantics-identical pandas-path chunker (byte-equal to chunk_frame_reference,
-    asserted in tests and by the independently-generated x33 golden).
+    """Semantics-identical pandas-path chunker (byte-equal to the reference's
+    O(rows^2) greedy loop, asserted in tests and by the independently-
+    generated x33 golden).
 
     len(df.iloc[a:i+1].to_string(index=False)) is monotone nondecreasing in i
     (more lines, column widths only grow), so the reference inner loop's
@@ -195,9 +170,6 @@ def chunk_frame(df: pd.DataFrame, chunk_size: int = CHUNK_SIZE) -> list[str]:
 # rows, duplicate or all-"Unnamed" labels that would exhaust the retry
 # loop) returns None and falls back to the pandas path, so error messages
 # and exotic inference stay byte-exact.
-# Validated once per process by _pure_model_ok against read_csv +
-# chunk_frame_reference on an adversarial battery; any mismatch disables the
-# path for the process (correctness then rides the pandas path, as before).
 
 
 def _escape(s: str) -> str:
@@ -270,8 +242,7 @@ def _chunk_from_cells(
 ) -> list[str]:
     """The reference's greedy chunk loop over pre-formatted slice-stable
     cells: closed-form boundary location + direct render, zero pandas calls.
-    Byte-equality with chunk_frame_reference is pinned by _pure_model_ok's
-    battery and the property tests.
+    Byte-equality with the reference's greedy loop is pinned by the tests.
 
     rows: row-major formatted cell strings; lens: (n_rows, n_cols) int64
     matrix of their lengths; empty_repr: pandas' empty-selection repr, the
@@ -307,8 +278,6 @@ _PURE_BAD_TOKENS = frozenset(
     ["true", "false", "na", "nan", "null", "none", "inf", "infinity"]
 )
 
-_PURE_OK: bool | None = None
-
 # byte-class LUT for the data block: letters, digits, '_', ' ', ',', '\n'
 # (the data-line charset above plus the two separators).  A cell's FIRST
 # byte must additionally be a letter/underscore — checked vectorized below.
@@ -340,9 +309,7 @@ def _pure_sheet_chunks(
     raggedness; byte-class LUTs -> charset; first-byte gate -> the rare
     coercible-token confirmation), replacing the former whole-block regex +
     per-row len() sweep.  Byte-equality with the pandas path is pinned by
-    _pure_model_ok's per-process battery and the hypothesis property test."""
-    if not _pure_model_ok():
-        return None
+    the in-grammar, decline and parity tests."""
     # NUL and BOM break the verbatim-header model BEFORE the data-block
     # charset gate runs: pandas' C parser truncates a header cell at '\x00'
     # ('\x00a' -> empty -> 'Unnamed: 0', which must trigger the retry loop
@@ -458,75 +425,6 @@ def _pure_sheet_chunks(
     hdr_len = np.array([len(h) for h in hdr], dtype="int64")
     empty_repr = "Empty DataFrame\nColumns: [%s]\nIndex: []" % ", ".join(labels)
     return _chunk_from_cells(rows, hdr, hdr_len, lens, empty_repr, chunk_size)
-
-
-def _pure_model_ok() -> bool:
-    """Once per process: byte-validate _pure_sheet_chunks against the pandas
-    reference (read_csv retry loop + the O(rows^2) chunk_frame_reference) on
-    an in-grammar battery, and pin that out-of-grammar inputs correctly
-    decline (return None) rather than claim authority."""
-    global _PURE_OK
-    if _PURE_OK is not None:
-        return _PURE_OK
-    _PURE_OK = True  # let _pure_sheet_chunks run inside the validation
-    in_grammar = [
-        # (text, excel_mode, chunk_size)
-        ("a,b_c\nfoo,bar baz\nqux x,y_z", True, CHUNK_SIZE),
-        ("a,b\nword one,two", False, CHUNK_SIZE),  # 1 row -> empty-repr quirk
-        (",,\nh0,h1,h2\ncell a,b,c\nd,e,f", True, CHUNK_SIZE),  # junk retry
-        (",,\n,,\nh0,h1,h2\naa,bb,cc\nd,e,f\ng,h,i", False, CHUNK_SIZE),
-        ("hdr_only,x", True, CHUNK_SIZE),  # 0 data rows: excel skip
-        ("hdr_only,x", False, CHUNK_SIZE),  # 0 data rows: csv -> no chunks
-        # multi-chunk with the dropped-row quirk (each row fits alone)
-        ("h_a,h_b\naaa,bbb\nccc,ddd\neee,fff\nggg,hhh", True, 30),
-        ("a,b\n" + "\n".join(f"w{i} x,yy zz" for i in range(30)), False, 90),
-        # rows too wide to pair -> consecutive empty-repr emissions
-        ("w0_col,x0,w1_col,x1\na b,c,d e,f\ng,h i,j,k", True, 50),
-        # labels that legitimately start with "Unnamed" vs the retry test
-        ("Unnamed_x,real_h\ncell,word", True, CHUNK_SIZE),
-        # retry loop exhausts in EXCEL mode: empty re-read -> sheet skipped
-        # (decidable without pandas; the csv twin raises EmptyDataError and
-        # is asserted to fall back below)
-        (",,\n,,", True, CHUNK_SIZE),
-    ]
-    out_of_grammar = [
-        'a,b\n"q",x',  # quotes
-        "a,b\nx,1",  # numeric cell
-        "a,b\nx,",  # empty cell
-        "a,b\nx,True",  # bool token
-        "a,b\nx,NaN",  # NA token
-        "a,b\nx,inf",  # inf token
-        "a,b\nx,y\n",  # trailing newline
-        "a,b\nx,y\n\nz,w",  # blank line
-        "a,a\nx,y",  # duplicate labels
-        "a,b\nx,y,z",  # ragged
-    ]
-    try:
-        for text, excel, cs in in_grammar:
-            got = _pure_sheet_chunks(text, excel, cs)
-            if got is None:
-                _PURE_OK = False
-                break
-            df = _read_with_unnamed_retry(text, excel)
-            want = [] if df is None else chunk_frame_reference(df, cs)
-            if got != want:
-                _PURE_OK = False
-                break
-        if _PURE_OK:
-            for text in out_of_grammar:
-                for excel in (True, False):
-                    if _pure_sheet_chunks(text, excel) is not None:
-                        _PURE_OK = False
-                        break
-                if not _PURE_OK:
-                    break
-        # csv-mode retry exhaustion must DECLINE so the pandas path raises
-        # EmptyDataError with its exact message (it lands in the error span)
-        if _PURE_OK and _pure_sheet_chunks(",,\n,,", False) is not None:
-            _PURE_OK = False
-    except Exception:
-        _PURE_OK = False
-    return _PURE_OK
 
 
 def walk_sheets(

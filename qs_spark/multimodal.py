@@ -2,7 +2,7 @@
 
 The training-data-pipeline view of media (round requirement): media payloads
 travel as `binary` columns with typed metadata; decode / feature-extract /
-resize / frame-sample run as Arrow-batched pandas kernels over mapInPandas.
+probe / frame-sample run as Arrow-batched pandas kernels over mapInPandas.
 
 Decode is REAL for every corpus format (round 5 closes the jpeg/mp4 stubs):
   - WAV: stdlib wave, 16-bit PCM
@@ -593,34 +593,6 @@ def probe_media(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(kernel, _PROBE_SCHEMA)
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("out_width", T.IntegerType()),
-        T.StructField("out_height", T.IntegerType()),
-        T.StructField("scale", T.DoubleType()),
-    ]
-)
-
-
-def plan_resize(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning (aspect-preserving, longest side -> max_side) — pure
-    column math on typed metadata, no decode needed: metadata-only passes
-    must NOT touch payload bytes (column pruning keeps the scan light)."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(max_side) / w, F.lit(max_side) / h, F.lit(1.0))
-    return media.filter(w.isNotNull()).select(
-        "media_ref",
-        w.alias("width"),
-        h.alias("height"),
-        F.round(w * scale).cast("int").alias("out_width"),
-        F.round(h * scale).cast("int").alias("out_height"),
-        F.round(scale, 6).alias("scale"),
-    )
 
 
 _FRAME_SCHEMA = T.StructType(

@@ -156,55 +156,3 @@ def cache_invalidate(spark: SparkSession, cat: ParquetCatalog, uid: str) -> None
     (upload file_upload.py:348, delete :642, metadata update
     file_searcher.py:183), so cached responses never outlive their index."""
     cat.delete_where(spark, CACHE_TABLE, F.col("__uid") == uid, ["__uid"])
-
-
-def cached_search(
-    cat: ParquetCatalog,
-    compute,
-    *,
-    uid: str,
-    query: str,
-    total_docs: int,
-    state: str | None = None,
-    exact_match: bool = False,
-    realm: dict | None = None,
-    now_ts: float = 0.0,
-    ttl: float = CACHE_TTL_SEC,
-) -> tuple[DataFrame, bool]:
-    """The full reference workflow around one search: lookup -> on miss,
-    compute() -> store -> return (results, was_hit).  `compute` is a thunk
-    returning the result DataFrame (search.search_rank partially applied);
-    it runs only on a miss, exactly like the reference (the search body is
-    skipped entirely on a hit)."""
-    from pyspark.sql import SparkSession as _S
-
-    spark = _S.getActiveSession()
-    hit = None
-    if spark is not None:
-        hit = cache_lookup(
-            spark,
-            cat,
-            uid=uid,
-            query=query,
-            total_docs=total_docs,
-            state=state,
-            exact_match=exact_match,
-            realm=realm,
-            now_ts=now_ts,
-            ttl=ttl,
-        )
-    if hit is not None:
-        return hit, True
-    results = compute()
-    cache_store(
-        cat,
-        results,
-        uid=uid,
-        query=query,
-        total_docs=total_docs,
-        state=state,
-        exact_match=exact_match,
-        realm=realm,
-        now_ts=now_ts,
-    )
-    return results, False

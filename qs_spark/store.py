@@ -41,14 +41,6 @@ _STORE_SQL = (
 )
 
 
-def failed_docs(spans: DataFrame) -> DataFrame:
-    """Docs whose extraction failed (safe_extract_doc error spans) — feeds
-    the Processing->Failed status write-back (registry.resolve_status, T2)."""
-    return spans.filter("kind = 'error'").selectExpr(
-        "doc_id", "text AS error", "'Failed' AS outcome"
-    )
-
-
 def build_store(
     spans: DataFrame,
     state: str = "Publish",

@@ -15,10 +15,6 @@ foreachBatch gives at-least-once per micro-batch; the dedup-on-read view
 of the checkpoint module's bucket overwrite.  Both stream entry points run
 on an availableNow trigger: a start processes the backlog that has arrived
 and stops, and the caller's next start resumes from the checkpoint.
-
-For event-time analytics over the `events` table we expose a windowed
-aggregation builder usable both in batch (tests/oracle) and with
-withWatermark on a stream.
 """
 
 from __future__ import annotations
@@ -139,124 +135,3 @@ def dedup_on_read(spans: DataFrame) -> DataFrame:
     doc's latest batch wins whole, then (doc_id, order) collapses same-batch
     physical replays."""
     return _latest_batch_per_doc(spans, "doc_id", ["doc_id", "order"])
-
-
-_FIRST_SEEN_OUT = "doc_id string, fingerprint bigint, bucket int"
-_FIRST_SEEN_BUCKETS = 16
-_FIRST_SEEN_STATE = "seen array<bigint>"
-
-
-def stateful_first_seen(docs_stream, bloom_bits: int | None = None):
-    """Custom stateful streaming operator (applyInPandasWithState): streaming
-    exact dedup — emit a doc only the FIRST time its content fingerprint is
-    seen, with the seen-set held in partitioned operator state that survives
-    restarts via the streaming checkpoint.
-
-    The reference's analog is the version-exists skip applied per upload
-    event (file_upload.py:85-95) — here as a continuous operator.  Keying by
-    fingerprint bucket (_FIRST_SEEN_BUCKETS of them) spreads state across
-    partitions.
-
-    bloom_bits: the 100 TB state shape — instead of the exact seen-set
-    (state grows with distinct docs), hold a per-bucket bloom filter of
-    `bloom_bits` bits packed into int64 words (STATE SIZE IS CONSTANT).
-    Two index functions by double hashing the 64-bit fingerprint, k=4 probes.
-    Guarantee flips from exact to one-sided: duplicates are ALWAYS
-    suppressed; a new doc may be falsely suppressed with the standard bloom
-    FP rate (size bloom_bits >= ~10 bits per expected distinct doc per
-    bucket for <1% FP)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = docs_stream.select(
-        "doc_id",
-        F.xxhash64(F.concat_ws("\x1f", F.transform("spans", lambda s: s["text"]))).alias(
-            "fingerprint"
-        ),
-    ).withColumn("bucket", F.pmod(F.col("fingerprint"), F.lit(_FIRST_SEEN_BUCKETS)).cast("int"))
-
-    def dedup_exact_fn(key, pdf_iter, state):
-        seen = set(state.get[0]) if state.exists else set()
-        out = []
-        for pdf in pdf_iter:
-            for did, fp in zip(pdf["doc_id"], pdf["fingerprint"]):
-                fp = int(fp)
-                if fp not in seen:
-                    seen.add(fp)
-                    out.append((did, fp, key[0]))
-        state.update((list(seen),))
-        import pandas as pd
-
-        yield pd.DataFrame(out, columns=["doc_id", "fingerprint", "bucket"])
-
-    n_words = ((bloom_bits or 0) + 63) // 64
-
-    def dedup_bloom_fn(key, pdf_iter, state):
-        # state words are signed int64; hash/probe in unsigned space
-        words = (
-            [int(w) & 0xFFFFFFFFFFFFFFFF for w in state.get[0]]
-            if state.exists
-            else [0] * n_words
-        )
-        out = []
-        for pdf in pdf_iter:
-            for did, fp in zip(pdf["doc_id"], pdf["fingerprint"]):
-                fp = int(fp)
-                ufp = fp & 0xFFFFFFFFFFFFFFFF
-                h1, h2 = ufp & 0xFFFFFFFF, (ufp >> 32) | 1  # odd second hash
-                idxs = [((h1 + k * h2) % bloom_bits) for k in range(4)]
-                if all((words[i >> 6] >> (i & 63)) & 1 for i in idxs):
-                    continue  # (probably) seen
-                for i in idxs:
-                    words[i >> 6] |= 1 << (i & 63)
-                out.append((did, fp, key[0]))
-        state.update(
-            ([w - (1 << 64) if w >= 1 << 63 else w for w in words],)
-        )
-        import pandas as pd
-
-        yield pd.DataFrame(out, columns=["doc_id", "fingerprint", "bucket"])
-
-    fn = dedup_bloom_fn if bloom_bits else dedup_exact_fn
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        fn,
-        outputStructType=_FIRST_SEEN_OUT,
-        stateStructType=_FIRST_SEEN_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def sessionized_event_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str | None = None
-) -> DataFrame:
-    """Gap-based sessionization via the BUILT-IN session_window — dynamic
-    per-key windows that merge while events arrive within `gap`.  Works in
-    batch (tests cross-validate it against the lag+running-sum form, q54)
-    and on a stream with withWatermark, where Spark bounds session state by
-    the watermark — the Structured Streaming native form of the operator."""
-    src = events.withWatermark("ts", watermark) if watermark else events
-    return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str | None = None
-) -> DataFrame:
-    """Tumbling-window counts per event_type; pass watermark on a stream for
-    bounded state + late-data handling."""
-    src = events.withWatermark("ts", watermark) if watermark else events
-    return (
-        src.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
-        )
-    )

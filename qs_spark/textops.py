@@ -26,9 +26,6 @@ Scale notes per op:
   - ANN: brute-force cosine is one scan + top-k (exact baseline); the LSH
     variant buckets by hyperplane signs so each probe touches ~N/2^H vectors;
     multiprobe flips lowest-margin bits first to recover recall.
-  - embedding near-dup: hyperplane-sign buckets per hash table, expanded
-    into pairs by the same capped (table, sig) aggregate as MinHash-LSH;
-    exact cosine only on candidates, vectors joined back by id.
 """
 
 from __future__ import annotations
@@ -290,47 +287,35 @@ def _rep_sigs(with_rep: DataFrame) -> DataFrame:
 LSH_MAX_BUCKET = 4096
 
 
-def _capped_bucket_pairs(
-    members: DataFrame, bucket: list[str], id_col: str, cap: int, a: str, b: str
-) -> DataFrame:
-    """Distinct pairs (a < b) of ids sharing a bucket, with a hot bucket
-    capped: a bucket of more than `cap` ids emits a STAR — every member
-    paired with the bucket's min id — instead of all pairs, so output stays
-    linear in hot buckets.  The min id is a hub kept apart from the ordinary
-    pairs (the Hybrid Edge Partitioner's high-degree vertex, SIGMOD 2021).
+def _candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """Banding and the capped expansion: distinct pairs (doc_a < doc_b) of
+    signature rows (doc_id, mh0..) sharing any band bucket, with a hot
+    bucket capped: a (band, bucket) of more than LSH_MAX_BUCKET members
+    emits a STAR — every member paired with the bucket's min doc_id —
+    instead of all pairs, so output stays linear in hot buckets.  The min id
+    is a hub kept apart from the ordinary pairs (the Hybrid Edge
+    Partitioner's high-degree vertex, SIGMOD 2021).
 
     Shape: ONE aggregate per bucket collects the sorted member ids, and two
     streaming generators expand it — posexplode gives each member its
     position i (only position 0 in a capped bucket, whose array is cut to
     its min), and explode(slice(ids, i + 2, ...)) pairs it with every later
-    member.  No cache and no self-join: the member table is consumed once,
+    member.  No cache and no self-join: the bucket table is consumed once,
     inside the aggregate's output stage.  A distinct() drops pairs that
     share several buckets.  (A single inline(flatten(transform(...)))
     generator builds every bucket's pair array before emitting a row; on a
-    4,000-member bucket it was about twice as slow.)
-
-    Precondition: an id appears at most once per bucket.  A repeated id
-    pairs with itself and counts twice toward the cap; a caller whose ids
-    can repeat drops the a = b pairs itself."""
+    4,000-member bucket it was about twice as slow.)"""
     return (
-        members.groupBy(*bucket)
-        .agg(F.expr(f"array_sort(collect_list({id_col}))").alias("ids"))
+        lsh_buckets(sigs)
+        .groupBy("band", "bucket")
+        .agg(F.expr("array_sort(collect_list(doc_id))").alias("ids"))
         .selectExpr(
             "ids",
-            f"posexplode(IF(size(ids) <= {int(cap)}, ids, slice(ids, 1, 1))) AS (i, {a})",
+            f"posexplode(IF(size(ids) <= {int(LSH_MAX_BUCKET)}, ids, slice(ids, 1, 1)))"
+            " AS (i, doc_a)",
         )
-        .selectExpr(a, f"explode(slice(ids, i + 2, size(ids) - i - 1)) AS {b}")
+        .selectExpr("doc_a", "explode(slice(ids, i + 2, size(ids) - i - 1)) AS doc_b")
         .distinct()
-    )
-
-
-def _candidate_pairs(sigs: DataFrame) -> DataFrame:
-    """Banding and the capped expansion: pairs (doc_a < doc_b) of signature
-    rows (doc_id, mh0..) sharing any band bucket, a bucket of more than
-    LSH_MAX_BUCKET members cut to a star from its min."""
-    return _capped_bucket_pairs(
-        lsh_buckets(sigs), ["band", "bucket"], "doc_id", LSH_MAX_BUCKET,
-        "doc_a", "doc_b",
     )
 
 
@@ -349,7 +334,7 @@ def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
          doc_id).
       2. bucket cap: a (band, bucket) holding > LSH_MAX_BUCKET members (a
          near-identical template family) emits a STAR from its min doc_id
-         instead of all pairs (_capped_bucket_pairs): O(m) output that
+         instead of all pairs (_candidate_pairs): O(m) output that
          preserves connectivity for the connected-components consumer."""
     return _candidate_pairs(_rep_sigs(_with_rep(doc_sketches(docs))))
 
@@ -492,8 +477,7 @@ def _jaccard_verify(docs: DataFrame, cand: DataFrame) -> DataFrame:
     texts of `docs`.  The scale path.  The probe below is the broadcast
     gate: it runs the candidate plan when this function is called, even if
     the returned DataFrame is never consumed.  Precondition: doc_id is
-    unique in `docs` (the kernel pairs exactly two side rows per pair, as
-    _capped_bucket_pairs needs an id once per bucket).
+    unique in `docs` (the kernel pairs exactly two side rows per pair).
 
     Exact verify: each pair becomes two SIDE rows (doc_id, doc_a, doc_b);
     ONE join attaches each side's normalized text, and one Arrow-batched
@@ -930,191 +914,6 @@ def ann_lsh_indexed(
     return _cosine_topk(hits, vec_col, qvec, k)
 
 
-def ivf_index(
-    embeddings: DataFrame,
-    nlist: int = 16,
-    vec_col: str = "embedding",
-    train_fraction: float = 1.0,
-):
-    """IVF coarse quantizer: k-means cells over the embedding space
-    (pyspark.ml KMeans, fixed seed -> deterministic).  Returns
-    (assigned_df with a `_cell` column, centers as list[list[float]]).
-
-    The assigned table is the INDEX — build once, write partitioned by
-    `_cell` (Iceberg `bucket`/identity partitioning), and every query scans
-    only its probed cells.
-
-    train_fraction < 1 is the 100 TB shape (r03 VERDICT #5): k-means is a
-    MULTI-PASS algorithm (one full scan per iteration), so fitting on the
-    whole corpus re-reads 100 TB ~20 times.  Fit the centroids on a
-    deterministic sample (k-means centroids converge on O(k·d/ε²) points —
-    a tiny fraction of any web corpus), then ASSIGN the full table in one
-    single-pass transform.  Recall characteristics are preserved: probing
-    examines the nearest nprobe cells regardless of where the centroids were
-    fit (tested: sampled-center assignment still satisfies the recall
-    gate)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    df = embeddings.withColumn("_v", array_to_vector(F.col(vec_col)))
-    if train_fraction >= 1.0:
-        train = df
-    else:
-        # content-hash sample, NOT df.sample: Bernoulli sampling is
-        # partition-layout-dependent (a different scan split -> different
-        # rows -> different centroids), while hashing the vector itself keeps
-        # the training set — and therefore the index — reproducible across
-        # layouts and cluster sizes.  Granularity: 1/1000.
-        keep = max(1, int(train_fraction * 1000))
-        train = df.filter(F.pmod(F.xxhash64(F.col(vec_col)), F.lit(1000)) < keep)
-        # r04 ADVICE: on small tables (or tiny fractions) the hash sample can
-        # hold fewer rows than KMeans needs — count it (one slim job over the
-        # sample, nothing at 100 TB scale vs the multi-pass fit it gates) and
-        # fall back to full-table training when the sample can't support
-        # nlist non-degenerate centroids (< 2 rows per centroid: the actual
-        # fit-failure/empty-cluster regime; a higher bar would silently
-        # override the caller's sampling intent on modest tables)
-        if train.count() < 2 * nlist:
-            train = df
-    model = KMeans(k=nlist, seed=7, featuresCol="_v", predictionCol="_cell").fit(train)
-    assigned = model.transform(df).drop("_v")
-    return assigned, [list(map(float, c)) for c in model.clusterCenters()]
-
-
-def ann_ivf_search(
-    assigned: DataFrame,
-    centers: list[list[float]],
-    qvec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF probe: rank the nprobe cells whose centroids are nearest the
-    query (driver-side — nlist floats), scan only those cells, exact-rank
-    inside.  Recall grows with nprobe; nprobe=nlist degenerates to brute
-    force."""
-    dists = [
-        sum((c - q) ** 2 for c, q in zip(center, qvec)) for center in centers
-    ]
-    probes = sorted(range(len(centers)), key=lambda i: dists[i])[: max(1, nprobe)]
-    return _cosine_topk(assigned.filter(F.col("_cell").isin(probes)), vec_col, qvec, k)
-
-
-def write_ivf_index(assigned: DataFrame, path: str) -> None:
-    """Materialize the IVF index partitioned by cell — the layout
-    ivf_index's docstring promises: one directory per k-means cell, so a
-    query's scan prunes to its nprobe probed cells (PartitionFilters),
-    mirroring write_ann_index / write_postings."""
-    n_cells = assigned.select("_cell").distinct().count()
-    (
-        assigned.repartition(max(1, n_cells // 2), F.col("_cell"))
-        .write.mode("overwrite")
-        .partitionBy("_cell")
-        .parquet(path)
-    )
-
-
-def ann_ivf_indexed(
-    spark,
-    path: str,
-    centers: list[list[float]],
-    qvec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF probe over a write_ivf_index table: identical result to
-    ann_ivf_search on the in-memory assignment (same probe selection + exact
-    rank), but reading only the probed cells' partitions."""
-    return ann_ivf_search(spark.read.parquet(path), centers, qvec, k, nprobe, vec_col)
-
-
-def embedding_near_dup_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.85,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    vec_col: str = "embedding",
-    max_bucket_size: int = LSH_MAX_BUCKET,
-) -> DataFrame:
-    """GLOBAL embedding near-dup pairs (vec_a < vec_b, cosine >= threshold),
-    never all-pairs.  Each of n_tables tables signs n_planes hyperplanes
-    (ann_sig_col), unfolded by one inline into (vec_id, table, sig) rows.
-    The pairs sharing a signature in ANY table come from
-    _capped_bucket_pairs, so a (table, sig) bucket of more than
-    max_bucket_size rows — a mass-duplicated cluster — emits a star from
-    its min vec_id (recall inside it drops to rep-connectivity by design).
-    Each pair's cosine is computed on the two vectors joined back by id.
-    Precision is exact; recall = 1-(1-p^n)^L with p = 1 - theta/pi (the
-    SimHash-for-cosine bound): raise n_tables for recall, n_planes for
-    bucket precision.
-
-    A vec_id names one vector.  A repeated row counts toward the cap as a
-    bucket row, and yields no self-pair (vec_a < vec_b) and no duplicate
-    row (the final distinct)."""
-    tables = [
-        F.struct(
-            F.lit(t).alias("table"),
-            ann_sig_col(vec_col, range(t * n_planes + 1, (t + 1) * n_planes + 1)).alias("sig"),
-        )
-        for t in range(n_tables)
-    ]
-    sigs = embeddings.select("vec_id", F.inline(F.array(*tables)))
-    pairs = _capped_bucket_pairs(
-        sigs, ["table", "sig"], "vec_id", max_bucket_size, "vec_a", "vec_b"
-    ).where("vec_a < vec_b")
-    dot = "aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (s, x) -> s + x)"
-    n1 = "sqrt(aggregate(a, 0D, (s, x) -> s + x * x))"
-    n2 = "sqrt(aggregate(b, 0D, (s, x) -> s + x * x))"
-    return (
-        pairs.join(embeddings.selectExpr("vec_id AS vec_a", f"`{vec_col}` AS a"), "vec_a")
-        .join(embeddings.selectExpr("vec_id AS vec_b", f"`{vec_col}` AS b"), "vec_b")
-        .selectExpr("vec_a", "vec_b", f"round({dot} / ({n1} * {n2}), 6) AS cosine")
-        .filter(F.col("cosine") >= threshold)
-        .distinct()
-    )
-
-
-# ---------- corpus statistics (exact + sketch scale paths) ----------
-
-
-def percentiles_per_group(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    qs=(0.5, 0.95),
-    exact: bool = True,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per-group percentiles.  exact=True uses Spark's percentile (collects
-    every group value into the aggregation buffer — fine up to millions of
-    rows per group, the oracle-parity mode).  exact=False is the 100 TB
-    path: approx_percentile's t-digest-style sketch, constant memory per
-    group, rank error <= 1/accuracy."""
-    fn = "percentile" if exact else "approx_percentile"
-    acc = "" if exact else f", {accuracy}"
-    aggs = [
-        F.expr(f"{fn}({value_col}, {q}{acc})").alias(f"p{int(q * 100)}") for q in qs
-    ]
-    return df.groupBy(group_col).agg(*aggs)
-
-
-def vocab_per_group(
-    df: DataFrame, group_col: str, text_col: str = "text", exact: bool = True, rsd: float = 0.02
-) -> DataFrame:
-    """Per-group distinct-token count.  exact=True shuffles every distinct
-    (group, term) pair (the oracle-parity mode); exact=False is the 100 TB
-    path: HyperLogLog++ via approx_count_distinct — one pass, constant
-    memory, relative error ~rsd, no distinct shuffle."""
-    terms = df.select(
-        group_col, F.explode(F.split(F.lower(text_col), " ")).alias("term")
-    )
-    agg = (
-        F.countDistinct("term") if exact else F.approx_count_distinct("term", rsd)
-    ).alias("vocab_size")
-    return terms.groupBy(group_col).agg(agg)
-
-
 # ---------- text analysis ----------
 
 _EN_MARKERS = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"]
@@ -1319,48 +1118,6 @@ def pack_sequences(
             (F.col("_local_pack") + F.col("_base")).alias("pack_id"),
             (F.col("_tok") > budget).alias("oversize"),
         )
-    )
-
-
-def pack_utilization(packed: DataFrame, budget: int, token_col: str = "n_tokens"):
-    """Packing quality rollup: packs, mean fill ratio, oversize count."""
-    per_pack = packed.groupBy("pack_id").agg(
-        F.sum(token_col).alias("_sum"), F.max(F.col("oversize").cast("int")).alias("_ov")
-    )
-    return per_pack.agg(
-        F.count("*").alias("n_packs"),
-        F.round(F.avg(F.least(F.col("_sum"), F.lit(budget)) / budget), 4).alias(
-            "mean_fill"
-        ),
-        F.sum("_ov").alias("oversize_packs"),
-    )
-
-
-def winnow_fingerprint(docs: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
-    """Rolling-hash document fingerprinting (winnowing, Schleimer et al.
-    SIGMOD'03 / MOSS): hash every k-char gram of the normalized text, slide a
-    w-hash window, keep each window's minimum — the classic near-copy
-    fingerprint whose selected hashes are stable under local edits.
-
-    All JVM-side: Column.substr with column offsets for the grams, xxhash64
-    per gram, slice+array_min per window, array_distinct for the set.  Cost
-    is O(n*w) expression work per doc — acceptable because n is chars of ONE
-    document (row-local, embarrassingly parallel); no shuffle.  Downstream
-    containment/overlap joins explode the fingerprint column and reuse the
-    same bucket-join shapes as MinHash-LSH."""
-    txt = norm_text()
-    n = F.length(txt)
-    m = F.greatest(n - (k - 1), F.lit(1))  # number of k-grams
-    grams = F.transform(
-        F.sequence(F.lit(1), m), lambda i: F.xxhash64(txt.substr(i, F.lit(k)))
-    )
-    nw = F.greatest(F.size(grams) - (w - 1), F.lit(1))
-    minima = F.transform(
-        F.sequence(F.lit(1), nw), lambda j: F.array_min(F.slice(grams, j, w))
-    )
-    return docs.select(
-        "doc_id",
-        F.array_sort(F.array_distinct(minima)).alias("fingerprints"),
     )
 
 

@@ -1,11 +1,17 @@
 """Property-based equivalence: the optimized chunker must be byte-equal to
 the reference loop for ARBITRARY string frames and budgets (hypothesis)."""
 
+import os
+import sys
+
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from qs_spark.kernels.sheet_kernel import chunk_frame, chunk_frame_reference
+from qs_spark.kernels.sheet_kernel import chunk_frame
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+import serial_reference as sr  # noqa: E402
 
 cell = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd"), max_codepoint=0x7F),
@@ -27,11 +33,11 @@ def test_fast_chunker_property(rows, budget):
         fast = chunk_frame(df, budget)
     except ValueError:
         try:
-            chunk_frame_reference(df, budget)
+            sr._greedy_chunks(df, budget)
             raise AssertionError("fast raised, reference did not")
         except ValueError:
             return
-    assert fast == chunk_frame_reference(df, budget)
+    assert fast == sr._greedy_chunks(df, budget)
 
 
 # mixed-dtype frames: ints at the int64 edges, floats incl. nan/inf, bools,
@@ -65,8 +71,8 @@ def test_fast_chunker_property_mixed_dtypes(rows, budget, hdr):
         fast = chunk_frame(df, budget)
     except ValueError:
         try:
-            chunk_frame_reference(df, budget)
+            sr._greedy_chunks(df, budget)
             raise AssertionError("fast raised, reference did not")
         except ValueError:
             return
-    assert fast == chunk_frame_reference(df, budget)
+    assert fast == sr._greedy_chunks(df, budget)

@@ -73,7 +73,7 @@ def test_per_doc_error_isolation(spark):
     ]
     df = spark.createDataFrame(rows, SCHEMA)
     from qs_spark.extract import extract_spans
-    from qs_spark.store import build_store, failed_docs
+    from qs_spark.store import build_store
 
     spans = extract_spans(df)
     out = spans.toPandas()
@@ -81,8 +81,8 @@ def test_per_doc_error_isolation(spark):
     bad = out[out.doc_id == "d_bad"]
     assert len(bad) == 1 and bad.iloc[0]["kind"] == "error"
     assert "EmptyDataError" in bad.iloc[0]["text"]
-    # failed docs feed status write-back; the store excludes them
-    assert {r.doc_id for r in failed_docs(spans).collect()} == {"d_bad"}
+    # the error span names the failed doc; the store excludes it
+    assert {r.doc_id for r in spans.filter("kind = 'error'").collect()} == {"d_bad"}
     assert build_store(spans).filter(F.col("document_id") == "d_bad").count() == 0
 
 

@@ -20,6 +20,10 @@ from qs_spark.kernels.txt_kernel import chunk_text
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# the kernel-independent serial reference is the sheet chunker's oracle
+sys.path.insert(0, os.path.join(REPO, "tools"))
+import serial_reference as sr  # noqa: E402
+
 
 def _sp(kind, text="", media_ref="", offset=0):
     return {"kind": kind, "text": text, "media_ref": media_ref, "offset": offset}
@@ -61,7 +65,6 @@ def test_fast_chunker_equals_reference_loop():
     import random
 
     from qs_spark.kernels.detstr import words
-    from qs_spark.kernels.sheet_kernel import chunk_frame_reference
 
     rng = random.Random(7)
     for trial in range(25):
@@ -81,9 +84,9 @@ def test_fast_chunker_equals_reference_loop():
                 a = chunk_frame(df, cs)
             except ValueError:
                 with pytest.raises(ValueError):
-                    chunk_frame_reference(df, cs)
+                    sr._greedy_chunks(df, cs)
                 continue
-            assert a == chunk_frame_reference(df, cs), (trial, cs)
+            assert a == sr._greedy_chunks(df, cs), (trial, cs)
     # a >32-row frame incl. a >50-char cell (pandas truncation risk must be
     # in the validation sample)
     big = pd.DataFrame(
@@ -93,7 +96,7 @@ def test_fast_chunker_equals_reference_loop():
         }
     )
     for cs in (400, 5000, 102400):
-        assert chunk_frame(big, cs) == chunk_frame_reference(big, cs), cs
+        assert chunk_frame(big, cs) == sr._greedy_chunks(big, cs), cs
 
 
 def test_unnamed_retry_loop():
@@ -323,19 +326,15 @@ def test_chunker_float_frames_stay_byte_equal():
     no frozen cell projection is slice-stable for float64.  This frame
     diverged at chunk 11 under the pre-r03 formula path; a frame of
     slice-stable dtypes (int/bool/object) must stay byte-equal too."""
-    from qs_spark.kernels.sheet_kernel import chunk_frame_reference
-
     df = pd.DataFrame({"a": [1.25] * 64 + [1.5] * 136, "b": ["x"] * 200})
-    assert chunk_frame(df, 400) == chunk_frame_reference(df, 400)
+    assert chunk_frame(df, 400) == sr._greedy_chunks(df, 400)
     df2 = pd.DataFrame({"a": range(200), "b": [True, False] * 100, "c": ["yy"] * 200})
-    assert chunk_frame(df2, 400) == chunk_frame_reference(df2, 400)
+    assert chunk_frame(df2, 400) == sr._greedy_chunks(df2, 400)
 
 
 def test_chunker_float_hint_matches_reference():
     """Float frames must chunk byte-equal to the reference on decimal-varying,
     sign-varying and scientific-fallback frames (tiny and huge values)."""
-    from qs_spark.kernels.sheet_kernel import chunk_frame_reference
-
     df = pd.DataFrame(
         {
             "f": [1.5, 1.25, 1000.125, -2.0, 0.0, 3.14159265] * 40,
@@ -343,15 +342,15 @@ def test_chunker_float_hint_matches_reference():
             "s": ["ab", "c", "dd", "e", "ff", "g"] * 40,
         }
     )
-    assert chunk_frame(df, 500) == chunk_frame_reference(df, 500)
+    assert chunk_frame(df, 500) == sr._greedy_chunks(df, 500)
     df2 = pd.DataFrame({"f": [1e-7, 1.5, 2.5] * 30, "s": ["x", "yy", "z"] * 30})
-    assert chunk_frame(df2, 300) == chunk_frame_reference(df2, 300)
+    assert chunk_frame(df2, 300) == sr._greedy_chunks(df2, 300)
     df3 = pd.DataFrame({"f": [1e9, 1.5] * 30})
-    assert chunk_frame(df3, 200) == chunk_frame_reference(df3, 200)
+    assert chunk_frame(df3, 200) == sr._greedy_chunks(df3, 200)
     # 1e7 renders fixed at 15 chars (> digits+6): pandas flips the printed
     # slice to scientific
     df4 = pd.DataFrame({"f": [1e7, 2.5] * 30})
-    assert chunk_frame(df4, 250) == chunk_frame_reference(df4, 250)
+    assert chunk_frame(df4, 250) == sr._greedy_chunks(df4, 250)
 
 
 def test_html_nested_table_keeps_outer_row():
@@ -376,15 +375,47 @@ def test_html_nested_table_keeps_outer_row():
 # ---- pure (pandas-free) sheet path ----
 
 
-def test_pure_sheet_battery_validates():
+@pytest.mark.parametrize(
+    "text,excel,cs",
+    [
+        ("a,b_c\nfoo,bar baz\nqux x,y_z", True, None),
+        ("a,b\nword one,two", False, None),  # 1 row -> empty-repr quirk
+        (",,\nh0,h1,h2\ncell a,b,c\nd,e,f", True, None),  # junk retry
+        (",,\n,,\nh0,h1,h2\naa,bb,cc\nd,e,f\ng,h,i", False, None),
+        ("hdr_only,x", True, None),  # 0 data rows: excel skip
+        ("hdr_only,x", False, None),  # 0 data rows: csv -> no chunks
+        # multi-chunk with the dropped-row quirk (each row fits alone)
+        ("h_a,h_b\naaa,bbb\nccc,ddd\neee,fff\nggg,hhh", True, 30),
+        ("a,b\n" + "\n".join(f"w{i} x,yy zz" for i in range(30)), False, 90),
+        # rows too wide to pair -> consecutive empty-repr emissions
+        ("w0_col,x0,w1_col,x1\na b,c,d e,f\ng,h i,j,k", True, 50),
+        # labels that legitimately start with "Unnamed" vs the retry test
+        ("Unnamed_x,real_h\ncell,word", True, None),
+        # retry loop exhausts in EXCEL mode: empty re-read -> sheet skipped
+        # (the csv twin declines: see test_pure_sheet_declines_out_of_grammar)
+        (",,\n,,", True, None),
+    ],
+    ids=[
+        "words", "one_row", "junk_retry", "two_junk_retry", "hdr_only_excel",
+        "hdr_only_csv", "dropped_rows", "many_chunks", "wide_rows",
+        "unnamed_label", "excel_retry_exhausted",
+    ],
+)
+def test_pure_sheet_in_grammar_matches_reference(text, excel, cs):
+    """In-grammar sheets take the PURE path (never None) and chunk byte-equal
+    to the serial reference's read_csv retry loop + greedy chunker."""
     import qs_spark.kernels.sheet_kernel as sk
 
-    assert sk._pure_model_ok()
+    cs = cs or sk.CHUNK_SIZE
+    got = sk._pure_sheet_chunks(text, excel, cs)
+    assert got is not None
+    df = sr._read_retry(text, excel)
+    assert got == ([] if df is None else sr._greedy_chunks(df, cs))
 
 
 def test_pure_sheet_parity_on_corpus_and_random_budgets():
-    """The pandas-free parse+chunk must byte-match the read_csv +
-    chunk_frame_reference pipeline on in-grammar corpus sheets — including
+    """The pandas-free parse+chunk must byte-match the serial reference's
+    read_csv + greedy chunker on in-grammar corpus sheets — including
     which exceptions are raised (the message lands in the error span)."""
     import qs_spark.kernels.sheet_kernel as sk
     from qs_spark.corpus import gen_doc
@@ -407,8 +438,8 @@ def test_pure_sheet_parity_on_corpus_and_random_budgets():
                 except Exception as e:  # noqa: BLE001
                     pure, perr = "RAISED", f"{type(e).__name__}: {e}"
                 try:
-                    df = sk._read_with_unnamed_retry(text, excel)
-                    want = [] if df is None else sk.chunk_frame_reference(df, cs)
+                    df = sr._read_retry(text, excel)
+                    want = [] if df is None else sr._greedy_chunks(df, cs)
                     werr = None
                 except Exception as e:  # noqa: BLE001
                     want, werr = "RAISED", f"{type(e).__name__}: {e}"
@@ -437,29 +468,32 @@ def test_pure_sheet_declines_out_of_grammar():
         "a,b\nx,FALSE",
         "a,b\nx,NaN",
         "a,b\nx,na",
+        "a,b\nx,inf",
         "a,b\nx,Infinity",
         "a,b\nx,y\n",
         "a,b\nx,y\n\nz,w",
         "a,a\nx,y",
         "a,b\nx,y,z",
         "a,b\nx,y\tz",
-        ",,\n,,",  # csv mode must decline (EmptyDataError parity)
         # r05 vectorized-parse edges: the separator-position check must see
         # through compensating widths (2 cells + 3 cells around one header
-        # width), non-ASCII cells (byte LUT is ASCII-only), space-led cells
-        # (first-byte class), and a lone trailing-newline header
+        # width), non-ASCII cells (byte LUT is ASCII-only) and space-led
+        # cells (first-byte class)
         "a,b\nxy\nz,w,q",
         "a,b\nx,é",
         "a,b\n x,y",
-        "a,b\nx ,y",  # trailing space inside cell is IN grammar; leading is not -> see below
     ]
-    for text in cases[:-1]:
-        assert sk._pure_sheet_chunks(text, False) is None, text
+    for text in cases:
+        for excel in (True, False):
+            assert sk._pure_sheet_chunks(text, excel) is None, (text, excel)
+    # csv-mode retry exhaustion must decline (EmptyDataError parity); the
+    # excel twin skips the sheet (test_pure_sheet_in_grammar_matches_reference)
+    assert sk._pure_sheet_chunks(",,\n,,", False) is None
     # 'x ' IS in grammar (trailing space allowed by [A-Za-z0-9_ ]*): must
     # AGREE with pandas, not decline
     got = sk._pure_sheet_chunks("a,b\nx ,y", False)
-    df = sk._read_with_unnamed_retry("a,b\nx ,y", False)
-    assert got == sk.chunk_frame_reference(df)
+    df = sr._read_retry("a,b\nx ,y", False)
+    assert got == sr._greedy_chunks(df, sk.CHUNK_SIZE)
 
 
 def test_pure_sheet_unnamed_retry_and_quirks():
@@ -469,8 +503,8 @@ def test_pure_sheet_unnamed_retry_and_quirks():
     text = ",,\nh0,h1,h2\naa x,bb,cc\ndd,ee,ff"
     for excel in (True, False):
         pure = sk._pure_sheet_chunks(text, excel)
-        df = sk._read_with_unnamed_retry(text, excel)
-        assert pure == sk.chunk_frame_reference(df)
+        df = sr._read_retry(text, excel)
+        assert pure == sr._greedy_chunks(df, sk.CHUNK_SIZE)
     # 1-row sheet -> pandas' empty-frame repr, byte-exact
     pure = sk._pure_sheet_chunks("a,b_col\nonly,row", True)
     assert pure == ["Empty DataFrame\nColumns: [a, b_col]\nIndex: []"]
@@ -482,16 +516,19 @@ _PANDAS_PROBE = """
 import sys
 import qs_spark.extract
 from qs_spark.kernels.sheet_kernel import walk_sheets
+def sheet(text):
+    walk_sheets([{"kind": "sheet", "text": text, "media_ref": "", "offset": 0}], True)
+    return "pandas" in sys.modules
 before = "pandas" in sys.modules
-walk_sheets([{"kind": "sheet", "text": "a,b\\nfoo,bar", "media_ref": "", "offset": 0}], True)
-print(before, "pandas" in sys.modules)
+print(before, sheet("a,b\\nfoo,bar"), sheet("a,b\\n1,2\\n3,4"))
 """
 
 
 def test_extraction_import_leaves_pandas_unloaded():
     """Importing the extraction path loads no pandas (the driver and every
-    Python worker import it before their first task); the first sheet does,
-    through the once-per-process PURE validation's read_csv."""
+    Python worker import it before their first task), and neither does a
+    fresh process's first PURE sheet; a numeric sheet, outside the PURE
+    grammar, loads it through read_csv."""
     r = subprocess.run(
         [sys.executable, "-c", _PANDAS_PROBE],
         cwd=REPO,
@@ -500,4 +537,4 @@ def test_extraction_import_leaves_pandas_unloaded():
         timeout=120,
     )
     assert r.returncode == 0, r.stderr[-4000:]
-    assert r.stdout.split() == ["False", "True"]
+    assert r.stdout.split() == ["False", "False", "True"]

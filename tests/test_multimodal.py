@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from qs_spark import textops as X
 from qs_spark.multimodal import (
     extract_features,
-    plan_resize,
     sample_frames,
     synth_media_df,
 )
@@ -20,21 +19,6 @@ def test_media_schema_and_determinism(spark):
     assert (a["embedding"].map(len) == 32).all()
     for x, y in zip(a["embedding"], b["embedding"]):
         assert list(x) == list(y)  # decode is deterministic across runs
-
-
-def test_resize_is_metadata_only(spark, tmp_path):
-    # pruning applies at the table scan: on a parquet-backed media table the
-    # payload bytes must never be read for a metadata-only pass
-    path = str(tmp_path / "media")
-    synth_media_df(spark, 40).write.parquet(path)
-    m = spark.read.parquet(path)
-    out = plan_resize(m, max_side=128)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    scan_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert scan_schema and "payload" not in scan_schema[0]
-    pdf = out.toPandas()
-    assert (pdf[["out_width", "out_height"]].max(axis=1) <= 128).all()
-    assert (pdf["scale"] <= 1.0).all()
 
 
 def test_frame_sampling_bounded_by_duration(spark):
@@ -829,6 +813,37 @@ def test_h264_decoder_honest_boundaries():
         decode_picture(stream + _nal(2, NAL_SLICE, p.bytes()), 1)
 
 
+def _escape_rbsp_ref(rbsp: bytes) -> bytes:
+    """Byte-walking oracle for spec 7.4.1 emulation prevention: after two
+    zero bytes, a byte <= 0x03 gets a 0x03 spliced in ahead of it."""
+    out = bytearray()
+    zeros = 0
+    for b in rbsp:
+        if zeros >= 2 and b <= 3:
+            out.append(3)
+            zeros = 0
+        out.append(b)
+        zeros = zeros + 1 if b == 0 else 0
+    return bytes(out)
+
+
+def _unescape_rbsp_ref(data: bytes) -> bytes:
+    """Byte-walking oracle for the inverse: drop a 0x03 that follows two
+    zero bytes and precedes a byte <= 0x03."""
+    out = bytearray()
+    zeros = 0
+    i = 0
+    while i < len(data):
+        b = data[i]
+        if zeros >= 2 and b == 3 and i + 1 < len(data) and data[i + 1] <= 3:
+            zeros = 0  # the escape byte itself: drop it
+        else:
+            out.append(b)
+            zeros = zeros + 1 if b == 0 else 0
+        i += 1
+    return bytes(out)
+
+
 def test_h264_escape_fast_paths_match_reference():
     """The find()/re-based emulation-prevention codecs (the C-speed paths
     I_PCM-sized NALs need) are bit-equivalent to the spec byte-walkers on
@@ -836,12 +851,7 @@ def test_h264_escape_fast_paths_match_reference():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from qs_spark.kernels.h264_nal import (
-        _escape_rbsp_ref,
-        _unescape_rbsp_ref,
-        escape_rbsp,
-        unescape_rbsp,
-    )
+    from qs_spark.kernels.h264_nal import escape_rbsp, unescape_rbsp
 
     adversarial = st.lists(
         st.sampled_from([0, 0, 0, 1, 2, 3, 0x80, 0xFF]), max_size=64

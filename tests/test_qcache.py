@@ -106,20 +106,6 @@ def test_uids_are_independent_and_invalidate_is_scoped(spark, cat):
     assert _rows(hit) == [("z.txt", 1, 66.0)]
 
 
-def test_cached_search_skips_compute_on_hit(spark, cat):
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return _results(spark, [("a.txt", 3, 82.5)])
-
-    res1, hit1 = Q.cached_search(cat, compute, **BASE)
-    assert not hit1 and len(calls) == 1
-    res2, hit2 = Q.cached_search(cat, compute, **BASE)
-    assert hit2 and len(calls) == 1  # compute skipped on hit
-    assert _rows(res1) == _rows(res2)
-
-
 def test_lookup_on_missing_table_and_unknown_uid(spark, cat):
     assert Q.cache_lookup(spark, cat, **BASE) is None
     Q.cache_store(cat, _results(spark, [("a.txt", 3, 82.5)]), **BASE)

@@ -6,7 +6,7 @@ import pandas as pd
 
 from conftest import oracle_extract
 from qs_spark.corpus import corpus_df, gen_doc
-from qs_spark.streaming import dedup_on_read, stream_extract, windowed_event_counts
+from qs_spark.streaming import dedup_on_read, stream_extract
 
 
 def test_stream_extract_matches_oracle(spark, tmp_path):
@@ -81,246 +81,6 @@ def test_dedup_on_read_drops_stale_rows_of_updated_doc(spark):
     )
     terms = set(postings_dedup_on_read(p1.unionByName(p2)).toPandas().term)
     assert terms == {"new"}
-
-
-def test_stateful_first_seen_across_restarts(spark, tmp_path):
-    """applyInPandasWithState dedup: duplicates suppressed within a run AND
-    across a restart (state restored from the streaming checkpoint)."""
-    import pyspark.sql.types as T
-
-    from qs_spark.streaming import stateful_first_seen
-
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("text", T.StringType()),
-                            T.StructField("media_ref", T.StringType()),
-                            T.StructField("offset", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-
-    def doc(did, text):
-        return (did, [{"kind": "md", "text": text, "media_ref": "", "offset": 0}])
-
-    # batch 1: two unique + one in-batch duplicate content
-    spark.createDataFrame([doc("a", "t1"), doc("b", "t2"), doc("c", "t1")], schema).write.mode(
-        "append"
-    ).parquet(in_dir)
-
-    out_dir = str(tmp_path / "out")
-
-    def run_once(run_tag):
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-
-        def sink(batch_df, batch_id):
-            if not batch_df.isEmpty():
-                batch_df.withColumn("run", F.lit(run_tag)).write.mode("append").parquet(out_dir)
-
-        from pyspark.sql import functions as F
-
-        q = (
-            stateful_first_seen(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            r.doc_id
-            for r in spark.read.parquet(out_dir).filter(F.col("run") == run_tag).collect()
-        }
-
-    got1 = run_once("fs1")
-    # exactly one of the t1-content docs wins (intra-batch arrival order is
-    # not guaranteed), plus 'b'
-    assert "b" in got1 and len(got1 & {"a", "c"}) == 1 and len(got1) == 2
-
-    # batch 2 after "restart": one repeat of t2, one new
-    spark.createDataFrame([doc("d", "t2"), doc("e", "t3")], schema).write.mode(
-        "append"
-    ).parquet(in_dir)
-    got2 = run_once("fs2")
-    assert got2 == {"e"}  # 'd' suppressed by state restored from checkpoint
-
-
-def test_windowed_event_counts_batch(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    out = windowed_event_counts(ev, "1 hour").toPandas()
-    assert out["n_events"].sum() == ev.count()
-    assert (out.groupby(["window_start", "event_type"]).size() == 1).all()
-
-
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Watermarked windowed agg: an event arriving after the watermark passed
-    its window's END must be dropped from the finalized append-mode result.
-    Run as three availableNow restarts over one checkpoint, so the watermark
-    is also proven to survive recovery (the production restart path).  The
-    in-window late case (window still open) is Spark-accepted by design."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    from qs_spark.streaming import windowed_event_counts
-
-    src = tmp_path / "ev_stream"
-    src.mkdir()
-    out_dir = str(tmp_path / "out")
-
-    def write_file(name, rows):
-        pd.DataFrame(rows, columns=["ts", "event_type", "value"]).astype(
-            {"ts": "datetime64[us]"}
-        ).to_parquet(src / name, index=False)
-
-    schema = T.StructType([
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = (
-            windowed_event_counts(stream, "1 hour", watermark="30 minutes")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # run 1: window [10:00,11:00) gets 2 events; max ts 11:40 -> watermark
-    # checkpointed at 11:10, PAST that window's end
-    write_file("a.parquet", [
-        ("2026-01-01 10:00:00", "click", 1.0),
-        ("2026-01-01 10:20:00", "click", 1.0),
-        ("2026-01-01 11:40:00", "click", 1.0),
-    ])
-    run_once()
-    # run 2 (restart): a 10:10 event whose window END (11:00) < restored
-    # watermark (11:10) — Spark's late-data rule drops exactly this case
-    write_file("b.parquet", [
-        ("2026-01-01 12:30:00", "click", 1.0),
-        ("2026-01-01 10:10:00", "click", 99.0),  # LATE
-    ])
-    run_once()
-    # run 3: pushes the watermark past every earlier window so all emit
-    write_file("c.parquet", [("2026-01-01 15:00:00", "click", 1.0)])
-    run_once()
-
-    out = spark.read.parquet(out_dir).toPandas()
-    w10 = out[out.window_start.astype(str).str.contains("10:00:00")]
-    assert len(w10) == 1
-    # 2 on-time events; the late 99.0-valued event was dropped by the watermark
-    assert int(w10.iloc[0].n_events) == 2
-    assert abs(float(w10.iloc[0].sum_value) - 2.0) < 1e-9
-
-
-def test_session_window_matches_lag_based_sessionization(spark):
-    """The built-in session_window must produce exactly the sessions the
-    lag+running-sum form (q54) produces: same session count per user, same
-    per-session event counts."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from qs_spark.streaming import sessionized_event_counts
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    got = sessionized_event_counts(ev, gap="30 minutes").toPandas()
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    ep = F.col("ts").cast("timestamp").cast("long")
-    gap = ep - F.lag(ep).over(w)
-    sess = (
-        ev.withColumn("new_session", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .withColumn(
-            "session_id",
-            F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .groupBy("user_id", "session_id")
-        .agg(F.count("*").alias("n_events"))
-        .toPandas()
-    )
-    # same multiset of (user, n_events) sessions
-    a = sorted(zip(got.user_id, got.n_events))
-    b = sorted(zip(sess.user_id, sess.n_events))
-    assert a == b
-
-
-def test_stateful_first_seen_bloom_state(spark, tmp_path):
-    """Bloom-state dedup (constant state size): duplicates ALWAYS suppressed
-    within and across restarts; distinct docs pass at a generous bits/doc."""
-    import pyspark.sql.types as T
-    from pyspark.sql import functions as F
-
-    from qs_spark.streaming import stateful_first_seen
-
-    in_dir = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    out_dir = str(tmp_path / "out")
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("spans", T.ArrayType(T.StructType([
-            T.StructField("kind", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("offset", T.IntegerType()),
-        ]))),
-    ])
-
-    def doc(did, text):
-        return (did, [{"kind": "md", "text": text, "media_ref": "", "offset": 0}])
-
-    def run_once(run_tag):
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-
-        def sink(batch_df, batch_id):
-            if not batch_df.isEmpty():
-                batch_df.withColumn("run", F.lit(run_tag)).write.mode("append").parquet(out_dir)
-
-        q = (
-            stateful_first_seen(stream, bloom_bits=4096)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            r.doc_id
-            for r in spark.read.parquet(out_dir).filter(F.col("run") == run_tag).collect()
-        }
-
-    docs1 = [doc(f"a{i}", f"text {i}") for i in range(20)] + [doc("dup", "text 0")]
-    spark.createDataFrame(docs1, schema).write.mode("append").parquet(in_dir)
-    got1 = run_once("b1")
-    # exactly one of the identical-content pair wins (intra-batch order is
-    # not guaranteed)
-    assert len(got1 & {"a0", "dup"}) == 1
-    assert len(got1) >= 18  # distinct docs pass (tiny FP allowance)
-
-    # restart: replays of batch-1 content stay suppressed via restored bloom
-    docs2 = [doc(f"r{i}", f"text {i}") for i in range(20)] + [doc("n", "fresh text")]
-    spark.createDataFrame(docs2, schema).write.mode("append").parquet(in_dir)
-    got2 = run_once("b2")
-    assert not any(d.startswith("r") for d in got2)
-    assert got2 <= {"n"}
 
 
 def test_stream_update_index_serves_pruned_lookups(spark, tmp_path, monkeypatch):
